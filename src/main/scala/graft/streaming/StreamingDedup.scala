@@ -1,66 +1,29 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.text.{Dedup, DedupIndex}
 
 /** Continuous-ingest dedup — the Structured Streaming form of the
-  * q105 incremental-index pipeline. A crawl delivers document batches
-  * forever; each micro-batch is deduplicated (a) within itself, then
-  * (b) against the PERSISTED [[DedupIndex]] of everything already
-  * accepted, and the survivors are written out and appended to the
-  * index — so the corpus never recomputes full-corpus dedup, and
-  * per-batch cost is O(batch), not O(corpus) (the index side of every
-  * join is read exchange-free on its bucketing key).
+  * q105 incremental-index pipeline. Each micro-batch is deduplicated
+  * (a) within itself, then (b) against the PERSISTED [[DedupIndex]] of
+  * everything already accepted; survivors are written out and appended
+  * to the index, so per-batch cost is O(batch), not O(corpus).
   *
-  * Exactly-once story (the foreachBatch contract — batch ids are
-  * stable across restarts):
-  *  - a fully committed batch id is recorded in `<index>_ingestlog`
-  *    LAST, so a replayed committed batch is skipped outright;
-  *  - a batch replayed from the crash window AFTER the index append
-  *    but BEFORE the log write recomputes the same survivor set:
-  *    index matches with the batch's own appended rows are excluded by
-  *    id (`excludeSelfId` in [[DedupIndex]]), and matches against
-  *    sibling survivors cannot occur because step (a) made survivors
-  *    mutually non-duplicate at the same threshold AND the same
-  *    `maxBucket` cap (both passes share both knobs — a cap mismatch
-  *    would let a pair the in-batch pass skipped reappear as a
-  *    cross-index match on replay). Survivor output is then an
-  *    idempotent per-batch-directory overwrite.
-  *
-  * Two bounded, self-healing divergences remain in that crash window,
-  * both on the recall side only (nothing wrong is ever DROPPED as a
-  * false duplicate, and exact-duplicate filtering is unaffected):
-  *  - the first run's append can push a (band, bucket) population over
-  *    `maxBucket`, so the replay's hot-key guard skips candidates the
-  *    first run generated — the same behavior as if the bucket had
-  *    gone hot one batch earlier;
-  *  - a double-append leaves duplicate index rows for the batch's
-  *    survivors. Candidate/dup lookups deduplicate by id (distinct /
-  *    min / collect_set), so RESULTS stay correct, but the duplicate
-  *    rows inflate `_bucketcounts`, which can mark busy buckets hot
-  *    early (again recall-bounded).
-  * Both heal at the next epoch rebuild ([[DedupIndex.write]]), which
-  * recomputes tables and counts exactly.
-  *
-  * Requires globally unique ids across the stream's lifetime (any
-  * crawl's doc-id contract; id reuse would alias the self-exclusion).
+  * Exactly-once: the [[Streams.loggedBatch]] protocol. Step (a) makes
+  * survivors mutually non-duplicate at the same threshold AND the same
+  * `maxBucket` cap as step (b) (a cap mismatch would let a pair the
+  * in-batch pass skipped reappear as a cross-index match on replay).
   */
 object StreamingDedup {
 
-  /** Start the ingest query: stream → per-batch quality filter →
-    * dedup → survivors to `outPath/ingest_batch=<id>/` + index append.
-    * The index must already exist ([[DedupIndex.write]] over the seed
-    * corpus, or an empty frame).
-    *
-    * `preFilter` is the curation hook — runs FIRST on each micro-batch
-    * (before any dedup work is spent on rows that won't survive
-    * anyway): language/quality/Gopher-rule filters, PII redaction,
-    * span trimming. It must be deterministic (a nondeterministic
-    * filter breaks replay idempotence) and must preserve `idCol` and
-    * `textCol`. */
+  /** Start the ingest query: stream → `preFilter` → dedup → survivors
+    * to `outPath/ingest_batch=<id>/` + index append. The index must
+    * already exist ([[DedupIndex.write]], over an empty frame if need
+    * be). `preFilter` is the curation hook, run before any dedup work:
+    * language/quality/Gopher-rule filters, PII redaction, span
+    * trimming. It must be deterministic and keep `idCol` and `textCol`. */
   def ingest(stream: DataFrame, idCol: String, textCol: String,
              indexName: String, outPath: String, checkpoint: String,
              threshold: Double = 0.8, maxBucket: Int = 1000,
@@ -77,49 +40,23 @@ object StreamingDedup {
   def ingestBatch(batch0: DataFrame, batchId: Long, idCol: String,
                   textCol: String, indexName: String, outPath: String,
                   threshold: Double = 0.8, maxBucket: Int = 1000,
-                  preFilter: DataFrame => DataFrame = identity): Unit = {
-    val spark = batch0.sparkSession
-    val log = s"${indexName}_ingestlog"
-    if (spark.catalog.tableExists(log) &&
-        !spark.table(log).filter(col("batch_id") === batchId).isEmpty)
-      return // fully committed — replay is a no-op
-    val mark = graft.GraftSession.mark()
-    try {
-      val p = DedupIndex.paramsOf(spark, indexName)
-      // snapshot before touching the index: the micro-batch plan is
-      // re-evaluated per action below, and the index tables it joins
-      // change under it at append time (the DedupIndex.append hazard)
-      val batch = {
-        val filtered = preFilter(batch0)
-        if (spark.sparkContext.getCheckpointDir.isDefined)
-          filtered.checkpoint(eager = true)
-        else filtered.localCheckpoint(eager = true)
-      }
-      // (a) in-batch dedup, exact then near — survivors must be
-      // mutually non-duplicate for replay idempotence to hold
-      val exact = Dedup.dropExactDups(batch, textCol, idCol)
-      // same threshold AND same maxBucket as the index pass — the
-      // replay-idempotence argument needs both aligned (header)
-      val pairs = Dedup.minhashNearDupsByWords(exact, idCol, textCol,
-        n = p.n, numHashes = p.numHashes, numBands = p.numBands,
-        threshold = threshold, maxBucket = maxBucket)
-      val inBatch = Dedup.dropNearDups(exact, pairs, idCol)
-      // (b) against the index; self-exclusion makes the crash-window
-      // replay recompute the same survivors (header)
-      val survivors = graft.GraftSession.trackPersist(
-        DedupIndex.dropDupsAgainst(inBatch, idCol, textCol, indexName,
-          threshold, maxBucket, excludeSelfId = true))
-      survivors.write.mode("overwrite")
-        .parquet(s"$outPath/ingest_batch=$batchId")
-      DedupIndex.append(survivors, idCol, textCol, indexName)
-      import spark.implicits._
-      Seq(batchId).toDF("batch_id")
-        .write.mode("append").saveAsTable(log)
-    } finally graft.GraftSession.unpersistSince(mark)
-  }
+                  preFilter: DataFrame => DataFrame = identity): Unit =
+    Streams.loggedBatch(batch0, batchId, indexName, outPath, preFilter,
+      dedup = batch => {
+        val p = DedupIndex.paramsOf(batch.sparkSession, indexName)
+        // (a) in-batch, exact then near, at (b)'s threshold and cap
+        val exact = Dedup.dropExactDups(batch, textCol, idCol)
+        val pairs = Dedup.minhashNearDupsByWords(exact, idCol, textCol,
+          n = p.n, numHashes = p.numHashes, numBands = p.numBands,
+          threshold = threshold, maxBucket = maxBucket)
+        // (b) against the index, self-matches excluded for the replay
+        DedupIndex.dropDupsAgainst(Dedup.dropNearDups(exact, pairs, idCol),
+          idCol, textCol, indexName, threshold, maxBucket,
+          excludeSelfId = true)
+      },
+      append = DedupIndex.append(_, idCol, textCol, indexName))
 
   /** All survivor batches written so far (the pipeline's output view). */
-  def survivors(spark: org.apache.spark.sql.SparkSession,
-                outPath: String): DataFrame =
-    spark.read.parquet(s"$outPath/ingest_batch=*")
+  def survivors(spark: SparkSession, outPath: String): DataFrame =
+    Streams.loggedOutput(spark, outPath)
 }

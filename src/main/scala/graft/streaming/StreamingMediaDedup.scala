@@ -1,44 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.text.{Dedup, SigIndex}
 
 /** Continuous-ingest MEDIA dedup — the Structured Streaming form of
-  * the q133 signature-index pipeline, and the media sibling of
-  * [[StreamingDedup]] (same exactly-once contract, swapped primitives:
-  * 64-bit Hamming signatures + [[SigIndex]] instead of MinHash grams +
-  * DedupIndex). A crawl delivers media batches forever; each
-  * micro-batch is fingerprinted in its own scan stage (the caller's
-  * `sign` hook — image dHash, audio/chroma, video temporal hash),
-  * deduplicated (a) within itself, then (b) against the persisted
-  * signature index, and the survivors are written out and appended —
-  * per-batch cost O(batch), old payload bytes never rescanned.
+  * the q133 signature-index pipeline and the sibling of
+  * [[StreamingDedup]] over [[SigIndex]]. Each micro-batch is
+  * fingerprinted by the caller's `sign` hook (image dHash,
+  * audio/chroma, video temporal hash), deduplicated (a) within itself,
+  * then (b) against the index; survivors are written out and appended.
   *
-  * Exactly-once story (foreachBatch batch ids are stable across
-  * restarts):
-  *  - a fully committed batch id is recorded in `<index>_ingestlog`
-  *    LAST, so a replayed committed batch is a no-op;
-  *  - a batch replayed from the crash window AFTER the index append
-  *    but BEFORE the log write recomputes the same survivor set:
-  *    matches against the batch's own appended rows are excluded by
-  *    id (`excludeSelfId`), and matches against sibling survivors
-  *    cannot occur because the in-batch pass runs MULTI-PROBE at the
-  *    same `maxDistance` ≤ 7 — every ≤ maxDistance pair is
-  *    GUARANTEED surfaced (not just banding-probable), so survivors
-  *    are pairwise farther than `maxDistance` by construction and the
-  *    replay's index pass cannot pair them. Survivor output is an
-  *    idempotent per-batch-directory overwrite.
-  *  - the same bounded recall-side divergences as [[StreamingDedup]]
-  *    (a first-run append pushing a bucket over the cap; double-append
-  *    count inflation) heal at the next [[SigIndex.write]] rebuild.
-  *
-  * Undecodable payloads carry null signatures: they can never pair, so
-  * they SURVIVE (report upstream, never silently dropped) and
-  * [[SigIndex.append]] skips them. Requires globally unique ids across
-  * the stream's lifetime (id reuse would alias the self-exclusion).
+  * Exactly-once: the [[Streams.loggedBatch]] protocol. Step (a) runs
+  * MULTI-PROBE at the same `maxDistance` ≤ 7, which GUARANTEES every
+  * ≤ maxDistance pair surfaces, so survivors are pairwise farther than
+  * `maxDistance` and the replay's index pass cannot pair them.
+  * Undecodable payloads carry null signatures: they never pair, so
+  * they SURVIVE (reported upstream, never silently dropped) and
+  * [[SigIndex.append]] skips them.
   */
 object StreamingMediaDedup {
 
@@ -65,48 +46,26 @@ object StreamingMediaDedup {
   def ingestBatch(batch0: DataFrame, batchId: Long, idCol: String,
                   sigCol: String, indexName: String, outPath: String,
                   maxDistance: Int = 7, maxBucket: Int = 17000): Unit = {
-    val spark = batch0.sparkSession
     require(maxDistance <= 7,
       s"the survivor-set idempotence argument needs the multi-probe " +
         s"guarantee, which holds to Hamming 7 (got $maxDistance)")
-    val log = s"${indexName}_ingestlog"
-    if (spark.catalog.tableExists(log) &&
-        !spark.table(log).filter(col("batch_id") === batchId).isEmpty)
-      return // fully committed — replay is a no-op
-    val mark = graft.GraftSession.mark()
-    try {
-      // snapshot before touching the index: the micro-batch plan is
-      // re-evaluated per action below, and the index tables it joins
-      // change under it at append time (the SigIndex.append hazard)
-      val batch =
-        if (spark.sparkContext.getCheckpointDir.isDefined)
-          batch0.checkpoint(eager = true)
-        else batch0.localCheckpoint(eager = true)
-      // (a) in-batch: multiProbe at the SAME distance/cap as the index
-      // pass — the guarantee (not banding luck) is what makes the
-      // survivor set replay-stable
-      val pairs = Dedup.simhashNearDups(
-        batch.select(col(idCol), col(sigCol).cast("long").as("simhash"))
-          .where(col("simhash").isNotNull),
-        idCol, maxDistance = maxDistance, maxBucket = maxBucket,
-        multiProbe = true)
-      val inBatch = Dedup.dropNearDups(batch, pairs, idCol)
-      // (b) against the index; self-exclusion covers the crash-window
-      // replay (header)
-      val survivors = graft.GraftSession.trackPersist(
-        SigIndex.dropDupsAgainst(inBatch, idCol, sigCol, indexName,
-          maxDistance, maxBucket, excludeSelfId = true))
-      survivors.write.mode("overwrite")
-        .parquet(s"$outPath/ingest_batch=$batchId")
-      SigIndex.append(survivors, idCol, sigCol, indexName)
-      import spark.implicits._
-      Seq(batchId).toDF("batch_id")
-        .write.mode("append").saveAsTable(log)
-    } finally graft.GraftSession.unpersistSince(mark)
+    Streams.loggedBatch(batch0, batchId, indexName, outPath, identity,
+      dedup = batch => {
+        // (a) in-batch, multi-probe at (b)'s distance and cap
+        val pairs = Dedup.simhashNearDups(
+          batch.select(col(idCol), col(sigCol).cast("long").as("simhash"))
+            .where(col("simhash").isNotNull),
+          idCol, maxDistance = maxDistance, maxBucket = maxBucket,
+          multiProbe = true)
+        // (b) against the index, self-matches excluded for the replay
+        SigIndex.dropDupsAgainst(Dedup.dropNearDups(batch, pairs, idCol),
+          idCol, sigCol, indexName, maxDistance, maxBucket,
+          excludeSelfId = true)
+      },
+      append = SigIndex.append(_, idCol, sigCol, indexName))
   }
 
   /** All survivor batches written so far (the pipeline's output view). */
-  def survivors(spark: org.apache.spark.sql.SparkSession,
-                outPath: String): DataFrame =
-    spark.read.parquet(s"$outPath/ingest_batch=*")
+  def survivors(spark: SparkSession, outPath: String): DataFrame =
+    Streams.loggedOutput(spark, outPath)
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface — a capability EXTENSION over the
@@ -109,9 +110,8 @@ object Streams {
     * batch). Append mode — file sinks cannot rewrite rows, so windowed
     * aggregations upstream need a watermark to emit finalized rows. */
   def writeParquetStream(df: DataFrame, path: String, checkpoint: String,
-                         trigger: org.apache.spark.sql.streaming.Trigger =
-                           org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
+                         trigger: Trigger = Trigger.AvailableNow())
+      : StreamingQuery =
     df.writeStream.format("parquet")
       .option("path", path)
       .option("checkpointLocation", checkpoint)
@@ -125,14 +125,64 @@ object Streams {
     * (the foreachBatch contract). */
   def foreachBatchSink(df: DataFrame, checkpoint: String,
                        f: (DataFrame, Long) => Unit,
-                       trigger: org.apache.spark.sql.streaming.Trigger =
-                         org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
+                       trigger: Trigger = Trigger.AvailableNow())
+      : StreamingQuery =
     df.writeStream
       .foreachBatch(f)
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .start()
+
+  /** One micro-batch of a LOGGED ingest loop over the persisted index
+    * `indexName` — the foreachBatch body of [[StreamingDedup]] and
+    * [[StreamingMediaDedup]]. Skip a batch id already in
+    * `<indexName>_ingestlog`; snapshot `preFilter(batch)` (its plan is
+    * re-evaluated per action while the index it joins changes);
+    * `dedup` it; overwrite `outPath/ingest_batch=<id>/` with the
+    * survivors; `append` them to the index; log the batch id LAST.
+    *
+    * Exactly-once (foreachBatch batch ids are stable across restarts):
+    * a replayed committed batch is skipped; a batch replayed from the
+    * crash window (appended, not logged) recomputes the SAME survivors
+    * when `dedup` (a) excludes index matches with the batch's own
+    * appended rows by id (`excludeSelfId`) and (b) leaves survivors its
+    * index pass can never pair with each other — each caller says why
+    * its in-batch pass qualifies. The survivor overwrite is then
+    * idempotent. Two bounded divergences remain, recall-side only
+    * (nothing is ever dropped as a false duplicate): the first run's
+    * append can push a bucket over the cap, so the replay skips it one
+    * batch early; and the double append leaves duplicate index rows —
+    * lookups dedup by id, but the rows inflate the bucket counts. The
+    * next epoch rebuild of the index heals both. Ids must be globally
+    * unique over the stream's lifetime; `preFilter` and `dedup` must be
+    * deterministic. */
+  private[graft] def loggedBatch(batch: DataFrame, batchId: Long,
+                                 indexName: String, outPath: String,
+                                 preFilter: DataFrame => DataFrame,
+                                 dedup: DataFrame => DataFrame,
+                                 append: DataFrame => Unit): Unit = {
+    val spark = batch.sparkSession
+    val log = s"${indexName}_ingestlog"
+    val committed = spark.catalog.tableExists(log) &&
+      !spark.table(log).filter(col("batch_id") === batchId).isEmpty
+    if (!committed) {
+      val mark = graft.GraftSession.mark()
+      try {
+        val survivors = graft.GraftSession.trackPersist(
+          dedup(graft.text.BandedIndex.snapshot(preFilter(batch))))
+        survivors.write.mode("overwrite")
+          .parquet(s"$outPath/ingest_batch=$batchId")
+        append(survivors)
+        import spark.implicits._
+        Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(log)
+      } finally graft.GraftSession.unpersistSince(mark)
+    }
+  }
+
+  /** Every survivor batch a [[loggedBatch]] loop wrote to `outPath`. */
+  private[graft] def loggedOutput(spark: SparkSession,
+                                  outPath: String): DataFrame =
+    spark.read.parquet(s"$outPath/ingest_batch=*")
 
   // ------------------------------------------------------------------
   // Arbitrary stateful processing (flatMapGroupsWithState) — running

@@ -599,12 +599,8 @@ object Dedup {
     // each round references the previous edge set several times (the
     // symmetrize-union + min-join), so without truncation the logical
     // plan grows multiplicatively per round — checkpoint every round to
-    // cut lineage. Reliable checkpoint when a dir is configured (the
-    // cluster case: survives executor loss); localCheckpoint otherwise.
-    def cp(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+    // cut lineage
+    def cp(df: DataFrame): DataFrame = BandedIndex.snapshot(df)
     // materialize the (possibly expensive) upstream pair pipeline ONCE —
     // both the node list and the initial edge set read from it. Ids keep
     // their native type: min-contraction only needs an ordering, so

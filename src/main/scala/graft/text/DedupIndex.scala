@@ -4,41 +4,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 
-/** Incremental dedup against a PERSISTED index — the continuous-ingest
-  * form of the dedup family. A production pretraining pipeline ingests
-  * batches forever; recomputing full-corpus dedup per batch is
-  * O(corpus) per batch, O(corpus²) over a crawl's lifetime. Here the
-  * corpus pays its shuffle ONCE, at index-write time, into three
-  * bucketed tables (bucketed storage = exchange elided at every later
-  * join on the bucket key, the [[graft.dsl.Relation.storeBucketed]]
-  * merge-join shape):
-  *
+/** Incremental text dedup against a PERSISTED index — the
+  * continuous-ingest form of the dedup family: the corpus pays its
+  * shuffle ONCE, at write time, and each ingest batch then costs
+  * O(batch), not O(corpus). The [[BandedIndex]] protocol over
+  * MinHash-LSH bands of hashed word n-grams (`_buckets`,
+  * `_bucketcounts`, `_meta` = (n, numHashes, numBands, numBuckets)),
+  * plus two text tables:
   *  - `<name>_digests(digest, doc id)`, bucketed by digest — exact-dup
   *    lookups;
-  *  - `<name>_buckets(id, band, bucket)`, bucketed by (band, bucket) —
-  *    MinHash-LSH candidate generation;
-  *  - `<name>_grams(id, gram)`, bucketed by id — the 64-bit hashed
-  *    gram stream, fetched by id for exact-Jaccard verification of
-  *    candidates only;
-  *  - `<name>_bucketcounts(band, bucket, n)` — per-bucket populations,
-  *    aggregated once per write/append so the per-batch hot-key guard
-  *    never re-aggregates the full bucket table;
-  *  - `<name>_meta` — the (n, numHashes, numBands, numBuckets) the
-  *    index was built with, so query time can't silently use an
-  *    incompatible family and appends stay bucket-aligned.
-  *
-  * Every index table carries ids + fixed-width longs/digests — the old
-  * corpus TEXT is never stored and never rescanned. Batch-side joins
-  * shuffle only the batch; the index side is read exchange-free on its
-  * bucketing key. Determinism makes the index portable across
-  * sessions: gram hashing is xxhash64 and the MinHash family is the
-  * fixed seeded multiply-shift family in [[Dedup]], so signatures
-  * computed today join against buckets written in a previous run.
-  *
-  * The EMBEDDING analog already exists: [[graft.ml.Ivf]] persists its
-  * centroid + assignment tables on disk and q47/q63 probe them
-  * untimed-build/timed-query — this object is the text-side
-  * counterpart for digests and n-gram MinHash.
+  *  - `<name>_grams(id, gram)`, bucketed by id — the 64-bit hashed gram
+  *    stream, fetched for exact-Jaccard verification of candidates.
+  * Tables hold ids + fixed-width longs/digests; the corpus TEXT is
+  * never stored or rescanned. Gram hashing (xxhash64) and the seeded
+  * MinHash family of [[Dedup]] are deterministic, so an index written
+  * in one session joins against signatures computed in another.
   */
 object DedupIndex {
 
@@ -46,191 +26,72 @@ object DedupIndex {
     * `<name>_meta` and re-read at query time. */
   case class Params(n: Int = 3, numHashes: Int = 64, numBands: Int = 16)
 
+  private def index(name: String) = new BandedIndex("DedupIndex", name, "")
+
   private def digestOf(textCol: String) =
     md5(col(textCol).cast(BinaryType)).as("digest")
 
-  /** Clear a table AND its orphaned warehouse location. An in-memory
-    * catalog forgets tables across sessions while their warehouse
-    * directories survive; a later saveAsTable then refuses with
-    * LOCATION_ALREADY_EXISTS — an index must be rebuildable from a
-    * fresh session over the same warehouse. */
-  private[text] def dropStale(spark: SparkSession, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
+  /** `docs`' hashed gram stream (persisted: two consumers) and its LSH
+    * band rows. */
+  private def bandsOf(docs: DataFrame, idCol: String, textCol: String,
+                      p: Params): (DataFrame, DataFrame) = {
+    val grams = graft.GraftSession.trackPersist(
+      Dedup.explodeHashedWordNgrams(docs, Seq(idCol), textCol, p.n, "gram"))
+    val sigs = Dedup.minhashSignaturesFromGrams(
+      grams, idCol, "gram", p.numHashes)
+    (grams, Dedup.lshBuckets(sigs, idCol, "sig",
+      p.numBands, p.numHashes / p.numBands))
   }
 
-  /** Build (or rebuild) the index tables for `docs`. `numBuckets` is
-    * the STORAGE bucket count (files per table — scale with corpus
-    * size), unrelated to LSH band buckets. */
+  /** `docs`' band rows and its rows for the two text tables. */
+  private def rowsOf(docs: DataFrame, idCol: String, textCol: String,
+                     name: String,
+                     p: Params): (DataFrame, Seq[BandedIndex.Table]) = {
+    val (grams, buckets) = bandsOf(docs, idCol, textCol, p)
+    (buckets, Seq(
+      BandedIndex.Table(s"${name}_grams", grams, Seq(idCol)),
+      BandedIndex.Table(s"${name}_digests",
+        docs.select(digestOf(textCol), col(idCol)), Seq("digest"))))
+  }
+
+  /** Build (or rebuild) the index for `docs`; `numBuckets` is the
+    * storage bucket count ([[BandedIndex.write]]). */
   def write(docs: DataFrame, idCol: String, textCol: String,
             name: String, params: Params = Params(),
             numBuckets: Int = 16): Unit = {
-    val spark = docs.sparkSession
-    import graft.dsl.Relation
-    Seq("buckets", "grams", "digests", "meta")
-      .foreach(t => dropStale(spark, s"${name}_$t"))
-    val grams = graft.GraftSession.trackPersist(
-      Dedup.explodeHashedWordNgrams(docs, Seq(idCol), textCol,
-        params.n, "gram"))
-    val sigs = Dedup.minhashSignaturesFromGrams(
-      grams, idCol, "gram", params.numHashes)
-    val buckets = Dedup.lshBuckets(sigs, idCol, "sig",
-      params.numBands, params.numHashes / params.numBands)
-    Relation(buckets, s"${name}_buckets")
-      .storeBucketed(s"${name}_buckets", numBuckets, Seq("band", "bucket"))
-    Relation(grams, s"${name}_grams")
-      .storeBucketed(s"${name}_grams", numBuckets, Seq(idCol))
-    Relation(docs.select(digestOf(textCol), col(idCol)),
-        s"${name}_digests")
-      .storeBucketed(s"${name}_digests", numBuckets, Seq("digest"))
-    import spark.implicits._
-    Seq((params.n, params.numHashes, params.numBands, numBuckets))
-      .toDF("n", "num_hashes", "num_bands", "num_buckets")
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
-    writeBucketCounts(spark, name)
-  }
-
-  /** Per-(band, bucket) population counts — a WRITE-time property of
-    * the index (merge-bumped on [[append]]), so the per-batch hot-key
-    * guard never re-aggregates the full bucket table: the index's
-    * count aggregate runs once per epoch, not once per ingest batch.
-    * The aggregate itself is exchange-free (the table is bucketed on
-    * the grouping key). */
-  private def writeBucketCounts(spark: SparkSession, name: String): Unit = {
-    dropStale(spark, s"${name}_bucketcounts")
-    spark.table(s"${name}_buckets")
-      .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("n"))
-      .write.format("parquet").mode("overwrite")
-      .saveAsTable(s"${name}_bucketcounts")
-  }
-
-  /** The bucket-count table, with a SELF-HEALING fallback: if the
-    * table is missing (a crash landed between [[bumpBucketCounts]]'
-    * drop and its rewrite), recompute from the still-intact `_buckets`
-    * table — one O(index) aggregation, exchange-free on the bucketing
-    * key — and warn; the next write/bump re-materializes it. Readers
-    * must never die on a recoverable artifact. */
-  private def bucketCountsOf(spark: SparkSession, name: String): DataFrame =
-    if (spark.catalog.tableExists(s"${name}_bucketcounts"))
-      spark.table(s"${name}_bucketcounts")
-    else {
-      graft.functions.Warnings.driverWarn(
-        s"dedup index '$name': _bucketcounts missing (crash window?) — " +
-          "recomputing from _buckets for this query; the next " +
-          "write/append re-materializes it")
-      spark.table(s"${name}_buckets")
-        .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("n"))
-    }
-
-  /** Merge the BATCH's bucket counts into `_bucketcounts` — the append
-    * path must stay O(batch + counts-table), never O(index): the old
-    * full re-aggregation scanned the whole (fat) `_buckets` table per
-    * ingest batch, i.e. O(corpus) per batch at crawl scale. The counts
-    * table is one narrow row per DISTINCT (band, bucket); a true
-    * O(batch) upsert would need a mutable table format, out of scope.
-    * The merged frame is checkpointed before the overwrite because it
-    * READS the table it replaces; a crash between the drop and the
-    * rewrite is recoverable — readers fall back to recomputing from
-    * `_buckets` ([[bucketCountsOf]]). `base` is the PRE-append count
-    * state (snapshotted by [[append]] before the batch's buckets are
-    * written) so the missing-table fallback can never re-aggregate a
-    * `_buckets` that already contains the batch and double-count it. */
-  private def bumpBucketCounts(spark: SparkSession, name: String,
-                               newBuckets: DataFrame,
-                               base: DataFrame): Unit = {
-    val add = newBuckets
-      .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("n"))
-    val merged = base
-      .unionByName(add)
-      .groupBy(col("band"), col("bucket")).agg(sum(col("n")).as("n"))
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined)
-        merged.checkpoint(eager = true)
-      else merged.localCheckpoint(eager = true)
-    dropStale(spark, s"${name}_bucketcounts")
-    snap.write.format("parquet").mode("overwrite")
-      .saveAsTable(s"${name}_bucketcounts")
+    import docs.sparkSession.implicits._
+    val (buckets, tables) = rowsOf(docs, idCol, textCol, name, params)
+    index(name).write(buckets, tables,
+      Seq((params.n, params.numHashes, params.numBands, numBuckets))
+        .toDF("n", "num_hashes", "num_bands", "num_buckets"),
+      numBuckets)
   }
 
   /** The parameters `name` was built with. */
   def paramsOf(spark: SparkSession, name: String): Params = {
-    val r = spark.table(s"${name}_meta").head()
+    val r = index(name).metaOf(spark)
     Params(r.getInt(0), r.getInt(1), r.getInt(2))
   }
 
-  /** Add `docs` (e.g. the survivors of [[dropDupsAgainst]]) to an
-    * existing index — the ingest loop's closing step, so an epoch
-    * never needs a full rebuild: filter the batch against the index,
-    * then append what survived. Appends preserve the bucket spec
-    * (Spark bucketed tables accept bucket-aligned appends), so later
-    * joins stay exchange-free; the family parameters come from the
-    * index's own `_meta`. */
+  /** Add `docs` (e.g. the survivors of [[dropDupsAgainst]]) to the
+    * index at its own `_meta` parameters — the ingest loop's closing
+    * step, so an epoch never needs a full rebuild. */
   def append(docs: DataFrame, idCol: String, textCol: String,
              name: String): Unit = {
-    val spark = docs.sparkSession
-    val p = paramsOf(spark, name)
-    // bucket-aligned appends only: the spec must match write-time
-    val nb = spark.table(s"${name}_meta").head().getInt(3)
-    // snapshot the batch BEFORE touching the index tables: `docs` is
-    // typically dropDupsAgainst's survivor set, i.e. a plan that READS
-    // this very index — re-evaluating it lazily between the three
-    // appends would see its own partial appends (the batch would dedup
-    // against itself and silently vanish from the later tables)
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined)
-        docs.checkpoint(eager = true)
-      else docs.localCheckpoint(eager = true)
-    // snapshot the count BASE before the batch's buckets land in
-    // `_buckets`: if `_bucketcounts` is missing (crash window), the
-    // fallback re-aggregates `_buckets` — re-evaluated lazily AFTER
-    // the append below, that aggregation would already include the
-    // batch, and merging the batch's counts on top would double-count
-    // it. When the table exists this is a plain (checkpointed-at-
-    // merge-time) table read; only the missing-table path needs the
-    // eager snapshot here.
-    val countBase = {
-      val b = bucketCountsOf(spark, name)
-      if (spark.catalog.tableExists(s"${name}_bucketcounts")) b
-      else if (spark.sparkContext.getCheckpointDir.isDefined)
-        b.checkpoint(eager = true)
-      else b.localCheckpoint(eager = true)
-    }
-    val grams = graft.GraftSession.trackPersist(
-      Dedup.explodeHashedWordNgrams(snap, Seq(idCol), textCol,
-        p.n, "gram"))
-    val sigs = Dedup.minhashSignaturesFromGrams(
-      grams, idCol, "gram", p.numHashes)
-    val buckets = Dedup.lshBuckets(sigs, idCol, "sig",
-      p.numBands, p.numHashes / p.numBands)
-    buckets.write.format("parquet").mode("append")
-      .bucketBy(nb, "band", "bucket").saveAsTable(s"${name}_buckets")
-    grams.write.format("parquet").mode("append")
-      .bucketBy(nb, idCol).saveAsTable(s"${name}_grams")
-    snap.select(digestOf(textCol), col(idCol))
-      .write.format("parquet").mode("append")
-      .bucketBy(nb, "digest").saveAsTable(s"${name}_digests")
-    // the appended rows change bucket populations — merge the BATCH's
-    // counts into the count table (O(batch + counts), never a full
-    // `_buckets` re-aggregation). (Appends also accrete one file per
-    // storage bucket per batch; a periodic epoch rebuild via [[write]]
-    // compacts and recomputes the counts exactly.)
-    bumpBucketCounts(spark, name, buckets, countBase)
+    val p = paramsOf(docs.sparkSession, name)
+    val (buckets, tables) = rowsOf(BandedIndex.snapshot(docs), idCol,
+      textCol, name, p)
+    index(name).append(buckets, tables)
   }
 
   /** Exact duplicates of batch docs against the index: one row per
     * batch doc whose content digest exists in the index —
     * (new id, `dup_of` = the smallest matching indexed id).
-    * `excludeSelfId` drops matches whose indexed id EQUALS the batch
-    * id — the replay-idempotence switch for ingest pipelines whose
-    * crash window re-filters a batch that was already appended (ids
-    * must be globally unique for this to be sound; see
-    * [[graft.streaming.StreamingDedup]]). */
+    * `excludeSelfId` as in [[BandedIndex.candidates]]. */
   def exactDupsAgainst(newDocs: DataFrame, idCol: String, textCol: String,
                        name: String,
                        excludeSelfId: Boolean = false): DataFrame = {
+    index(name).requireExists(newDocs.sparkSession)
     val idx = newDocs.sparkSession.table(s"${name}_digests")
       .select(col("digest"), col(idCol).as("__old"))
     val hits = newDocs.select(col(idCol), digestOf(textCol))
@@ -242,9 +103,7 @@ object DedupIndex {
   /** Near-duplicate (batch doc, indexed doc) pairs at word-n-gram
     * Jaccard ≥ `threshold`, via the index's LSH buckets. Hot (band,
     * bucket) keys — on EITHER side — above `maxBucket` members are
-    * dropped before the candidate join (the
-    * [[Dedup.cappedCandidatePairs]] quadratic-blowup guard, applied
-    * per side since the pair count here is |old|×|new| per bucket).
+    * dropped before the candidate join ([[BandedIndex.candidates]]).
     * Verification fetches gram SETS only for matched ids. Output:
     * (new id, old id, jaccard). */
   def nearDupsAgainst(newDocs: DataFrame, idCol: String, textCol: String,
@@ -252,58 +111,25 @@ object DedupIndex {
                       maxBucket: Int = 1000,
                       excludeSelfId: Boolean = false): DataFrame = {
     val spark = newDocs.sparkSession
-    val p = paramsOf(spark, name)
-    val newGrams = graft.GraftSession.trackPersist(
-      Dedup.explodeHashedWordNgrams(newDocs, Seq(idCol), textCol,
-        p.n, "gram"))
-    val newSigs = Dedup.minhashSignaturesFromGrams(
-      newGrams, idCol, "gram", p.numHashes)
-    val newBuckets = graft.GraftSession.trackPersist(
-      Dedup.lshBuckets(newSigs, idCol, "sig",
-        p.numBands, p.numHashes / p.numBands))
-    val idxBuckets = spark.table(s"${name}_buckets")
-    // hot-key guard: a (band,bucket) with > maxBucket members on either
-    // side would join quadratically — drop those keys, like the
-    // in-corpus pipelines drop oversized buckets. The INDEX side's
-    // counts were aggregated once at write/append time
-    // (`_bucketcounts`) — a per-batch query must not pay a full-index
-    // aggregation; only the batch's own (small) counts compute here.
-    val idxHot = bucketCountsOf(spark, name)
-      .filter(col("n") > maxBucket).select(col("band"), col("bucket"))
-    val newHot = newBuckets.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("__c")).filter(col("__c") > maxBucket)
-      .select(col("band"), col("bucket"))
-    val hot = idxHot.union(newHot).distinct()
-    val cand0 = newBuckets
-      .join(hot, Seq("band", "bucket"), "left_anti")
-      .select(col("band"), col("bucket"), col(idCol).as("__new"))
-      .join(idxBuckets.select(col("band"), col("bucket"),
-        col(idCol).as("__old")), Seq("band", "bucket"))
-      .select(col("__new"), col("__old"))
-    // excludeSelfId: see exactDupsAgainst — replay idempotence for
-    // ingest loops whose batch is already (partially) appended.
-    // The candidate frame feeds THREE consumers (both gram-set
-    // fetches and the final verify join) — unpersisted, the whole
-    // batch-buckets ⋈ index-buckets join (the query's heaviest
-    // subtree) executed once per consumer (r18 PlanAudit: the
-    // anti-hot + buckets-join subtree appeared twice in q105's
-    // executed plan). Two longs per candidate — persist it.
-    val cand = graft.GraftSession.trackPersist(
-      (if (excludeSelfId) cand0.filter(col("__old") =!= col("__new"))
-       else cand0).distinct())
+    val (newGrams, buckets) =
+      bandsOf(newDocs, idCol, textCol, paramsOf(spark, name))
+    val newBuckets = graft.GraftSession.trackPersist(buckets)
+    // three consumers (both gram-set fetches and the verify join):
+    // unpersisted, the batch ⋈ index bucket join — the query's heaviest
+    // subtree — ran once per consumer. Two longs per candidate.
+    val cand = graft.GraftSession.trackPersist(index(name).candidates(
+      newBuckets.select(col(idCol).as("__new"), col("band"), col("bucket")),
+      idCol, maxBucket, excludeSelfId))
     // exact-Jaccard verify over candidate ids only; the grams table is
     // bucketed by id, so its groupBy runs exchange-free
-    val newSets = newGrams
-      .join(cand.select(col("__new").as(idCol)).distinct(), idCol)
+    def gramSets(grams: DataFrame, side: String) = grams
+      .join(cand.select(col(side).as(idCol)).distinct(), idCol)
       .groupBy(col(idCol)).agg(collect_set(col("gram")).as("__sh"))
-      .select(col(idCol).as("__new"), col("__sh").as("__sh_new"))
-    val oldSets = spark.table(s"${name}_grams")
-      .join(cand.select(col("__old").as(idCol)).distinct(), idCol)
-      .groupBy(col(idCol)).agg(collect_set(col("gram")).as("__sh"))
-      .select(col(idCol).as("__old"), col("__sh").as("__sh_old"))
-    cand.join(newSets, "__new").join(oldSets, "__old")
+      .select(col(idCol).as(side), col("__sh").as(s"${side}_sh"))
+    cand.join(gramSets(newGrams, "__new"), "__new")
+      .join(gramSets(spark.table(s"${name}_grams"), "__old"), "__old")
       .select(col("__new").as("new_id"), col("__old").as("old_id"),
-        round(Dedup.jaccard(col("__sh_new"), col("__sh_old")), 6)
+        round(Dedup.jaccard(col("__new_sh"), col("__old_sh")), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }

@@ -4,127 +4,63 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental near-dup dedup against a PERSISTED 64-bit-signature
-  * index — the continuous-ingest form of the SIGNATURE dedup family,
-  * and the media counterpart of [[DedupIndex]] (which indexes MinHash
-  * grams for text). One index serves every operator that emits a
-  * 64-bit Hamming signature: image dHash ([[graft.multimodal.Decode
-  * .imageSignatures]]), audio envelope/chroma fingerprints, the video
-  * temporal hash, and text SimHash — a crawl ingests a batch of new
-  * media, fingerprints it in the scan stage, and filters against the
-  * corpus WITHOUT rescanning a byte of old payload.
+  * index — the media counterpart of [[DedupIndex]]. One index serves
+  * every operator that emits a 64-bit Hamming signature: image dHash
+  * ([[graft.multimodal.Decode.imageSignatures]]), audio envelope/chroma
+  * fingerprints, the video temporal hash, and text SimHash — a crawl
+  * fingerprints new media in its scan stage and filters it against
+  * the corpus WITHOUT rescanning a byte of old payload.
   *
-  * Tables (all ids + fixed-width longs — no payloads, ever):
-  *  - `<name>_sigs(id, sig)`, bucketed by id — Hamming verification;
-  *  - `<name>_sigbuckets(id, band, bucket)`, bucketed by (band,
-  *    bucket) — the 4×16-bit chunk banding of [[Dedup
-  *    .simhashNearDups]], EXACT chunks only (the index stays 4 rows
-  *    per signature; probing happens batch-side);
-  *  - `<name>_sigbucketcounts(band, bucket, n)` — write-time bucket
-  *    populations, merge-bumped on append (the [[DedupIndex]] hot-key
-  *    guard shape: the per-batch cap never re-aggregates the index);
-  *  - `<name>_meta` — the banding family, so a query can't silently
-  *    join an incompatible index.
-  *
-  * Query-side multi-probe (1-bit flips over each 16-bit chunk, 17
-  * buckets/band) against exact index chunks guarantees recall to
-  * Hamming 7: 4 bands pigeonhole ≤ ⌊d/4⌋ flipped bits into some band,
-  * and probe radius 1 covers band-distance ≤ 1, i.e. d ≤ 7. (The
-  * in-corpus symmetric form reaches 11 because BOTH sides probe;
-  * an index that stored probes too would pay 17× the rows. 7 covers
-  * the measured re-encode classes — BASELINE.md r17 matrix.)
-  * Batch-side joins shuffle only the batch; the index side reads
-  * exchange-free on its bucketing keys.
+  * The [[BandedIndex]] protocol (`_sigbuckets`, `_sigbucketcounts`,
+  * `_meta` = the banding family) over the EXACT 4×16-bit chunks of
+  * [[Dedup.simhashNearDups]]' banding, plus `<name>_sigs(id, sig)`,
+  * bucketed by id, for Hamming verification. The index stores 4 rows
+  * per signature; probing happens batch-side: 1-bit flips over each
+  * chunk (17 buckets/band) guarantee recall to Hamming 7 — 4 bands
+  * pigeonhole ≤ ⌊d/4⌋ flipped bits into some band, and probe radius 1
+  * covers band-distance ≤ 1. (The in-corpus symmetric form reaches 11
+  * because BOTH sides probe; an index that stored probes would pay 17×
+  * the rows. 7 covers the measured re-encode classes — BASELINE.md r17
+  * matrix.)
   */
 object SigIndex {
 
   private val Bands = 4
 
-  /** Build (or rebuild) the index from (id, sig) rows. Null sigs
-    * (undecodable payloads) are dropped — they can never pair. */
+  private def index(name: String) = new BandedIndex("SigIndex", name, "sig")
+
+  /** (id, sig) rows; null sigs (undecodable payloads) are dropped —
+    * they can never pair. */
+  private def rowsOf(sigs: DataFrame, idCol: String,
+                     sigCol: String): DataFrame =
+    sigs.select(col(idCol).as("id"), col(sigCol).cast("long").as("sig"))
+      .where(col("sig").isNotNull)
+
+  private def sigTable(name: String, s: DataFrame) =
+    BandedIndex.Table(s"${name}_sigs", s, Seq("id"))
+
+  /** Build (or rebuild) the index from (id, sig) rows. */
   def write(sigs: DataFrame, idCol: String, sigCol: String,
             name: String, numBuckets: Int = 16): Unit = {
-    val spark = sigs.sparkSession
-    import graft.dsl.Relation
-    Seq("sigs", "sigbuckets", "sigbucketcounts", "meta")
-      .foreach(t => DedupIndex.dropStale(spark, s"${name}_$t"))
-    val s = graft.GraftSession.trackPersist(
-      sigs.select(col(idCol).as("id"), col(sigCol).cast("long").as("sig"))
-        .where(col("sig").isNotNull))
-    Relation(s, s"${name}_sigs")
-      .storeBucketed(s"${name}_sigs", numBuckets, Seq("id"))
-    val buckets = bandChunks(s)
-    Relation(buckets, s"${name}_sigbuckets")
-      .storeBucketed(s"${name}_sigbuckets", numBuckets,
-        Seq("band", "bucket"))
-    buckets.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("n"))
-      .write.format("parquet").mode("overwrite")
-      .saveAsTable(s"${name}_sigbucketcounts")
-    import spark.implicits._
-    Seq((Bands, 16, numBuckets)).toDF("bands", "bits", "num_buckets")
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
+    import sigs.sparkSession.implicits._
+    val s = graft.GraftSession.trackPersist(rowsOf(sigs, idCol, sigCol))
+    index(name).write(bandChunks(s), Seq(sigTable(name, s)),
+      Seq((Bands, 16, numBuckets)).toDF("bands", "bits", "num_buckets"),
+      numBuckets)
   }
 
-  /** Append a batch to the index (id/sig rows; the caller has already
-    * dedup-filtered them if desired). O(batch), never O(index): rows
-    * insert into the bucketed tables and the count table merge-bumps
-    * from its own previous state. */
+  /** Append a batch of (id, sig) rows, e.g. the survivors of
+    * [[dropDupsAgainst]]. */
   def append(sigs: DataFrame, idCol: String, sigCol: String,
              name: String): Unit = {
-    val spark = sigs.sparkSession
-    checkFamily(spark, name)
-    // EAGER snapshot of the batch before any index mutation: the
-    // documented ingest loop appends the survivors of
-    // [[dropDupsAgainst]] — a plan that READS this index. A lazy
-    // persist can be evicted and recomputed AFTER the _sigs insert,
-    // at which point the batch dedups against itself and rows
-    // silently vanish from _sigbuckets (the DedupIndex.append
-    // lesson, same wording there).
-    val s = sigs.select(col(idCol).as("id"),
-        col(sigCol).cast("long").as("sig"))
-      .where(col("sig").isNotNull)
-      .localCheckpoint(eager = true)
-    val base = bucketCountsOf(spark, name)
-      .localCheckpoint(eager = true) // snapshot BEFORE the insert
-    s.write.format("parquet").mode("append")
-      .insertInto(s"${name}_sigs")
-    val buckets = bandChunks(s)
-    buckets.write.format("parquet").mode("append")
-      .insertInto(s"${name}_sigbuckets")
-    val merged = base
-      .unionByName(buckets.groupBy(col("band"), col("bucket"))
-        .agg(count(lit(1)).as("n")))
-      .groupBy(col("band"), col("bucket")).agg(sum(col("n")).as("n"))
-      .localCheckpoint(eager = true)
-    DedupIndex.dropStale(spark, s"${name}_sigbucketcounts")
-    merged.write.format("parquet").mode("overwrite")
-      .saveAsTable(s"${name}_sigbucketcounts")
+    checkFamily(sigs.sparkSession, name)
+    val s = BandedIndex.snapshot(rowsOf(sigs, idCol, sigCol))
+    index(name).append(bandChunks(s), Seq(sigTable(name, s)))
   }
 
-  /** The counts table with the [[DedupIndex.bucketCountsOf]]
-    * self-heal: a crash between [[append]]'s drop and rewrite leaves
-    * `_sigbuckets` intact — recompute (exchange-free on the bucketing
-    * key), warn, and let the next write/append re-materialize.
-    * Readers must never die on a recoverable artifact. */
-  private def bucketCountsOf(spark: SparkSession,
-                             name: String): DataFrame =
-    if (spark.catalog.tableExists(s"${name}_sigbucketcounts"))
-      spark.table(s"${name}_sigbucketcounts")
-    else {
-      graft.functions.Warnings.driverWarn(
-        s"sig index '$name': _sigbucketcounts missing (crash " +
-          "window?) — recomputing from _sigbuckets for this query; " +
-          "the next write/append re-materializes it")
-      spark.table(s"${name}_sigbuckets")
-        .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("n"))
-    }
-
-  /** Loud family guard — the scaladoc's "a query can't silently join
-    * an incompatible index" is enforced, not aspirational. */
+  /** Loud guard against an index of another banding family. */
   private def checkFamily(spark: SparkSession, name: String): Unit = {
-    require(spark.catalog.tableExists(s"${name}_meta"),
-      s"SigIndex '$name' does not exist — write() it first")
-    val r = spark.table(s"${name}_meta").head()
+    val r = index(name).metaOf(spark)
     val (bands, bits) = (r.getAs[Int]("bands"), r.getAs[Int]("bits"))
     require(bands == Bands && bits == 16,
       s"SigIndex '$name' was built with a ($bands-band, $bits-bit) " +
@@ -140,11 +76,9 @@ object SigIndex {
         .as(Seq("band", "bucket")))
 
   /** Near-dup pairs (id_new, id_old, hamming ≤ maxDistance) between a
-    * batch of (id, sig) rows and the index. Batch-side 1-bit
-    * multi-probe; buckets hot on EITHER side (index population or
-    * batch probe population over `maxBucket`) are skipped — the
-    * documented hot-bucket recall/cost lever; degenerate
-    * near-constant signatures pool there on both populations. */
+    * batch of (id, sig) rows and the index, probed batch-side. Buckets
+    * hot on either side are skipped ([[BandedIndex.candidates]]):
+    * degenerate near-constant signatures pool there. */
   def nearDupsAgainst(batch: DataFrame, idCol: String, sigCol: String,
                       name: String, maxDistance: Int = 7,
                       maxBucket: Int = 17000,
@@ -154,57 +88,19 @@ object SigIndex {
       s"query-side-probe banding guarantees recall only to Hamming 7 " +
         s"(got $maxDistance) — rebuild with a wider family for more")
     checkFamily(spark, name)
-    val s = graft.GraftSession.trackPersist(
-      batch.select(col(idCol).as("id_new"),
-          col(sigCol).cast("long").as("sig_new"))
-        .where(col("sig_new").isNotNull))
+    val s = graft.GraftSession.trackPersist(rowsOf(batch, idCol, sigCol))
+    // probes: each exact chunk, and the chunk with each one bit flipped
     val masks = 0L +: (0 until 16).map(i => 1L << i)
-    val probed = graft.GraftSession.trackPersist(
-      s.select(col("id_new"),
-        explode(flatten(array((0 until Bands).map { b =>
-          val chunk = shiftright(col("sig_new"), b * 16)
-            .bitwiseAND(0xFFFFL)
-          array(masks.map(m => struct(lit(b).as("band"),
-            chunk.bitwiseXOR(lit(m)).as("bucket"))): _*)
-        }: _*))).as("e"))
-        .select(col("id_new"), col("e.band").as("band"),
-          col("e.bucket").as("bucket")))
-    // hot on EITHER side (the DedupIndex guard): a degenerate batch
-    // (a million black frames probing the same buckets) must not
-    // build a |batch|×|bucket| candidate set any more than a
-    // degenerate index may — the cap is the documented recall/cost
-    // lever on both populations
-    val hot = bucketCountsOf(spark, name)
-      .where(col("n") > maxBucket)
-      .select(col("band"), col("bucket"))
-      .unionByName(probed
-        .groupBy(col("band"), col("bucket"))
-        .agg(count(lit(1)).as("bn"))
-        .where(col("bn") > maxBucket)
-        .select(col("band"), col("bucket")))
-      .distinct()
-    // candidates: batch probes × index chunks, hot buckets dropped;
-    // the index side reads exchange-free on (band, bucket)
-    val cands = probed
-      .join(hot.withColumn("hot", lit(true)),
-        Seq("band", "bucket"), "left")
-      .where(col("hot").isNull)
-      .join(spark.table(s"${name}_sigbuckets")
-          .select(col("band"), col("bucket"), col("id").as("id_old")),
-        Seq("band", "bucket"))
-      .select(col("id_new"), col("id_old")).distinct()
-      // excludeSelfId: replay idempotence for the streaming ingest —
-      // a crash between index append and ingest-log commit replays
-      // the batch against its OWN appended rows ([[graft.streaming
-      // .StreamingMediaDedup]]; the DedupIndex contract)
-      .filter(if (excludeSelfId) col("id_old") =!= col("id_new")
-              else lit(true))
-    cands
-      .join(s, "id_new")
+    val probed = graft.GraftSession.trackPersist(bandChunks(s).select(
+      col("id").as("__new"), col("band"), explode(array(masks.map(m =>
+        col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket")))
+    index(name).candidates(probed, "id", maxBucket, excludeSelfId)
+      .join(s.select(col("id").as("__new"), col("sig").as("sig_new")),
+        "__new")
       .join(spark.table(s"${name}_sigs")
-          .select(col("id").as("id_old"), col("sig").as("sig_old")),
-        "id_old")
-      .select(col("id_new"), col("id_old"),
+          .select(col("id").as("__old"), col("sig").as("sig_old")),
+        "__old")
+      .select(col("__new").as("id_new"), col("__old").as("id_old"),
         bit_count(col("sig_new").bitwiseXOR(col("sig_old")))
           .cast("long").as("hamming"))
       .filter(col("hamming") <= maxDistance)

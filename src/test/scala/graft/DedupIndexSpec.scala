@@ -148,4 +148,35 @@ class DedupIndexSpec extends SparkSpec {
     assert(DedupIndex.exactDupsAgainst(batch, "doc_id", "text", "ix3")
       .count() == 0)
   }
+
+  test("a never-written index fails loudly, naming the index, on " +
+       "append, paramsOf and nearDupsAgainst") {
+    val calls = Seq[() => Any](
+      () => DedupIndex.append(batch, "doc_id", "text", "ix_missing"),
+      () => DedupIndex.paramsOf(spark, "ix_missing"),
+      () => DedupIndex.nearDupsAgainst(batch, "doc_id", "text",
+        "ix_missing"))
+    for (call <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("'ix_missing'") &&
+        e.getMessage.contains("write() it first"), e.getMessage)
+    }
+  }
+
+  test("hot-bucket cap: band buckets over maxBucket on the index side " +
+       "are skipped — no pairs at a low cap, every pair at a high one") {
+    // 20 copies of one text pool 20 ids into each of its band buckets
+    val text = "the same boilerplate paragraph repeated across many pages"
+    DedupIndex.write((1L to 20L).map(i => (i, text)).toDF("doc_id", "text"),
+      "doc_id", "text", "ix7", P)
+    val probe = Seq((100L, text)).toDF("doc_id", "text")
+    assert(DedupIndex.nearDupsAgainst(probe, "doc_id", "text", "ix7",
+      maxBucket = 10).count() == 0,
+      "every band bucket exceeds the cap — no candidate may survive")
+    val pairs = DedupIndex.nearDupsAgainst(probe, "doc_id", "text", "ix7",
+        maxBucket = 1000)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(pairs.toSet == (1L to 20L).map(i => (100L, i, 1.0)).toSet,
+      s"got ${pairs.toSeq}")
+  }
 }

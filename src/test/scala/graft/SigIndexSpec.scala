@@ -82,4 +82,27 @@ class SigIndexSpec extends SparkSpec {
     assert(SigIndex.nearDupsAgainst(batch, "id", "sig", "sigix_t3",
       maxBucket = 1000).count() == 40)
   }
+
+  test("append with _sigbucketcounts MISSING (crash window) rebuilds " +
+       "exact counts — the fallback must not double-count the batch") {
+    SigIndex.write(sigsDf(
+      1L -> 0x1111222233334444L,
+      2L -> 0x0123456789ABCDEFL), "id", "sig", "sigix_t4")
+    // a crash between the count table's drop and its rewrite: the
+    // filter's hot guard and the append's bump both take the fallback
+    spark.sql("DROP TABLE sigix_t4_sigbucketcounts")
+    val batch = sigsDf(
+      40L -> 0x1111222233334444L,   // exact twin of 1: filtered
+      41L -> 0x5555666677778888L,   // novel
+      42L -> (0x0123456789ABCDEFL ^ -1L))  // far from everything
+    val kept = SigIndex.dropDupsAgainst(batch, "id", "sig", "sigix_t4")
+    SigIndex.append(kept, "id", "sig", "sigix_t4")
+    val expected = spark.table("sigix_t4_sigbuckets")
+      .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("n"))
+    val counts = spark.table("sigix_t4_sigbucketcounts")
+    assert(counts.except(expected).isEmpty &&
+      expected.except(counts).isEmpty)
+    assert(counts.agg(sum("n")).head().getLong(0) == 16L,
+      "4 indexed sigs (2 written + 2 appended survivors) x 4 bands")
+  }
 }
