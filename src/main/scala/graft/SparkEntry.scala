@@ -4928,7 +4928,7 @@ object SparkEntry {
       graft.text.Pipeline.stageFingerprint(df).take(16) + s"_$srcMtime"
     if (!new java.io.File(s"$dir/_SUCCESS").exists())
       df.write.mode("overwrite").parquet(dir)
-    s.read.parquet(dir)
+    graft.sources.Parquet.read(s, dir)
   }
 
   def benchQueries: Map[String, (SparkSession, String) => DataFrame] =

@@ -524,10 +524,10 @@ object Relation {
   /** LOAD 'path' USING Parquet (reference: LOLoad/POLoad; format loaders
     * §2.8 — Spark sources give pushdown + pruning via DSv2). */
   def load(spark: SparkSession, path: String, name: String): Relation =
-    new Relation(spark.read.parquet(path), name)
+    new Relation(graft.sources.Parquet.read(spark, path), name)
   def loadTable(spark: SparkSession, dir: String, table: String): Relation =
-    new Relation(fixNanoTimestamps(spark.read.parquet(s"$dir/$table.parquet")),
-      table)
+    new Relation(fixNanoTimestamps(
+      graft.sources.Parquet.read(spark, s"$dir/$table.parquet")), table)
   /** LOAD a (possibly bucketed) catalog table — the read half of
     * [[Relation.storeBucketed]]; bucketing metadata makes joins/groups on
     * the bucket key exchange-free. */

@@ -2043,6 +2043,9 @@ final class PigRunner(val spark: SparkSession) {
   // ---------------------------------------------------------------- LOAD
   private def load(path: String, using: Option[(String, Seq[String])],
                    schema: Option[Seq[FieldSchema]]): Relation = {
+    // sniffed at most once per LOAD: each sniff is several filesystem
+    // calls plus an open of the first file
+    lazy val parquetPath = looksParquet(path)
     val df0 = using match {
       case Some(("PigStorage", args)) =>
         // PigStorage() no-arg form arrives as one empty-string arg
@@ -2133,7 +2136,8 @@ final class PigRunner(val spark: SparkSession) {
           .filter(length(col("document")) > s"</$tag>".length + 1)
       // BinStorage is Pig's internal interchange format; parquet is this
       // engine's — intermediate store/load-back round-trips type-safely
-      case Some(("BinStorage", _)) => spark.read.parquet(splitPaths(path): _*)
+      case Some(("BinStorage", _)) =>
+        graft.sources.Parquet.read(spark, splitPaths(path): _*)
       // DBStorage read twin (extension — the reference StoreFunc is
       // write-only): DBStorage(driver, url[, user, pass], tableOrQuery);
       // the LOAD path operand is ignored, the DB is the source
@@ -2213,8 +2217,9 @@ final class PigRunner(val spark: SparkSession) {
       // no USING: .parquet paths and parquet-magic files read parquet
       // (so a default STORE round-trips); anything else gets the
       // REFERENCE's default loader, PigStorage('\t') (PigStorage.java)
-      case None if looksParquet(path) =>
-        Relation.fixNanoTimestamps(spark.read.parquet(splitPaths(path): _*))
+      case None if parquetPath =>
+        Relation.fixNanoTimestamps(
+          graft.sources.Parquet.read(spark, splitPaths(path): _*))
       case None =>
         spark.read.option("sep", "\t").csv(splitPaths(path): _*)
       // a REGISTER'd jar LoadFunc: text-record loaders run verbatim
@@ -2226,9 +2231,9 @@ final class PigRunner(val spark: SparkSession) {
           if graft.functions.JarStorage.canLoad(jarRegistry, other) =>
         import spark.implicits._
         val lines: org.apache.spark.sql.Dataset[String] =
-          if (looksParquet(path)) {
+          if (parquetPath) {
             val pdf = textified(Relation.fixNanoTimestamps(
-              spark.read.parquet(splitPaths(path): _*)))
+              graft.sources.Parquet.read(spark, splitPaths(path): _*)))
             pdf.select(concat_ws("\t", pdf.columns.map(c =>
               coalesce(col(c).cast(StringType), lit(""))).toIndexedSeq: _*))
               .as[String]
@@ -2256,7 +2261,7 @@ final class PigRunner(val spark: SparkSession) {
                                          .contains(u._1) ||
                          graft.functions.JarStorage
                            .canLoad(jarRegistry, u._1)) ||
-                       (using.isEmpty && !looksParquet(path)) =>
+                       (using.isEmpty && !parquetPath) =>
         // positional rename + LoadCaster casts (§1.4: failure → null);
         // a schema wider than the file null-pads the missing fields
         // (Pig: absent fields are null, never an error)

@@ -221,7 +221,8 @@ object Ivf {
   def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                   centroids: Array[Seq[Float]], idCol: String, vecCol: String,
                   query: Seq[Float], topK: Int, nprobe: Int): DataFrame =
-    topKInCells(spark.read.parquet(path), probeCells(centroids, query, nprobe),
+    topKInCells(graft.sources.Parquet.read(spark, path),
+      probeCells(centroids, query, nprobe),
       idCol, vecCol, query, topK)
 
   private def topKInCells(assigned: DataFrame, cells: Seq[Int], idCol: String,

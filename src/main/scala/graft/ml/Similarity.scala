@@ -133,7 +133,7 @@ object Similarity {
       val qSig = graft.functions.VectorExpressions.signatureOf(query, numPlanes)
       val probes = multiProbeBuckets(qSig, numPlanes, probeRadius)
       val q = typedlit(query)
-      val idx = spark.read.parquet(path)
+      val idx = graft.sources.Parquet.read(spark, path)
       // the partition column's type comes from directory-name inference
       // (IntegerType when values fit, StringType if inference is off) —
       // match the probe literals to it exactly so the filter both matches

@@ -182,7 +182,7 @@ object Streams {
   /** Every survivor batch a [[loggedBatch]] loop wrote to `outPath`. */
   private[graft] def loggedOutput(spark: SparkSession,
                                   outPath: String): DataFrame =
-    spark.read.parquet(s"$outPath/ingest_batch=*")
+    graft.sources.Parquet.read(spark, s"$outPath/ingest_batch=*")
 
   // ------------------------------------------------------------------
   // Arbitrary stateful processing (flatMapGroupsWithState) — running

@@ -93,7 +93,7 @@ object Pipeline {
         if (fingerprints) writeFingerprint(fs, fpFile, fp)
         dirty = true
       }
-      cur = spark.read.parquet(dir.toString)
+      cur = graft.sources.Parquet.read(spark, dir.toString)
     }
     cur
   }

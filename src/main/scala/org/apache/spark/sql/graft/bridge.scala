@@ -1,18 +1,30 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.DataSource
 
 /** Bridge into Spark's `private[sql]` Column↔Expression conversions —
   * Spark 4 made `Column` backend-agnostic, so third-party Catalyst
   * expressions need this one-hop shim (the standard extension pattern:
-  * a file inside the org.apache.spark.sql namespace). Nothing else in
+  * a file inside the org.apache.spark.sql namespace). It also exposes
+  * the path step of a file-source read ([[readRoots]]). Nothing else in
   * the codebase may depend on spark-private API.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The root paths a file-source read of `paths` lists: qualified and
+    * glob-expanded by Spark's own `DataSource` step, which throws where
+    * that read would (a missing path, a glob matching nothing). */
+  def readRoots(paths: Seq[String], hadoopConf: Configuration): Seq[Path] =
+    DataSource.checkAndGlobPathIfNecessary(paths, hadoopConf,
+      checkEmptyGlobPath = true, checkFilesExist = true,
+      enableGlobbing = true)
 
   /** Nondeterminism test on an UNRESOLVED Column. Spark 4 Columns are
     * lazy ColumnNode trees — `bridge.expression` wraps them in an
