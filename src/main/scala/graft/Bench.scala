@@ -55,7 +55,7 @@ object Bench {
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     // benchQueries = queries, except the near-dup gates time the
     // production operator without their O(n²) exact-twin verdicts
-    // (test machinery; see SparkEntry.benchQueries doc)
+    // (test machinery; see the graft.gates.Gate doc)
     val queries = SparkEntry.benchQueries.toSeq.sortBy(_._1)
     // Median-of-N (default 3): single-run totals have swung >1.5× on
     // co-tenant load, mis-signaling regressions against a hard 2×

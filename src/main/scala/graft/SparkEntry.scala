@@ -1,249 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types._
 
-import graft.dsl.Relation
 import graft.functions.Builtins._
+import graft.gates.{FunctionGates, Gate, MediaGates, RelationalGates, TextGates}
+import graft.gates.Fixtures.T
 
-/** Driver contract: one `queries` entry per implemented operator from
-  * SURVEY.md §2, with the DuckDB-equivalent SQL in `oracleSql`.
-  *
-  * Conventions (driver hash-compares values after sorting columns by name):
-  *  - every computed column is aliased identically on both sides;
-  *  - computed doubles that involve order-dependent aggregation are
-  *    `round`ed the same way on both sides (float tolerance policy mirrors
-  *    the reference's e2e floatpostprocess — SURVEY §5);
-  *  - integer-ish computed outputs are cast to BIGINT on both sides
-  *    (DuckDB widens to BIGINT/HUGEINT where Spark keeps int/long);
-  *  - top-k queries carry explicit tiebreakers so results are deterministic.
-  */
+/** The gate contract: one [[graft.gates.Gate]] per implemented operator
+  * from SURVEY.md §2 — its engine form, its DuckDB oracle SQL and, where
+  * Bench times something else, its bench form — plus the flagship
+  * [[entry]]. The name-keyed maps that [[Verify]], [[Bench]] and the
+  * external checker read are derived from [[gates]]. */
 object SparkEntry {
-
-  /** The DuckDB bigram-LM recompute (tokenize, add-1 smoothing,
-    * 6-digit rounding) shared VERBATIM by the q92 and q110 oracles —
-    * one definition so the two gates can never drift apart. */
-  private val lmRecomputeCtes: String =
-    """toks AS (
-           SELECT doc_id,
-                  list_filter(string_split_regex(trim(lower(text)), '[ \t\n\f\r\x0B]+'),
-                              t -> length(t) > 0) AS t
-           FROM documents),
-         uni AS (
-           SELECT tok AS w1, CAST(count(*) AS DOUBLE) AS c1
-           FROM (SELECT unnest(t) AS tok FROM toks) GROUP BY 1),
-         v AS (SELECT CAST(count(*) AS DOUBLE) AS vsize FROM uni),
-         big AS (
-           SELECT doc_id,
-                  unnest([array_to_string(t[i:i+1], ' ')
-                          for i in range(1, len(t))]) AS gram
-           FROM toks WHERE len(t) >= 2),
-         cnt AS (SELECT gram, CAST(count(*) AS DOUBLE) AS c12
-                 FROM big GROUP BY 1),
-         inst AS (
-           SELECT b.doc_id,
-                  -ln((c.c12 + 1) / (u.c1 + v.vsize)) AS nll
-           FROM big b JOIN cnt c USING (gram)
-                JOIN uni u ON u.w1 = string_split(b.gram, ' ')[1]
-                CROSS JOIN v),
-         sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-                       round(avg(nll), 6) AS avg_nll
-                FROM inst GROUP BY 1)"""
-
-  /** DuckDB mirror of `TextAnalysis.LangStopwords` — the Latin-script
-    * vote table (r17: it/pt/nl added). Shared VERBATIM by the q48 /
-    * q126 / q130 / q131 oracles so the vote can never drift between
-    * gates. */
-  private val langVoteSwValues: String =
-    """('de','der'),('de','die'),('de','das'),('de','und'),('de','ist'),
-             ('de','nicht'),('de','mit'),('de','ein'),('de','zu'),
-             ('en','the'),('en','and'),('en','of'),('en','to'),('en','in'),
-             ('en','is'),('en','that'),('en','it'),('en','for'),
-             ('es','el'),('es','los'),('es','las'),('es','y'),('es','es'),
-             ('es','que'),('es','por'),('es','para'),('es','una'),
-             ('fr','le'),('fr','la'),('fr','les'),('fr','et'),('fr','est'),
-             ('fr','que'),('fr','pour'),('fr','dans'),('fr','une'),
-             ('it','il'),('it','che'),('it','di'),('it','per'),('it','non'),
-             ('it','sono'),('it','della'),('it','più'),('it','anche'),
-             ('pt','não'),('pt','uma'),('pt','em'),('pt','do'),('pt','da'),
-             ('pt','os'),('pt','com'),('pt','mais'),('pt','foi'),
-             ('nl','het'),('nl','een'),('nl','dat'),('nl','van'),('nl','niet'),
-             ('nl','op'),('nl','te'),('nl','zijn'),('nl','ook')"""
-
-  /** DuckDB mirror of `TextAnalysis.scriptRouted` (r17): kana → ja,
-    * CJK ideograph → zh, Thai → th, Cyrillic → ru, else the vote
-    * result — each a 4096-char-bounded presence test, same precedence
-    * as the engine. `t` is the text SQL expression, `vote` the
-    * coalesced best-language expression. */
-  private def langRouteCase(t: String, vote: String): String =
-    "CASE WHEN regexp_matches(substr(" + t + ", 1, 4096), " +
-      "'[\\x{3040}-\\x{30ff}\\x{31f0}-\\x{31ff}]') THEN 'ja'\n" +
-    "     WHEN regexp_matches(substr(" + t + ", 1, 4096), " +
-      "'[\\x{4e00}-\\x{9fff}]') THEN 'zh'\n" +
-    "     WHEN regexp_matches(substr(" + t + ", 1, 4096), " +
-      "'[\\x{0e00}-\\x{0e7f}]') THEN 'th'\n" +
-    "     WHEN regexp_matches(substr(" + t + ", 1, 4096), " +
-      "'[\\x{0400}-\\x{04ff}]') THEN 'ru'\n" +
-    "     ELSE " + vote + " END"
-
-  /** q131 synthesis: one (lang, text) case per QualityStopwords
-    * language PLUS Thai; `doc_id % 11` selects. Each Latin sentence
-    * carries its own language's detection stopwords (and avoids
-    * outvoting collisions); each non-Latin sentence carries its
-    * script. Shared by the query and (as generated CASE arms) the
-    * oracle so the two synthesize identical corpora. */
-  private val LangRouterCases: Seq[(String, String)] = Seq(
-    "ja" -> "これは日本語の文章ですテキストの品質を確認します",
-    "ru" -> "это не просто текст на русском языке и всё хорошо",
-    "th" -> "ภาษาไทยเป็นภาษาที่สวยงามมากและน่าสนใจ",
-    "it" -> "il governo non ha detto che sono della più anche di",
-    "pt" -> "não era uma casa em que os amigos do da com mais foi",
-    "nl" -> "het was een dag dat van niet op te zijn ook mooi",
-    "fr" -> "le chat et les chiens est que pour dans une maison",
-    "zh" -> "这是一个很好的例子我们在这里有他的书",
-    "de" -> "der mann und die frau gehen nicht mit dem hund zu das haus",
-    "es" -> "el perro y los gatos es que por para una casa",
-    "en" -> "the quick brown fox is on the hill and it is a good day")
-
-  private def T(s: SparkSession, dir: String, n: String): Relation = {
-    GraftSession.tune(s)
-    Relation.loadTable(s, dir, n)
-  }
-
-  // ANN index caches: the bucket/cell-partitioned indexes are built ONCE
-  // per dataset dir and reused across query invocations (Bench's warmup
-  // invokes q47/q63 untimed to build them; timed passes measure the probe
-  // path — the repeated-query workload an index exists for). The on-disk
-  // path tag hashes the embeddings files' (name, size, mtime), so a
-  // CHANGED dataset at the same path gets a fresh index instead of
-  // silently reusing a stale one.
-  private val annIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ml.Similarity.AnnIndex]
-  private val ivfIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Array[Seq[Float]])]
-  private def indexDir(dataset: String, kind: String): String = {
-    val emb = new java.io.File(s"$dataset/embeddings.parquet")
-    val sig = Option(emb.listFiles()).map(_.toSeq).getOrElse(Seq(emb))
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .sorted.mkString("|")
-    val tag = java.lang.Integer.toHexString((dataset + "|" + sig).hashCode)
-    s"${System.getProperty("java.io.tmpdir")}/graft_${kind}_$tag"
-  }
-
-  /** q111/q113's synthesized-WARC shard dirs, keyed like [[indexDir]]
-    * but on the DOCUMENTS table's file signature; `kind` separates the
-    * plain-payload (q111) and HTTP-enveloped (q113) shard sets. */
-  private def warcDir(dataset: String, kind: String = "warc"): String = {
-    val docs = new java.io.File(s"$dataset/documents.parquet")
-    val sig = Option(docs.listFiles()).map(_.toSeq).getOrElse(Seq(docs))
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .sorted.mkString("|")
-    val tag = java.lang.Integer.toHexString((dataset + "|" + sig).hashCode)
-    s"${System.getProperty("java.io.tmpdir")}/graft_${kind}_$tag"
-  }
-
-  /** Synthesize gzipped WARC shards for a gate ONCE per keyed dir
-    * (q111/q113/q118 share this scaffold): missing `_SUCCESS` marker →
-    * stale leftovers cleared, 4 shards written one-per-partition (the
-    * file-grain the reader parallelizes on), marker committed last so
-    * a crashed partial build rebuilds. `mk` renders one doc row into
-    * a WARC record. */
-  private def ensureWarcShards(docs: DataFrame, dir: String)(
-      mk: org.apache.spark.sql.Row => graft.sources.Warc.Record): Unit = {
-    val marker = new java.io.File(dir, "_SUCCESS")
-    if (marker.exists()) return
-    val dd = new java.io.File(dir)
-    if (dd.exists()) Option(dd.listFiles()).foreach(_.foreach(_.delete()))
-    dd.mkdirs()
-    docs.repartition(4).foreachPartition {
-      (it: Iterator[org.apache.spark.sql.Row]) =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val os = new java.util.zip.GZIPOutputStream(
-          new java.io.FileOutputStream(s"$dir/part-$pid.warc.gz"))
-        try graft.sources.Warc.writeStream(it.map(mk), os)
-        finally os.close()
-    }
-    marker.createNewFile()
-  }
-
-  /** q98's sample EvalFunc jar, compiled ONCE per JVM against the
-    * engine's org.apache.pig facade — the same binary surface a real
-    * user jar links against. Three funcs cover the type surface:
-    * String (Exclaim), joda DateTime (NextDay — the §1.2 DATETIME ↔
-    * TimestampType mapping), BigDecimal (DecHalf — BIGDECIMAL ↔
-    * DecimalType). */
-  private lazy val gateJar: String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_gate_jar").toFile
-    val srcDir = new java.io.File(tmp, "gate/udf"); srcDir.mkdirs()
-    def write(name: String, body: String): java.io.File = {
-      val f = new java.io.File(srcDir, name)
-      java.nio.file.Files.write(f.toPath, body.getBytes("UTF-8"))
-      f
-    }
-    val srcs = Seq(
-      write("Exclaim.java",
-        """package gate.udf;
-          |import java.io.IOException;
-          |import org.apache.pig.EvalFunc;
-          |import org.apache.pig.data.Tuple;
-          |public class Exclaim extends EvalFunc<String> {
-          |  public String exec(Tuple input) throws IOException {
-          |    Object o = input.get(0);
-          |    return o == null ? null : o.toString() + "!";
-          |  }
-          |}
-          |""".stripMargin),
-      write("NextDay.java",
-        """package gate.udf;
-          |import java.io.IOException;
-          |import org.apache.pig.EvalFunc;
-          |import org.apache.pig.data.Tuple;
-          |import org.joda.time.DateTime;
-          |public class NextDay extends EvalFunc<DateTime> {
-          |  public DateTime exec(Tuple input) throws IOException {
-          |    Object o = input.get(0);
-          |    return o == null ? null : ((DateTime) o).plusDays(1);
-          |  }
-          |}
-          |""".stripMargin),
-      write("DecHalf.java",
-        """package gate.udf;
-          |import java.io.IOException;
-          |import java.math.BigDecimal;
-          |import org.apache.pig.EvalFunc;
-          |import org.apache.pig.data.Tuple;
-          |public class DecHalf extends EvalFunc<BigDecimal> {
-          |  public BigDecimal exec(Tuple input) throws IOException {
-          |    Object o = input.get(0);
-          |    if (o == null) return null;
-          |    return new BigDecimal(((Number) o).longValue())
-          |      .divide(new BigDecimal(2));
-          |  }
-          |}
-          |""".stripMargin))
-    val cls = new java.io.File(tmp, "classes"); cls.mkdirs()
-    val cp = Seq(classOf[org.apache.pig.EvalFunc[_]],
-        classOf[org.joda.time.DateTime])
-      .map(_.getProtectionDomain.getCodeSource.getLocation.getPath)
-      .distinct.mkString(java.io.File.pathSeparator)
-    val rc = javax.tools.ToolProvider.getSystemJavaCompiler
-      .run(null, null, null,
-        (Seq("-cp", cp, "-d", cls.getPath) ++ srcs.map(_.getPath)): _*)
-    require(rc == 0, "gate EvalFunc javac failed")
-    val jar = new java.io.File(tmp, "gateudf.jar")
-    val jos = new java.util.jar.JarOutputStream(
-      new java.io.FileOutputStream(jar))
-    Seq("Exclaim", "NextDay", "DecHalf").foreach { n =>
-      jos.putNextEntry(new java.util.jar.JarEntry(s"gate/udf/$n.class"))
-      jos.write(java.nio.file.Files.readAllBytes(
-        new java.io.File(cls, s"gate/udf/$n.class").toPath))
-      jos.closeEntry()
-    }
-    jos.close()
-    jar.getPath
-  }
 
   /** Flagship query on sf=0.001 (driver smoke-checks rows>0): TPC-H-Q3-ish
     * customer ⋈ orders ⋈ lineitem with broadcast dim, fused group-agg,
@@ -264,4785 +33,20 @@ object SparkEntry {
       .limit(10).df
   }
 
-  // =====================================================================
-  // Relational operators (SURVEY §2.1)
-  // =====================================================================
-
-  private val relationalQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // FILTER r BY cond (#3)
-    "q01_filter" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .filter(col("l_quantity") > 45 && col("l_returnflag") === "R")
-        .foreach(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-                 col("l_extendedprice")).df),
-
-    // FOREACH r GENERATE exprs (#4): arithmetic + bincond (c ? a : b)
-    "q02_foreach" -> ((s, d) =>
-      T(s, d, "lineitem").foreach(
-        col("l_orderkey"), col("l_linenumber"),
-        (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"),
-        when(col("l_quantity") > 25, lit("big")).otherwise(lit("small"))
-          .as("qty_class")).df),
-
-    // GROUP BY + fused aggregation (combiner path; #6 + §2.3)
-    "q03_group_agg" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .groupBy("l_returnflag" -> col("l_returnflag"),
-                 "l_linestatus" -> col("l_linestatus"))
-        .agg(round(SUM(col("l_quantity")), 2).as("sum_qty"),
-             round(SUM(col("l_extendedprice")), 2).as("sum_price"),
-             round(AVG(col("l_discount")), 6).as("avg_disc"),
-             COUNT_STAR().as("cnt")).df),
-
-    // GROUP ALL (#6): global aggregate, single group
-    "q04_group_all" -> ((s, d) =>
-      T(s, d, "lineitem").groupAll
-        .agg(COUNT_STAR().as("cnt"),
-             round(SUM(col("l_extendedprice")), 2).as("total_price"),
-             round(MIN(col("l_quantity")), 2).as("min_qty"),
-             round(MAX(col("l_quantity")), 2).as("max_qty")).df),
-
-    // GROUP producing a real bag column, consumed via SIZE (#6 bag path)
-    "q05_group_bag" -> ((s, d) =>
-      T(s, d, "orders")
-        .groupBy("o_custkey" -> col("o_custkey")).bag()
-        .foreach(col("o_custkey"), SIZE(col("orders")).as("n_orders")).df),
-
-    // nested FOREACH { ORDER …; LIMIT …; GENERATE FLATTEN } (#5), fused
-    // to a windowed top-k (NestedLimitOptimizer equivalence — groups are
-    // never materialized as bags)
-    "q06_nested_foreach" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .foreach(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-        .as("items")
-        .groupBy("okey" -> col("l_orderkey"))
-        .topK(2, col("l_quantity").desc, col("l_linenumber"))
-        .foreach(col("l_orderkey"), col("l_linenumber"), col("l_quantity")).df),
-
-    // JOIN default hash strategy (#7, §2.2)
-    "q07_join" -> ((s, d) =>
-      T(s, d, "orders")
-        .joinOn(T(s, d, "customer"), col("o_custkey"), col("c_custkey"))
-        .as("oc")
-        .groupBy("c_mktsegment" -> col("c_mktsegment"),
-                 "o_orderstatus" -> col("o_orderstatus"))
-        .agg(COUNT_STAR().as("n"),
-             round(SUM(col("o_totalprice")), 2).as("volume")).df),
-
-    // JOIN USING 'replicated' → broadcast (#7, POFRJoin analog)
-    "q08_join_broadcast" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .joinOn(T(s, d, "part"), col("l_partkey"), col("p_partkey"),
-                strategy = "replicated")
-        .as("lp")
-        .groupBy("p_brand" -> col("p_brand"))
-        .agg(COUNT_STAR().as("n"),
-             round(SUM(col("l_quantity")), 2).as("qty")).df),
-
-    // LEFT OUTER JOIN (#7): customers keep row even with no orders
-    "q09_join_left" -> ((s, d) =>
-      T(s, d, "customer")
-        .joinOn(T(s, d, "orders"), col("c_custkey"), col("o_custkey"),
-                joinType = "left")
-        .as("co")
-        .groupBy("c_custkey" -> col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("n_orders")).df),
-
-    // FULL OUTER JOIN (#7) of two aggregated sides
-    "q10_join_full" -> ((s, d) => {
-      val c = T(s, d, "customer")
-        .groupBy("nk" -> col("c_nationkey")).agg(COUNT_STAR().as("n_cust"))
-      val sup = T(s, d, "supplier")
-        .groupBy("nk" -> col("s_nationkey")).agg(COUNT_STAR().as("n_supp"))
-      c.joinOn(sup, col("nk"), col("supplier__nk"), joinType = "full")
-        .foreach(coalesce(col("nk"), col("supplier__nk")).as("nationkey"),
-                 coalesce(col("n_cust"), lit(0L)).as("n_cust"),
-                 coalesce(col("n_supp"), lit(0L)).as("n_supp")).df
-    }),
-
-    // CROSS (#8)
-    "q11_cross" -> ((s, d) =>
-      T(s, d, "region").cross(T(s, d, "nation"))
-        .foreach(col("r_name"), col("n_name")).df),
-
-    // COGROUP two relations BY key (#6): (group, bag, bag), empty bags
-    "q12_cogroup" -> ((s, d) =>
-      T(s, d, "customer")
-        .cogroup(col("c_nationkey"), T(s, d, "supplier"), col("s_nationkey"))
-        .foreach(col("group").as("nationkey"),
-                 SIZE(col("customer")).as("n_cust"),
-                 SIZE(col("supplier")).as("n_supp")).df),
-
-    // ORDER BY + LIMIT (#9/#11): Catalyst plans TakeOrderedAndProject
-    "q13_order_limit" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .orderBy(col("l_extendedprice").desc, col("l_orderkey"),
-                 col("l_linenumber"))
-        .limit(10)
-        .foreach(col("l_orderkey"), col("l_linenumber"),
-                 col("l_extendedprice")).df),
-
-    // RANK r BY col (#10): ties share rank — scalable 2-pass plan, no
-    // single-partition window (PORank.java:145-157 design)
-    "q14_rank" -> ((s, d) =>
-      T(s, d, "customer")
-        .rank(Seq(col("c_acctbal") -> false), rankName = "rnk")
-        .foreach(col("c_custkey"), col("c_acctbal"), col("rnk")).df),
-
-    // RANK … DENSE (#10): distinct keys ranked, null-safe join back
-    "q15_rank_dense" -> ((s, d) =>
-      T(s, d, "orders")
-        .rank(Seq(col("o_orderpriority") -> true), dense = true,
-              rankName = "rnk")
-        .foreach(col("o_orderkey"), col("o_orderpriority"), col("rnk")).df),
-
-    // RANK r (row numbers, no BY) — scalable 2-pass design (#10)
-    "q16_rank_rownum" -> ((s, d) =>
-      T(s, d, "customer")
-        .foreach(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-        .rankScalable("rn").df),
-
-    // DISTINCT (#12)
-    "q17_distinct" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .foreach(col("l_returnflag"), col("l_linestatus")).distinct.df),
-
-    // UNION (bag union, NO dedup) (#13)
-    "q18_union" -> ((s, d) =>
-      T(s, d, "customer").foreach(col("c_custkey").as("k"))
-        .union(T(s, d, "supplier").foreach(col("s_suppkey").as("k")))
-        .groupBy("k" -> col("k")).agg(COUNT_STAR().as("n")).df),
-
-    // UNION ONSCHEMA (align by name, null-pad) (#13)
-    "q19_union_onschema" -> ((s, d) =>
-      T(s, d, "customer")
-        .foreach(col("c_custkey").as("key"), col("c_acctbal").as("bal"))
-        .unionOnSchema(
-          T(s, d, "supplier")
-            .foreach(col("s_suppkey").as("key"), col("s_name").as("sname"))).df),
-
-    // SPLIT INTO … IF … OTHERWISE (#14): branches unioned with labels so
-    // one DataFrame exercises all three outputs (input persisted once)
-    "q20_split" -> ((s, d) => {
-      val o = T(s, d, "orders")
-      val hi = col("o_totalprice") > 200000
-      val lo = col("o_totalprice") < 50000
-      val parts = o.split("hi" -> hi, "lo" -> lo,
-                          "mid" -> o.splitOtherwise(hi, lo))
-      parts("hi").foreach(lit("hi").as("branch"), col("o_orderkey"))
-        .union(parts("lo").foreach(lit("lo").as("branch"), col("o_orderkey")))
-        .union(parts("mid").foreach(lit("mid").as("branch"), col("o_orderkey")))
-        .groupBy("branch" -> col("branch")).agg(COUNT_STAR().as("n")).df
-    }),
-
-    // SAMPLE (#15) — the row SET is nondeterministic, but the sample SIZE
-    // is Binomial(n, f): emit n plus a 4-sigma interval verdict so the
-    // sampler is oracle-checked statistically (P[spurious fail] ≈ 6e-5)
-    "q21_sample" -> ((s, d) => {
-      val li = T(s, d, "lineitem").df
-      val f = 0.1
-      val k = li.sample(f).agg(count(lit(1)).as("k"))
-      val n = li.agg(count(lit(1)).as("n"))
-      k.crossJoin(n).select(
-        col("n"),
-        (abs(col("k") - col("n") * f) <=
-          lit(4.0) * sqrt(col("n") * f * (1 - f))).as("within_4sigma"))
-    }),
-
-    // CUBE (#16)
-    "q22_cube" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))(
-          round(SUM(col("l_quantity")), 2).as("sum_qty"),
-          COUNT_STAR().as("n")).df),
-
-    // ROLLUP (#16)
-    "q23_rollup" -> ((s, d) =>
-      T(s, d, "orders")
-        .rollup(col("o_orderstatus"), col("o_orderpriority"))(
-          COUNT_STAR().as("n"),
-          round(SUM(col("o_totalprice")), 2).as("volume")).df),
-
-    // FLATTEN(bag) round-trip (#4 FLATTEN; empty bags disappear)
-    "q24_flatten" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .foreach(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-        .as("items")
-        .groupBy("okey" -> col("l_orderkey")).bag()
-        .foreach(col("items"))
-        .flatten("items")
-        .foreach(col("l_orderkey"), col("l_linenumber"), col("l_quantity")).df),
-
-    // semi-join (COGROUP+IsEmpty==false idiom → native left_semi, §2.2)
-    "q25_semijoin" -> ((s, d) =>
-      T(s, d, "customer")
-        .semiJoin(T(s, d, "orders").as("o")
-                    .foreach(col("o_custkey").as("c_custkey")),
-                  Seq("c_custkey"))
-        .groupBy("c_mktsegment" -> col("c_mktsegment"))
-        .agg(COUNT_STAR().as("n")).df),
-
-    // anti-join (PigMix L5: COGROUP + IsEmpty → native left_anti):
-    // customers with no URGENT order
-    "q26_antijoin" -> ((s, d) =>
-      T(s, d, "customer")
-        .antiJoin(T(s, d, "orders")
-                    .filter(col("o_orderpriority") === "1-URGENT").as("o")
-                    .foreach(col("o_custkey").as("c_custkey")),
-                  Seq("c_custkey"))
-        .foreach(col("c_custkey"), col("c_name")).df),
-
-    // scalar projection (1-row relation as scalar; ScalarExpression)
-    "q27_scalar" -> ((s, d) =>
-      T(s, d, "customer")
-        .withScalar("avg_bal", avg(col("c_acctbal")))
-        .filter(col("c_acctbal") > col("avg_bal"))
-        .groupBy("c_nationkey" -> col("c_nationkey"))
-        .agg(COUNT_STAR().as("n")).df),
-
-    // STREAM r THROUGH 'cat' (#17): per-partition external process pipe
-    "q28_stream" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .foreach(col("l_returnflag"), col("l_quantity"))
-        .streamThrough(Seq("cat"), StructType(Seq(
-          StructField("l_returnflag", StringType),
-          StructField("l_quantity", DoubleType))))
-        .groupBy("l_returnflag" -> col("l_returnflag"))
-        .agg(round(SUM(col("l_quantity")), 2).as("sum_qty"),
-             COUNT_STAR().as("n")).df),
-
-    // STREAM with file-handle redirection (§2.1 #17; HandleSpec /
-    // File{Input,Output}Handler): the partition lands in scratch/part_in
-    // before exec, the command reads+writes files itself, and the
-    // relation comes from scratch/part_out — same rows as q28, so the
-    // same oracle pins the whole redirection path
-    "q79_stream_file" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .foreach(col("l_returnflag"), col("l_quantity"))
-        .streamThroughIo("cat part_in > part_out", StructType(Seq(
-          StructField("l_returnflag", StringType),
-          StructField("l_quantity", DoubleType))),
-          graft.frontend.StreamIo.Spec(
-            input = Some(graft.frontend.StreamIo.Handle("part_in")),
-            outputs = Seq(graft.frontend.StreamIo.Handle("part_out"))))
-        .groupBy("l_returnflag" -> col("l_returnflag"))
-        .agg(round(SUM(col("l_quantity")), 2).as("sum_qty"),
-             COUNT_STAR().as("n")).df),
-
-    // ASSERT r BY cond (#19) — holds on this data, so acts as a pass-through
-    "q29_assert" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .assertBy(col("l_quantity") >= 0, "negative quantity")
-        .groupBy("l_returnflag" -> col("l_returnflag"))
-        .agg(COUNT_STAR().as("n")).df),
-
-    // TOP(n, field, bag) (§2.6) — grouped top-k; windowed form (the bag
-    // form stays exercised by q57/BuiltinsSpec)
-    "q30_top" -> ((s, d) =>
-      T(s, d, "orders")
-        .foreach(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-        .as("ob")
-        .groupBy("ck" -> col("o_custkey"))
-        .topK(2, col("o_totalprice").desc, col("o_orderkey"))
-        .foreach(col("o_custkey"), col("o_orderkey"), col("o_totalprice")).df),
-
-    // FLATTEN feeding a JOIN on a per-row key (PigMix L2 shape): the
-    // plans.PushFlattenPastJoin rewrite defers the explode above the
-    // join so the shuffle carries the pre-explode rows; same multiset
-    // out — this gate pins the rewritten plan's answers
-    "q73_flatten_join" -> ((s, d) =>
-      T(s, d, "orders")
-        .foreach(col("o_custkey"),
-                 split(col("o_orderpriority"), "-").as("tok"))
-        .flatten("tok")
-        .joinOn(T(s, d, "customer")
-                  .foreach(col("c_custkey"), col("c_mktsegment")),
-                col("o_custkey"), col("c_custkey"))
-        .groupBy("c_mktsegment" -> col("c_mktsegment"),
-                 "tok" -> col("tok"))
-        .agg(COUNT_STAR().as("n")).df),
-
-    // JOIN USING 'merge-sparse' (§2.2): sparse probe side (top-price
-    // orders) key-filters the big side's scan through a bloom built on
-    // the probe keys, then merge-joins — the Spark re-expression of the
-    // reference's index-seek right-side read (POMergeSparseJoin)
-    "q74_merge_sparse" -> ((s, d) =>
-      T(s, d, "orders")
-        .filter(col("o_totalprice") > 450000)
-        .foreach(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
-        .join(T(s, d, "lineitem"), Seq("l_orderkey"),
-              joinType = "inner", strategy = "merge-sparse")
-        .groupBy("l_orderkey" -> col("l_orderkey"))
-        .agg(COUNT_STAR().as("n_items"),
-             SUM(col("l_quantity")).as("sum_qty")).df)
-  )
-
-  private val relationalOracles: Map[String, String] = Map(
-    "q74_merge_sparse" ->
-      """SELECT l_orderkey, count(*) AS n_items, sum(l_quantity) AS sum_qty
-         FROM (SELECT o_orderkey AS l_orderkey FROM orders
-               WHERE o_totalprice > 450000)
-         JOIN lineitem USING (l_orderkey)
-         GROUP BY l_orderkey""",
-    "q73_flatten_join" ->
-      """SELECT c_mktsegment, tok, count(*) AS n FROM (
-           SELECT o_custkey,
-                  unnest(str_split(o_orderpriority, '-')) AS tok
-           FROM orders)
-         JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment, tok""",
-    "q01_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-         FROM lineitem WHERE l_quantity > 45 AND l_returnflag = 'R'""",
-    "q02_foreach" ->
-      """SELECT l_orderkey, l_linenumber,
-                l_extendedprice * (1 - l_discount) AS revenue,
-                CASE WHEN l_quantity > 25 THEN 'big' ELSE 'small' END AS qty_class
-         FROM lineitem""",
-    "q03_group_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-                round(sum(l_quantity), 2) AS sum_qty,
-                round(sum(l_extendedprice), 2) AS sum_price,
-                round(avg(l_discount), 6) AS avg_disc,
-                count(*) AS cnt
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-    "q04_group_all" ->
-      """SELECT count(*) AS cnt, round(sum(l_extendedprice), 2) AS total_price,
-                round(min(l_quantity), 2) AS min_qty,
-                round(max(l_quantity), 2) AS max_qty
-         FROM lineitem""",
-    "q05_group_bag" ->
-      """SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY o_custkey""",
-    "q06_nested_foreach" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM (
-           SELECT l_orderkey, l_linenumber, l_quantity,
-                  row_number() OVER (PARTITION BY l_orderkey
-                    ORDER BY l_quantity DESC, l_linenumber) AS rn
-           FROM lineitem) WHERE rn <= 2""",
-    "q07_join" ->
-      """SELECT c_mktsegment, o_orderstatus, count(*) AS n,
-                round(sum(o_totalprice), 2) AS volume
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment, o_orderstatus""",
-    "q08_join_broadcast" ->
-      """SELECT p_brand, count(*) AS n, round(sum(l_quantity), 2) AS qty
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         GROUP BY p_brand""",
-    "q09_join_left" ->
-      """SELECT c_custkey, count(o_orderkey) AS n_orders
-         FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-         GROUP BY c_custkey""",
-    "q10_join_full" ->
-      """SELECT coalesce(c.nk, s.nk) AS nationkey,
-                coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
-         FROM (SELECT c_nationkey AS nk, count(*) AS n_cust
-               FROM customer GROUP BY 1) c
-         FULL OUTER JOIN (SELECT s_nationkey AS nk, count(*) AS n_supp
-               FROM supplier GROUP BY 1) s ON c.nk = s.nk""",
-    "q11_cross" ->
-      """SELECT r_name, n_name FROM region CROSS JOIN nation""",
-    "q12_cogroup" ->
-      """SELECT coalesce(c.nk, s.nk) AS nationkey,
-                coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
-         FROM (SELECT c_nationkey AS nk, count(*) AS n_cust
-               FROM customer GROUP BY 1) c
-         FULL OUTER JOIN (SELECT s_nationkey AS nk, count(*) AS n_supp
-               FROM supplier GROUP BY 1) s ON c.nk = s.nk""",
-    "q13_order_limit" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-         ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 10""",
-    "q14_rank" ->
-      """SELECT c_custkey, c_acctbal,
-                rank() OVER (ORDER BY c_acctbal DESC) AS rnk
-         FROM customer""",
-    "q15_rank_dense" ->
-      """SELECT o_orderkey, o_orderpriority,
-                dense_rank() OVER (ORDER BY o_orderpriority) AS rnk
-         FROM orders""",
-    "q16_rank_rownum" ->
-      """SELECT row_number() OVER (ORDER BY c_custkey) AS rn,
-                c_custkey, c_name FROM customer""",
-    "q17_distinct" ->
-      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem""",
-    "q18_union" ->
-      """SELECT k, count(*) AS n FROM (
-           SELECT c_custkey AS k FROM customer
-           UNION ALL SELECT s_suppkey AS k FROM supplier) GROUP BY k""",
-    "q19_union_onschema" ->
-      """SELECT c_custkey AS key, c_acctbal AS bal, CAST(NULL AS VARCHAR) AS sname
-         FROM customer
-         UNION ALL
-         SELECT s_suppkey, CAST(NULL AS DOUBLE), s_name FROM supplier""",
-    "q20_split" ->
-      """SELECT branch, count(*) AS n FROM (
-           SELECT CASE WHEN o_totalprice > 200000 THEN 'hi'
-                       WHEN o_totalprice < 50000 THEN 'lo'
-                       ELSE 'mid' END AS branch
-           FROM orders) GROUP BY branch""",
-    // the Spark side computes within_4sigma from its own sample count; the
-    // oracle pins n exactly and asserts the binomial bound held
-    "q21_sample" ->
-      """SELECT count(*) AS n, true AS within_4sigma FROM lineitem""",
-    "q22_cube" ->
-      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty,
-                count(*) AS n
-         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
-    "q23_rollup" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-                round(sum(o_totalprice), 2) AS volume
-         FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""",
-    "q24_flatten" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem""",
-    "q25_semijoin" ->
-      """SELECT c_mktsegment, count(*) AS n FROM customer
-         WHERE c_custkey IN (SELECT o_custkey FROM orders)
-         GROUP BY c_mktsegment""",
-    "q26_antijoin" ->
-      """SELECT c_custkey, c_name FROM customer
-         WHERE c_custkey NOT IN
-           (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')""",
-    "q27_scalar" ->
-      """SELECT c_nationkey, count(*) AS n FROM customer
-         WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
-         GROUP BY c_nationkey""",
-    "q28_stream" ->
-      """SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty,
-                count(*) AS n
-         FROM lineitem GROUP BY l_returnflag""",
-    "q79_stream_file" ->
-      """SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty,
-                count(*) AS n
-         FROM lineitem GROUP BY l_returnflag""",
-    "q29_assert" ->
-      """SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag""",
-    "q30_top" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
-           SELECT o_custkey, o_orderkey, o_totalprice,
-                  row_number() OVER (PARTITION BY o_custkey
-                    ORDER BY o_totalprice DESC, o_orderkey) AS rn
-           FROM orders) WHERE rn <= 2"""
-  )
-
-  // =====================================================================
-  // Expression surface + builtin functions (SURVEY §2.5, §2.6)
-  // =====================================================================
-
-  private val functionQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // bincond / CASE (§2.5): nested when-chains
-    "q31_case" -> ((s, d) =>
-      T(s, d, "orders").foreach(
-        col("o_orderkey"),
-        when(col("o_totalprice") > 300000, lit("platinum"))
-          .when(col("o_totalprice") > 150000, lit("gold"))
-          .otherwise(when(col("o_orderstatus") === "F", lit("done"))
-            .otherwise(lit("base"))).as("tier")).df),
-
-    // bytearray lazy-cast semantics (§1.4): failed cast → null, not error
-    "q32_cast_null" -> ((s, d) =>
-      T(s, d, "orders").foreach(
-        col("o_orderkey"),
-        col("o_orderpriority").cast(LongType).as("pr_full"),
-        substring(col("o_orderpriority"), 1, 1).cast(LongType).as("pr_code")).df),
-
-    // MATCHES: whole-string regex anchoring (§2.5)
-    "q33_matches" -> ((s, d) =>
-      T(s, d, "part")
-        .foreach(MATCHES(col("p_type"), "PROMO.*").as("is_promo"))
-        .groupBy("is_promo" -> col("is_promo"))
-        .agg(COUNT_STAR().as("n")).df),
-
-    // string builtin catalog (§2.6)
-    "q34_strings" -> ((s, d) =>
-      T(s, d, "customer").foreach(
-        col("c_custkey"),
-        upper(col("c_name")).as("up"),
-        lower(col("c_mktsegment")).as("lo"),
-        SUBSTRING(col("c_name"), 0, 8).as("sub"),
-        concat(col("c_name"), lit("|"), col("c_mktsegment")).as("cat"),
-        regexp_replace(col("c_name"), "Customer", "C").as("rep"),
-        length(col("c_name")).cast(LongType).as("len"),
-        INDEXOF(col("c_name"), "#").cast(LongType).as("idx"),
-        STARTSWITH(col("c_name"), "Customer").as("sw"),
-        trim(col("c_mktsegment")).as("tr")).df),
-
-    // math builtin catalog (§2.6)
-    "q35_math" -> ((s, d) =>
-      T(s, d, "part").foreach(
-        col("p_partkey"),
-        abs(-col("p_size")).cast(LongType).as("abs_sz"),
-        ceil(col("p_retailprice")).as("ce"),
-        floor(col("p_retailprice")).as("fl"),
-        ROUND_TO(col("p_retailprice"), 1).as("rnd"),
-        round(sqrt(col("p_retailprice")), 6).as("sq"),
-        round(log(col("p_retailprice")), 6).as("ln"),
-        (col("p_size") % 7).cast(LongType).as("md")).df),
-
-    // datetime builtin catalog (§2.6): field extraction + duration math +
-    // the joda *Between family (millis diff, truncation toward zero)
-    "q36_datetime" -> ((s, d) => {
-      val ref = lit("1995-07-15 12:30:00").cast(TimestampType)
-      T(s, d, "orders").foreach(
-        col("o_orderkey"),
-        GetYear(col("o_orderdate")).cast(LongType).as("yr"),
-        GetMonth(col("o_orderdate")).cast(LongType).as("mo"),
-        GetDay(col("o_orderdate")).cast(LongType).as("dy"),
-        datediff(col("o_orderdate"), lit("1995-01-01").cast(DateType))
-          .cast(LongType).as("days_since"),
-        AddDuration(col("o_orderdate"), "P1D").as("next_day"),
-        SecondsBetween(col("o_orderdate"), ref).as("sec_ref"),
-        HoursBetween(col("o_orderdate"), ref).as("hrs_ref"),
-        DaysBetween(col("o_orderdate"), ref).as("days_ref"),
-        WeeksBetween(col("o_orderdate"), ref).as("wks_ref"),
-        MilliSecondsBetween(col("o_orderdate"), ref).as("ms_ref")).df
-    }),
-
-    // TOKENIZE + FLATTEN wordcount (§2.6 TOKENIZE; the canonical Pig demo)
-    "q37_tokenize" -> ((s, d) =>
-      T(s, d, "documents")
-        .foreach(explode(TOKENIZE(col("text"))).as("word"))
-        .groupBy("word" -> col("word"))
-        .agg(COUNT_STAR().as("n"))
-        .orderBy(col("n").desc, col("word"))
-        .limit(20).df),
-
-    // map type + lookup m#'k' (§2.5): JSON props → map → element_at
-    "q38_map_lookup" -> ((s, d) =>
-      T(s, d, "events").foreach(
-        col("event_id"),
-        element_at(from_json(col("props"),
-          MapType(StringType, LongType)), "k").as("k_val")).df),
-
-    // sessionization over events: window lag + gap>30min session breaks
-    "q39_sessionize" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      T(s, d, "events")
-        .foreach(col("user_id"), col("ts"), col("event_id"))
-        .foreach(col("user_id"),
-          when(unix_timestamp(col("ts")) -
-               unix_timestamp(lag(col("ts"), 1).over(w)) > 1800 ||
-               lag(col("ts"), 1).over(w).isNull, 1L).otherwise(0L)
-            .as("is_new"))
-        .groupBy("user_id" -> col("user_id"))
-        .agg(sum(col("is_new")).as("n_sessions"),
-             COUNT_STAR().as("n_events")).df
-    }),
-
-    // tumbling time-window aggregation over events (batch twin of the
-    // Structured Streaming surface in graft.streaming)
-    "q40_time_window" -> ((s, d) =>
-      T(s, d, "events")
-        .groupBy("hour" -> date_trunc("hour", col("ts")),
-                 "event_type" -> col("event_type"))
-        .agg(COUNT_STAR().as("n"),
-             round(SUM(col("value")), 2).as("sum_value")).df),
-
-    // explicit skew mitigation (Pig skewed join / PartitionSkewedKeys):
-    // salted join (hot key spread over 8 reducers, right replicated 8x)
-    // feeding a two-phase salted aggregation (3 hot group keys). The
-    // salt changes DISTRIBUTION only — the oracle pins that the result
-    // is identical to the unsalted plan
-    // 128-bit simhash near-dups — the scale path past the 64-bit
-    // variant's banding ceiling; gated against the exact quadratic twin
-    // (4×32-bit bands make hamming<=3 recall EXACTLY 1.0 by pigeonhole
-    // when no bucket overflows, and precision is exact by construction)
-    "q78_simhash128" -> ((s, d) => {
-      val sigs = graft.GraftSession.trackPersist(
-        graft.text.Dedup.simhash128(T(s, d, "documents").df,
-          "doc_id", "text"))
-      val found = graft.GraftSession.trackPersist(
-        graft.text.Dedup.simhashNearDups128(sigs, "doc_id",
-          maxDistance = 3))
-      val exact = graft.GraftSession.trackPersist(
-        graft.text.Dedup.exactHamming128Pairs(sigs, "doc_id", 3))
-      val aggE = exact.join(
-          found.select(col("id_a"), col("id_b"), lit(1L).as("fnd")),
-          Seq("id_a", "id_b"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("fnd")), lit(0L)).as("n_hit"))
-      val aggF = found.agg(count(lit(1)).as("n_found"))
-      sigs.agg(count(lit(1)).as("n_docs"))
-        .crossJoin(aggE).crossJoin(aggF).select(
-          col("n_docs"),
-          (col("n_hit") === col("n_exact")).as("recall_ok"),
-          (col("n_found") === col("n_hit")).as("precision_ok"))
-    }),
-
-    "q77_salted_skew" -> ((s, d) => {
-      val li = T(s, d, "lineitem").df
-        .select(col("l_orderkey").as("o_orderkey"), col("l_quantity"))
-      val ord = T(s, d, "orders").df
-        .select(col("o_orderkey"), col("o_orderpriority"))
-      val j = graft.operators.Skew.saltedJoin(li, ord, Seq("o_orderkey"),
-        numSalts = 8)
-      graft.operators.Skew.saltedAggregate(j, Seq("o_orderpriority"),
-        numSalts = 8,
-        Seq(("sum_qty", sum(col("l_quantity")), (c: Column) => sum(c)),
-            ("n", count(lit(1)), (c: Column) => sum(c).cast(LongType))))
-    }),
-
-    // batch twin of Streams.intervalJoin (the watermarked stream-stream
-    // interval join): view→purchase pairs per user within 10 minutes.
-    // Runs the PRODUCTION helper itself — withWatermark is a no-op on a
-    // batch DataFrame, so this pins the join condition the streaming
-    // path uses (state-droppable event-time bound + equality keys)
-    "q75_interval_join" -> ((s, d) => {
-      // events is loaded TWICE so the two sides carry distinct attribute
-      // ids — a single shared scan would make l("user_id")===r("user_id")
-      // self-resolve to one attribute and collapse the key condition
-      val views = T(s, d, "events").df
-        .filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("view_ts"))
-      val buys = T(s, d, "events").df
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("buy_ts"))
-      graft.streaming.Streams
-        .intervalJoin(views, "view_ts", buys, "buy_ts",
-                      Seq("user_id"), "10 minutes", "1 hour")
-        .groupBy(views("user_id").as("user_id"))
-        .agg(count(lit(1)).as("n_pairs"))
-    }),
-
-    // APPROX_DISTINCT bonus aggregate (SURVEY §2.3) through the frontend
-    // fused-agg path (HLL++ sketch, partial-aggregated): verdict-gated
-    // against the exact distinct count at 3× the default rsd (0.05 is a
-    // standard DEVIATION, not a bound — a 5% verdict fails ~1/3 of
-    // groups by design). HLL is deterministic for a given input, so the
-    // 15% bound is a stable pass/fail; n_exact hash-pins the group
-    // cardinalities
-    "q76_approx_distinct" -> ((s, d) => {
-      GraftSession.tune(s)
-      val approx = graft.frontend.PigRunner(s).run(s"""
-        o = LOAD '$d/orders.parquet';
-        g = GROUP o BY o_orderpriority;
-        a = FOREACH g GENERATE group AS prio,
-              APPROX_DISTINCT(o.o_custkey) AS nd;
-      """).apply("a").df
-      val exact = T(s, d, "orders").df
-        .groupBy(col("o_orderpriority").as("prio"))
-        .agg(countDistinct(col("o_custkey")).as("n_exact"))
-      approx.join(exact, "prio")
-        .select(col("prio"), col("n_exact"),
-          (abs(col("nd") - col("n_exact")) <=
-            greatest(lit(1.0), col("n_exact") * 0.15)).as("approx_ok"))
-    }),
-
-    // piggybank evaluation functions end-to-end through the frontend
-    // (DEFINE with full package names, exactly as reference users write
-    // them): Reverse/LENGTH/Stuff/Decode/IsNumeric — all codegen Column
-    // work, oracle-checked per row
-    "q82_piggybank" -> ((s, d) => {
-      GraftSession.tune(s)
-      graft.frontend.PigRunner(s).run(s"""
-        DEFINE Rev org.apache.pig.piggybank.evaluation.string.Reverse();
-        DEFINE Len org.apache.pig.piggybank.evaluation.string.LENGTH();
-        DEFINE St  org.apache.pig.piggybank.evaluation.string.Stuff();
-        DEFINE Dec org.apache.pig.piggybank.evaluation.decode.Decode();
-        DEFINE IsN org.apache.pig.piggybank.evaluation.IsNumeric();
-        c = LOAD '$d/customer.parquet';
-        p = FOREACH c GENERATE c_custkey,
-              Rev(c_name) AS rev_name,
-              (long)Len(c_name) AS n_name,
-              St(c_mktsegment, 0, 2, 'XX') AS stuffed,
-              Dec(c_mktsegment, 'BUILDING', 'b', 'AUTOMOBILE', 'a', 'o')
-                AS seg_code,
-              IsN((chararray)c_nationkey) AS nk_numeric;
-      """).apply("p").df
-    }),
-
-    // Invoke* reflection UDFs end-to-end through the frontend: an
-    // instance-method call (receiver as first arg) and a 2-arg static —
-    // reference Invoker.java semantics, here resolved once per JVM
-    "q72_invoke" -> ((s, d) => {
-      GraftSession.tune(s)
-      graft.frontend.PigRunner(s).run(s"""
-        DEFINE Lo InvokeForString('java.lang.String.toLowerCase', '', 'false');
-        DEFINE MaxL InvokeForLong('java.lang.Math.max', 'long long');
-        c = LOAD '$d/customer.parquet';
-        p = FOREACH c GENERATE c_custkey, Lo(c_mktsegment) AS seg,
-              MaxL(c_custkey, 1000) AS floor_key;
-      """).apply("p").df
-    })
-  )
-
-  private val functionOracles: Map[String, String] = Map(
-    // simhash128 is not DuckDB-expressible: pin the n_docs anchor and
-    // the Spark-side exact-twin verdicts (q44 pattern)
-    "q78_simhash128" ->
-      """SELECT count(*) AS n_docs, true AS recall_ok,
-                true AS precision_ok
-         FROM documents""",
-    "q77_salted_skew" ->
-      """SELECT o_orderpriority, sum(l_quantity) AS sum_qty,
-                count(*) AS n
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderpriority""",
-    // mirrors the piggybank Java semantics: Stuff deletes 2 chars at
-    // 0-based index 0 and inserts 'XX'; Decode is first-match-else-
-    // default; IsNumeric is the reference's regex after one leading '-'
-    "q82_piggybank" ->
-      """SELECT c_custkey, reverse(c_name) AS rev_name,
-                length(c_name) AS n_name,
-                'XX' || substring(c_mktsegment, 3) AS stuffed,
-                CASE c_mktsegment WHEN 'BUILDING' THEN 'b'
-                     WHEN 'AUTOMOBILE' THEN 'a' ELSE 'o' END AS seg_code,
-                regexp_matches(CAST(c_nationkey AS VARCHAR),
-                               '^-?\d+(\.\d+)?$') AS nk_numeric
-         FROM customer""",
-    "q76_approx_distinct" ->
-      """SELECT o_orderpriority AS prio,
-                count(DISTINCT o_custkey) AS n_exact,
-                true AS approx_ok
-         FROM orders GROUP BY o_orderpriority""",
-    "q75_interval_join" ->
-      """SELECT v.user_id, count(*) AS n_pairs
-         FROM (SELECT user_id, ts AS view_ts FROM events
-               WHERE event_type = 'view') v
-         JOIN (SELECT user_id, ts AS buy_ts FROM events
-               WHERE event_type = 'purchase') b
-           ON v.user_id = b.user_id
-          AND b.buy_ts >= v.view_ts
-          AND b.buy_ts <= v.view_ts + INTERVAL 10 MINUTE
-         GROUP BY v.user_id""",
-    "q72_invoke" ->
-      """SELECT c_custkey, lower(c_mktsegment) AS seg,
-                CAST(greatest(c_custkey, 1000) AS BIGINT) AS floor_key
-         FROM customer""",
-    "q31_case" ->
-      """SELECT o_orderkey,
-                CASE WHEN o_totalprice > 300000 THEN 'platinum'
-                     WHEN o_totalprice > 150000 THEN 'gold'
-                     WHEN o_orderstatus = 'F' THEN 'done'
-                     ELSE 'base' END AS tier
-         FROM orders""",
-    "q32_cast_null" ->
-      """SELECT o_orderkey, TRY_CAST(o_orderpriority AS BIGINT) AS pr_full,
-                TRY_CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS pr_code
-         FROM orders""",
-    "q33_matches" ->
-      """SELECT regexp_full_match(p_type, 'PROMO.*') AS is_promo,
-                count(*) AS n
-         FROM part GROUP BY 1""",
-    "q34_strings" ->
-      """SELECT c_custkey, upper(c_name) AS up, lower(c_mktsegment) AS lo,
-                substring(c_name, 1, 8) AS sub,
-                c_name || '|' || c_mktsegment AS cat,
-                replace(c_name, 'Customer', 'C') AS rep,
-                CAST(length(c_name) AS BIGINT) AS len,
-                CAST(strpos(c_name, '#') - 1 AS BIGINT) AS idx,
-                starts_with(c_name, 'Customer') AS sw,
-                trim(c_mktsegment) AS tr
-         FROM customer""",
-    "q35_math" ->
-      """SELECT p_partkey, CAST(abs(-p_size) AS BIGINT) AS abs_sz,
-                CAST(ceil(p_retailprice) AS BIGINT) AS ce,
-                CAST(floor(p_retailprice) AS BIGINT) AS fl,
-                round(p_retailprice, 1) AS rnd,
-                round(sqrt(p_retailprice), 6) AS sq,
-                round(ln(p_retailprice), 6) AS ln,
-                CAST(p_size % 7 AS BIGINT) AS md
-         FROM part""",
-    "q36_datetime" ->
-      """SELECT o_orderkey,
-                CAST(year(o_orderdate) AS BIGINT) AS yr,
-                CAST(month(o_orderdate) AS BIGINT) AS mo,
-                CAST(day(o_orderdate) AS BIGINT) AS dy,
-                CAST(date_diff('day', DATE '1995-01-01',
-                               CAST(o_orderdate AS DATE)) AS BIGINT)
-                  AS days_since,
-                o_orderdate + INTERVAL 1 DAY AS next_day,
-                CAST(trunc(msd / 1000.0) AS BIGINT) AS sec_ref,
-                CAST(trunc(msd / 3600000.0) AS BIGINT) AS hrs_ref,
-                CAST(trunc(msd / 86400000.0) AS BIGINT) AS days_ref,
-                CAST(trunc(msd / 604800000.0) AS BIGINT) AS wks_ref,
-                msd AS ms_ref
-         FROM (SELECT *,
-                 epoch_ms(CAST(o_orderdate AS TIMESTAMP))
-                   - epoch_ms(TIMESTAMP '1995-07-15 12:30:00') AS msd
-               FROM orders)""",
-    "q37_tokenize" ->
-      """SELECT word, count(*) AS n FROM (
-           SELECT unnest(string_split_regex(text, '[ ",()*]')) AS word
-           FROM documents)
-         WHERE length(word) > 0
-         GROUP BY word ORDER BY n DESC, word LIMIT 20""",
-    "q38_map_lookup" ->
-      """SELECT event_id,
-                CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS k_val
-         FROM events""",
-    "q39_sessionize" ->
-      """SELECT user_id, CAST(sum(is_new) AS BIGINT) AS n_sessions,
-                count(*) AS n_events
-         FROM (
-           SELECT user_id,
-                  CASE WHEN lag(ts) OVER w IS NULL
-                         OR date_diff('second', lag(ts) OVER w, ts) > 1800
-                       THEN 1 ELSE 0 END AS is_new
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-         GROUP BY user_id""",
-    "q40_time_window" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-                count(*) AS n, round(sum(value), 2) AS sum_value
-         FROM events GROUP BY 1, 2"""
-  )
-
-  // =====================================================================
-  // LLM-data-pipeline operators (BASELINE.json north star): dedup,
-  // similarity search, text analysis, multimodal plumbing
-  // =====================================================================
-
-  private val pipelineQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // exact dedup via content-hash groupBy (one shuffle on md5 digest)
-    "q41_dedup_exact" -> ((s, d) =>
-      graft.text.Dedup.exactDupGroups(
-        T(s, d, "documents").df, "text", "doc_id")),
-
-    // exact-dedup'd corpus row count per source (semi-join keep-set)
-    "q42_dedup_drop" -> ((s, d) =>
-      Relation(graft.text.Dedup.dropExactDups(
-          T(s, d, "documents").df, "text", "doc_id"), "docs")
-        .groupBy("source" -> col("source"))
-        .agg(COUNT_STAR().as("n")).df),
-
-    // MinHash + LSH near-dup pipeline (shingle→sign→band→verify), gated
-    // by its EXACT twin: recall vs the inverted-index-join exact Jaccard
-    // pairs on the deterministic doc_id<500 subset (= the whole corpus at
-    // sf0.01, where the DuckDB oracle recomputes n_exact), and a
-    // false-positive cross-check of the operator's HOF-set Jaccard
-    // against the twin's count arithmetic. Seeded hashes → deterministic
-    // verdicts.
-    "q43_minhash_neardups" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      // both pair sets feed several verdict aggregates — persist the
-      // (small) results, not the pipelines, so each runs once
-      val found = graft.GraftSession.trackPersist(
-        graft.text.Dedup.minhashNearDupsByWords(
-          docs, "doc_id", "text",
-          n = 3, numHashes = 64, numBands = 16, threshold = 0.5))
-      val exact = graft.GraftSession.trackPersist(
-        graft.text.Dedup.exactJaccardPairs(
-          docs.filter(col("doc_id") < 500), "doc_id", "text",
-          n = 3, threshold = 0.5))
-      val foundSub = found.filter(col("id_a") < 500 && col("id_b") < 500)
-      // one join + two single-row aggs (not a join per verdict): hits and
-      // false positives both fall out of the left-join flag
-      val sub = foundSub.join(
-          exact.select(col("id_a"), col("id_b"), lit(1L).as("hit")),
-          Seq("id_a", "id_b"), "left")
-        .agg(count(lit(1)).as("n_found_sub"),
-          coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
-      exact.agg(count(lit(1)).as("n_exact")).crossJoin(sub).select(
-        col("n_exact"),
-        (col("n_hit") >= ceil(col("n_exact") * 0.8)).as("recall_ok"),
-        (col("n_found_sub") === col("n_hit")).as("precision_ok"))
-    }),
-
-    // SimHash banded near-dups, gated by the EXACT quadratic twin over
-    // the same signatures: banding must find every hamming≤3 pair (4
-    // bands × 16 bits — pigeonhole guarantees a clean band at d≤3), a
-    // measured share of all hamming≤8 pairs, and nothing outside the
-    // exact set. DuckDB can't compute simhash, so the oracle pins the
-    // n_docs anchor and the Spark-side verdicts (q21 pattern).
-    "q44_simhash_neardups" -> ((s, d) => {
-      val sigs = graft.GraftSession.trackPersist(
-        graft.text.Dedup.simhash(T(s, d, "documents").df, "doc_id", "text"))
-      // the exact twin is a quadratic BNLJ feeding four verdict
-      // aggregates — persist its (small) result so the join runs once
-      val found = graft.GraftSession.trackPersist(
-        graft.text.Dedup.simhashNearDups(sigs, "doc_id", maxDistance = 8))
-      val exact = graft.GraftSession.trackPersist(
-        graft.text.Dedup.exactHammingPairs(sigs, "doc_id", 8))
-      // all verdicts from ONE left-join of the exact set against a found
-      // flag (+ two single-row aggs), not a join per verdict
-      val aggE = exact.join(
-          found.select(col("id_a"), col("id_b"), lit(1L).as("fnd")),
-          Seq("id_a", "id_b"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("fnd")), lit(0L)).as("n_hit"),
-          count(when(col("hamming") <= 3 && col("fnd").isNull, 1))
-            .as("n_miss3"))
-      val aggF = found.agg(count(lit(1)).as("n_found"))
-      sigs.agg(count(lit(1)).as("n_docs"))
-        .crossJoin(aggE).crossJoin(aggF).select(
-          col("n_docs"),
-          // banding recall beyond the d<=3 guarantee: measured 0.39-0.40
-          // at sf0.01 and sf0.1 (matches the 4-band surjection math:
-          // P[no clean band | d=8] ~ 0.62)
-          (col("n_hit") >= ceil(col("n_exact") * 0.3)).as("recall_ok"),
-          (col("n_miss3") === 0).as("guarantee3_ok"),
-          (col("n_found") === col("n_hit")).as("precision_ok"))
-    }),
-
-    // Incremental dedup against a persisted bucketed index (r14,
-    // DedupIndex): the corpus splits into an indexed 3/4 and an
-    // ingest-batch 1/4 (doc_id mod 4 — scale-invariant); the gate
-    // bounds both to doc_id < 500 so the DuckDB twin stays tractable.
-    // Verdicts: exact-dup count matches DuckDB text equality; LSH
-    // recall >= 0.8 of the exact cross-Jaccard pairs (the q43
-    // operating point); precision exact (candidates are
-    // Jaccard-verified). Bench times the UNtwinned production path
-    // at full corpus scope (benchQueries override).
-    "q105_dedup_index" -> ((s, d) => {
-      val sub = T(s, d, "documents").df.filter(col("doc_id") < 500)
-      val old = sub.filter(pmod(col("doc_id"), lit(4)) < 3)
-      val batch = sub.filter(pmod(col("doc_id"), lit(4)) === 3)
-      graft.text.DedupIndex.write(old, "doc_id", "text", "q105_ix")
-      val nExactDups = graft.text.DedupIndex.exactDupsAgainst(
-        batch, "doc_id", "text", "q105_ix")
-        .agg(count(lit(1)).as("n_exact_dups"))
-      val near = graft.GraftSession.trackPersist(
-        graft.text.DedupIndex.nearDupsAgainst(
-          batch, "doc_id", "text", "q105_ix", threshold = 0.5))
-      val twin = graft.GraftSession.trackPersist(
-        graft.text.Dedup.exactJaccardPairs(sub, "doc_id", "text",
-          n = 3, threshold = 0.5)
-          // cross pairs only: one side indexed, one side in the batch
-          .filter((pmod(col("id_a"), lit(4)) === 3) =!=
-                  (pmod(col("id_b"), lit(4)) === 3)))
-      val verdicts = twin.join(
-          near.select(col("new_id"), col("old_id"), lit(1L).as("hit"))
-            .select(greatest(col("new_id"), col("old_id")).as("id_b"),
-              least(col("new_id"), col("old_id")).as("id_a"), col("hit")),
-          Seq("id_a", "id_b"), "left")
-        .agg(count(lit(1)).as("n_cross_exact"),
-          coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
-      val nFound = near.agg(count(lit(1)).as("n_found"))
-      nExactDups.crossJoin(verdicts).crossJoin(nFound).select(
-        col("n_exact_dups"), col("n_cross_exact"),
-        (col("n_hit") >= ceil(col("n_cross_exact") * 0.8)).as("recall_ok"),
-        (col("n_found") === col("n_hit")).as("precision_ok"))
-    }),
-
-    // SimHash bit-flip multi-probe recall gate (r14): at d<=7 the
-    // two-sided one-bit-flip probing guarantees a shared bucket
-    // (pigeonhole moves to d<=11), so recall vs the exact twin must be
-    // EXACTLY 1.0 — not the ~0.4 plain banding reads at this distance,
-    // and precision is exact too (the hamming verify filter). Bounded
-    // to 2000 docs (q80's gate-bounding precedent) so the quadratic
-    // twin stays a gate-scale check; the unbounded cost/recall trade
-    // is measured in BASELINE.md (TimeSimhashProbe).
-    "q104_simhash_multiprobe" -> ((s, d) => {
-      val docs = T(s, d, "documents").df.where(col("doc_id") < 2000)
-      val sigs = graft.GraftSession.trackPersist(
-        graft.text.Dedup.simhash(docs, "doc_id", "text"))
-      val found = graft.GraftSession.trackPersist(
-        graft.text.Dedup.simhashNearDups(sigs, "doc_id", maxDistance = 7,
-          maxBucket = 17000, multiProbe = true))
-      val exact = graft.GraftSession.trackPersist(
-        graft.text.Dedup.exactHammingPairs(sigs, "doc_id", 7))
-      val aggE = exact.join(
-          found.select(col("id_a"), col("id_b"), lit(1L).as("fnd")),
-          Seq("id_a", "id_b"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("fnd")), lit(0L)).as("n_hit"))
-      val aggF = found.agg(count(lit(1)).as("n_found"))
-      sigs.agg(count(lit(1)).as("n_docs"))
-        .crossJoin(aggE).crossJoin(aggF).select(
-          col("n_docs"),
-          (col("n_hit") === col("n_exact")).as("recall_ok"),
-          (col("n_found") === col("n_hit")).as("precision_ok"))
-    }),
-
-    // near-dup cluster resolution — the step between "find pairs" and
-    // "drop dupes": connected components (alternating large-star /
-    // small-star, O(log n) join rounds) over the exact-Jaccard pair
-    // set, labeling every paired doc with its cluster's min id. The
-    // oracle recomputes the same pairs in SQL and closes them with a
-    // recursive CTE — the full assignment must hash-match
-    "q80_dedup_clusters" -> ((s, d) => {
-      val docs = T(s, d, "documents").df.filter(col("doc_id") < 500)
-      val pairs = graft.text.Dedup.exactJaccardPairs(
-        docs, "doc_id", "text", n = 3, threshold = 0.5)
-      graft.text.Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .select(col("id").cast(LongType).as("doc_id"),
-                col("component").cast(LongType).as("component"))
-    }),
-
-    // Gopher-family repetition filter signals: duplicate-line ratios
-    // (codegen column work) + top word-2/3-gram character fractions
-    // (explode → partial-agg'd (id,gram) count → per-doc max) — exact,
-    // oracle-checked per doc
-    "q81_repetition" -> ((s, d) =>
-      graft.text.TextAnalysis.repetitionStats(
-        T(s, d, "documents").df, "doc_id", "text")),
-
-    // benchmark decontamination: flag docs sharing a 5-gram with the
-    // "eval set" (docs 0-19 here) — broadcast gram probe, corpus never
-    // shuffles; exact, oracle-checked per doc
-    "q83_decontaminate" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      graft.text.Dedup.contaminationFlags(
-        docs, "doc_id", "text",
-        docs.filter(col("doc_id") < 20), "text", n = 5)
-    }),
-
-    // PII scrub: deterministic fake PII is synthesized into the corpus
-    // text (identically in the oracle SQL), then redacted and counted —
-    // single codegen pass, no shuffle
-    "q85_pii_redact" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val salted = concat(col("text"),
-        lit(" contact user"), col("doc_id").cast("string"),
-        lit("@example.com ip 10.0.0."),
-        (col("doc_id") % 250).cast("string"),
-        lit(" phone 555-0100-"),
-        (col("doc_id") % 90 + 10).cast("string"))
-      val (ips, emails, phones) = graft.text.Pii.counts(salted)
-      docs.select(col("doc_id"),
-        graft.text.Pii.redact(salted).as("clean"),
-        ips.as("n_ips"), emails.as("n_emails"), phones.as("n_phones"))
-    }),
-
-    // per-domain URL stats (C4-style source curation): extract links,
-    // reduce to hosts, count mentions + distinct docs per host. URLs are
-    // synthesized deterministically (the corpus has none) — identically
-    // in the oracle
-    "q86_url_domains" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val salted = concat(col("text"),
-        lit(" see https://site"), (col("doc_id") % 7).cast("string"),
-        lit(".example.com/p/"), col("doc_id").cast("string"),
-        lit(" and http://cdn"), (col("doc_id") % 3).cast("string"),
-        lit(".example.net/x"))
-      docs.select(col("doc_id"),
-          explode(graft.text.Urls.extract(salted)).as("url"))
-        .select(col("doc_id"),
-          graft.text.Urls.domain(col("url")).as("domain"))
-        .groupBy("domain")
-        .agg(count(lit(1)).as("n_urls"),
-             countDistinct(col("doc_id")).as("n_docs"))
-    }),
-
-    // training-mix rebalancing: deterministic per-language sampling via
-    // an LCG mix of the doc id — pure codegen filter, zero shuffle; the
-    // identical arithmetic in the oracle reproduces the sample exactly
-    "q87_stratified_sample" -> ((s, d) =>
-      graft.text.Curation.stratifiedSample(
-        T(s, d, "documents").df.select("doc_id", "lang", "source"),
-        "doc_id", "lang",
-        Map("en" -> 250, "es" -> 500, "fr" -> 750))),
-
-    // paragraph-level global dedup (RefinedWeb/Dolma recipe): shared
-    // boilerplate paragraphs are synthesized deterministically (same in
-    // the oracle); each paragraph survives only at its first (id, pos)
-    // occurrence. Shuffles digests, never text; reassembly is one
-    // groupBy on the doc id
-    "q88_paragraph_dedup" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val salted = docs.select(col("doc_id"), concat(
-        lit("Shared header "), (col("doc_id") % 5).cast("string"), lit("."),
-        lit("\n\n"), col("text"),
-        lit("\n\nAll rights reserved.")).as("text"))
-      graft.text.Curation.paragraphDedup(salted, "doc_id", "text")
-    }),
-
-    // C4-style line cleaning: boilerplate lines (no terminal
-    // punctuation / too few words) are dropped, docs keep only if
-    // enough prose lines remain — single codegen pass, no shuffle
-    "q89_line_filter" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val salted = docs.select(col("doc_id"), concat(
-        col("text"), lit("."),
-        lit("\nHome | About | Contact\nBuy now\n"),
-        lit("This line has plenty of words to stay.\n"),
-        when(col("doc_id") % 3 === 0,
-          lit("An extra closing remark rounds things out nicely."))
-          .otherwise(lit("fin"))).as("text"))
-      graft.text.Curation.lineFilter(salted, "doc_id", "text",
-        minWords = 5, minLines = 3)
-    }),
-
-    // training-mix assembly: per-source token budget — deterministic
-    // priority order, running window sum per stratum, keep the prefix
-    // (the crossing doc stays). One balanced per-stratum sort, no
-    // global sort
-    "q90_token_budget" -> ((s, d) =>
-      graft.text.Curation.tokenBudget(
-        T(s, d, "documents").df.select("doc_id", "source", "text"),
-        "source", "doc_id", "text", budgetPerStratum = 300L)
-        .select("doc_id", "source", "n_tokens", "cum_tokens")),
-
-    // BM25 top-k retrieval: postings pruned to the broadcast query
-    // vocabulary BEFORE the (doc,term) shuffle; df/avgdl broadcast back;
-    // per-query top-k via WindowGroupLimit. Ranking on round(score,6)
-    // + doc-id tiebreak so summation-order ulp noise can't flip ranks
-    "q91_bm25" -> ((s, d) => {
-      import s.implicits._
-      val qs = Seq((1L, "spark table join fast"), (2L, "slow query scan"),
-        (3L, "data window group by")).toDF("query_id", "qtext")
-      graft.text.Retrieval.bm25TopK(
-        T(s, d, "documents").df, "doc_id", "text",
-        qs, "query_id", "qtext", topK = 10)
-    }),
-
-    // SemDeDup: k-means cells confine the exact-cosine pair search (one
-    // cell-keyed shuffle + same-cell self-join, 3-probe soft assignment);
-    // gated by the brute-force twin — precision exactly 1.0 (in-cell
-    // pairs are exact cosine), recall measured 0.97/0.96 at sf0.01/0.1,
-    // bounded at 0.8
-    "q93_semdedup" -> ((s, d) => {
-      val emb = T(s, d, "embeddings").df
-      val found = graft.GraftSession.trackPersist(
-        graft.ml.SemDedup.withinCellPairs(
-          emb, "vec_id", "embedding", threshold = 0.35, k = 8, probes = 3))
-      val exact = graft.GraftSession.trackPersist(
-        graft.ml.Similarity.exactCosinePairs(
-          emb, "vec_id", "embedding", threshold = 0.35))
-      val aggF = found.join(
-          exact.select(col("id_a"), col("id_b"), lit(1L).as("hit")),
-          Seq("id_a", "id_b"), "left")
-        .agg(count(lit(1)).as("n_found"),
-          coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
-      exact.agg(count(lit(1)).as("n_exact")).crossJoin(aggF).select(
-        col("n_exact"),
-        (col("n_hit") >= ceil(col("n_exact") * 0.8)).as("recall_ok"),
-        (col("n_found") === col("n_hit")).as("precision_ok"))
-    }),
-
-    // bigram-LM quality scoring (CCNet/KenLM recipe): average bigram
-    // negative log-likelihood under add-one-smoothed corpus counts —
-    // two partial-agg count shuffles train the LM, one gram-keyed join
-    // scores, deterministic at round(avg,6)
-    "q92_lm_score" -> ((s, d) =>
-      graft.text.LangModel.bigramScore(
-        T(s, d, "documents").df, "doc_id", "text")),
-
-    // training-sequence packing (concat-then-chunk): per-stratum window
-    // running sum → fixed-token-length pack assignment; same one-
-    // balanced-sort shape as q90
-    "q94_seq_pack" -> ((s, d) =>
-      graft.text.Curation.packSequences(
-        T(s, d, "documents").df.select("doc_id", "source", "text"),
-        "source", "doc_id", "text", seqTokens = 512L)
-        .select("doc_id", "source", "n_tokens", "pack_id", "pack_offset")),
-
-    // fixed-size per-stratum sample: LCG-ranked top-n per stratum —
-    // WindowGroupLimit partial top-n, never a full stratum sort
-    "q96_stratified_topn" -> ((s, d) =>
-      graft.text.Curation.stratifiedTakeN(
-        T(s, d, "documents").df.select("doc_id", "lang"),
-        "doc_id", "lang", n = 25, seed = 7L)),
-
-    // deterministic corpus shuffle (training-order randomization): LCG
-    // mix in 31-bit space → seed-reproducible shard + position; one
-    // per-shard window sort, no global sort
-    "q95_det_shuffle" -> ((s, d) =>
-      graft.text.Curation.shuffleDeterministic(
-        T(s, d, "documents").df.select("doc_id", "source"),
-        "doc_id", seed = 42L, numShards = 8)),
-
-    // The composed crawl front end in ONE call (r16): documents
-    // wrapped as HTTP-framed WARC-shaped records (q115's boilerplate
-    // wrapper, a 404 slice, a robots-noindex slice) → Crawl.cleanDocs
-    // → surviving clean docs. FULL row/hash gate: the oracle composes
-    // the already-green stage mirrors — q115's block extraction,
-    // q48's language vote, q126's keyed quality, q102's symbol rule —
-    // so a regression in the COMPOSITION (stage order, a dropped
-    // filter, a charset slip) breaks the hash even when every stage
-    // gate stays green.
-    "q130_crawl_clean" -> ((s, d) =>
-      graft.sources.Crawl.cleanDocs(q130Records(s, d), minQuality = 0.3)
-        .select(col("record_id").cast(LongType).as("doc_id"),
-          col("url"), col("lang"), col("charset"), col("clean_text"))),
-
-    // Full-table language routing (r17 — the detector seam the r16
-    // verdict flagged): one doc per language per base row, covering
-    // ALL ten QualityStopwords languages plus Thai. Script-class
-    // routing (kana → ja BEFORE the ideograph test, Cyrillic → ru,
-    // Thai → th) and the widened Latin vote (it/pt/nl) are each
-    // exercised; the oracle RE-DERIVES the language via the shared
-    // vote/route mirror (never assumes the synthesis label) and
-    // recomputes the keyed stopword ratio + Gopher stopword flag from
-    // the same tables — including the th stopword-rule EXEMPTION
-    // (stopwords_ok reads true; exact token matching can't hit a
-    // function word inside an unsegmented script run). detected_ok is
-    // the Spark-side verdict, pinned true (q44 pattern).
-    "q131_langid_router" -> ((s, d) => {
-      import graft.text.TextAnalysis._
-      val cases = LangRouterCases
-      val want = cases.zipWithIndex.foldRight(lit("")) {
-        case (((l, _), i), acc) =>
-          when(pmod(col("doc_id"), lit(cases.size)) === i, lit(l))
-            .otherwise(acc) }
-      val text = cases.zipWithIndex.foldRight(lit("")) {
-        case (((_, t), i), acc) =>
-          when(pmod(col("doc_id"), lit(cases.size)) === i, lit(t))
-            .otherwise(acc) }
-      val synth = T(s, d, "documents").df
-        .select(col("doc_id"), want.as("want"), text.as("text"))
-      // lang materialized as a column once (the q126 discipline), and
-      // every keyed signal let2-binds it besides
-      synth.withColumn("lang", langId(col("text")))
-        .select(col("doc_id"), col("want"), col("lang"),
-          (col("lang") === col("want")).as("detected_ok"),
-          round(stopwordRatioByLang(col("text"), col("lang")), 6)
-            .as("stop_ratio_keyed"),
-          gopherFlagsByLang(col("text"), col("lang"))
-            .getField("stopwords_ok").as("gopher_stop_ok"))
-    }),
-
-    // Video near-dup dedup (r17 — closes the image/audio/VIDEO triad):
-    // per doc a 12-frame MJPEG AVI (hand-rolled RIFF container, JPEG
-    // frames), a frame-DUPLICATED twin (the frame-rate-resample
-    // class — the temporal majority-bit hash is exact under it by
-    // construction, integer-stride sampling), a truncated-corrupt
-    // variant, and the SAME frames as an animated GIF (cross-container
-    // twin; the gray patterns fit GIF's 256-color palette losslessly,
-    // so its distance to the AVI hash is exactly the per-frame JPEG
-    // noise surviving the majority vote — measured max 7 over 3000
-    // seeds, pinned at 11 = the multiProbe banding's guaranteed-recall
-    // radius, one structural claim with q123's policy). One banding
-    // pass surfaces both twin classes; heavy payload bytes stay in the
-    // scan stage, only (id, band, 8-byte vhash) rows shuffle. q44
-    // pattern: container/dims/frame counts are DuckDB-recomputable
-    // anchors; twin/corrupt/gif verdicts are Spark-computed, pinned
-    // true.
-    "q132_video_dedup" -> ((s, d) => q132Gate(q132Vids(s, d))),
-
-    // Media-signature ingest index (r17, SigIndex — the q105 of the
-    // multimodal stack): an image corpus (doc_id%4 < 3, fixed-2000-doc
-    // scope) indexes its dHash signatures ONCE into bucketed tables
-    // (ids + 8-byte sigs, never payloads); an ingest batch
-    // (doc_id%4 == 3) then fingerprints in the scan stage and filters
-    // against the index without rescanning old bytes. Batch payloads:
-    // doc_id%8==3 → a q=0.75 JPEG re-encode of indexed doc_id-1
-    // (measured drift ≤7 = exactly the query-side-probe recall
-    // guarantee, so "caught" is a GUARANTEED claim); doc_id%8==7 → a
-    // genuinely novel pattern (seed offset 10M). Expected outcome is
-    // pure doc_id arithmetic — the oracle derives it independently and
-    // the ok column (expected == observed survival) is pinned true.
-    "q133_media_index" -> ((s, d) => {
-      q133BuildIndex(s, d, "q133_ix")
-      q133Verdict(q133BatchPayloads(s, d), "q133_ix")
-    }),
-
-    // Token-balanced global shards (r16): equal token MASS per shard
-    // via a distributed prefix sum in the seeded LCG order — FULL
-    // row/hash gate, the oracle re-derives the mix, the window
-    // cumulative sum, and the quotient entirely in SQL.
-    "q129_token_shards" -> ((s, d) =>
-      graft.text.Curation.tokenBalancedShards(
-          T(s, d, "documents").df.select("doc_id", "text", "source"),
-          "doc_id", "text", tokensPerShard = 5000L, seed = 42L)
-        .select(col("doc_id"), col("source"), col("n_tokens"),
-          col("shard"))),
-
-    // scripting-UDF surface (REGISTER … USING streaming_python; the
-    // reference's StreamingUDF): the whole path — decorator discovery,
-    // namespaced dispatch, per-thread python process, JSON protocol —
-    // exercised through an actual Pig script, oracle-checked row-by-row
-    "q97_py_udf" -> ((s, d) => {
-      val py = java.nio.file.Files.createTempFile("graft_gate_udf", ".py")
-      java.nio.file.Files.write(py,
-        """from pig_util import outputSchema
-          |
-          |@outputSchema("rlang:chararray")
-          |def rev(x):
-          |    return None if x is None else x[::-1]
-          |
-          |@outputSchema("nw:long")
-          |def nwords(x):
-          |    return 0 if x is None else len(x.split())
-          |""".stripMargin.getBytes("UTF-8"))
-      py.toFile.deleteOnExit()
-      graft.frontend.PigRunner(s).run(s"""
-        REGISTER '$py' USING streaming_python AS f;
-        d = LOAD '$d/documents.parquet';
-        r = FOREACH d GENERATE doc_id, f.rev(lang) AS rlang,
-                               f.nwords(text) AS nw;
-      """).apply("r").df
-    }),
-
-    // REAL image decode (r10 — no longer a stub): deterministic solid
-    // PPM payloads are built per doc, then the actual binary decoder
-    // (multimodal/Decode.scala) recovers dims + channel means in a
-    // partition-preserving mapPartitions; DuckDB recomputes the same
-    // values from the generation rule. Exactness: a solid image's mean
-    // is (c*n)/(n*255.0) — the same rational as c/255.0, so both sides'
-    // correctly-rounded doubles agree bit-for-bit before round(…,6)
-    // Gopher quality-rule battery (Rae et al. 2021 Table A1): the 7
-    // document-filter rules as flags + the conjunction, zero-shuffle
-    "q102_gopher_rules" -> ((s, d) =>
-      T(s, d, "documents").df
-        .select(col("doc_id"),
-          graft.text.TextAnalysis.gopherFlags(col("text")).as("f"))
-        .select(col("doc_id"), col("f.*"))),
-
-    // DSIR importance weights (Xie et al. 2023): log-ratio of target
-    // (lang='en') vs raw bigram distributions per doc — the data
-    // selection signal; resample ∝ exp(weight)
-    "q101_dsir_weights" -> ((s, d) =>
-      graft.text.LangModel.dsirWeights(
-        T(s, d, "documents").df, "doc_id", "text",
-        col("lang") === "en")),
-
-    // ExactSubstr-style repeated n-gram signal (Lee et al. 2022): per
-    // doc, distinct word-5-grams + how many also occur in another doc.
-    // Spark shuffles xxhash64 gram hashes; the oracle uses raw gram
-    // strings — counts agree absent a 64-bit collision (~10⁻⁸ here)
-    "q100_repeated_ngrams" -> ((s, d) =>
-      graft.text.Dedup.repeatedNgramStats(
-        T(s, d, "documents").df, "doc_id", "text", n = 5)),
-
-    // ExactSubstr span-level dedup (Lee et al. 2022) — the REMOVAL
-    // half of q100: cut corpus-repeated word-5-gram spans out of the
-    // text, keeping one canonical (min doc_id, offset) occurrence.
-    // Spark keys occurrences by xxhash64 gram hashes; the oracle uses
-    // raw gram strings — equal absent a 64-bit collision
-    "q103_drop_repeated_spans" -> ((s, d) =>
-      graft.text.Dedup.dropRepeatedSpans(
-        T(s, d, "documents").df, "doc_id", "text", minSpanTokens = 5)),
-
-    // BPE tokenizer training + encoding (Sennrich 2016; GPT-2 merge-
-    // rank encoder): ONE corpus shuffle builds the word histogram, the
-    // merge loop runs on the driver over the bounded Zipf head
-    // (graft.bpe.vocabCap), and encoding is a shuffle-free memoized
-    // map. The merge sequence isn't SQL-expressible, so the gate
-    // follows the q44 pattern: DuckDB recomputes the corpus anchors
-    // (doc / distinct-word counts) and pins Spark-computed invariant
-    // verdicts — all 64 merges trained (the synthetic corpus' 31-word
-    // vocabulary exhausts its pair supply at ~89 merges, so 64 is
-    // always reachable at every sf); every doc's tokens
-    // concatenate back to its whitespace-normalized text (lossless);
-    // tokens come only from single code points or trained merges; and
-    // the encoding compresses (word count ≤ total tokens < total word
-    // characters). Training + encoding are deterministic (ordered
-    // histogram collect, lexicographic tie-breaks), so the verdict
-    // row hashes stably.
-    "q106_bpe" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val merges = graft.text.Bpe.trainMerges(docs, "text",
-        numMerges = 64)
-      val mergedSet = merges.map(_.merged)
-      val toks = graft.text.TextAnalysis.tokens(col("text"))
-      val per = docs.select(
-          graft.text.Bpe.encoderUdf(merges)(col("text")).as("tokens"),
-          concat_ws("", toks).as("__w"),
-          size(toks).cast(LongType).as("__nw"))
-        .select(
-          (concat_ws("", col("tokens")) === col("__w")).as("__rt"),
-          forall(col("tokens"),
-            t => length(t) === 1 || t.isInCollection(mergedSet))
-            .as("__vo"),
-          size(col("tokens")).cast(LongType).as("__nt"),
-          length(col("__w")).cast(LongType).as("__nc"),
-          col("__nw"))
-      val stats = per.agg(
-        count(lit(1)).as("n_docs"),
-        // coalesce: empty corpus → min/sum are null; the oracle pins
-        // literal true and vacuous truth is the right empty semantics
-        coalesce(min(col("__rt")), lit(true)).as("roundtrip_ok"),
-        coalesce(min(col("__vo")), lit(true)).as("vocab_ok"),
-        coalesce(sum(col("__nt")) < sum(col("__nc")) &&
-          sum(col("__nt")) >= sum(col("__nw")), lit(true))
-          .as("compress_ok"))
-      val dw = docs.select(explode(toks).as("w"))
-        .agg(countDistinct(col("w")).as("n_distinct_words"))
-      stats.crossJoin(dw).select(
-        col("n_docs"), col("n_distinct_words"),
-        lit(merges.size == 64).as("merges_full"),
-        col("roundtrip_ok"), col("vocab_ok"), col("compress_ok"))
-    }),
-
-    // GPT-2 byte-level encoding parity (r16): text → GPT-2
-    // pre-tokenizer → UTF-8 bytes through the byte→unicode alphabet →
-    // word-local merges. The DuckDB-recomputable anchor is EXACT:
-    // under an EMPTY merge table every UTF-8 byte is one token, so
-    // Spark's total token count must equal sum(strlen(text)) — any
-    // pre-tokenizer gap/overlap or byte-mapping slip breaks the hash.
-    // Verdicts (q44 pattern, pinned true): byte-decode roundtrip
-    // reconstructs every document exactly under BOTH vocabularies, a
-    // real merge table strictly compresses, and nothing maps to unk.
-    "q128_gpt2_encode" -> ((s, d) => {
-      val docs = T(s, d, "documents").df.select(col("doc_id"), col("text"))
-      val vocab0 = graft.text.Bpe.vocabFromMerges(Nil,
-        graft.text.Bpe.Gpt2ByteAlphabet)
-      val merges = graft.text.Bpe.parseMergesTxt(Seq(
-        "#version: 0.2",
-        "t h", "th e", "e r", "i n", "o n", "a n", "an d",
-        "Ġ t", "Ġt h", "Ġth e", "Ġ a",
-        "Ġ o", "Ġo f").iterator)
-      val vocabM = graft.text.Bpe.vocabFromMerges(merges,
-        graft.text.Bpe.Gpt2ByteAlphabet)
-      val enc0 = graft.text.Bpe.encodeIdsGpt2(docs, "doc_id", "text",
-        vocab0, out = "ids0")
-      val encM = graft.text.Bpe.encodeIdsGpt2(docs, "doc_id", "text",
-        vocabM, out = "idsM")
-      val toks0 = vocab0.tokens.toIndexedSeq
-      val toksM = vocabM.tokens.toIndexedSeq
-      // concatenate the mapped token STRINGS first, decode once: a
-      // token boundary may split a multi-byte UTF-8 character (under
-      // the empty-merge vocab every non-ASCII char does), so per-token
-      // decoding would yield U+FFFD pairs instead of the original
-      val dec0 = udf((ids: Seq[Int]) =>
-        graft.text.Bpe.gpt2ByteDecode(ids.map(toks0(_)).mkString))
-      val decM = udf((ids: Seq[Int]) =>
-        graft.text.Bpe.gpt2ByteDecode(ids.map(toksM(_)).mkString))
-      docs.join(enc0, "doc_id").join(encM, "doc_id")
-        .select(
-          size(col("ids0")).cast(LongType).as("__n0"),
-          size(col("idsM")).cast(LongType).as("__nM"),
-          (dec0(col("ids0")) === col("text") &&
-            decM(col("idsM")) === col("text")).as("__rt"),
-          (!array_contains(col("ids0"), -1) &&
-            !array_contains(col("idsM"), -1)).as("__ok"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("__n0")).as("total_byte_tokens"),
-          coalesce(min(col("__rt")), lit(true)).as("roundtrip_ok"),
-          coalesce(sum(col("__nM")) < sum(col("__n0")), lit(true))
-            .as("merged_compresses"),
-          coalesce(min(col("__ok")), lit(true)).as("no_unk"))
-    }),
-
-    // Data mixing (the pretraining-recipe step that fixes each
-    // source's share of the final corpus): resample to a target
-    // mixture — largest-remainder quotas summing exactly to the
-    // target, selection by the seed-reproducible 31-bit LCG rank (the
-    // q95 generator), under-populated strata yield what they have
-    // (src0's quota 30 > its 25 docs at sf0.01 exercises the cap).
-    // Exact binary-fraction weights so the quota literals are
-    // rounding-mode independent. Fully SQL-expressible — full
-    // row/hash gate.
-    "q107_mixture" -> ((s, d) =>
-      graft.text.Curation.resampleToMixture(
-          T(s, d, "documents").df.select(col("doc_id"), col("source")),
-          "doc_id", "source",
-          Map("src0" -> 0.5, "src1" -> 0.25,
-              "src2" -> 0.125, "src3" -> 0.125),
-          totalTarget = 60L)),
-
-    // Domain-level quality filtering (RefinedWeb/C4: spam is a DOMAIN
-    // property): docs are spread over 10 synthesized domains, the odd
-    // domains' texts salted with 200 digit tokens (cratering alpha
-    // ratio and stopword rate), and the engine must aggregate per-doc
-    // quality per domain and drop every doc of the degraded domains.
-    // The oracle recomputes the whole thing — domain extraction, the
-    // composite quality score, the mean, the keep rule — in SQL.
-    // Full row/hash gate over the 10 domain rows.
-    "q122_domain_quality" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val salt = " " + Seq.fill(200)("00000").mkString(" ")
-      val salted = docs.select(col("doc_id"),
-        concat(col("text"), when(pmod(col("doc_id"), lit(2)) === 1,
-          lit(salt)).otherwise(lit(""))).as("text"),
-        concat(lit("https://d"),
-          pmod(col("doc_id"), lit(10)).cast(StringType),
-          lit(".com/p/"), col("doc_id").cast(StringType)).as("url"))
-      // ONE quality aggregation: the keep flag derives from the same
-      // stats frame the drop path uses (dropLowQualityDomains'
-      // equivalence to this rule is spec-pinned; recomputing the
-      // whole per-doc quality pass a second time here doubled the
-      // gate's cost for no extra coverage)
-      graft.text.Curation.domainQuality(salted, "url", "text")
-        .select(col("domain"), col("n_docs"), col("mean_quality"),
-          (col("mean_quality") >= 0.5).as("kept"))
-    }),
-
-    // Image perceptual-hash near-dup dedup (r16 — the multimodal
-    // counterpart of q43/q44): per doc, TWO lossless PNG renders of
-    // the same seeded 9×8-cell pattern at 2px and 4px cells (a true
-    // resize twin) plus ONE corrupt payload (truncated PNG). REAL
-    // ImageIO decode → box-averaged 64-bit dHash (box averaging makes
-    // the hash exactly invariant under the grid-aligned upscale) →
-    // the existing 64-bit Hamming banding (Dedup.simhashNearDups,
-    // distance 0) must surface every twin pair. q44 pattern: decoded
-    // dims are DuckDB-recomputable anchors; twin-found / hash-equal /
-    // corrupt-reports-null are Spark-computed verdicts pinned true.
-    // r17 adds variant 3: a JPEG RE-ENCODE of the base pattern (ImageIO
-    // writer, quality 0.75) — the lossy-recompression twin the r16
-    // VERDICT flagged as untested (the upscale twin is exact BY
-    // DESIGN; JPEG noise is not). The jpeg_near bound is the banding
-    // pass's GUARANTEED-recall radius, not a bare empirical max: with
-    // multiProbe at maxDistance=8, one-bit-flip probes guarantee any
-    // pair within hamming 11 is surfaced — so jpeg_near ≤ 11 and
-    // jpeg_found make one consistent claim. Measured drift sits well
-    // inside it: max 7 bits at q=0.75 over 50000 seeds (tail decays
-    // ~5× per bit — 6:6, 7:1 — so even sf100's seed range stays
-    // inside 11 with overwhelming margin). The exact upscale twin
-    // still requires hamming 0 (filter on the same pass).
-    "q123_image_dedup" -> ((s, d) => q123Gate(q123Imgs(s, d))),
-
-    // Audio perceptual-fingerprint near-dup dedup (r16 — the audio
-    // counterpart of q123): per doc, the SAME seeded 65-segment
-    // amplitude envelope rendered as PCM16 WAV at 8 kHz full gain and
-    // at 16 kHz half gain (a true re-encode twin: 2× sample rate, 6 dB
-    // quieter) plus ONE corrupt payload (truncated header). REAL
-    // javax.sound decode → 65-frame energy-contour 64-bit fingerprint
-    // (box frames align exactly with the envelope segments, so the
-    // hash is invariant under the rate/gain change) → the existing
-    // 64-bit Hamming banding at distance 0 must surface every twin
-    // pair. q44 pattern: sample rate / sample count are DuckDB-
-    // recomputable anchors; twin-found / hash-equal / corrupt-reports-
-    // null are Spark-computed verdicts pinned true.
-    // r17 adds variant 3 — the same envelope with 0.25 s of LEADING
-    // SILENCE (2000 zero samples at 8 kHz) — and the chromaprint-lite
-    // spectral fingerprint (cfp) next to the envelope contour (afp),
-    // both from ONE decode. The twins now pin the honest robustness
-    // matrix (MeasureMediaTwins, 50000 seeds):
-    //   afp: rate/gain twin exact (0 bits), offset twin BROKEN
-    //        (18-46 bits — off_env_differs pins the gap the r16
-    //        VERDICT predicted);
-    //   cfp: offset twin exact (silence trims away, 0 bits — banded
-    //        at distance 0 for off_found), rate/gain twin approximate
-    //        (max 17 bits at 50k: partial-period phase noise in the
-    //        48 energy transitions — pinned ≤ 24 with tail margin
-    //        (decay ≥4×/bit above 15), too far for banded recall).
-    // Data picks the DEFAULT: afp (4× cheaper — 66 vs 264 µs/payload — exact on re-rate);
-    // cfp is the shift-robust complement — re-encode-heavy corpora
-    // band on both and union the pairs.
-    "q127_audio_dedup" -> ((s, d) => q127Gate(q127Auds(s, d))),
-
-    // Temperature-scaled mixture (T5/mT5/LLaMA): stratum share ∝
-    // count^tau at tau=0.5 — the oracle recomputes counts → 9dp
-    // weights → largest-remainder quotas → the seeded-LCG rank
-    // selection ENTIRELY in SQL (unlike q107's fixed weights, these
-    // are count-derived, so the whole apportionment is mirrored, not
-    // hard-coded). Full row/hash gate.
-    "q121_temperature_mix" -> ((s, d) =>
-      graft.text.Curation.temperatureMixture(
-        T(s, d, "documents").df.select(col("doc_id"), col("source")),
-        "doc_id", "source", tau = 0.5, totalTarget = 60L)),
-
-    // HTML -> text extraction (the crawl pipeline's first stage):
-    // deterministic HTML is synthesized around each doc's text (the
-    // q85 salting pattern) with script/style blocks, entities, and two
-    // links; the engine extracts title/text/links with RE2-safe
-    // pure-Column regexes and the oracle mirrors the same synthesis +
-    // extraction in DuckDB — full row/hash gate
-    "q108_html_extract" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val idStr = col("doc_id").cast(StringType)
-      val html = concat(
-        lit("<html><head><title>Doc "), idStr,
-        lit(" &amp; co</title><style>p {color: red}</style></head>" +
-          "<body><script type=\"text/js\">var x = 1 < 2;</script><p>"),
-        col("text"),
-        lit("</p><!-- note --><p>5 &lt; 7 &amp;&amp; 8 &gt; 2</p>" +
-          "<a href=\"https://ex.com/"), idStr,
-        lit("\">link</a> <a href=\"/rel?q=1\">rel</a></body></html>"))
-      graft.text.Html.extractAll(
-          docs.select(col("doc_id"), html.as("html")), "doc_id", "html")
-        .select(col("doc_id"), col("title"), col("text"), col("n_links"),
-          element_at(col("links"), 1).as("first_link"))
-    }),
-
-    // Trainable quality classifier (the fastText-style GPT-3/LLaMA
-    // curation recipe): a quality signal is PLANTED (marker tokens on
-    // even doc_ids — the q85 salting pattern), a hashed-feature
-    // logistic regression trains on the id%4<2 half and scores the
-    // held-out half. Verdicts (q44 pattern): held-out AUC >= 0.95 and
-    // full score separation — the planted signal is unambiguous, so a
-    // correct trainer must find it; counts are the DuckDB anchors.
-    "q112_quality_classifier" -> ((s, d) => {
-      val docs = T(s, d, "documents").df.select(col("doc_id"), col("text"))
-      val labeled = docs.select(col("doc_id"),
-        concat(col("text"), when(pmod(col("doc_id"), lit(2)) === 0,
-          lit(" qmark1 qmark2 qmark3")).otherwise(lit(" junk1 junk2")))
-          .as("text"),
-        (pmod(col("doc_id"), lit(2)) === 0).cast(IntegerType).as("label"))
-      val trainD = labeled.filter(pmod(col("doc_id"), lit(4)) < 2)
-      val testD = labeled.filter(pmod(col("doc_id"), lit(4)) >= 2)
-      val k = 1 << 12
-      val feats = graft.GraftSession.trackPersist(
-        graft.ml.QualityClassifier.featurize(labeled, "doc_id", "text", k))
-      // train() inner-joins features with the labels, so the label
-      // frame alone restricts to the split — no redundant pre-join
-      val w = graft.ml.QualityClassifier.train(
-        feats, trainD, "doc_id", "label", k)
-      val scored = graft.GraftSession.trackPersist(
-        graft.ml.QualityClassifier.score(
-          feats.join(testD.select("doc_id"), "doc_id"), w))
-      val aucOk = graft.ml.QualityClassifier.auc(
-        scored, testD, "doc_id", "label") >= 0.95
-      val agg = scored
-        .join(testD.select(col("doc_id"), col("label")), "doc_id")
-        .agg(count(lit(1)).as("n_test"),
-          coalesce(
-            min(when(col("label") === 1, col("quality_score"))) >
-              max(when(col("label") === 0, col("quality_score"))),
-            lit(true)).as("sep_ok"))
-      trainD.agg(count(lit(1)).as("n_train")).crossJoin(agg)
-        .select(col("n_train"), col("n_test"),
-          lit(aucOk).as("auc_ok"), col("sep_ok"))
-    }),
-
-    // Classifier persistence + threshold calibration (the production
-    // loop: train once, persist, score any later batch against the
-    // saved weights, keep the top targetKeepRate): weights round-trip
-    // through a catalog table bit-exactly, reloaded-weight scores
-    // equal in-session scores doc-for-doc, and the calibrated
-    // threshold is the EXACT k-th largest score (score >= t keeps
-    // >= k docs, score > t keeps < k — the tie-robust definition).
-    // Verdicts (q44 pattern) + the DuckDB doc-count anchor.
-    "q117_classifier_persist" -> ((s, d) => {
-      val docs = T(s, d, "documents").df.select(col("doc_id"), col("text"))
-      val labeled = docs.select(col("doc_id"),
-        concat(col("text"), when(pmod(col("doc_id"), lit(2)) === 0,
-          lit(" qmark1 qmark2 qmark3")).otherwise(lit(" junk1 junk2")))
-          .as("text"),
-        (pmod(col("doc_id"), lit(2)) === 0).cast(IntegerType).as("label"))
-      val k = 1 << 12
-      val feats = graft.GraftSession.trackPersist(
-        graft.ml.QualityClassifier.featurize(labeled, "doc_id", "text", k))
-      // iters=8: the persistence/calibration verdicts don't depend on
-      // classifier CONVERGENCE (q112 gates that) — any weight vector
-      // must round-trip and calibrate exactly
-      val w = graft.ml.QualityClassifier.train(
-        feats, labeled.filter(pmod(col("doc_id"), lit(4)) < 2),
-        "doc_id", "label", k, iters = 8)
-      graft.ml.QualityClassifier.saveWeights(s, w, "q117_weights")
-      val w2 = graft.ml.QualityClassifier.loadWeights(s, "q117_weights")
-      val roundtripOk = w.length == w2.length &&
-        w.indices.forall(i => w(i) == w2(i))
-      val scored = graft.GraftSession.trackPersist(
-        graft.ml.QualityClassifier.score(feats, w2))
-      val n = scored.count()
-      val t = graft.ml.QualityClassifier.calibrateThreshold(scored, 0.5)
-      val kExp = math.max(1L, math.ceil(0.5 * n).toLong)
-      val calibOk =
-        scored.filter(col("quality_score") >= t).count() >= kExp &&
-          scored.filter(col("quality_score") > t).count() < kExp
-      val nDiff = graft.ml.QualityClassifier.score(feats, w)
-        .withColumnRenamed("quality_score", "s1")
-        .join(scored, "doc_id")
-        .filter(col("s1") =!= col("quality_score")).count()
-      docs.agg(count(lit(1)).as("n_docs"))
-        .select(col("n_docs"), lit(roundtripOk).as("roundtrip_ok"),
-          lit(nDiff == 0L).as("score_equal"),
-          lit(calibOk).as("calib_exact"))
-    }),
-
-    // WARC ingestion (ISO 28500 — CommonCrawl's shard format): the
-    // corpus is rendered into gzipped WARC shards once per (session,
-    // sf dir) — one file per partition, the production grain — then
-    // read back by the length-driven parser and verified against the
-    // source rows. DuckDB can't parse WARC: q44 pattern (count anchor
-    // + Spark-computed roundtrip/type verdicts).
-    "q111_warc" -> ((s, d) => {
-      val docs = T(s, d, "documents").df.select(col("doc_id"), col("text"))
-      // shard dir keyed on the DATA's (name:size:mtime) signature —
-      // the indexDir discipline, so a regenerated corpus at the same
-      // path gets fresh shards; a crashed partial write is detected by
-      // the missing _SUCCESS marker and rebuilt
-      val dir = warcDir(d)
-      ensureWarcShards(docs, dir) { r =>
-        graft.sources.Warc.Record(
-          s"<urn:uuid:${r.getLong(0)}>", "response",
-          s"https://ex.com/${r.getLong(0)}",
-          "2026-01-01T00:00:00Z", "text/plain",
-          r.getString(1).getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-      }
-      val recs = graft.sources.Warc.read(s, s"$dir/*.warc.gz")
-      val parsed = recs.select(
-        regexp_extract(col("target_uri"), "/(\\d+)$", 1)
-          .cast(LongType).as("doc_id"),
-        col("payload").cast(StringType).as("rt"),
-        col("warc_type"), col("content_length"))
-      // coalesce: min() over an empty join is null; the oracle pins
-      // literal true, and vacuous truth is the right empty semantics
-      docs.join(parsed, "doc_id").agg(
-        count(lit(1)).as("n_records"),
-        coalesce(min(col("rt") === col("text")), lit(true))
-          .as("roundtrip_ok"),
-        coalesce(min(col("warc_type") === "response"), lit(true))
-          .as("type_ok"),
-        coalesce(min(col("content_length") ===
-          length(col("text").cast(BinaryType)).cast(LongType)),
-          lit(true)).as("length_ok"))
-    }),
-
-    // WARC with REAL HTTP envelopes (CommonCrawl's actual response
-    // form: Content-Type: application/http; msgtype=response, payload
-    // = status line + HTTP headers + body, a third of them
-    // chunked-framed): the engine must strip the envelope — status and
-    // the body's true content type out of the headers, the body bytes
-    // chunk-decoded — and extract training text from the BODY only.
-    // FULL row/hash gate: DuckDB recomputes every column (status/ctype
-    // from the synthesis rule, extracted text by the q108 mirror
-    // regexes) from the documents table; any leaked header byte or
-    // mis-framed chunk breaks the text hash.
-    "q113_warc_http" -> ((s, d) => {
-      val docs = T(s, d, "documents").df.select(col("doc_id"), col("text"))
-      val dir = warcDir(d, "warchttp")
-      ensureWarcShards(docs, dir) { r =>
-        val id = r.getLong(0)
-        val html = s"<html><head><title>D$id</title></head>" +
-          s"<body><p>${r.getString(1)}</p></body></html>"
-        val payload = graft.sources.Warc.wrapHttp(
-          html.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          status = if (id % 5 == 0) 404 else 200,
-          contentType = "text/html; charset=utf-8",
-          chunked = id % 3 == 0)
-        graft.sources.Warc.Record(
-          s"<urn:uuid:h$id>", "response", s"https://ex.com/$id",
-          "2026-01-01T00:00:00Z",
-          "application/http; msgtype=response", payload)
-      }
-      val recs = graft.sources.Warc.read(s, s"$dir/*.warc.gz")
-      graft.sources.Warc.stripHttp(recs)
-        .select(
-          regexp_extract(col("target_uri"), "/(\\d+)$", 1)
-            .cast(LongType).as("doc_id"),
-          col("http_status"), col("http_content_type"),
-          graft.text.Html.extractText(col("body").cast(StringType))
-            .as("extracted_text"))
-    }),
-
-    // Charset-aware body decoding (the pothole after the HTTP
-    // envelope — crawl bodies are NOT all UTF-8): shards are written
-    // with bodies ENCODED in UTF-8 / ISO-8859-1 / GBK by id, the
-    // charset declared via the HTTP Content-Type param for even ids
-    // and ONLY via an in-body <meta charset=…> tag for odd ids (the
-    // HTML5 sniff order). decodeBody must return the original string
-    // exactly and report the canonical charset it used. FULL row/hash
-    // gate: DuckDB recomputes the expected decoded text (it never
-    // sees the foreign bytes — producing them back is the machinery
-    // under test) and the charset name from the id rules.
-    "q118_charset_decode" -> ((s, d) => {
-      val docs = T(s, d, "documents").df.select(col("doc_id"), col("text"))
-      val dir = warcDir(d, "warccs")
-      ensureWarcShards(docs, dir) { r =>
-        val id = r.getLong(0)
-        // fail LOUD on broken gate premises: a null text would embed
-        // the literal "null", and getBytes silently replaces chars a
-        // charset cannot encode with '?' — either would diverge from
-        // the mirror with no hint why
-        require(!r.isNullAt(1), s"q118: null text for doc $id")
-        val cs = (id % 3) match {
-          case 0 => "UTF-8"
-          case 1 => "ISO-8859-1"
-          case _ => "GBK"
-        }
-        val tail = (id % 3) match {
-          case 0 => " 中文测试 café"
-          case 1 => " café résumé naïve"
-          case _ => " 中文测试文本"
-        }
-        val viaHeader = id % 2 == 0
-        val bodyStr =
-          (if (viaHeader) "" else s"""<meta charset="$cs">""") +
-            r.getString(1) + tail
-        val charset = java.nio.charset.Charset.forName(cs)
-        require(charset.newEncoder().canEncode(bodyStr),
-          s"q118: doc $id text is not representable in $cs — the " +
-            "lossless round-trip premise of this gate is broken")
-        val payload = graft.sources.Warc.wrapHttp(
-          bodyStr.getBytes(charset),
-          status = 200,
-          contentType =
-            if (viaHeader) s"text/html; charset=$cs"
-            else "text/html")
-        graft.sources.Warc.Record(
-          s"<urn:uuid:c$id>", "response", s"https://ex.com/$id",
-          "2026-01-01T00:00:00Z",
-          "application/http; msgtype=response", payload)
-      }
-      val recs = graft.sources.Warc.stripHttp(
-        graft.sources.Warc.read(s, s"$dir/*.warc.gz"))
-      graft.sources.Warc.decodeBody(recs, out = "body_text")
-        .select(
-          regexp_extract(col("target_uri"), "/(\\d+)$", 1)
-            .cast(LongType).as("doc_id"),
-          col("body_text"), col("charset"))
-    }),
-
-    // Robots meta opt-out (the polite-crawl convention — pipelines
-    // drop noindex pages before training): four synthesized page
-    // classes per id — a real noindex in three attribute/quote forms,
-    // an index,follow robots tag, a NON-robots tag containing the
-    // word noindex (must NOT trip), and no meta at all. Full row/hash
-    // gate; the oracle mirrors the per-tag two-condition check in
-    // DuckDB list lambdas.
-    "q119_meta_robots" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val robots = when(pmod(col("doc_id"), lit(4)) === 0,
-          when(pmod(col("doc_id"), lit(3)) === 0,
-            lit("<meta name=\"robots\" content=\"noindex, nofollow\">"))
-            .when(pmod(col("doc_id"), lit(3)) === 1,
-              lit("<meta content='noindex' name='robots'>"))
-            .otherwise(lit("<meta name=robots content=noindex>")))
-        .when(pmod(col("doc_id"), lit(4)) === 1,
-          lit("<meta name=\"robots\" content=\"index, follow\">"))
-        .when(pmod(col("doc_id"), lit(4)) === 2,
-          lit("<meta name=\"description\" content=\"noindex appears\">"))
-        .otherwise(lit(""))
-      val html = concat(lit("<html><head>"), robots,
-        lit("</head><body><p>"), col("text"), lit("</p></body></html>"))
-      docs.select(col("doc_id"),
-        graft.text.Html.metaRobotsNoindex(html).as("noindex"))
-    }),
-
-    // Unicode normalization (the cleanup before any hashing/counting:
-    // visually identical strings must collide in dedup): decomposed
-    // combining sequences compose (NFC), zero-width/control bytes
-    // strip, precomposed text passes through unchanged. Full row/hash
-    // gate — the oracle applies the same strip regexes + DuckDB's
-    // nfc_normalize.
-    "q120_normalize_unicode" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val tail = when(pmod(col("doc_id"), lit(4)) === 0,
-          lit(" cafe\u0301 deco\u0301mposed")) // e + combining acute
-        .when(pmod(col("doc_id"), lit(4)) === 1,
-          lit(" zero\u200Bwidth\u200Djoin\uFEFFbom\u00ADsoft"))
-        .when(pmod(col("doc_id"), lit(4)) === 2,
-          lit(" ctrl\u0007bell\u001Besc"))
-        .otherwise(lit(" caf\u00E9 precomposed"))
-      val synth = concat(col("text"), tail)
-      docs.select(col("doc_id"),
-        graft.text.TextAnalysis.normalizeUnicode(synth).as("norm_text"),
-        (length(synth) - length(
-          graft.text.TextAnalysis.normalizeUnicode(synth)))
-          .cast(LongType).as("chars_removed"))
-    }),
-
-    // Boilerplate removal (the jusText/trafilatura stage between HTML
-    // extraction and quality filtering): pages are synthesized with a
-    // link-dominated nav row, a short copyright footer, a "read more"
-    // link row, and the doc's text as the one content block — the
-    // block segmentation + word-count/link-density scoring must keep
-    // exactly the content. The oracle mirrors the whole pipeline
-    // (same block regex, same density rule) in DuckDB list lambdas.
-    // Full row/hash gate.
-    "q115_boilerplate" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val idStr = col("doc_id").cast(StringType)
-      val html = concat(
-        lit("<html><head><title>Site T"), idStr,
-        lit("</title><style>nav {color: blue}</style></head><body>" +
-          "<nav><a href=\"/\">Home page</a> <a href=\"/about\">About " +
-          "us</a> <a href=\"/contact\">Contact info</a></nav><p>"),
-        col("text"),
-        lit("</p><div>Copyright 2026 Example Corp</div>" +
-          "<p>Read more: <a href=\"/next\">the next related article " +
-          "in this series</a></p></body></html>"))
-      val parts = graft.text.Html.dropBoilerplate(html)
-      docs.select(col("doc_id"),
-        parts.getField("clean_text").as("clean_text"),
-        parts.getField("n_blocks").as("n_blocks"),
-        parts.getField("n_kept").as("n_kept"))
-    }),
-
-    // Boilerplate precision/recall regression gate (r16 — judge ask
-    // #6): pages synthesized with LABELED blocks — three content
-    // blocks carry cmark* tokens (one embeds the real doc text), a
-    // nav bar and a short footer and a link-heavy row carry bmark*
-    // tokens — then precision (no boilerplate marker survives) and
-    // recall (all three content markers survive) are computed from
-    // the extractor's own clean_text. The nav trips the word-count
-    // floor, bmarklinks trips the LINK-DENSITY rule at exactly 5
-    // words (both rules exercised separately). Any threshold change
-    // that leaks a nav bar or eats a paragraph flips a verdict.
-    "q125_boilerplate_pr" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val html = concat(
-        lit("<html><body><div><a href=\"/h\">Home</a> " +
-          "<a href=\"/a\">About</a> <a href=\"/c\">Contact</a></div>" +
-          "<p>cmarkone "),
-        col("text"),
-        lit("</p><p>cmarktwo this paragraph stays because it " +
-          "carries enough plain words</p>" +
-          "<p>bmarkshort tiny</p>" +
-          "<div>bmarklinks <a href=\"/x\">read more here now</a></div>" +
-          "<p>cmarkthree the third content block also has plenty " +
-          "of words to be kept</p></body></html>"))
-      val parts = graft.text.Html.dropBoilerplate(html)
-      val clean = col("p").getField("clean_text")
-      def found(m: String) =
-        when(instr(clean, m) > 0, 1L).otherwise(0L)
-      docs.select(col("doc_id"), parts.as("p"))
-        .select(col("doc_id"),
-          col("p").getField("n_blocks").as("n_blocks"),
-          col("p").getField("n_kept").as("n_kept"),
-          (found("cmarkone") + found("cmarktwo") + found("cmarkthree"))
-            .as("content_kept"),
-          (found("bmarkshort") + found("bmarklinks")).as("boiler_kept"))
-        .select(col("doc_id"), col("n_blocks"), col("n_kept"),
-          col("content_kept"), col("boiler_kept"),
-          round(when(col("n_kept") > 0,
-            col("content_kept").cast(DoubleType) / col("n_kept"))
-            .otherwise(lit(0.0)), 6).as("precision"),
-          round(col("content_kept").cast(DoubleType) / 3.0, 6)
-            .as("recall"),
-          (col("boiler_kept") === 0).as("v_precision"),
-          (col("content_kept") === 3).as("v_recall"))
-    }),
-
-    // Script-aware tokenization: a multilingual corpus is synthesized
-    // (Chinese ideographs / Japanese kana+ideographs / a Thai run /
-    // plain English appended per doc_id%4) and per-doc token counts,
-    // distinct-token counts, alpha-token fraction, the Gopher word-
-    // count flag, and CJK detection are computed over the SAME
-    // codepoint-boundary rule the oracle mirrors in DuckDB (`\x{…}`
-    // classes — the one escape syntax Java regex and RE2 share). A
-    // whitespace-only tokenizer reads each CJK phrase as ONE token and
-    // breaks every count column. Full row/hash gate.
-    "q114_script_tokens" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val tail = when(pmod(col("doc_id"), lit(4)) === 0,
-          lit("你好你好世界"))     // 你好你好世界
-        .when(pmod(col("doc_id"), lit(4)) === 1,
-          lit("こんにちは世界")) // こんにちは世界
-        .when(pmod(col("doc_id"), lit(4)) === 2,
-          lit("สวัสดีโลก"))
-        .otherwise(lit("plain english tail"))
-      val synth = concat(col("text"), lit(" "), tail)
-      val toks = graft.text.TextAnalysis.tokens(synth)
-      val nToks = size(toks)
-      val alphaFrac = when(nToks > 0,
-        round(size(filter(toks, t => t.rlike("[A-Za-z]")))
-          .cast(DoubleType) / nToks, 6)).otherwise(lit(0.0))
-      docs.select(col("doc_id"),
-        nToks.cast(LongType).as("n_tokens"),
-        size(array_distinct(toks)).cast(LongType).as("n_distinct_tokens"),
-        alphaFrac.as("alpha_token_frac"),
-        // the Gopher word-count RULE on the gate's own token count —
-        // extracting one field from gopherFlags' let-bound struct
-        // would evaluate the full flag battery per row (struct-field
-        // pruning can't see through the binding; measured 2.5x on
-        // this gate)
-        (nToks >= 50 && nToks <= 100000).as("word_count_ok"),
-        // r17: kana routes ja BEFORE the ideograph test, so "CJK
-        // detected" = routed to either CJK-script language, which is
-        // exactly (kana ∨ Han) presence in the router's 4096-char
-        // prefix — the oracle mirrors that union (kana alone inside
-        // the prefix with the ideographs cut at the boundary must
-        // not diverge the two engines)
-        graft.text.TextAnalysis.langId(synth).isin("zh", "ja")
-          .as("cjk_detected"))
-    }),
-
-    // n-gram LM generalization at n=3 (CCNet's real filter is a
-    // 5-gram KenLM; the count-table/scoring-join shape must carry any
-    // order): self-trained trigram LM with add-one smoothing over
-    // bigram contexts and the distinct-unigram vocabulary — the
-    // oracle recomputes the whole model from gram STRINGS in DuckDB
-    // while the engine carries only 64-bit hash keys. Full row/hash
-    // gate (6-digit rounded scores).
-    "q116_trigram_lm" -> ((s, d) =>
-      graft.text.LangModel.ngramScore(
-        T(s, d, "documents").df, "doc_id", "text", n = 3)),
-
-    // the PRODUCTION point (r16): CCNet's real filter is a 5-gram
-    // KenLM — same order-generic count-table/scoring-join shape as
-    // q116, gated at n=5 so the production order has its own oracle
-    // (context table = 4-gram counts, V unchanged). Full row/hash
-    // gate (6-digit rounded scores).
-    "q124_fivegram_lm" -> ((s, d) =>
-      graft.text.LangModel.ngramScore(
-        T(s, d, "documents").df, "doc_id", "text", n = 5)),
-
-    // Per-language quality on a multilingual corpus (r16 — the judge's
-    // "English stopwords behind multilingual tokens" seam): each doc
-    // gets a fixed zh / de / en paragraph by doc_id%3, the engine
-    // derives the language itself (langId), keys the stopword table /
-    // letter class / Gopher 8-list by it, and the oracle RE-DERIVES
-    // language (the q48 argmax mirror) and recomputes every keyed
-    // signal from the same tables in SQL — the zh/de lists appear
-    // verbatim in the oracle. v_seam is the Spark-side verdict: the
-    // keyed score passes docs the English-scoped score flunks (zh),
-    // without moving English docs.
-    "q126_multilingual_quality" -> ((s, d) => {
-      import graft.text.TextAnalysis._
-      val zhText = "这是一个很好的例子。我们在这里有他的书。" +
-        "不是我的书。他说这是好的。"
-      val deText = "der mann und die frau gehen nicht mit dem hund " +
-        "zu das haus wo ein kleines kind ist und der tag ist gut " +
-        "die sonne ist hell und das wetter ist nicht schlecht ein " +
-        "guter tag zu gehen mit der familie und die kinder sind froh " +
-        "das leben ist gut und der abend ist nah"
-      val enText = "the quick brown fox is on the hill and it is a " +
-        "good day for this walk to be had by all of the people"
-      val synth = T(s, d, "documents").df.select(col("doc_id"),
-        when(pmod(col("doc_id"), lit(3)) === 0, lit(zhText * 4))
-          .when(pmod(col("doc_id"), lit(3)) === 1, lit(deText))
-          .otherwise(lit(enText)).as("text"))
-      // lang is materialized as a COLUMN first (CollapseProject keeps
-      // multi-referenced non-cheap expressions in their own
-      // projection), and every keyed signal let2-binds it besides —
-      // the detector runs per row, never per token (the 128 s → 2 s
-      // lesson, see stopwordRatioByLang's doc)
-      synth.withColumn("lang", langId(col("text")))
-        .select(col("doc_id"), col("lang"),
-          size(tokens(col("text"))).cast(LongType).as("n_tokens"),
-          round(stopwordRatioByLang(col("text"), col("lang")), 6)
-            .as("stop_ratio_keyed"),
-          qualityScoreByLang(col("text"), col("lang")).as("q_keyed"),
-          gopherFlagsByLang(col("text"), col("lang"))
-            .getField("stopwords_ok").as("gopher_stop_ok"),
-          qualityScore(col("text")).as("__q_en"))
-        .select(col("doc_id"), col("lang"), col("n_tokens"),
-          col("stop_ratio_keyed"), col("q_keyed"), col("gopher_stop_ok"),
-          when(col("lang") === "zh",
-            col("q_keyed") >= 0.5 && col("__q_en") < 0.5)
-            .otherwise(col("q_keyed") >= 0.5).as("v_seam"))
-    }),
-
-    // CCNet perplexity bucketing: per-language head/middle/tail split
-    // by bigram-LM score — ntile over (ROUNDED avg_nll, doc_id) so the
-    // split is exactly reproducible cross-engine; unscoreable docs
-    // (< 2 tokens) keep a null bucket. Full row/hash gate.
-    "q110_ppl_buckets" -> ((s, d) =>
-      graft.text.LangModel.perplexityBuckets(
-        T(s, d, "documents").df, "doc_id", "text",
-        stratumCol = Some("lang"))),
-
-    // URL canonicalization (the step BEFORE URL-keyed dedup/joins —
-    // two spellings of one page must collide): messy URLs synthesized
-    // deterministically per doc (mixed-case scheme/host, default
-    // ports, tracking params, fragments, bare-host trailing slash),
-    // normalized by the RE2-safe rule chain the oracle mirrors
-    // verbatim — full row/hash gate
-    "q109_url_normalize" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      val idStr = col("doc_id").cast(StringType)
-      val messy = when(pmod(col("doc_id"), lit(3)) === 0,
-          concat(lit("HTTP://WWW.Site"), idStr, lit(".ORG:80/#top")))
-        .otherwise(concat(
-          lit("HTTPS://Ex"), pmod(col("doc_id"), lit(7)).cast(StringType),
-          lit(".COM:443/Path"), idStr, lit("?utm_source=x&id="), idStr,
-          lit("&fbclid=abc#frag")))
-      docs.select(col("doc_id"), messy.as("url"))
-        .select(col("doc_id"), col("url"),
-          graft.text.Urls.normalize(col("url")).as("url_norm"),
-          graft.text.Urls.domain(
-            graft.text.Urls.normalize(col("url"))).as("host"))
-    }),
-
-    "q99_ppm_decode" -> ((s, d) => {
-      import s.implicits._
-      val media = T(s, d, "documents").df.select(col("doc_id"))
-        .as[Long].mapPartitions(_.map { id =>
-          (id, graft.multimodal.Decode.encodeSolidPpm(
-            (id % 16 + 1).toInt, (id % 8 + 1).toInt,
-            (id % 256).toInt, (id * 7 % 256).toInt, (id * 13 % 256).toInt))
-        }).toDF("doc_id", "payload")
-      graft.multimodal.Decode.imageFeatures(media, "doc_id", "payload")
-        .toDF()
-        .select(col("doc_id"), col("width"), col("height"),
-          round(col("mean_r"), 6).as("mean_r"),
-          round(col("mean_g"), 6).as("mean_g"),
-          round(col("mean_b"), 6).as("mean_b"))
-    }),
-
-    // REGISTER'd-jar EvalFunc surface: a user UDF compiled against the
-    // engine's org.apache.pig facade at query time (the real migration
-    // path for jar-carrying Pig scripts), dispatched by FQN from a
-    // script, oracle-checked row-by-row
-    "q98_jar_udf" -> ((s, d) => {
-      graft.frontend.PigRunner(s).run(s"""
-        REGISTER '$gateJar';
-        d = LOAD '$d/documents.parquet';
-        o = LOAD '$d/orders.parquet';
-        r = FOREACH d GENERATE doc_id, gate.udf.Exclaim(lang) AS exclaimed;
-        t = FOREACH o GENERATE o_orderkey,
-              gate.udf.NextDay(o_orderdate) AS nd,
-              (double)gate.udf.DecHalf(o_orderkey) AS half;
-        j = JOIN r BY doc_id, t BY o_orderkey;
-        x = FOREACH j GENERATE doc_id, exclaimed, nd, half;
-      """).apply("x").df
-    }),
-
-    // bloom-pre-filtered join (JOIN … USING 'bloom' / BuildBloom+Bloom
-    // pair): the big side is cut down by a codegen might-contain BEFORE
-    // its shuffle, then the exact join keeps the result oracle-equal —
-    // false positives only cost shuffle bytes, never correctness
-    "q84_bloom_join" -> ((s, d) => {
-      val li = T(s, d, "lineitem").df
-      val sup = T(s, d, "supplier").df.filter(col("s_nationkey") === 3)
-      graft.operators.BloomJoin.join(li, sup, "l_suppkey", "s_suppkey",
-          expectedItems = 100000L, fpp = 0.01)
-        .groupBy(col("s_suppkey"))
-        .agg(count(lit(1)).as("n_items"),
-             round(sum(col("l_extendedprice")), 2).as("revenue"))
-    }),
-
-    // n-gram Jaccard between consecutive doc ids — exact, oracle-checked
-    "q45_ngram_jaccard" -> ((s, d) => {
-      // shingles shuffle as 64-bit hashes (token-hash combination),
-      // never as string arrays; |∩|/|∪| is identical absent a collision
-      val sh = graft.text.Dedup.withHashedWordNgrams(
-        T(s, d, "documents").df, Seq("doc_id"), "text", 3, "sh")
-      val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-      val b = sh.select((col("doc_id") - 1).as("id_a"), col("sh").as("sh_b"))
-      a.join(b, Seq("id_a"))
-        .select(col("id_a").as("doc_id"),
-          round(graft.text.Dedup.jaccard(col("sh_a"), col("sh_b")), 6)
-            .as("jac_next"))
-    }),
-
-    // brute-force cosine top-k against a fixed query vector
-    "q46_ann_brute" -> ((s, d) => {
-      val emb = T(s, d, "embeddings").df
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-      graft.ml.Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
-    }),
-
-    // LSH ANN over a PERSISTED bucket-partitioned index: built ONCE per
-    // dataset (cached across invocations — bench warmup builds it, timed
-    // runs measure the probe path, which is the real repeated-query
-    // workload) and probed via partition-pruned read + multi-probe.
-    // Gated by the brute-force exact twin: recall@10 ≥ 0.5 (measured 0.6
-    // at sf0.01; seeded planes → deterministic), the query's own vector
-    // (vec_id 0, cos 1.0) must surface, and exactly k rows return.
-    "q47_ann_lsh" -> ((s, d) => {
-      val emb = T(s, d, "embeddings").df
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-      val idx = annIndexCache.getOrElseUpdate(d, {
-        val path = indexDir(d, "annidx")
-        graft.ml.Similarity.buildAnnIndex(
-          emb, "vec_id", "embedding", numPlanes = 4, path)
-      })
-      val ann = idx.topK(q, 10, probeRadius = 1)
-      val exact = graft.ml.Similarity.bruteForceTopK(
-        emb, "vec_id", "embedding", q, 10)
-      // every verdict from ONE agg over the probe result
-      val aggA = ann.join(
-          exact.select(col("vec_id"), lit(1L).as("hit")), Seq("vec_id"),
-          "left")
-        .agg(count(lit(1)).as("k_returned"),
-          coalesce(sum(col("hit")), lit(0L)).as("n_hit"),
-          count(when(col("vec_id") === 0, 1)).as("n_top1"))
-      emb.agg(count(lit(1)).as("n_vectors")).crossJoin(aggA).select(
-        col("n_vectors"), col("k_returned"),
-        (col("n_top1") === 1).as("top1_ok"),
-        (col("n_hit") >= 5).as("recall_ok"))
-    }),
-
-    // language ID (stopword/CJK heuristic, join-based scalable form —
-    // deterministic, oracle-checked against the DuckDB argmax twin)
-    "q48_langid" -> ((s, d) => {
-      val docs = T(s, d, "documents").df
-      Relation(graft.text.TextAnalysis.langIdByJoin(docs, "doc_id", "text")
-          .join(docs.select(col("doc_id"), col("lang")), "doc_id"), "docs")
-        .groupBy("lang" -> col("lang"), "pred_lang" -> col("pred_lang"))
-        .agg(COUNT_STAR().as("n")).df
-    }),
-
-    // quality scoring: token stats + ratios (oracle-checked)
-    "q49_quality" -> ((s, d) =>
-      T(s, d, "documents").foreach(
-        col("doc_id"),
-        graft.text.TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-        graft.text.TextAnalysis.bpeishTokenCount(col("text")).as("n_bpeish"),
-        round(graft.text.TextAnalysis.alphaRatio(col("text")), 6)
-          .as("alpha_ratio"),
-        round(graft.text.TextAnalysis.stopwordRatio(col("text")), 6)
-          .as("stop_ratio")).df),
-
-    // rolling-hash document fingerprint (oracle-checked mod-arithmetic)
-    "q50_fingerprint" -> ((s, d) =>
-      T(s, d, "documents").foreach(
-        col("doc_id"),
-        graft.text.TextAnalysis.fingerprint(col("text")).as("fp")).df),
-
-    // multimodal batch feature extraction over MIXED payloads (r17:
-    // the byte0/256 stub is retired — extractFeatures magic-sniffs and
-    // dispatches to the REAL Decode decoders): doc_id%3 picks a solid
-    // PPM (q99's pixel-exact anchors), a PCM16 WAV (byte-exact size/
-    // rate/frame anchors), or raw text bytes (→ the unknown REPORTING
-    // row — never dropped, never fabricated features). Audio RMS is
-    // decoder-derived, so it rides the Spark-computed verdict column
-    // (q44 pattern); everything else is DuckDB-recomputed.
-    "q51_multimodal" -> ((s, d) => {
-      import s.implicits._
-      val media = T(s, d, "documents").df.select(col("doc_id"), col("text"))
-        .as[(Long, String)].mapPartitions(_.map { case (id, text) =>
-          val payload = (id % 3) match {
-            case 0 => graft.multimodal.Decode.encodeSolidPpm(
-              (id % 16 + 1).toInt, (id % 8 + 1).toInt,
-              (id % 256).toInt, (id * 7 % 256).toInt, (id * 13 % 256).toInt)
-            case 1 => graft.multimodal.Decode.encodeEnvelopeWav(
-              id, 8000, segSamples = 32, gain = 1.0)
-            case _ =>
-              text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          }
-          graft.multimodal.Multimodal.MediaRecord(
-            id, payload, "application/octet-stream", 0, 0)
-        })
-      graft.multimodal.Multimodal.extractFeatures(media, batchSize = 64)
-        .toDF().select(col("doc_id"), col("kind"), col("format"),
-          col("n_bytes"), col("width"), col("height"),
-          col("sample_rate"), col("n_frames"),
-          when(col("kind") === "image", round(col("f0"), 6))
-            .otherwise(lit(0.0)).as("mean_r"),
-          when(col("kind") === "audio",
-            col("f0") > 0.0 && col("f0") <= 1.0)
-            .otherwise(lit(true)).as("v_rms"))
-    }),
-
-    // frame-sampling shape over binary payloads — deterministic byte
-    // slicing, oracle-checked (the DuckDB twin slices VARCHAR, which
-    // matches byte semantics because the synthetic text is ASCII). The
-    // gate projects the frame as HEX: the driver's pandas-based compare
-    // can't hash raw binary cells, and hex pins the exact same bytes.
-    "q52_frames" -> ((s, d) =>
-      graft.multimodal.Multimodal.sampleFrames(
-        T(s, d, "documents").df
-          .select(col("doc_id"), col("text").cast(BinaryType).as("payload")),
-        "doc_id", "payload", chunkBytes = 32, everyK = 4)
-        .select(col("doc_id"), col("frame_idx"),
-          hex(col("frame_bytes")).as("frame_hex"))),
-
-    // Pig Latin frontend end-to-end: script → parser → DSL → Catalyst
-    "q53_piglatin" -> ((s, d) => {
-      GraftSession.tune(s)
-      graft.frontend.PigRunner(s).run(s"""
-        li = LOAD '$d/lineitem.parquet';
-        f  = FILTER li BY l_quantity > 20.0;
-        g  = GROUP f BY (l_returnflag, l_linestatus);
-        r  = FOREACH g GENERATE group.l_returnflag AS l_returnflag,
-                                group.l_linestatus AS l_linestatus,
-                                COUNT(f) AS cnt,
-                                SUM(f.l_extendedprice) AS sum_price;
-        o  = ORDER r BY l_returnflag, l_linestatus;
-      """).apply("o").df
-        .withColumn("sum_price", round(col("sum_price"), 2))
-    }),
-
-    // COR / COV aggregates (§2.6 COR.java/COV.java)
-    "q54_cor_cov" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .groupBy("l_returnflag" -> col("l_returnflag"))
-        .agg(round(COR(col("l_quantity"), col("l_extendedprice")), 4)
-               .as("cor_qp"),
-             round(COV(col("l_quantity"), col("l_extendedprice")), 2)
-               .as("cov_qp"),
-             round(stddev_samp(col("l_discount")), 6).as("sd_disc")).df),
-
-    // SPRINTF / STRSPLIT / LCFIRST string builtins (§2.6)
-    "q55_sprintf_split" -> ((s, d) =>
-      T(s, d, "part").foreach(
-        col("p_partkey"),
-        SPRINTF("%s|%05d", col("p_brand"), col("p_partkey")).as("tagged"),
-        SIZE(STRSPLIT(col("p_type"), " ")).as("n_words"),
-        LCFIRST(col("p_name")).as("lc")).df),
-
-    // set ops beyond the reference (SURVEY §2.9 bonus): INTERSECT/EXCEPT
-    "q56_set_ops" -> ((s, d) => {
-      val cn = T(s, d, "customer").foreach(col("c_nationkey").as("nk")).distinct
-      val sn = T(s, d, "supplier").foreach(col("s_nationkey").as("nk")).distinct
-      Relation(cn.df.intersect(sn.df), "both")
-        .foreach(col("nk"), lit("both").as("which"))
-        .union(Relation(cn.df.except(sn.df), "conly")
-          .foreach(col("nk"), lit("cust_only").as("which"))).df
-    }),
-
-    // secondary sort (SecondaryKeyOptimizer analog): in-bag order drives
-    // an order-sensitive aggregate — status history string per customer
-    "q57_secondary_sort" -> ((s, d) =>
-      T(s, d, "orders")
-        .foreach(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-                 col("o_orderstatus"))
-        .as("oh")
-        .groupBy("o_custkey" -> col("o_custkey"))
-        .bagSorted2("o_orderdate", asc1 = true, "o_orderkey", asc2 = true)
-        .foreach(col("o_custkey"),
-          array_join(transform(col("oh"), t => t.getField("o_orderstatus")), "")
-            .as("status_seq"),
-          element_at(col("oh"), 1).getField("o_orderdate").as("first_date")).df),
-
-    // full window-function surface (superset of Pig's RANK, SURVEY §2.4)
-    "q58_window_funcs" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      T(s, d, "events").foreach(
-        col("event_id"),
-        round(sum(col("value")).over(
-          w.rowsBetween(Window.unboundedPreceding, 0)), 2).as("running"),
-        lag(col("event_type"), 1).over(w).as("prev_type"),
-        row_number().over(w).cast(LongType).as("seq")).df
-    }),
-
-    // PluckTuple: prefix projection after a disambiguated join
-    "q59_pluck" -> ((s, d) =>
-      T(s, d, "customer")
-        .joinOn(T(s, d, "orders").as("o"), col("c_custkey"), col("o_custkey"),
-                strategy = "replicated")
-        .pluck("o_")
-        .foreach(col("o_orderkey"), col("o_orderstatus"),
-                 col("o_totalprice")).df),
-
-    // theta/range join (bonus over the reference — Pig expresses this as
-    // CROSS+FILTER; Spark plans a broadcast nested-loop join directly)
-    "q60_range_join" -> ((s, d) => {
-      val ranges = s.createDataFrame(Seq(
-        ("tiny", 0.0, 50000.0), ("small", 50000.0, 100000.0),
-        ("mid", 100000.0, 200000.0), ("large", 200000.0, 300000.0),
-        ("huge", 300000.0, 1e9))).toDF("bucket", "lo", "hi")
-      T(s, d, "orders")
-        .joinTheta(Relation(ranges, "ranges"),
-          col("o_totalprice") >= col("lo") && col("o_totalprice") < col("hi"))
-        .groupBy("bucket" -> col("bucket"))
-        .agg(COUNT_STAR().as("n"),
-             round(SUM(col("o_totalprice")), 2).as("volume")).df
-    }),
-
-    // nested/multi-DISTINCT aggregation (PigMix L4/L15 shape)
-    "q61_multi_distinct" -> ((s, d) =>
-      T(s, d, "lineitem")
-        .groupBy("l_returnflag" -> col("l_returnflag"))
-        .agg(countDistinct(col("l_partkey")).as("n_parts"),
-             countDistinct(col("l_suppkey")).as("n_supps"),
-             COUNT_STAR().as("n")).df),
-
-    // embedding-cosine near-dup pairs: banded multi-plane LSH signatures
-    // with a maxBucket cap (same shape as MinHash LSH — candidates from
-    // shared band-buckets, exact cosine verify on candidates only, never
-    // a cross join). Gated by the EXACT quadratic cosine twin: the DuckDB
-    // oracle recomputes n_exact independently; recall ≥ 0.6 (measured
-    // 0.76 at sf0.01; seeded planes → deterministic) and zero pairs
-    // outside the exact set. HardeningSpec covers above-threshold
-    // correctness.
-    "q62_embedding_neardup" -> ((s, d) => {
-      val emb = T(s, d, "embeddings").df
-      // both pair sets feed several verdict aggregates — persist results
-      val found = graft.GraftSession.trackPersist(
-        graft.ml.Similarity.nearNeighborPairs(
-          emb, "vec_id", "embedding",
-          threshold = 0.35, numPlanes = 32, numBands = 8))
-      val exact = graft.GraftSession.trackPersist(
-        graft.ml.Similarity.exactCosinePairs(
-          emb, "vec_id", "embedding", threshold = 0.35))
-      // one join + two single-row aggs (q43 pattern)
-      val aggF = found.join(
-          exact.select(col("id_a"), col("id_b"), lit(1L).as("hit")),
-          Seq("id_a", "id_b"), "left")
-        .agg(count(lit(1)).as("n_found"),
-          coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
-      exact.agg(count(lit(1)).as("n_exact")).crossJoin(aggF).select(
-        col("n_exact"),
-        (col("n_hit") >= ceil(col("n_exact") * 0.6)).as("recall_ok"),
-        (col("n_found") === col("n_hit")).as("precision_ok"))
-    }),
-
-    // IVF ANN: k-means coarse quantizer (deterministic seeded init), the
-    // assignment WRITTEN cell-partitioned — fit+write happen ONCE per
-    // dataset (cached; bench times the partition-pruned probe path, the
-    // real repeated-query workload) — probe reads only the nprobe nearest
-    // cells. Gated by the brute-force exact twin: recall@10 ≥ 0.6
-    // (measured 0.9 at sf0.01; seeded init → deterministic), top-1
-    // surfaces, exactly k rows return. IvfSpec asserts recall too.
-    "q63_ann_ivf" -> ((s, d) => {
-      val emb = T(s, d, "embeddings").df
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0)
-      val (path, centroids) = ivfIndexCache.getOrElseUpdate(d, {
-        val model = graft.ml.Ivf.fit(emb, "embedding", k = 8, iters = 3)
-        val p = indexDir(d, "ivfidx")
-        graft.ml.Ivf.writeIndex(model, p)
-        (p, model.centroids)
-      })
-      // nprobe=4 (r17 correctness fix, was 2): at sf0.001 (500
-      // vectors over k=8 cells) the exact top-10 spans >2 cells and
-      // the deterministic fit put only 3 of them in the 2 probed
-      // cells — recall_ok read FALSE at a scale factor the sf0.01
-      // gate never exercised. Probing is monotone (more cells ⇒
-      // superset of candidates ⇒ recall can only rise), measured
-      // n_hit 3→7 / 6→7 / 7→8 at sf0.001/0.01/0.1, so every
-      // previously-green verdict is unchanged and the gate's claim
-      // now holds at every checked scale.
-      val ann = graft.ml.Ivf.searchIndex(s, path, centroids, "vec_id",
-        "embedding", q, topK = 10, nprobe = 4)
-      val exact = graft.ml.Similarity.bruteForceTopK(
-        emb, "vec_id", "embedding", q, 10)
-      // every verdict from ONE agg over the probe result
-      val aggA = ann.join(
-          exact.select(col("vec_id"), lit(1L).as("hit")), Seq("vec_id"),
-          "left")
-        .agg(count(lit(1)).as("k_returned"),
-          coalesce(sum(col("hit")), lit(0L)).as("n_hit"),
-          count(when(col("vec_id") === 0, 1)).as("n_top1"))
-      emb.agg(count(lit(1)).as("n_vectors")).crossJoin(aggA).select(
-        col("n_vectors"), col("k_returned"),
-        (col("n_top1") === 1).as("top1_ok"),
-        (col("n_hit") >= 6).as("recall_ok"))
-    }),
-
-    // token-window chunking with overlap (training-data prep; exact
-    // per-chunk token windows → oracle-checked)
-    "q64_chunking" -> ((s, d) =>
-      graft.text.TextAnalysis.chunkByTokens(
-        T(s, d, "documents").foreach(col("doc_id"), col("text")).df,
-        "text", chunkTokens = 50, overlap = 10)),
-
-    // Algebraic/Accumulator UDAF surface in anger: registered aggregator
-    // with Pig COUNT null semantics, invoked from SQL (DEFINE-style)
-    "q66_udaf" -> ((s, d) => {
-      GraftSession.tune(s)
-      graft.functions.UdfSurface.defineCountNonNull(s, "count_nn")
-      T(s, d, "orders").df.createOrReplaceTempView("orders_v")
-      s.sql("""SELECT o_orderstatus, count_nn(o_custkey) AS n_cust,
-                      count(*) AS n
-               FROM orders_v GROUP BY o_orderstatus""")
-    }),
-
-    // Pig Latin GROUP ALL fused to a global aggregate — no whole-relation
-    // bag in one reducer (the round-1 scale cliff; PlanSpec asserts the
-    // fused plan)
-    "q67_piglatin_groupall" -> ((s, d) => {
-      GraftSession.tune(s)
-      graft.frontend.PigRunner(s).run(s"""
-        li = LOAD '$d/lineitem.parquet';
-        g  = GROUP li ALL;
-        r  = FOREACH g GENERATE COUNT(li) AS cnt,
-                                ROUND_TO(SUM(li.l_quantity), 2) AS sum_qty,
-                                ROUND_TO(AVG(li.l_discount), 6) AS avg_disc,
-                                MAX(li.l_extendedprice) AS max_price;
-      """).apply("r").df
-    }),
-
-    // ASSERT statement + COGROUP ... INNER semantics (empty-bag groups of
-    // the INNER input dropped; LOCogroup GROUPTYPE :50-54)
-    "q68_piglatin_assert_inner" -> ((s, d) => {
-      GraftSession.tune(s)
-      graft.frontend.PigRunner(s).run(s"""
-        c = LOAD '$d/customer.parquet';
-        s = LOAD '$d/supplier.parquet';
-        ASSERT c BY c_custkey >= 0, 'keys must be non-negative';
-        cg = COGROUP c BY c_nationkey, s BY s_nationkey INNER;
-        r  = FOREACH cg GENERATE group AS nationkey, COUNT(c) AS n_cust,
-                                 COUNT(s) AS n_supp;
-      """).apply("r").df
-    }),
-
-    // PigMix-L4 shape: nested DISTINCT over a bag field path + nested
-    // FOREACH/CROSS surface inside the block
-    "q69_piglatin_nested" -> ((s, d) => {
-      GraftSession.tune(s)
-      graft.frontend.PigRunner(s).run(s"""
-        o = LOAD '$d/orders.parquet';
-        g = GROUP o BY o_custkey;
-        r = FOREACH g {
-              pr = DISTINCT o.o_orderpriority;
-              GENERATE group AS o_custkey, COUNT(o) AS n_orders,
-                       SIZE(pr) AS n_prio;
-            };
-      """).apply("r").df
-    }),
-
-    // positional bag refs in the fused GROUP+FOREACH path: $1 on the
-    // grouped (group, bag) frame is the BAG — COUNT($1) must apply Pig's
-    // null rule (skip tuples whose first field is null), not count some
-    // input column (the round-2 ADVICE fusion hazard, now pinned by oracle)
-    "q70_piglatin_posref" -> ((s, d) => {
-      GraftSession.tune(s)
-      graft.frontend.PigRunner(s).run(s"""
-        o = LOAD '$d/orders.parquet';
-        p = FOREACH o GENERATE
-              (o_totalprice > 150000.0 ? NULL : o_orderstatus) AS flag,
-              o_orderpriority AS prio;
-        g = GROUP p BY prio;
-        r = FOREACH g GENERATE group AS prio, COUNT($$1) AS cnt,
-                               COUNT_STAR($$1) AS n;
-      """).apply("r").df
-    }),
-
-    // piggybank Over/Stitch window idiom in a nested FOREACH — compiles to
-    // a Spark window over the pre-group input (no bag); running balance
-    // per nation, ordered by the unique customer key so the running sum is
-    // deterministic
-    "q71_piglatin_over" -> ((s, d) => {
-      GraftSession.tune(s)
-      graft.frontend.PigRunner(s).run(s"""
-        c = LOAD '$d/customer.parquet';
-        g = GROUP c BY c_nationkey;
-        r = FOREACH g {
-              ord = ORDER c BY c_custkey;
-              GENERATE FLATTEN(Stitch(ord,
-                Over(ord.c_acctbal, 'sum(double)')));
-            };
-        f = FOREACH r GENERATE c_custkey, c_nationkey,
-              ROUND_TO(result, 2) AS running_bal;
-      """).apply("f").df
-    }),
-
-    // corpus statistics with exact percentiles
-    "q65_corpus_stats" -> ((s, d) =>
-      Relation(T(s, d, "documents").df.select(col("source"),
-          col("n_chars"),
-          graft.text.TextAnalysis.tokenCount(col("text")).as("n_toks")),
-        "docs")
-        .groupBy("source" -> col("source"))
-        .agg(COUNT_STAR().as("n_docs"),
-             round(AVG(col("n_chars")), 4).as("avg_chars"),
-             round(expr("percentile(n_toks, 0.5)"), 4).as("med_toks"),
-             round(expr("percentile(n_toks, 0.9)"), 4).as("p90_toks")).df)
-  )
-
-  private val pipelineOracles: Map[String, String] = Map(
-    // independent recomputation of q43's exact-twin count (q45-style gram
-    // comprehension) over the same doc_id<500 subset; the verdict columns
-    // are computed Spark-side against that twin (q21 pattern)
-    "q43_minhash_neardups" ->
-      """WITH sh AS (
-           SELECT doc_id,
-                  list_distinct([array_to_string(toks[i:i+2], ' ')
-                    for i in range(1, len(toks) - 1)]) AS grams
-           FROM (SELECT doc_id,
-                        list_filter(string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                                    t -> length(t) > 0) AS toks
-                 FROM documents WHERE doc_id < 500)),
-         pairs AS (
-           SELECT round(CASE WHEN len(list_distinct(a.grams || b.grams)) > 0
-                    THEN CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                         / len(list_distinct(a.grams || b.grams))
-                    ELSE 0.0 END, 6) AS jac
-           FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-         SELECT count(*) AS n_exact, true AS recall_ok,
-                true AS precision_ok
-         FROM pairs WHERE jac >= 0.5""",
-    // mirrors TextAnalysis.repetitionStats exactly: same line split +
-    // empty-line filter, repeat mass = total − distinct, top-gram mass
-    // = max over grams of count × gram length
-    "q81_repetition" ->
-      """WITH ls AS (
-           SELECT doc_id, length(text) AS n_chars,
-                  list_filter(string_split(text, chr(10)),
-                              l -> length(trim(l)) > 0) AS lines
-           FROM documents),
-         base AS (
-           SELECT doc_id, n_chars,
-             round(CASE WHEN len(lines) > 0 THEN
-               CAST(len(lines) - len(list_distinct(lines)) AS DOUBLE)
-                 / len(lines) ELSE 0.0 END, 6) AS dup_line_ratio,
-             round(CASE WHEN coalesce(list_sum(list_transform(lines,
-                     l -> length(l))), 0) > 0 THEN
-               CAST(list_sum(list_transform(lines, l -> length(l))) -
-                    list_sum(list_transform(list_distinct(lines),
-                                            l -> length(l))) AS DOUBLE)
-                 / list_sum(list_transform(lines, l -> length(l)))
-               ELSE 0.0 END, 6) AS dup_line_char_ratio
-           FROM ls),
-         toks AS (
-           SELECT doc_id, list_filter(string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                                      t -> length(t) > 0) AS t
-           FROM documents),
-         g2 AS (
-           SELECT doc_id, unnest([array_to_string(t[i:i+1], ' ')
-                    for i in range(1, len(t))]) AS gram
-           FROM toks WHERE len(t) >= 2),
-         g3 AS (
-           SELECT doc_id, unnest([array_to_string(t[i:i+2], ' ')
-                    for i in range(1, len(t) - 1)]) AS gram
-           FROM toks WHERE len(t) >= 3),
-         t2 AS (SELECT doc_id,
-                       (max({'c': n, 'mass': n * length(gram)})).mass AS c
-                FROM (SELECT doc_id, gram, count(*) AS n FROM g2
-                      GROUP BY 1, 2)
-                GROUP BY 1),
-         t3 AS (SELECT doc_id,
-                       (max({'c': n, 'mass': n * length(gram)})).mass AS c
-                FROM (SELECT doc_id, gram, count(*) AS n FROM g3
-                      GROUP BY 1, 2)
-                GROUP BY 1)
-         SELECT b.doc_id, b.dup_line_ratio, b.dup_line_char_ratio,
-                round(CAST(coalesce(t2.c, 0) AS DOUBLE)
-                  / greatest(b.n_chars, 1), 6) AS top2gram_ratio,
-                round(CAST(coalesce(t3.c, 0) AS DOUBLE)
-                  / greatest(b.n_chars, 1), 6) AS top3gram_ratio
-         FROM base b LEFT JOIN t2 ON t2.doc_id = b.doc_id
-                     LEFT JOIN t3 ON t3.doc_id = b.doc_id""",
-    // mirrors Dedup.wordNgrams exactly, including the short-doc fallback
-    // (fewer than n tokens → the whole token join is the one gram)
-    "q83_decontaminate" ->
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                                      t -> length(t) > 0) AS t
-           FROM documents),
-         grams AS (
-           SELECT doc_id, unnest(CASE WHEN len(t) >= 5
-                    THEN [array_to_string(t[i:i+4], ' ')
-                          for i in range(1, len(t) - 3)]
-                    ELSE [array_to_string(t, ' ')] END) AS gram
-           FROM toks),
-         eg AS (SELECT DISTINCT gram FROM grams WHERE doc_id < 20),
-         hit AS (SELECT DISTINCT g.doc_id
-                 FROM grams g JOIN eg ON eg.gram = g.gram)
-         SELECT d.doc_id, (h.doc_id IS NOT NULL) AS contaminated
-         FROM documents d LEFT JOIN hit h ON h.doc_id = d.doc_id""",
-    "q86_url_domains" ->
-      """WITH salted AS (
-           SELECT doc_id,
-                  text || ' see https://site' ||
-                  CAST(doc_id % 7 AS VARCHAR) || '.example.com/p/' ||
-                  CAST(doc_id AS VARCHAR) || ' and http://cdn' ||
-                  CAST(doc_id % 3 AS VARCHAR) || '.example.net/x' AS t
-           FROM documents),
-         urls AS (
-           SELECT doc_id, unnest(regexp_extract_all(t, 'https?://[^\s]+'))
-                    AS url
-           FROM salted)
-         SELECT regexp_extract(url, 'https?://([^/\s:?#]+)', 1) AS domain,
-                count(*) AS n_urls, count(DISTINCT doc_id) AS n_docs
-         FROM urls GROUP BY domain""",
-    // identical LCG arithmetic to Curation.samplePermille (incl. the
-    // xor-fold of the high id bits) — the sample is reproduced
-    // row-for-row, no randomness anywhere
-    "q87_stratified_sample" ->
-      """SELECT doc_id, lang, source FROM documents
-         WHERE ((((xor(doc_id, doc_id >> 31) % 2147483648)
-                    * 1103515245 + 12345)
-                  % 2147483648) * 1103515245 + 12345)
-                % 2147483648 % 1000 <
-               CASE lang WHEN 'en' THEN 250 WHEN 'es' THEN 500
-                         WHEN 'fr' THEN 750 ELSE 1000 END""",
-    // mirrors Curation.paragraphDedup: same salt, same split, same
-    // (id, pos) keep-first rule, same in-order reassembly
-    "q88_paragraph_dedup" ->
-      """WITH salted AS (
-           SELECT doc_id,
-                  'Shared header ' || CAST(doc_id % 5 AS VARCHAR) || '.' ||
-                  chr(10) || chr(10) || text || chr(10) || chr(10) ||
-                  'All rights reserved.' AS t
-           FROM documents),
-         ps0 AS (
-           SELECT doc_id, string_split_regex(t, '(\r?\n){2}') AS p
-           FROM salted),
-         ps1 AS (
-           SELECT doc_id, p,
-                  unnest(generate_series(1, len(p))) AS idx
-           FROM ps0),
-         ps AS (
-           SELECT doc_id, idx, p[idx] AS para
-           FROM ps1 WHERE length(trim(p[idx])) > 0),
-         np AS (SELECT doc_id, count(*) AS n_paras FROM ps GROUP BY 1),
-         firsts AS (
-           SELECT doc_id, idx, para,
-                  row_number() OVER (PARTITION BY para
-                                     ORDER BY doc_id, idx) AS rn
-           FROM ps),
-         reb AS (
-           SELECT doc_id,
-                  string_agg(para, chr(10) || chr(10) ORDER BY idx) AS clean,
-                  count(*) AS n_kept
-           FROM firsts WHERE rn = 1 GROUP BY 1)
-         SELECT d.doc_id, coalesce(r.clean, '') AS clean,
-                coalesce(np.n_paras, 0) AS n_paras,
-                coalesce(r.n_kept, 0) AS n_kept
-         FROM documents d
-         LEFT JOIN reb r ON r.doc_id = d.doc_id
-         LEFT JOIN np ON np.doc_id = d.doc_id""",
-    // mirrors Curation.lineFilter: same salt, same prose-line predicate
-    // (>=5 tokens AND terminal punctuation), same minLines=3 keep rule
-    "q89_line_filter" ->
-      """WITH salted AS (
-           SELECT doc_id,
-                  text || '.' || chr(10) || 'Home | About | Contact' ||
-                  chr(10) || 'Buy now' || chr(10) ||
-                  'This line has plenty of words to stay.' || chr(10) ||
-                  CASE WHEN doc_id % 3 = 0
-                       THEN 'An extra closing remark rounds things out nicely.'
-                       ELSE 'fin' END AS t
-           FROM documents),
-         ls AS (
-           SELECT doc_id,
-                  list_filter(string_split(t, chr(10)),
-                              l -> length(trim(l)) > 0) AS lines
-           FROM salted),
-         k AS (
-           SELECT doc_id, lines,
-                  list_filter(lines, l ->
-                    len(list_filter(string_split_regex(trim(l), '[ \t\n\f\r\x0B]+'),
-                                    w -> length(w) > 0)) >= 5
-                    AND regexp_matches(rtrim(l), '[.!?"]$')) AS kept
-           FROM ls)
-         SELECT doc_id, array_to_string(kept, chr(10)) AS clean,
-                len(lines) AS n_lines, len(kept) AS n_kept,
-                len(kept) >= 3 AS keep
-         FROM k""",
-    // mirrors Curation.tokenBudget: same tokenizer, same running-sum
-    // keep rule (previous cumulative under budget keeps the crossing doc)
-    "q90_token_budget" ->
-      """WITH t AS (
-           SELECT doc_id, source,
-                  len(list_filter(string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                                  w -> length(w) > 0)) AS n_tokens
-           FROM documents),
-         c AS (
-           SELECT doc_id, source, n_tokens,
-                  CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-           FROM t)
-         SELECT doc_id, source, n_tokens, cum_tokens
-         FROM c WHERE cum_tokens - n_tokens < 300""",
-    // mirrors Retrieval.bm25TopK exactly: same tokenizer, k1=1.2 b=0.75,
-    // idf = ln(1 + (N-df+0.5)/(df+0.5)), rank on round(score,6) + doc_id
-    "q91_bm25" ->
-      """WITH q(query_id, qtext) AS (VALUES
-           (1, 'spark table join fast'), (2, 'slow query scan'),
-           (3, 'data window group by')),
-         toks AS (
-           SELECT doc_id,
-                  list_filter(string_split_regex(trim(lower(text)), '[ \t\n\f\r\x0B]+'),
-                              t -> length(t) > 0) AS t
-           FROM documents),
-         dls AS (SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl FROM toks),
-         qterms AS (
-           SELECT CAST(query_id AS BIGINT) AS query_id,
-                  unnest(list_distinct(list_filter(
-                    string_split_regex(trim(lower(qtext)), '[ \t\n\f\r\x0B]+'),
-                    t -> length(t) > 0))) AS term
-           FROM q),
-         postings AS (
-           SELECT doc_id, tok AS term, CAST(count(*) AS DOUBLE) AS tf
-           FROM (SELECT doc_id, unnest(t) AS tok FROM toks)
-           WHERE tok IN (SELECT term FROM qterms)
-           GROUP BY 1, 2),
-         dfs AS (SELECT term, CAST(count(*) AS DOUBLE) AS df
-                 FROM postings GROUP BY 1),
-         stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                          avg(dl) AS avgdl FROM dls),
-         scored AS (
-           SELECT qt.query_id, p.doc_id,
-                  round(sum(
-                    ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5)) *
-                    (p.tf * 2.2) /
-                    (p.tf + 1.2 * (1 - 0.75 + 0.75 * l.dl / s.avgdl))), 6)
-                    AS score
-           FROM postings p
-             JOIN qterms qt USING (term) JOIN dfs d USING (term)
-             JOIN dls l USING (doc_id) CROSS JOIN stats s
-           GROUP BY 1, 2),
-         ranked AS (
-           SELECT query_id, doc_id,
-                  CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY score DESC, doc_id) AS BIGINT) AS rank, score
-           FROM scored)
-         SELECT query_id, doc_id, rank, score FROM ranked
-         WHERE rank <= 10""",
-    // the oracle recomputes the exact-cosine pair count (the twin's
-    // denominator); the recall/precision verdicts are Spark-side booleans
-    "q93_semdedup" ->
-      """SELECT count(*) AS n_exact, true AS recall_ok,
-                true AS precision_ok
-         FROM (SELECT round(CAST(list_cosine_similarity(
-                        CAST(a.embedding AS DOUBLE[]),
-                        CAST(b.embedding AS DOUBLE[])) AS DOUBLE), 6) AS cs
-               FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-         WHERE cs >= 0.35""",
-    // mirrors LangModel.bigramScore: same tokenizer, add-1 smoothing,
-    // nll = -ln((c12+1)/(c1+V)), V = distinct unigrams, <2-token docs null
-    "q92_lm_score" ->
-      s"""WITH $lmRecomputeCtes
-         SELECT d.doc_id, coalesce(sc.n_bigrams, 0) AS n_bigrams, sc.avg_nll
-         FROM documents d LEFT JOIN sc USING (doc_id)""",
-    // mirrors Curation.packSequences: pack = floor(start/512) where
-    // start = running token sum before this doc, per stratum
-    "q94_seq_pack" ->
-      """WITH t AS (
-           SELECT doc_id, source,
-                  len(list_filter(string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                                  w -> length(w) > 0)) AS n_tokens
-           FROM documents),
-         c AS (
-           SELECT doc_id, source, n_tokens,
-                  CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                    ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT) AS start
-           FROM t)
-         SELECT doc_id, source, n_tokens,
-                CAST(floor(start / 512) AS BIGINT) AS pack_id,
-                CAST(start % 512 AS BIGINT) AS pack_offset
-         FROM c""",
-    // mirrors Curation.stratifiedTakeN: same LCG mix with seed 7,
-    // same (mix, doc_id) rank, keep rank <= 25 per lang
-    "q96_stratified_topn" ->
-      """WITH m AS (
-           SELECT doc_id, lang,
-                  (((xor(doc_id, doc_id >> 31) % 2147483648)
-                    * 1103515245 + 7)
-                    % 2147483648 * 1103515245 + 12345)
-                    % 2147483648 AS mix
-           FROM documents)
-         SELECT doc_id, lang, smp_rank FROM (
-           SELECT doc_id, lang,
-                  CAST(row_number() OVER (PARTITION BY lang
-                    ORDER BY mix, doc_id) AS BIGINT) AS smp_rank
-           FROM m)
-         WHERE smp_rank <= 25""",
-    // mirrors the q97 python UDFs exactly: python s[::-1] reverses code
-    // points (ASCII lang tags here); len(s.split()) counts maximal
-    // whitespace-free runs = the list_filter'd regex split; coalesce
-    // mirrors the UDF's `0 if s is None` null rule (text is nullable
-    // in-contract even though the current fixtures carry none)
-    "q97_py_udf" ->
-      """SELECT doc_id, reverse(lang) AS rlang,
-                coalesce(CAST(len(list_filter(
-                  string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                  w -> length(w) > 0)) AS BIGINT), 0) AS nw
-         FROM documents""",
-    // mirrors q98's jar UDF trio: Exclaim (string concat), NextDay
-    // (joda DateTime +1d ↔ timestamp + INTERVAL), DecHalf (exact
-    // BigDecimal halving, cast to double — k/2 is exact in both
-    // decimal and binary arithmetic)
-    "q98_jar_udf" ->
-      """SELECT d.doc_id, d.lang || '!' AS exclaimed,
-                o.o_orderdate + INTERVAL 1 DAY AS nd,
-                o.o_orderkey / 2.0 AS half
-         FROM documents d JOIN orders o ON d.doc_id = o.o_orderkey""",
-    // mirrors q99's PPM generation rule exactly (solid color → the mean
-    // is the channel value; dims from the same modular arithmetic)
-    // mirrors TextAnalysis.gopherFlags rule for rule (same tokenizer,
-    // same thresholds, same bullet/ellipsis regexes)
-    "q102_gopher_rules" ->
-      """WITH base AS (
-           SELECT doc_id, text,
-                  list_filter(string_split(regexp_replace(trim(text),
-                      '[ \t\n\f\r\x0B]+', ' ', 'g'), ' '), t -> len(t) > 0) AS toks,
-                  list_filter(string_split(text, chr(10)),
-                      l -> len(trim(l)) > 0) AS lines
-           FROM documents),
-         m AS (
-           SELECT doc_id, text, lines,
-                  len(toks) AS nw,
-                  CASE WHEN len(toks) > 0 THEN
-                    list_sum(list_transform(toks, t -> len(t)))::DOUBLE
-                      / len(toks) ELSE 0 END AS mwl,
-                  ((len(text) - len(replace(text, '#', '')))
-                   + (len(string_split_regex(text, '\.\.\.|…')) - 1)
-                  )::DOUBLE AS sym,
-                  list_filter(string_split(regexp_replace(trim(lower(text)),
-                      '[ \t\n\f\r\x0B]+', ' ', 'g'), ' '), t -> len(t) > 0) AS lowtoks,
-                  len(list_filter(toks,
-                      t -> regexp_matches(t, '[A-Za-z]')))::DOUBLE AS nalpha
-           FROM base)
-         SELECT doc_id,
-           (nw >= 50 AND nw <= 100000) AS word_count_ok,
-           (mwl >= 3.0 AND mwl <= 10.0) AS mean_word_len_ok,
-           CASE WHEN nw > 0 THEN sym / nw < 0.1 ELSE false END
-             AS symbol_ratio_ok,
-           (CASE WHEN len(lines) > 0 THEN
-              len(list_filter(lines, l -> regexp_matches(trim(l),
-                '^([•‣▪●\-\*])')))::DOUBLE / len(lines)
-            ELSE 0 END) < 0.9 AS bullet_lines_ok,
-           (CASE WHEN len(lines) > 0 THEN
-              len(list_filter(lines, l -> regexp_matches(trim(l),
-                '(\.\.\.|…)$')))::DOUBLE / len(lines)
-            ELSE 0 END) < 0.3 AS ellipsis_lines_ok,
-           (CASE WHEN nw > 0 THEN nalpha / nw ELSE 0 END) >= 0.8
-             AS alpha_words_ok,
-           len(list_filter(['the','be','to','of','and','that','have',
-             'with'], s -> list_contains(lowtoks, s))) >= 2 AS stopwords_ok,
-           (nw >= 50 AND nw <= 100000) AND (mwl >= 3.0 AND mwl <= 10.0)
-             AND (CASE WHEN nw > 0 THEN sym / nw < 0.1 ELSE false END)
-             AND ((CASE WHEN len(lines) > 0 THEN
-                    len(list_filter(lines, l -> regexp_matches(trim(l),
-                      '^([•‣▪●\-\*])')))::DOUBLE / len(lines)
-                  ELSE 0 END) < 0.9)
-             AND ((CASE WHEN len(lines) > 0 THEN
-                    len(list_filter(lines, l -> regexp_matches(trim(l),
-                      '(\.\.\.|…)$')))::DOUBLE / len(lines)
-                  ELSE 0 END) < 0.3)
-             AND ((CASE WHEN nw > 0 THEN nalpha / nw ELSE 0 END) >= 0.8)
-             AND (len(list_filter(['the','be','to','of','and','that',
-                   'have','with'], s -> list_contains(lowtoks, s))) >= 2)
-             AS keep
-         FROM m""",
-    // same lowercased tokenization, same bigram windows, same add-one
-    // smoothing over the joint vocabulary as LangModel.dsirWeights
-    "q101_dsir_weights" ->
-      """WITH w AS (
-           SELECT doc_id, (lang = 'en') AS t,
-                  string_split(regexp_replace(trim(lower(text)),
-                    '[ \t\n\f\r\x0B]+', ' ', 'g'), ' ') AS w
-           FROM documents),
-         g AS (
-           SELECT doc_id, t, w[i] || ' ' || w[i+1] AS gram
-           FROM w, unnest(range(1, len(w))) AS r(i)
-           WHERE len(w) >= 2),
-         c AS (
-           SELECT gram, count(*)::DOUBLE AS cr,
-                  sum(CASE WHEN t THEN 1 ELSE 0 END)::DOUBLE AS ct
-           FROM g GROUP BY gram),
-         tot AS (SELECT sum(cr) AS tr, sum(ct) AS tt,
-                        count(*)::DOUBLE AS v FROM c),
-         s AS (
-           SELECT doc_id, count(*) AS n_grams,
-                  round(sum(ln((ct + 1) / (tt + v))
-                          - ln((cr + 1) / (tr + v))), 6) AS dsir_weight
-           FROM g JOIN c USING (gram) CROSS JOIN tot
-           GROUP BY doc_id)
-         SELECT d.doc_id, coalesce(s.n_grams, 0) AS n_grams, s.dsir_weight
-         FROM documents d LEFT JOIN s USING (doc_id)""",
-    // same tokenization (collapse \s+ to single spaces), same 5-gram
-    // windows, same per-doc distinct; raw gram strings instead of the
-    // Spark side's xxhash64 (counts agree absent a hash collision)
-    "q100_repeated_ngrams" ->
-      """WITH words AS (
-           SELECT doc_id,
-                  string_split(regexp_replace(trim(text), '[ \t\n\f\r\x0B]+', ' ', 'g'),
-                               ' ') AS w
-           FROM documents),
-         grams AS (
-           SELECT DISTINCT doc_id, array_to_string(w[i:i+4], ' ') AS g
-           FROM words, unnest(range(1, len(w) - 3)) AS t(i)
-           WHERE len(w) >= 5),
-         freq AS (SELECT g, count(*) AS nd FROM grams GROUP BY g)
-         SELECT doc_id, count(*) AS n_grams,
-                count(*) FILTER (WHERE nd > 1) AS n_dup_grams
-         FROM grams JOIN freq USING (g)
-         GROUP BY doc_id""",
-    // same tokenization and 5-gram windows as q100, raw gram strings;
-    // canonical occurrence = min (doc_id, off); removed tokens = union
-    // of positions covered by every non-canonical repeated occurrence
-    "q103_drop_repeated_spans" ->
-      """WITH words AS (
-           SELECT doc_id,
-                  string_split(regexp_replace(trim(text), '[ \t\n\f\r\x0B]+', ' ', 'g'),
-                               ' ') AS w
-           FROM documents),
-         occ AS (
-           SELECT doc_id, i AS off, array_to_string(w[i:i+4], ' ') AS g
-           FROM words, unnest(range(1, len(w) - 3)) AS t(i)
-           WHERE len(w) >= 5),
-         marked AS (
-           SELECT doc_id, off,
-                  count(*) OVER (PARTITION BY g) AS c,
-                  row_number() OVER (PARTITION BY g
-                                     ORDER BY doc_id, off) AS rn
-           FROM occ),
-         remidx AS (
-           SELECT DISTINCT doc_id, u.pos
-           FROM marked, unnest(range(off, off + 5)) AS u(pos)
-           WHERE c > 1 AND rn > 1),
-         tokpos AS (
-           SELECT doc_id, unnest(range(1, len(w) + 1)) AS pos, w
-           FROM words WHERE w IS NOT NULL),
-         kept AS (
-           SELECT tp.doc_id, tp.pos, list_extract(tp.w, tp.pos) AS tok
-           FROM tokpos tp LEFT JOIN remidx r
-             ON tp.doc_id = r.doc_id AND tp.pos = r.pos
-           WHERE r.pos IS NULL),
-         agg AS (
-           SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS ct,
-                  count(*) AS nk
-           FROM kept GROUP BY doc_id)
-         SELECT w.doc_id, coalesce(a.ct, '') AS clean_text,
-                CAST(CASE WHEN w.w IS NULL THEN 0
-                          ELSE len(w.w) - coalesce(a.nk, 0) END AS BIGINT)
-                  AS removed_tokens
-         FROM words w LEFT JOIN agg a ON w.doc_id = a.doc_id""",
-    // mirrors Curation.resampleToMixture exactly: same 31-bit LCG mix
-    // as q95 (seed 42), same (mix, doc_id) rank per stratum, quota
-    // literals precomputed by largest-remainder apportionment
-    // (shares 30/15/7.5/7.5 -> floors 59, leftover 1 -> src2 by the
-    // name tie-break: 30/15/8/7, summing EXACTLY to 60)
-    "q107_mixture" ->
-      """WITH m AS (
-           SELECT doc_id, source,
-                  (((xor(doc_id, doc_id >> 31) % 2147483648)
-                    * 1103515245 + 42)
-                    % 2147483648 * 1103515245 + 12345)
-                    % 2147483648 AS mix,
-                  CASE source WHEN 'src0' THEN 30 WHEN 'src1' THEN 15
-                              WHEN 'src2' THEN 8 WHEN 'src3' THEN 7
-                              ELSE 0 END AS quota
-           FROM documents),
-         r AS (SELECT doc_id, source, quota,
-                      row_number() OVER (PARTITION BY source
-                                         ORDER BY mix, doc_id) AS rk
-               FROM m)
-         SELECT doc_id, source FROM r WHERE rk <= quota""",
-    // classifier training is not SQL-expressible: DuckDB re-counts the
-    // split anchors, Spark pins the learned-separation verdicts (q44)
-    "q112_quality_classifier" ->
-      """SELECT CAST(count(*) FILTER (WHERE doc_id % 4 < 2) AS BIGINT)
-                  AS n_train,
-                CAST(count(*) FILTER (WHERE doc_id % 4 >= 2) AS BIGINT)
-                  AS n_test,
-                true AS auc_ok, true AS sep_ok
-         FROM documents""",
-    // persistence/calibration verdicts are engine-side invariants
-    // (weight round-trip, score equality, exact-k threshold); DuckDB
-    // re-counts the corpus anchor (q44 pattern)
-    "q117_classifier_persist" ->
-      """SELECT count(*) AS n_docs, true AS roundtrip_ok,
-                true AS score_equal, true AS calib_exact
-         FROM documents""",
-    // WARC parsing is not SQL-expressible (binary container format):
-    // DuckDB re-counts the anchor, Spark pins the verdicts (q44)
-    "q111_warc" ->
-      """SELECT count(*) AS n_records, true AS roundtrip_ok,
-                true AS type_ok, true AS length_ok
-         FROM documents""",
-    // mirrors the per-tag two-condition check (robots name AND a
-    // noindex token in the SAME tag, any attribute order / quoting)
-    "q119_meta_robots" ->
-      """WITH synth AS (
-           SELECT doc_id,
-                  '<html><head>' ||
-                  CASE WHEN doc_id % 4 = 0 THEN
-                         CASE doc_id % 3
-                           WHEN 0 THEN '<meta name="robots" content="noindex, nofollow">'
-                           WHEN 1 THEN '<meta content=''noindex'' name=''robots''>'
-                           ELSE '<meta name=robots content=noindex>' END
-                       WHEN doc_id % 4 = 1
-                         THEN '<meta name="robots" content="index, follow">'
-                       WHEN doc_id % 4 = 2
-                         THEN '<meta name="description" content="noindex appears">'
-                       ELSE '' END
-                  || '</head><body><p>' || text || '</p></body></html>'
-                    AS html
-           FROM documents)
-         SELECT doc_id,
-                len(list_filter(
-                  regexp_extract_all(html, '(?is)<meta\b[^>]*>', 0),
-                  t -> regexp_matches(t,
-                         '(?is)\sname\s*=\s*["'']?robots\b')
-                   AND regexp_matches(t,
-                         '(?is)\scontent\s*=\s*("[^"]*\bnoindex\b|''[^'']*\bnoindex\b|[^"''\s>]*\bnoindex\b)')))
-                  > 0 AS noindex
-         FROM synth""",
-    // same strip regexes + DuckDB's nfc_normalize; both engines count
-    // length in codepoints, so chars_removed mirrors exactly
-    "q120_normalize_unicode" ->
-      """WITH synth AS (
-           SELECT doc_id,
-                  text || CASE doc_id % 4
-                    WHEN 0 THEN ' cafe' || chr(769) || ' deco'
-                                || chr(769) || 'mposed'
-                    WHEN 1 THEN ' zero' || chr(8203) || 'width'
-                                || chr(8205) || 'join' || chr(65279)
-                                || 'bom' || chr(173) || 'soft'
-                    WHEN 2 THEN ' ctrl' || chr(7) || 'bell'
-                                || chr(27) || 'esc'
-                    ELSE ' caf' || chr(233) || ' precomposed' END AS t
-           FROM documents),
-         norm AS (
-           SELECT doc_id, t,
-                  nfc_normalize(regexp_replace(regexp_replace(t,
-                    '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-                    '[\x{200B}-\x{200D}\x{FEFF}\x{00AD}]', '', 'g'))
-                    AS nt
-           FROM synth)
-         SELECT doc_id, nt AS norm_text,
-                CAST(length(t) - length(nt) AS BIGINT) AS chars_removed
-         FROM norm""",
-    // the expected DECODED text is the original string (the foreign
-    // encoding round-trips losslessly for these charsets) — DuckDB
-    // recomputes it and the canonical charset name from the id rules
-    "q118_charset_decode" ->
-      """WITH base AS (
-           SELECT doc_id, text,
-                  CASE doc_id % 3 WHEN 0 THEN 'UTF-8'
-                       WHEN 1 THEN 'ISO-8859-1' ELSE 'GBK' END AS cs,
-                  CASE doc_id % 3 WHEN 0 THEN ' 中文测试 café'
-                       WHEN 1 THEN ' café résumé naïve'
-                       ELSE ' 中文测试文本' END AS tail
-           FROM documents)
-         SELECT doc_id,
-                CASE WHEN doc_id % 2 = 0 THEN ''
-                     ELSE '<meta charset="' || cs || '">' END
-                  || text || tail AS body_text,
-                cs AS charset
-         FROM base""",
-    // FULL mirror: status/ctype from the synthesis rule, extracted
-    // text by the q108 regex chain over the same synthesized body html
-    // — the WARC container + HTTP envelope are the Spark side's to
-    // get right; any leaked header byte breaks the text hash
-    "q113_warc_http" ->
-      """WITH synth AS (
-           SELECT doc_id,
-                  '<html><head><title>D' || CAST(doc_id AS VARCHAR) ||
-                  '</title></head><body><p>' || text ||
-                  '</p></body></html>' AS html
-           FROM documents),
-         strip AS (
-           SELECT doc_id,
-                  regexp_replace(regexp_replace(regexp_replace(
-                    regexp_replace(html,
-                      '(?is)<script\b[^>]*>.*?(</script>|$)', ' ', 'g'),
-                      '(?is)<style\b[^>]*>.*?(</style>|$)', ' ', 'g'),
-                      '(?s)<!--.*?(-->|$)', ' ', 'g'),
-                      '<[^>]+>', ' ', 'g') AS t0
-           FROM synth)
-         SELECT doc_id,
-                CAST(CASE WHEN doc_id % 5 = 0 THEN 404 ELSE 200 END
-                  AS INTEGER) AS http_status,
-                'text/html; charset=utf-8' AS http_content_type,
-                trim(regexp_replace(
-                  replace(replace(replace(replace(replace(replace(
-                    replace(t0, '&nbsp;', ' '), '&lt;', '<'),
-                    '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-                    '&apos;', ''''), '&amp;', '&'),
-                  '[ \t\n\f\r\x0B]+', ' ', 'g')) AS extracted_text
-         FROM strip""",
-    // mirrors Html.dropBoilerplate verbatim in DuckDB list lambdas:
-    // same hidden-block removal, same (?:non-capturing) block-tag
-    // split, same per-block text extraction INCLUDING the entity
-    // decode chain (&amp; last) and the script-aware word count —
-    // a byte-for-byte mirror with NO assumptions about the corpus's
-    // character set (an entity or CJK codepoint in a future corpus
-    // evaluates identically on both sides)
-    "q115_boilerplate" ->
-      """WITH synth AS (
-           SELECT doc_id,
-                  '<html><head><title>Site T' || CAST(doc_id AS VARCHAR)
-                  || '</title><style>nav {color: blue}</style></head>'
-                  || '<body><nav><a href="/">Home page</a> '
-                  || '<a href="/about">About us</a> '
-                  || '<a href="/contact">Contact info</a></nav><p>'
-                  || text || '</p><div>Copyright 2026 Example Corp</div>'
-                  || '<p>Read more: <a href="/next">the next related '
-                  || 'article in this series</a></p></body></html>'
-                    AS html
-           FROM documents),
-         nos AS (
-           SELECT doc_id,
-                  regexp_replace(regexp_replace(regexp_replace(html,
-                    '(?is)<script\b[^>]*>.*?(</script>|$)', ' ', 'g'),
-                    '(?is)<style\b[^>]*>.*?(</style>|$)', ' ', 'g'),
-                    '(?s)<!--.*?(-->|$)', ' ', 'g') AS h
-           FROM synth),
-         bl AS (
-           SELECT doc_id,
-                  list_filter(list_transform(
-                    string_split_regex(h,
-                      '(?i)</?(?:p|div|section|article|main|td|th|tr|li|ul|ol|table|h1|h2|h3|h4|h5|h6|header|footer|nav|aside|blockquote|br|hr|body|html|head|title|form|figure|figcaption|dl|dt|dd|pre)\b[^>]*>'),
-                    b -> struct_pack(
-                      t := trim(regexp_replace(
-                        replace(replace(replace(replace(replace(replace(
-                          replace(regexp_replace(b, '<[^>]+>', ' ', 'g'),
-                          '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'),
-                          '&quot;', '"'), '&#39;', ''''),
-                          '&apos;', ''''), '&amp;', '&'),
-                        '[ \t\n\f\r\x0B]+', ' ', 'g')),
-                      lc := coalesce(list_sum(list_transform(
-                        regexp_extract_all(b,
-                          '(?is)<a\b[^>]*>(.*?)</a>', 1),
-                        a -> length(trim(regexp_replace(
-                          replace(replace(replace(replace(replace(replace(
-                            replace(regexp_replace(a, '<[^>]+>', ' ', 'g'),
-                            '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'),
-                            '&quot;', '"'), '&#39;', ''''),
-                            '&apos;', ''''), '&amp;', '&'),
-                          '[ \t\n\f\r\x0B]+', ' ', 'g'))))), 0))),
-                    s -> length(s.t) > 0) AS blocks
-           FROM nos),
-         k AS (
-           SELECT doc_id, blocks,
-                  list_filter(blocks, s ->
-                    len(list_filter(string_split_regex(trim(
-                      regexp_replace(regexp_replace(s.t,
-                        '([\x{3400}-\x{4dbf}\x{4e00}-\x{9fff}\x{f900}-\x{faff}\x{3040}-\x{30ff}\x{31f0}-\x{31ff}])',
-                        ' \1 ', 'g'),
-                        '([\x{0e00}-\x{0e7f}]+)', ' \1 ', 'g')),
-                      '[ \t\n\f\r\x0B]+'), x -> length(x) > 0)) >= 5
-                    AND CAST(s.lc AS DOUBLE) <= 0.4 * length(s.t))
-                    AS kept
-           FROM bl)
-         SELECT doc_id,
-                array_to_string(list_transform(kept, s -> s.t), ' ')
-                  AS clean_text,
-                CAST(len(blocks) AS BIGINT) AS n_blocks,
-                CAST(len(kept) AS BIGINT) AS n_kept
-         FROM k""",
-    // mirrors TextAnalysis.tokens' script-aware rule verbatim: CJK
-    // ideograph/kana codepoints spaced individually, Thai runs spaced
-    // as units, then the whitespace split — same \x{…} classes,
-    // DuckDB backrefs spelled \1 vs Spark's $1 (syntax only)
-    "q114_script_tokens" ->
-      """WITH synth AS (
-           SELECT doc_id,
-                  text || ' ' ||
-                  CASE WHEN doc_id % 4 = 0 THEN '你好你好世界'
-                       WHEN doc_id % 4 = 1 THEN 'こんにちは世界'
-                       WHEN doc_id % 4 = 2 THEN 'สวัสดีโลก'
-                       ELSE 'plain english tail' END AS t
-           FROM documents),
-         tok AS (
-           SELECT doc_id,
-                  list_filter(string_split_regex(trim(
-                    regexp_replace(regexp_replace(t,
-                      '([\x{3400}-\x{4dbf}\x{4e00}-\x{9fff}\x{f900}-\x{faff}\x{3040}-\x{30ff}\x{31f0}-\x{31ff}])',
-                      ' \1 ', 'g'),
-                      '([\x{0e00}-\x{0e7f}]+)', ' \1 ', 'g')),
-                    '[ \t\n\f\r\x0B]+'), x -> length(x) > 0) AS toks,
-                  t
-           FROM synth)
-         SELECT doc_id,
-                CAST(len(toks) AS BIGINT) AS n_tokens,
-                CAST(len(list_distinct(toks)) AS BIGINT)
-                  AS n_distinct_tokens,
-                CASE WHEN len(toks) > 0
-                     THEN round(CAST(len(list_filter(toks,
-                       x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-                       / len(toks), 6)
-                     ELSE 0.0 END AS alpha_token_frac,
-                len(toks) >= 50 AND len(toks) <= 100000 AS word_count_ok,
-                regexp_matches(substr(t, 1, 4096),
-                  '[\x{3040}-\x{30ff}\x{31f0}-\x{31ff}\x{4e00}-\x{9fff}]')
-                  AS cjk_detected
-         FROM tok""",
-    // the trigram analog of lmRecomputeCtes: gram-string counts,
-    // bigram-context counts at all positions, distinct-unigram V,
-    // -ln((c123+1)/(c12+V)) averaged per doc — value-identical to the
-    // engine's hash-keyed form absent a 64-bit collision
-    "q116_trigram_lm" ->
-      """WITH toks AS (
-           SELECT doc_id,
-                  list_filter(string_split_regex(trim(lower(text)), '[ \t\n\f\r\x0B]+'),
-                              t -> length(t) > 0) AS t
-           FROM documents),
-         v AS (SELECT CAST(count(DISTINCT tok) AS DOUBLE) AS vsize
-               FROM (SELECT unnest(t) AS tok FROM toks)),
-         ctxs AS (
-           SELECT doc_id,
-                  unnest([array_to_string(t[i:i+1], ' ')
-                          for i in range(1, len(t))]) AS ctx
-           FROM toks WHERE len(t) >= 2),
-         ccnt AS (SELECT ctx, CAST(count(*) AS DOUBLE) AS c12
-                  FROM ctxs GROUP BY 1),
-         tri AS (
-           SELECT doc_id,
-                  unnest([array_to_string(t[i:i+2], ' ')
-                          for i in range(1, len(t) - 1)]) AS gram
-           FROM toks WHERE len(t) >= 3),
-         tcnt AS (SELECT gram, CAST(count(*) AS DOUBLE) AS c123
-                  FROM tri GROUP BY 1),
-         inst AS (
-           SELECT tr.doc_id,
-                  -ln((tc.c123 + 1) / (cc.c12 + v.vsize)) AS nll
-           FROM tri tr JOIN tcnt tc USING (gram)
-                JOIN ccnt cc ON cc.ctx = array_to_string(
-                  string_split(tr.gram, ' ')[1:2], ' ')
-                CROSS JOIN v),
-         sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-                       round(avg(nll), 6) AS avg_nll
-                FROM inst GROUP BY 1)
-         SELECT d.doc_id,
-                coalesce(sc.n_grams, CAST(0 AS BIGINT)) AS n_grams,
-                sc.avg_nll
-         FROM documents d LEFT JOIN sc USING (doc_id)""",
-    // the 5-gram analog (q116's CTE shape one order up): 5-gram
-    // counts, 4-gram-context counts at all positions, the same
-    // distinct-unigram V and add-one smoothing — value-identical to
-    // the engine's 8-byte hash-keyed form absent a 64-bit collision
-    "q124_fivegram_lm" ->
-      """WITH toks AS (
-           SELECT doc_id,
-                  list_filter(string_split_regex(trim(lower(text)), '[ \t\n\f\r\x0B]+'),
-                              t -> length(t) > 0) AS t
-           FROM documents),
-         v AS (SELECT CAST(count(DISTINCT tok) AS DOUBLE) AS vsize
-               FROM (SELECT unnest(t) AS tok FROM toks)),
-         ctxs AS (
-           SELECT doc_id,
-                  unnest([array_to_string(t[i:i+3], ' ')
-                          for i in range(1, len(t) - 2)]) AS ctx
-           FROM toks WHERE len(t) >= 4),
-         ccnt AS (SELECT ctx, CAST(count(*) AS DOUBLE) AS c1
-                  FROM ctxs GROUP BY 1),
-         pent AS (
-           SELECT doc_id,
-                  unnest([array_to_string(t[i:i+4], ' ')
-                          for i in range(1, len(t) - 3)]) AS gram
-           FROM toks WHERE len(t) >= 5),
-         pcnt AS (SELECT gram, CAST(count(*) AS DOUBLE) AS c12
-                  FROM pent GROUP BY 1),
-         inst AS (
-           SELECT p.doc_id,
-                  -ln((pc.c12 + 1) / (cc.c1 + v.vsize)) AS nll
-           FROM pent p JOIN pcnt pc USING (gram)
-                JOIN ccnt cc ON cc.ctx = array_to_string(
-                  string_split(p.gram, ' ')[1:4], ' ')
-                CROSS JOIN v),
-         sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-                       round(avg(nll), 6) AS avg_nll
-                FROM inst GROUP BY 1)
-         SELECT d.doc_id,
-                coalesce(sc.n_grams, CAST(0 AS BIGINT)) AS n_grams,
-                sc.avg_nll
-         FROM documents d LEFT JOIN sc USING (doc_id)""",
-    // full multilingual mirror: the SAME zh/de/en literals by
-    // doc_id%3, language RE-DERIVED via the q48 argmax mirror (not
-    // assumed from the synthesis), script-aware tokenization (q114
-    // regex pair), and the keyed stopword tables / letter classes /
-    // Gopher 8-lists spelled out verbatim. v_seam is the Spark-side
-    // verdict, pinned true (q44 pattern).
-    "q126_multilingual_quality" ->
-      ("""WITH synth AS (
-           SELECT doc_id,
-                  CASE WHEN doc_id % 3 = 0 THEN repeat('"""
-        + "这是一个很好的例子。我们在这里有他的书。不是我的书。他说这是好的。"
-        + """', 4)
-                       WHEN doc_id % 3 = 1 THEN 'der mann und die frau gehen nicht mit dem hund zu das haus wo ein kleines kind ist und der tag ist gut die sonne ist hell und das wetter ist nicht schlecht ein guter tag zu gehen mit der familie und die kinder sind froh das leben ist gut und der abend ist nah'
-                       ELSE 'the quick brown fox is on the hill and it is a good day for this walk to be had by all of the people' END AS text
-           FROM documents),
-         sw AS (
-           SELECT * FROM (VALUES
-             """ + langVoteSwValues + """
-           ) v(cand_lang, tok)),
-         ptoks AS (
-           SELECT doc_id, unnest(list_filter(string_split_regex(
-                    trim(lower(text)), '[ \t\n\f\r\x0B]+'),
-                    t -> length(t) > 0)) AS tok
-           FROM synth),
-         counts AS (
-           SELECT p.doc_id, s.cand_lang, count(*) AS n
-           FROM ptoks p JOIN sw s ON s.tok = p.tok GROUP BY 1, 2),
-         best AS (
-           SELECT doc_id, cand_lang AS best_lang FROM (
-             SELECT doc_id, cand_lang,
-                    row_number() OVER (PARTITION BY doc_id
-                                       ORDER BY n DESC, cand_lang) AS rn
-             FROM counts) WHERE rn = 1),
-         lng AS (
-           SELECT s.doc_id, s.text,
-                  """ +
-        langRouteCase("s.text", "coalesce(b.best_lang, 'unknown')") +
-        """ AS lang
-           FROM synth s LEFT JOIN best b USING (doc_id)),
-         tok AS (
-           SELECT doc_id, lang, text,
-                  list_filter(string_split_regex(trim(
-                    regexp_replace(regexp_replace(lower(text),
-                      '([\x{3400}-\x{4dbf}\x{4e00}-\x{9fff}\x{f900}-\x{faff}\x{3040}-\x{30ff}\x{31f0}-\x{31ff}])',
-                      ' \1 ', 'g'),
-                      '([\x{0e00}-\x{0e7f}]+)', ' \1 ', 'g')),
-                    '[ \t\n\f\r\x0B]+'), x -> length(x) > 0) AS toks
-           FROM lng),
-         m AS (
-           SELECT doc_id, lang, text, len(toks) AS nt,
-                  len(list_filter(toks, x -> CASE
-                    WHEN lang = 'zh' THEN x IN ('的','了','是','在','和','有','我','不','这','他')
-                    WHEN lang = 'de' THEN x IN ('der','die','das','und','ist','nicht','mit','ein','zu','den','von','im','auf','dem','sich')
-                    ELSE x IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','this','be') END)) AS hits,
-                  len(list_distinct(list_filter(toks, x -> CASE
-                    WHEN lang = 'zh' THEN x IN ('的','了','是','在','和','有','我','不')
-                    WHEN lang = 'de' THEN x IN ('der','die','das','und','ist','nicht','mit','ein')
-                    ELSE x IN ('the','be','to','of','and','that','have','with') END))) AS g8
-           FROM tok)
-         SELECT doc_id, lang, CAST(nt AS BIGINT) AS n_tokens,
-                round(CASE WHEN nt > 0
-                  THEN CAST(hits AS DOUBLE) / nt ELSE 0.0 END, 6)
-                  AS stop_ratio_keyed,
-                round((
-                  least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-                  + CASE WHEN lang = 'zh' THEN
-                      CASE WHEN length(text) > 0
-                        THEN CAST(length(regexp_replace(text,
-                          '[^\x{3040}-\x{30ff}\x{31f0}-\x{31ff}\x{3400}-\x{4dbf}\x{4e00}-\x{9fff}\x{f900}-\x{faff}]',
-                          '', 'g')) AS DOUBLE) / length(text)
-                        ELSE 0.0 END
-                    ELSE
-                      CASE WHEN length(text) > 0
-                        THEN CAST(length(regexp_replace(text,
-                          '[^A-Za-z]', '', 'g')) AS DOUBLE) / length(text)
-                        ELSE 0.0 END END
-                  + least((CASE WHEN nt > 0
-                      THEN CAST(hits AS DOUBLE) / nt ELSE 0.0 END) * 5.0,
-                      1.0)
-                ) / 3.0, 6) AS q_keyed,
-                g8 >= 2 AS gopher_stop_ok,
-                true AS v_seam
-         FROM m"""),
-    // q92's LM recompute + the ntile split over (rounded avg_nll,
-    // doc_id) per lang — identical ordering keys on both sides
-    "q110_ppl_buckets" ->
-      s"""WITH $lmRecomputeCtes,
-         j AS (SELECT d.doc_id, d.lang,
-                      coalesce(sc.n_bigrams, 0) AS n_bigrams, sc.avg_nll
-               FROM documents d LEFT JOIN sc USING (doc_id)),
-         b AS (SELECT doc_id,
-                      CAST(ntile(3) OVER (PARTITION BY lang
-                        ORDER BY avg_nll, doc_id) AS BIGINT) AS ppl_bucket
-               FROM j WHERE avg_nll IS NOT NULL)
-         SELECT j.doc_id, j.n_bigrams, j.avg_nll, b.ppl_bucket
-         FROM j LEFT JOIN b USING (doc_id)""",
-    // mirrors Urls.normalize step for step (fragment, scheme/host
-    // case-fold, default ports, trackers, dangling ?, bare-host slash);
-    // replacement backrefs are \1 in DuckDB vs $1 in Spark — syntax
-    // only, same semantics
-    "q109_url_normalize" ->
-      """WITH synth AS (
-           SELECT doc_id,
-                  CASE WHEN doc_id % 3 = 0
-                       THEN 'HTTP://WWW.Site' || CAST(doc_id AS VARCHAR)
-                            || '.ORG:80/#top'
-                       ELSE 'HTTPS://Ex' || CAST(doc_id % 7 AS VARCHAR)
-                            || '.COM:443/Path' || CAST(doc_id AS VARCHAR)
-                            || '?utm_source=x&id='
-                            || CAST(doc_id AS VARCHAR)
-                            || '&fbclid=abc#frag' END AS url
-           FROM documents),
-         s1 AS (SELECT doc_id, url,
-                  regexp_replace(trim(url), '(?s)#.*$', '') AS t
-                FROM synth),
-         s2 AS (SELECT doc_id, url,
-                  CASE WHEN regexp_matches(t,
-                         '(?s)^([a-zA-Z][a-zA-Z0-9+.-]*)://((?:[^/?#@]*@)?)([^/?#]*)(.*)$')
-                       THEN lower(regexp_extract(t,
-                         '(?s)^([a-zA-Z][a-zA-Z0-9+.-]*)://((?:[^/?#@]*@)?)([^/?#]*)(.*)$', 1))
-                         || '://'
-                         || regexp_extract(t,
-                         '(?s)^([a-zA-Z][a-zA-Z0-9+.-]*)://((?:[^/?#@]*@)?)([^/?#]*)(.*)$', 2)
-                         || lower(regexp_extract(t,
-                         '(?s)^([a-zA-Z][a-zA-Z0-9+.-]*)://((?:[^/?#@]*@)?)([^/?#]*)(.*)$', 3))
-                         || regexp_extract(t,
-                         '(?s)^([a-zA-Z][a-zA-Z0-9+.-]*)://((?:[^/?#@]*@)?)([^/?#]*)(.*)$', 4)
-                       ELSE t END AS t
-                FROM s1),
-         s3 AS (SELECT doc_id, url,
-                  regexp_replace(regexp_replace(t,
-                    '^(http://[^/?#:]*):80([/?#].*)?$', '\1\2', 'g'),
-                    '^(https://[^/?#:]*):443([/?#].*)?$', '\1\2', 'g') AS t
-                FROM s2),
-         s4 AS (SELECT doc_id, url,
-                  regexp_extract(t, '(?s)^([^?]*)', 1) AS base,
-                  regexp_extract(t, '(?s)^[^?]*(\?.*)$', 1) AS q
-                FROM s3),
-         s4b AS (SELECT doc_id, url, base,
-                  regexp_replace(regexp_replace(regexp_replace(q,
-                    '&(utm_[^=&#]*|gclid|fbclid)=[^&#]*', '', 'g'),
-                    '^\?(utm_[^=&#]*|gclid|fbclid)=[^&#]*&', '?', 'g'),
-                    '(?s)^\?(utm_[^=&#]*|gclid|fbclid)=[^&#]*$', '', 'g') AS q
-                FROM s4),
-         s5 AS (SELECT doc_id, url,
-                  regexp_replace(
-                    base || regexp_replace(q, '^\?$', '', 'g'),
-                    '^([a-z][a-z0-9+.-]*://(?:[^/?#@]*@)?[^/?#]+)/$',
-                    '\1', 'g') AS t
-                FROM s4b)
-         SELECT doc_id, url, t AS url_norm,
-                regexp_extract(t, 'https?://([^/\s:?#]+)', 1) AS host
-         FROM s5""",
-    // mirrors Html.extractText/title/links verbatim: same RE2-safe
-    // regexes (DuckDB needs the explicit 'g'/'s' flags Spark applies
-    // implicitly), same entity-decode chain (&amp; LAST), same
-    // whitespace collapse
-    "q108_html_extract" ->
-      """WITH synth AS (
-           SELECT doc_id,
-                  '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
-                  ' &amp; co</title><style>p {color: red}</style></head>' ||
-                  '<body><script type="text/js">var x = 1 < 2;</script><p>' ||
-                  text ||
-                  '</p><!-- note --><p>5 &lt; 7 &amp;&amp; 8 &gt; 2</p>' ||
-                  '<a href="https://ex.com/' || CAST(doc_id AS VARCHAR) ||
-                  '">link</a> <a href="/rel?q=1">rel</a></body></html>'
-                    AS html
-           FROM documents),
-         strip AS (
-           SELECT doc_id, html,
-                  regexp_replace(regexp_replace(regexp_replace(
-                    regexp_replace(html,
-                      '(?is)<script\b[^>]*>.*?(</script>|$)', ' ', 'g'),
-                      '(?is)<style\b[^>]*>.*?(</style>|$)', ' ', 'g'),
-                      '(?s)<!--.*?(-->|$)', ' ', 'g'),
-                      '<[^>]+>', ' ', 'g') AS t0
-           FROM synth),
-         dec AS (
-           SELECT doc_id, html,
-                  replace(replace(replace(replace(replace(replace(replace(
-                    t0, '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'),
-                    '&quot;', '"'), '&#39;', ''''), '&apos;', ''''),
-                    '&amp;', '&') AS t1,
-                  regexp_extract(html,
-                    '(?is)<title\b[^>]*>(.*?)</title>', 1) AS rawtitle,
-                  regexp_extract_all(html,
-                    '(?is)<a\b[^>]*?\shref\s*=\s*"([^"]*)"', 1) AS ls
-           FROM strip)
-         SELECT doc_id,
-                trim(replace(replace(replace(replace(replace(replace(
-                  replace(rawtitle, '&nbsp;', ' '), '&lt;', '<'),
-                  '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-                  '&apos;', ''''), '&amp;', '&')) AS title,
-                trim(regexp_replace(t1,
-                  '[ \t\n\f\r\x0B]+', ' ', 'g')) AS text,
-                CAST(len(ls) AS BIGINT) AS n_links,
-                ls[1] AS first_link
-         FROM dec""",
-    // BPE training/encoding is not SQL-expressible: recompute the two
-    // corpus anchors (doc count, distinct whitespace-token count —
-    // same tokenization as the Spark side) and pin the Spark-computed
-    // invariant verdicts (q44 pattern)
-    "q106_bpe" ->
-      """SELECT (SELECT count(*) FROM documents) AS n_docs,
-                (SELECT count(DISTINCT w) FROM (
-                   SELECT unnest(list_filter(
-                            string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                            x -> length(x) > 0)) AS w
-                   FROM documents)) AS n_distinct_words,
-                true AS merges_full, true AS roundtrip_ok,
-                true AS vocab_ok, true AS compress_ok""",
-    "q99_ppm_decode" ->
-      """SELECT doc_id,
-                CAST(doc_id % 16 + 1 AS INT) AS width,
-                CAST(doc_id % 8 + 1 AS INT) AS height,
-                round((doc_id % 256) / 255.0, 6) AS mean_r,
-                round((doc_id * 7 % 256) / 255.0, 6) AS mean_g,
-                round((doc_id * 13 % 256) / 255.0, 6) AS mean_b
-         FROM documents""",
-    // the whole domain pipeline in SQL: same synthesis (salt = 200
-    // five-digit tokens on odd ids), same domain regex, the composite
-    // quality score mirrored term for term (len/500 capped, alpha
-    // ratio, stopword-ratio*5 capped — per-doc round 6), the per-
-    // domain mean re-rounded, keep = mean >= 0.5 (clean domains sit
-    // ~0.55, salted ~0.41 — both sides of the line by a real margin).
-    // The plain-split
-    // word counts are value-identical to the engine's script-aware
-    // tokens on this ASCII+digit synthesis
-    "q122_domain_quality" ->
-      """WITH synth AS (
-           SELECT doc_id,
-                  text || CASE WHEN doc_id % 2 = 1
-                    THEN ' ' || repeat('00000 ', 199) || '00000'
-                    ELSE '' END AS t,
-                  'd' || CAST(doc_id % 10 AS VARCHAR) || '.com' AS domain
-           FROM documents),
-         tok AS (
-           SELECT doc_id, t, domain,
-                  list_filter(string_split_regex(trim(lower(t)),
-                    '[ \t\n\f\r\x0B]+'), x -> length(x) > 0) AS lt
-           FROM synth),
-         q AS (
-           SELECT domain,
-                  round((
-                    least(CAST(length(t) AS DOUBLE) / 500.0, 1.0)
-                    + CASE WHEN length(t) > 0
-                        THEN CAST(length(regexp_replace(t,
-                          '[^A-Za-z]', '', 'g')) AS DOUBLE) / length(t)
-                        ELSE 0.0 END
-                    + least(CASE WHEN len(lt) > 0
-                        THEN CAST(len(list_filter(lt, x -> x IN
-                          ('the','a','an','and','or','of','to','in','is',
-                           'it','that','for','on','with','as','at','by',
-                           'this','be'))) AS DOUBLE) / len(lt) * 5.0
-                        ELSE 0.0 END, 1.0)
-                  ) / 3.0, 6) AS qs
-           FROM tok)
-         SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
-                round(avg(qs), 6) AS mean_quality,
-                round(avg(qs), 6) >= 0.5 AS kept
-         FROM q GROUP BY domain""",
-    // q44 pattern: dims are the PNG generator's contract (9×8 cells at
-    // 2px / 4px), recomputable without decoding; the dHash equality,
-    // the banding's twin discovery, and the corrupt-payload null are
-    // Spark-computed verdicts pinned true — a broken decoder, a hash
-    // that isn't scale-invariant, or a banding recall miss each flip
-    // a verdict false and fail the row/hash gate
-    // generator-contract anchors (block/marker counts per the q125
-    // synthesis) + exact P/R: a leaked nav bar flips v_precision, a
-    // dropped paragraph flips v_recall — the threshold regression
-    // gate the extractor lacked
-    "q125_boilerplate_pr" ->
-      """SELECT doc_id,
-                CAST(6 AS BIGINT) AS n_blocks,
-                CAST(3 AS BIGINT) AS n_kept,
-                CAST(3 AS BIGINT) AS content_kept,
-                CAST(0 AS BIGINT) AS boiler_kept,
-                CAST(1.0 AS DOUBLE) AS precision,
-                CAST(1.0 AS DOUBLE) AS recall,
-                true AS v_precision,
-                true AS v_recall
-         FROM documents""",
-    // jpeg_near/jpeg_found (r17): JPEG-recompression twin within the
-    // banding's guaranteed-recall radius (11 bits; measured max 7 over
-    // 50000 seeds at quality 0.75) and surfaced by the multiProbe pass
-    "q123_image_dedup" ->
-      """SELECT doc_id,
-                18 AS w_a, 16 AS h_a, 36 AS w_b, 32 AS h_b,
-                CAST(0 AS BIGINT) AS twin_hamming,
-                true AS twin_found,
-                true AS corrupt_null,
-                true AS jpeg_near,
-                true AS jpeg_found
-         FROM documents""",
-    // r17 offset-twin columns: n_d = 2000 pad + 65·32 envelope
-    // samples; off_env_differs (envelope is shift-FRAGILE, measured
-    // 18-46 bits at 50k seeds), off_chroma_hamming exactly 0 (silence
-    // trims away), off_found via distance-0 banding on cfp,
-    // rate_chroma_near ≤ 24 (measured max 17 over 50000 seeds, tail
-    // decay ≥4×/bit)
-    "q127_audio_dedup" ->
-      """SELECT doc_id,
-                8000 AS sr_a, CAST(2080 AS BIGINT) AS n_a,
-                16000 AS sr_b, CAST(4160 AS BIGINT) AS n_b,
-                CAST(4080 AS BIGINT) AS n_d,
-                CAST(0 AS BIGINT) AS twin_hamming,
-                true AS twin_found,
-                true AS corrupt_null,
-                true AS off_env_differs,
-                CAST(0 AS BIGINT) AS off_chroma_hamming,
-                true AS off_found,
-                true AS rate_chroma_near
-         FROM documents""",
-    // Composes the q48 language vote, the q126 keyed-quality formula,
-    // and the q102 symbol rule; clean_text == text because the base
-    // corpus is entity-free, single-spaced and trimmed (verified — the
-    // full extraction fidelity is q115's own mirror), so the
-    // composition mirror stays tractable.
-    "q130_crawl_clean" ->
-      ("""WITH sw AS (
-           SELECT * FROM (VALUES
-             """ + langVoteSwValues + """
-           ) v(cand_lang, tok)),
-         ptoks AS (
-           SELECT doc_id, unnest(list_filter(string_split_regex(
-                    trim(lower(text)), '[ \t\n\f\r\x0B]+'),
-                    t -> length(t) > 0)) AS tok
-           FROM documents),
-         counts AS (
-           SELECT p.doc_id, s.cand_lang, count(*) AS n
-           FROM ptoks p JOIN sw s ON s.tok = p.tok GROUP BY 1, 2),
-         best AS (
-           SELECT doc_id, cand_lang AS best_lang FROM (
-             SELECT doc_id, cand_lang,
-                    row_number() OVER (PARTITION BY doc_id
-                                       ORDER BY n DESC, cand_lang) AS rn
-             FROM counts) WHERE rn = 1),
-         lng AS (
-           SELECT d.doc_id, d.text,
-                  """ +
-        langRouteCase("d.text", "coalesce(b.best_lang, 'unknown')") +
-        """ AS lang
-           FROM documents d LEFT JOIN best b USING (doc_id)),
-         tok AS (
-           SELECT doc_id, lang, text,
-                  list_filter(string_split_regex(trim(
-                    regexp_replace(regexp_replace(lower(text),
-                      '([\x{3400}-\x{4dbf}\x{4e00}-\x{9fff}\x{f900}-\x{faff}\x{3040}-\x{30ff}\x{31f0}-\x{31ff}])',
-                      ' \1 ', 'g'),
-                      '([\x{0e00}-\x{0e7f}]+)', ' \1 ', 'g')),
-                    '[ \t\n\f\r\x0B]+'), x -> length(x) > 0) AS toks
-           FROM lng),
-         m AS (
-           SELECT doc_id, lang, text, len(toks) AS nt,
-                  len(list_filter(toks, x -> CASE
-                    WHEN lang = 'zh' THEN x IN ('的','了','是','在','和','有','我','不','这','他')
-                    WHEN lang = 'de' THEN x IN ('der','die','das','und','ist','nicht','mit','ein','zu','den','von','im','auf','dem','sich')
-                    WHEN lang = 'fr' THEN x IN ('le','la','les','et','est','que','pour','dans','une','des','du','en','un','au','sur')
-                    WHEN lang = 'es' THEN x IN ('el','los','las','y','es','que','por','para','una','de','en','un','con','del','se')
-                    ELSE x IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','this','be') END)) AS hits,
-                  ((len(text) - len(replace(text, '#', '')))
-                   + (len(string_split_regex(text, '\.\.\.|…')) - 1)
-                  )::DOUBLE AS sym
-           FROM tok),
-         q AS (
-           SELECT doc_id, lang, text, nt, sym,
-                  round((
-                    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-                    + CASE WHEN lang = 'zh' THEN
-                        CASE WHEN length(text) > 0
-                          THEN CAST(length(regexp_replace(text,
-                            '[^\x{3040}-\x{30ff}\x{31f0}-\x{31ff}\x{3400}-\x{4dbf}\x{4e00}-\x{9fff}\x{f900}-\x{faff}]',
-                            '', 'g')) AS DOUBLE) / length(text)
-                          ELSE 0.0 END
-                      ELSE
-                        CASE WHEN length(text) > 0
-                          THEN CAST(length(regexp_replace(text,
-                            '[^A-Za-z]', '', 'g')) AS DOUBLE) / length(text)
-                          ELSE 0.0 END END
-                    + least((CASE WHEN nt > 0
-                        THEN CAST(hits AS DOUBLE) / nt ELSE 0.0 END) * 5.0,
-                        1.0)
-                  ) / 3.0, 6) AS qk
-           FROM m)
-         SELECT doc_id,
-                'https://ex.com/' || CAST(doc_id AS VARCHAR) AS url,
-                lang, 'UTF-8' AS charset, text AS clean_text
-         FROM q
-         WHERE doc_id % 7 != 0 AND doc_id % 11 != 0
-           AND qk >= 0.3
-           AND nt > 0 AND sym / nt < 0.1"""),
-    // r17: language re-DERIVED via the shared vote mirror + script-
-    // route CASE (never assumed from the synthesis label), keyed
-    // stopword ratio and Gopher-8 distinct-hit flag recomputed from
-    // the QualityStopwords tables spelled verbatim (th: no table —
-    // engine falls back to the English list for the ratio, and the
-    // Gopher stopword rule is EXEMPT → true). detected_ok is the
-    // Spark-side verdict, pinned true.
-    "q131_langid_router" ->
-      ("""WITH synth AS (
-           SELECT doc_id,
-                  CASE doc_id % 11 """ +
-        LangRouterCases.zipWithIndex.map { case ((l, _), i) =>
-          s"WHEN $i THEN '$l'" }.mkString(" ") +
-        """ END AS want,
-                  CASE doc_id % 11 """ +
-        LangRouterCases.zipWithIndex.map { case ((_, t), i) =>
-          s"WHEN $i THEN '$t'" }.mkString(" ") +
-        """ END AS text
-           FROM documents),
-         sw AS (
-           SELECT * FROM (VALUES
-             """ + langVoteSwValues + """
-           ) v(cand_lang, tok)),
-         ptoks AS (
-           SELECT doc_id, unnest(list_filter(string_split_regex(
-                    trim(lower(text)), '[ \t\n\f\r\x0B]+'),
-                    t -> length(t) > 0)) AS tok
-           FROM synth),
-         counts AS (
-           SELECT p.doc_id, s.cand_lang, count(*) AS n
-           FROM ptoks p JOIN sw s ON s.tok = p.tok GROUP BY 1, 2),
-         best AS (
-           SELECT doc_id, cand_lang AS best_lang FROM (
-             SELECT doc_id, cand_lang,
-                    row_number() OVER (PARTITION BY doc_id
-                                       ORDER BY n DESC, cand_lang) AS rn
-             FROM counts) WHERE rn = 1),
-         lng AS (
-           SELECT s.doc_id, s.want, s.text,
-                  """ +
-        langRouteCase("s.text", "coalesce(b.best_lang, 'unknown')") +
-        """ AS lang
-           FROM synth s LEFT JOIN best b USING (doc_id)),
-         tok AS (
-           SELECT doc_id, want, lang,
-                  list_filter(string_split_regex(trim(
-                    regexp_replace(regexp_replace(lower(text),
-                      '([\x{3400}-\x{4dbf}\x{4e00}-\x{9fff}\x{f900}-\x{faff}\x{3040}-\x{30ff}\x{31f0}-\x{31ff}])',
-                      ' \1 ', 'g'),
-                      '([\x{0e00}-\x{0e7f}]+)', ' \1 ', 'g')),
-                    '[ \t\n\f\r\x0B]+'), x -> length(x) > 0) AS toks
-           FROM lng),
-         m AS (
-           SELECT doc_id, want, lang, len(toks) AS nt,
-                  len(list_filter(toks, x -> CASE
-                    WHEN lang = 'de' THEN x IN ('der','die','das','und','ist','nicht','mit','ein','zu','den','von','im','auf','dem','sich')
-                    WHEN lang = 'es' THEN x IN ('el','los','las','y','es','que','por','para','una','de','en','un','con','del','se')
-                    WHEN lang = 'fr' THEN x IN ('le','la','les','et','est','que','pour','dans','une','des','du','en','un','au','sur')
-                    WHEN lang = 'it' THEN x IN ('il','la','le','e','che','per','una','di','in','un','con','del','non','si','sono')
-                    WHEN lang = 'ja' THEN x IN ('の','に','は','を','た','が','で','て','と','し')
-                    WHEN lang = 'nl' THEN x IN ('de','het','een','en','dat','voor','met','van','in','op','te','niet','aan','zijn','ook')
-                    WHEN lang = 'pt' THEN x IN ('o','os','as','e','que','para','uma','de','em','um','com','do','da','se','mais')
-                    WHEN lang = 'ru' THEN x IN ('и','в','не','на','что','с','это','как','по','но','из','у','за','от','для')
-                    WHEN lang = 'zh' THEN x IN ('的','了','是','在','和','有','我','不','这','他')
-                    ELSE x IN ('the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','at','by','this','be') END)) AS hits,
-                  len(list_distinct(list_filter(toks, x -> CASE
-                    WHEN lang = 'de' THEN x IN ('der','die','das','und','ist','nicht','mit','ein')
-                    WHEN lang = 'es' THEN x IN ('el','los','las','y','es','que','por','para')
-                    WHEN lang = 'fr' THEN x IN ('le','la','les','et','est','que','pour','dans')
-                    WHEN lang = 'it' THEN x IN ('il','la','le','e','che','per','una','di')
-                    WHEN lang = 'ja' THEN x IN ('の','に','は','を','た','が','で','て')
-                    WHEN lang = 'nl' THEN x IN ('de','het','een','en','dat','voor','met','van')
-                    WHEN lang = 'pt' THEN x IN ('o','os','as','e','que','para','uma','de')
-                    WHEN lang = 'ru' THEN x IN ('и','в','не','на','что','с','это','как')
-                    WHEN lang = 'zh' THEN x IN ('的','了','是','在','和','有','我','不')
-                    ELSE x IN ('the','be','to','of','and','that','have','with') END))) AS g8
-           FROM tok)
-         SELECT doc_id, want, lang, true AS detected_ok,
-                round(CASE WHEN nt > 0
-                  THEN CAST(hits AS DOUBLE) / nt ELSE 0.0 END, 6)
-                  AS stop_ratio_keyed,
-                CASE WHEN lang = 'th' THEN true
-                     ELSE g8 >= 2 END AS gopher_stop_ok
-         FROM m"""),
-    // q132 (r17): container/dims/frame-count anchors are fixed by the
-    // deterministic synthesis (12 pattern frames at 18×16; the dup
-    // stream integer-stride-samples back to 12 hashed frames); the
-    // twin/corrupt/gif verdicts are Spark-computed, pinned true —
-    // twin_hamming 0 is structural (majority vote over each source
-    // frame exactly once), gif_near ≤ 11 is the banding recall radius
-    // (measured max 7 over 3000 seeds)
-    "q132_video_dedup" ->
-      """SELECT doc_id,
-                'avi' AS c_a, 18 AS w_a, 16 AS h_a, 12 AS nf_a,
-                12 AS nf_b, 'gif' AS c_d, 12 AS nf_d,
-                CAST(0 AS BIGINT) AS twin_hamming,
-                true AS twin_found,
-                true AS corrupt_null,
-                true AS gif_near,
-                true AS gif_found
-         FROM documents
-         WHERE doc_id < 2000""",
-    // q133 (r17): the batch is the doc_id%4==3 slice of the 2000-doc
-    // scope; expected outcome is doc_id arithmetic (%8==3 → a JPEG
-    // twin of an indexed image, caught; else novel, survives) and the
-    // ok column pins expected == observed
-    "q133_media_index" ->
-      """SELECT doc_id,
-                CASE WHEN doc_id % 8 = 3 THEN 'dup' ELSE 'novel' END
-                  AS expected,
-                doc_id % 8 <> 3 AS survived,
-                true AS ok
-         FROM documents
-         WHERE doc_id < 2000 AND doc_id % 4 = 3""",
-    "q129_token_shards" ->
-      """WITH m AS (
-           SELECT doc_id, source,
-                  CAST(coalesce(length(list_filter(string_split_regex(trim(
-                    regexp_replace(regexp_replace(text,
-                      '([\x{3400}-\x{4dbf}\x{4e00}-\x{9fff}\x{f900}-\x{faff}\x{3040}-\x{30ff}\x{31f0}-\x{31ff}])',
-                      ' \1 ', 'g'),
-                      '([\x{0e00}-\x{0e7f}]+)', ' \1 ', 'g')),
-                    '[ \t\n\f\r\x0B]+'), x -> length(x) > 0)), 0)
-                    AS BIGINT) AS n_tokens,
-                  (((xor(doc_id, doc_id >> 31) % 2147483648)
-                    * 1103515245 + 42)
-                    % 2147483648 * 1103515245 + 12345)
-                    % 2147483648 AS mix
-           FROM documents),
-         c AS (
-           SELECT doc_id, source, n_tokens,
-                  sum(n_tokens) OVER (ORDER BY mix, doc_id
-                    ROWS UNBOUNDED PRECEDING) - n_tokens AS cum
-           FROM m)
-         SELECT doc_id, source, n_tokens,
-                CAST(floor(cum / 5000.0) AS BIGINT) AS shard
-         FROM c""",
-    // the byte-exact anchor: empty-merge GPT-2 encoding emits one
-    // token per UTF-8 byte, and DuckDB's strlen counts bytes
-    "q128_gpt2_encode" ->
-      """SELECT count(*) AS n_docs,
-                CAST(sum(strlen(text)) AS BIGINT) AS total_byte_tokens,
-                true AS roundtrip_ok,
-                true AS merged_compresses,
-                true AS no_unk
-         FROM documents""",
-    // the full temperature apportionment in SQL: counts → pow(n,.5) →
-    // normalize → round 9dp (both engines round before the quota math
-    // — the pow cross-engine float policy) → renormalize over rounded
-    // weights → floor + largest-remainder (frac DESC, source tiebreak)
-    // → the q107 LCG rank selection
-    "q121_temperature_mix" ->
-      """WITH cnt AS (
-           SELECT source, CAST(count(*) AS DOUBLE) AS n
-           FROM documents GROUP BY 1),
-         w AS (
-           SELECT source,
-                  round(pow(n, 0.5) / (SELECT sum(pow(n, 0.5)) FROM cnt),
-                        9) AS wt
-           FROM cnt),
-         sh AS (
-           SELECT source,
-                  round(wt / (SELECT sum(wt) FROM w) * 60, 6) AS s
-           FROM w),
-         q0 AS (
-           SELECT source, floor(s) AS fl, s - floor(s) AS frac,
-                  row_number() OVER (ORDER BY s - floor(s) DESC, source)
-                    AS ri
-           FROM sh),
-         quota AS (
-           SELECT source,
-                  CAST(fl + CASE WHEN ri <= 60 - (SELECT sum(fl) FROM q0)
-                                 THEN 1 ELSE 0 END AS BIGINT) AS quota
-           FROM q0),
-         m AS (
-           SELECT d.doc_id, d.source, quota.quota,
-                  (((xor(d.doc_id, d.doc_id >> 31) % 2147483648)
-                    * 1103515245 + 42)
-                    % 2147483648 * 1103515245 + 12345)
-                    % 2147483648 AS mix
-           FROM documents d JOIN quota USING (source)),
-         r AS (SELECT doc_id, source, quota,
-                      row_number() OVER (PARTITION BY source
-                                         ORDER BY mix, doc_id) AS rk
-               FROM m)
-         SELECT doc_id, source FROM r WHERE rk <= quota""",
-    // mirrors Curation.shuffleDeterministic: same 31-bit LCG mix, same
-    // shard mod, same (mix, doc_id) rank
-    "q95_det_shuffle" ->
-      """WITH m AS (
-           SELECT doc_id, source,
-                  (((xor(doc_id, doc_id >> 31) % 2147483648)
-                    * 1103515245 + 42)
-                    % 2147483648 * 1103515245 + 12345)
-                    % 2147483648 AS mix
-           FROM documents),
-         sh AS (SELECT doc_id, source, mix, mix % 8 AS shard FROM m)
-         SELECT doc_id, source, shard,
-                CAST(row_number() OVER (PARTITION BY shard
-                  ORDER BY mix, doc_id) - 1 AS BIGINT) AS pos
-         FROM sh""",
-    "q85_pii_redact" ->
-      """WITH salted AS (
-           SELECT doc_id,
-                  text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-                  '@example.com ip 10.0.0.' ||
-                  CAST(doc_id % 250 AS VARCHAR) ||
-                  ' phone 555-0100-' ||
-                  CAST(doc_id % 90 + 10 AS VARCHAR) AS t
-           FROM documents),
-         noip AS (
-           SELECT doc_id, t,
-                  regexp_replace(t, '\b(?:\d{1,3}\.){3}\d{1,3}\b',
-                                 '<IP>', 'g') AS t1
-           FROM salted),
-         noemail AS (
-           SELECT doc_id, t, t1,
-                  regexp_replace(t1,
-                    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                    '<EMAIL>', 'g') AS t2
-           FROM noip)
-         SELECT doc_id,
-                regexp_replace(t2, '(?:\+|\b)\d[\d().-]{7,}\d\b',
-                               '<PHONE>', 'g') AS clean,
-                len(regexp_extract_all(t,
-                    '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS n_ips,
-                len(regexp_extract_all(t1,
-                    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-                  AS n_emails,
-                len(regexp_extract_all(t2,
-                    '(?:\+|\b)\d[\d().-]{7,}\d\b')) AS n_phones
-         FROM noemail""",
-    "q84_bloom_join" ->
-      """SELECT s_suppkey, count(*) AS n_items,
-                round(sum(l_extendedprice), 2) AS revenue
-         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-         WHERE s_nationkey = 3
-         GROUP BY s_suppkey""",
-    // same grams + pair predicate as q43's oracle, then a recursive-CTE
-    // transitive closure: component = min reachable doc_id
-    "q80_dedup_clusters" ->
-      """WITH RECURSIVE sh AS (
-           SELECT doc_id,
-                  list_distinct([array_to_string(toks[i:i+2], ' ')
-                    for i in range(1, len(toks) - 1)]) AS grams
-           FROM (SELECT doc_id,
-                        list_filter(string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                                    t -> length(t) > 0) AS toks
-                 FROM documents WHERE doc_id < 500)),
-         pairs AS (
-           SELECT a.doc_id AS ia, b.doc_id AS ib
-           FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           WHERE round(CASE WHEN len(list_distinct(a.grams || b.grams)) > 0
-                   THEN CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                        / len(list_distinct(a.grams || b.grams))
-                   ELSE 0.0 END, 6) >= 0.5),
-         edges AS (SELECT ia AS s, ib AS t FROM pairs
-                   UNION SELECT ib, ia FROM pairs),
-         reach(id, r) AS (
-           SELECT s, s FROM edges
-           UNION
-           SELECT e.t, r.r FROM reach r JOIN edges e ON e.s = r.id)
-         SELECT CAST(id AS BIGINT) AS doc_id,
-                CAST(min(r) AS BIGINT) AS component
-         FROM reach GROUP BY id""",
-    // simhash is not DuckDB-expressible: pin the n_docs anchor and the
-    // Spark-side exact-twin verdicts (q21 pattern)
-    "q44_simhash_neardups" ->
-      """SELECT count(*) AS n_docs, true AS recall_ok,
-                true AS guarantee3_ok, true AS precision_ok
-         FROM documents""",
-    "q104_simhash_multiprobe" ->
-      """SELECT count(*) AS n_docs, true AS recall_ok,
-                true AS precision_ok
-         FROM documents WHERE doc_id < 2000""",
-    // q43's gram/jaccard recompute, restricted to (indexed, batch)
-    // cross pairs; exact-dup count recomputed via raw text equality
-    "q105_dedup_index" ->
-      """WITH sub AS (SELECT * FROM documents WHERE doc_id < 500),
-         ed AS (
-           SELECT count(DISTINCT n.doc_id) AS n_exact_dups
-           FROM sub n JOIN sub o ON n.text = o.text
-            AND n.doc_id % 4 = 3 AND o.doc_id % 4 < 3),
-         sh AS (
-           SELECT doc_id,
-                  list_distinct([array_to_string(toks[i:i+2], ' ')
-                    for i in range(1, len(toks) - 1)]) AS grams
-           FROM (SELECT doc_id,
-                        list_filter(string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                                    t -> length(t) > 0) AS toks
-                 FROM sub)),
-         pairs AS (
-           SELECT round(CASE WHEN len(list_distinct(a.grams || b.grams)) > 0
-                    THEN CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                         / len(list_distinct(a.grams || b.grams))
-                    ELSE 0.0 END, 6) AS jac
-           FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-            AND ((a.doc_id % 4 = 3) <> (b.doc_id % 4 = 3)))
-         SELECT ed.n_exact_dups,
-                (SELECT count(*) FROM pairs WHERE jac >= 0.5)
-                  AS n_cross_exact,
-                true AS recall_ok, true AS precision_ok
-         FROM ed""",
-    "q47_ann_lsh" ->
-      """SELECT count(*) AS n_vectors, CAST(10 AS BIGINT) AS k_returned,
-                true AS top1_ok, true AS recall_ok
-         FROM embeddings""",
-    // independent recomputation of q62's exact-twin count
-    "q62_embedding_neardup" ->
-      """SELECT count(*) AS n_exact, true AS recall_ok,
-                true AS precision_ok
-         FROM (SELECT round(CAST(list_cosine_similarity(
-                        CAST(a.embedding AS DOUBLE[]),
-                        CAST(b.embedding AS DOUBLE[])) AS DOUBLE), 6) AS cs
-               FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-         WHERE cs >= 0.35""",
-    "q63_ann_ivf" ->
-      """SELECT count(*) AS n_vectors, CAST(10 AS BIGINT) AS k_returned,
-                true AS top1_ok, true AS recall_ok
-         FROM embeddings""",
-    // mirrors TextAnalysis.langIdByJoin exactly: same stopword table
-    // (the shared langVoteSwValues — r17: it/pt/nl added), same argmax
-    // tiebreak (n DESC, cand_lang), same 4096-char-bounded script-
-    // routing chain (kana/CJK/Thai/Cyrillic), docs with no hits →
-    // 'unknown'
-    "q48_langid" ->
-      ("""WITH sw AS (
-           SELECT * FROM (VALUES
-             """ + langVoteSwValues + """
-           ) v(cand_lang, tok)),
-         toks AS (
-           SELECT doc_id,
-                  unnest(list_filter(
-                    string_split_regex(trim(lower(text)), '[ \t\n\f\r\x0B]+'),
-                    t -> length(t) > 0)) AS tok
-           FROM documents),
-         counts AS (
-           SELECT t.doc_id, s.cand_lang, count(*) AS n
-           FROM toks t JOIN sw s ON s.tok = t.tok
-           GROUP BY t.doc_id, s.cand_lang),
-         best AS (
-           SELECT doc_id, cand_lang AS best_lang FROM (
-             SELECT doc_id, cand_lang,
-                    row_number() OVER (PARTITION BY doc_id
-                                       ORDER BY n DESC, cand_lang) AS rn
-             FROM counts) WHERE rn = 1),
-         pred AS (
-           SELECT d.lang,
-                  """ +
-        langRouteCase("d.text", "coalesce(b.best_lang, 'unknown')") +
-        """ AS pred_lang
-           FROM documents d LEFT JOIN best b ON b.doc_id = d.doc_id)
-         SELECT lang, pred_lang, count(*) AS n FROM pred GROUP BY 1, 2"""),
-    "q41_dedup_exact" ->
-      """SELECT md5(text) AS content_hash, count(*) AS n_dups,
-                min(doc_id) AS keep_id
-         FROM documents GROUP BY 1""",
-    "q42_dedup_drop" ->
-      """SELECT source, count(*) AS n FROM documents
-         WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY md5(text))
-         GROUP BY source""",
-    "q45_ngram_jaccard" ->
-      """WITH sh AS (
-           SELECT doc_id,
-                  list_distinct([array_to_string(toks[i:i+2], ' ')
-                    for i in range(1, len(toks) - 1)]) AS grams
-           FROM (SELECT doc_id,
-                        list_filter(string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                                    t -> length(t) > 0) AS toks
-                 FROM documents))
-         SELECT a.doc_id AS doc_id,
-                round(CASE WHEN len(list_distinct(a.grams || b.grams)) > 0
-                  THEN CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                       / len(list_distinct(a.grams || b.grams))
-                  ELSE 0.0 END, 6) AS jac_next
-         FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1""",
-    "q49_quality" ->
-      """SELECT doc_id,
-                CAST(len(list_filter(string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                     t -> length(t) > 0)) AS BIGINT) AS n_tokens,
-                CAST(len(regexp_extract_all(text,
-                     '[A-Za-z]+|[0-9]|[^A-Za-z0-9 \t\n\r]')) AS BIGINT)
-                  AS n_bpeish,
-                round(CASE WHEN length(text) > 0 THEN
-                  CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                       AS DOUBLE) / length(text) ELSE 0.0 END, 6)
-                  AS alpha_ratio,
-                round(CASE WHEN len(list_filter(string_split_regex(
-                        trim(lower(text)), '[ \t\n\f\r\x0B]+'), t -> length(t) > 0)) > 0
-                  THEN CAST(len(list_filter(string_split_regex(
-                        trim(lower(text)), '[ \t\n\f\r\x0B]+'),
-                        t -> t IN ('the','a','an','and','or','of','to','in',
-                                   'is','it','that','for','on','with','as',
-                                   'at','by','this','be'))) AS DOUBLE)
-                       / len(list_filter(string_split_regex(
-                           trim(lower(text)), '[ \t\n\f\r\x0B]+'), t -> length(t) > 0))
-                  ELSE 0.0 END, 6) AS stop_ratio
-         FROM documents""",
-    "q50_fingerprint" ->
-      """SELECT doc_id,
-                list_reduce(
-                  list_prepend(CAST(0 AS BIGINT),
-                    list_transform(
-                      list_filter(string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                                  t -> length(t) > 0),
-                      t -> CAST(length(t) AS BIGINT))),
-                  (acc, v) -> (acc * 31 + v) % 1000000007) AS fp
-         FROM documents""",
-    "q46_ann_brute" ->
-      """SELECT vec_id,
-                round(CAST(list_cosine_similarity(
-                    CAST(embedding AS DOUBLE[]),
-                    (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings
-                     WHERE vec_id = 0)) AS DOUBLE), 6) AS cos_sim
-         FROM embeddings
-         ORDER BY cos_sim DESC, vec_id LIMIT 10""",
-    // r17 (stub retired): PPM rows recompute byte-exact payload size
-    // ("P6\n<w> <h>\n255\n" header + 3wh) and the solid-color mean;
-    // WAV rows recompute the canonical 44-byte-header size, rate and
-    // 65x32 mono frame count; text rows are the unknown reporting
-    // shape. v_rms (decoder-derived RMS in (0,1]) pinned true.
-    "q51_multimodal" ->
-      """WITH m AS (
-           SELECT doc_id, text,
-                  doc_id % 16 + 1 AS w, doc_id % 8 + 1 AS h
-           FROM documents)
-         SELECT doc_id,
-                CASE doc_id % 3 WHEN 0 THEN 'image'
-                     WHEN 1 THEN 'audio' ELSE 'unknown' END AS kind,
-                CASE doc_id % 3 WHEN 0 THEN 'ppm'
-                     WHEN 1 THEN 'wav' ELSE 'unknown' END AS format,
-                CAST(CASE doc_id % 3
-                     WHEN 0 THEN 9 + length(CAST(w AS VARCHAR))
-                                 + length(CAST(h AS VARCHAR)) + 3*w*h
-                     WHEN 1 THEN 4204
-                     ELSE octet_length(CAST(text AS BLOB)) END
-                  AS BIGINT) AS n_bytes,
-                CAST(CASE doc_id % 3 WHEN 0 THEN w ELSE -1 END
-                  AS INT) AS width,
-                CAST(CASE doc_id % 3 WHEN 0 THEN h ELSE -1 END
-                  AS INT) AS height,
-                CAST(CASE doc_id % 3 WHEN 1 THEN 8000 ELSE -1 END
-                  AS INT) AS sample_rate,
-                CAST(CASE doc_id % 3 WHEN 1 THEN 2080 ELSE -1 END
-                  AS BIGINT) AS n_frames,
-                round(CASE doc_id % 3
-                  WHEN 0 THEN CAST(doc_id % 256 AS DOUBLE) / 255.0
-                  ELSE 0.0 END, 6) AS mean_r,
-                true AS v_rms
-         FROM m""",
-    // sampleFrames(chunkBytes=32, everyK=4): frame i = payload bytes
-    // [i*128, i*128+32); n_frames = max(floor(len/128), 1). DuckDB lacks
-    // BLOB substring, so the twin slices the VARCHAR and casts — exact
-    // while the synthetic corpus is ASCII (checked: 0 multibyte docs)
-    "q52_frames" ->
-      """SELECT d.doc_id, CAST(t.i AS INT) AS frame_idx,
-                upper(hex(CAST(substring(d.text, CAST(t.i*128+1 AS BIGINT), 32)
-                     AS BLOB))) AS frame_hex
-         FROM documents d,
-              LATERAL (SELECT unnest(range(0,
-                 greatest(length(d.text)//128, 1))) AS i) t""",
-    "q53_piglatin" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
-                round(sum(l_extendedprice), 2) AS sum_price
-         FROM lineitem WHERE l_quantity > 20.0
-         GROUP BY l_returnflag, l_linestatus""",
-    "q54_cor_cov" ->
-      """SELECT l_returnflag,
-                round(corr(l_quantity, l_extendedprice), 4) AS cor_qp,
-                round(covar_samp(l_quantity, l_extendedprice), 2) AS cov_qp,
-                round(stddev_samp(l_discount), 6) AS sd_disc
-         FROM lineitem GROUP BY l_returnflag""",
-    "q55_sprintf_split" ->
-      """SELECT p_partkey, printf('%s|%05d', p_brand, p_partkey) AS tagged,
-                CAST(len(string_split(p_type, ' ')) AS BIGINT) AS n_words,
-                lower(substring(p_name, 1, 1)) || substring(p_name, 2) AS lc
-         FROM part""",
-    "q56_set_ops" ->
-      """SELECT nk, 'both' AS which FROM
-           (SELECT DISTINCT c_nationkey AS nk FROM customer
-            INTERSECT SELECT DISTINCT s_nationkey FROM supplier)
-         UNION ALL
-         SELECT nk, 'cust_only' AS which FROM
-           (SELECT DISTINCT c_nationkey AS nk FROM customer
-            EXCEPT SELECT DISTINCT s_nationkey FROM supplier)""",
-    "q57_secondary_sort" ->
-      """SELECT o_custkey,
-                string_agg(o_orderstatus, ''
-                  ORDER BY o_orderdate, o_orderkey) AS status_seq,
-                min(o_orderdate) AS first_date
-         FROM orders GROUP BY o_custkey""",
-    "q58_window_funcs" ->
-      """SELECT event_id,
-                round(sum(value) OVER (PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
-                  AS running,
-                lag(event_type) OVER (PARTITION BY user_id
-                  ORDER BY ts, event_id) AS prev_type,
-                CAST(row_number() OVER (PARTITION BY user_id
-                  ORDER BY ts, event_id) AS BIGINT) AS seq
-         FROM events""",
-    "q59_pluck" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice
-         FROM customer JOIN orders ON c_custkey = o_custkey""",
-    "q60_range_join" ->
-      """SELECT bucket, count(*) AS n, round(sum(o_totalprice), 2) AS volume
-         FROM orders JOIN (
-           VALUES ('tiny', 0.0, 50000.0), ('small', 50000.0, 100000.0),
-                  ('mid', 100000.0, 200000.0), ('large', 200000.0, 300000.0),
-                  ('huge', 300000.0, 1000000000.0)) r(bucket, lo, hi)
-           ON o_totalprice >= lo AND o_totalprice < hi
-         GROUP BY bucket""",
-    "q61_multi_distinct" ->
-      """SELECT l_returnflag,
-                count(DISTINCT l_partkey) AS n_parts,
-                count(DISTINCT l_suppkey) AS n_supps,
-                count(*) AS n
-         FROM lineitem GROUP BY l_returnflag""",
-    "q64_chunking" ->
-      """WITH t AS (
-           SELECT doc_id,
-                  list_filter(string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                              x -> length(x) > 0) AS toks
-           FROM documents)
-         SELECT doc_id, CAST(u.i - 1 AS INTEGER) AS chunk_idx,
-                u.txt AS chunk_text
-         FROM (
-           SELECT doc_id,
-                  unnest([{'i': i, 'txt': array_to_string(
-                             toks[(i - 1) * 40 + 1 : (i - 1) * 40 + 50], ' ')}
-                          for i in range(1,
-                            greatest(CAST(ceil(CAST(len(toks) - 10 AS DOUBLE)
-                              / 40) AS BIGINT), 1) + 1)]) AS u
-           FROM t)""",
-    "q65_corpus_stats" ->
-      """SELECT source, count(*) AS n_docs,
-                round(avg(n_chars), 4) AS avg_chars,
-                round(quantile_cont(CAST(len(list_filter(
-                  string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                  x -> length(x) > 0)) AS BIGINT), 0.5), 4) AS med_toks,
-                round(quantile_cont(CAST(len(list_filter(
-                  string_split_regex(trim(text), '[ \t\n\f\r\x0B]+'),
-                  x -> length(x) > 0)) AS BIGINT), 0.9), 4) AS p90_toks
-         FROM documents GROUP BY source""",
-    "q66_udaf" ->
-      """SELECT o_orderstatus, count(o_custkey) AS n_cust, count(*) AS n
-         FROM orders GROUP BY o_orderstatus""",
-    "q67_piglatin_groupall" ->
-      """SELECT count(*) AS cnt, round(sum(l_quantity), 2) AS sum_qty,
-                round(avg(l_discount), 6) AS avg_disc,
-                max(l_extendedprice) AS max_price
-         FROM lineitem""",
-    "q68_piglatin_assert_inner" ->
-      """SELECT s.nk AS nationkey, coalesce(n_cust, 0) AS n_cust, n_supp
-         FROM (SELECT s_nationkey AS nk, count(*) AS n_supp
-               FROM supplier GROUP BY 1) s
-         LEFT JOIN (SELECT c_nationkey AS nk, count(*) AS n_cust
-               FROM customer GROUP BY 1) c ON c.nk = s.nk""",
-    "q69_piglatin_nested" ->
-      """SELECT o_custkey, count(*) AS n_orders,
-                CAST(count(DISTINCT o_orderpriority) AS BIGINT) AS n_prio
-         FROM orders GROUP BY o_custkey""",
-    "q70_piglatin_posref" ->
-      """SELECT o_orderpriority AS prio,
-                count(CASE WHEN o_totalprice > 150000.0 THEN NULL
-                           ELSE o_orderstatus END) AS cnt,
-                count(*) AS n
-         FROM orders GROUP BY 1""",
-    "q71_piglatin_over" ->
-      """SELECT c_custkey, c_nationkey,
-                round(sum(c_acctbal) OVER (
-                  PARTITION BY c_nationkey ORDER BY c_custkey
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
-                  AS running_bal
-         FROM customer"""
-  )
+  /** Every gate, names distinct. */
+  lazy val gates: Seq[Gate] = Gate.distinct(RelationalGates.all ++
+    FunctionGates.all ++ TextGates.all ++ MediaGates.all)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    relationalQueries ++ functionQueries ++ pipelineQueries
+    gates.map(g => g.name -> g.run).toMap
 
-  /** What [[graft.Bench]] times. Identical to [[queries]] except for the
-    * three near-dup gates whose CORRECTNESS form runs the production
-    * pipeline AND its exact quadratic twin (all-pairs Jaccard / hamming /
-    * cosine) to compute recall/precision verdicts. The twin is test
-    * machinery — deliberately O(n²), never a production path — so timing
-    * it says nothing about engine throughput. The bench override times
-    * the production operator alone; Verify keeps the twin-gated form.
-    * (q47/q63 keep their gates: their exact twin is a single brute-force
-    * scan, itself a production baseline.) */
-  /** q130's synthetic crawl input: documents wrapped as HTTP-framed
-    * WARC-shaped records (q115's boilerplate wrapper, a 404 slice, a
-    * robots-noindex slice). Shared by the gate form (synthesizes
-    * in-plan — the hash gate wants the whole composition under one
-    * plan) and the bench form (materializes once, times cleanDocs). */
-  private def q130Records(s: SparkSession, d: String): DataFrame = {
-    val docs = T(s, d, "documents").df.select(col("doc_id"), col("text"))
-      // fan the single-row-group test scan out before the HTTP/HTML
-      // synthesis UDFs (and so the epoch artifact lands as many files,
-      // not the one-row-group single file that would serialize the
-      // timed cleanDocs read — the Pipeline fanOut lesson)
-      .repartition(s.sparkContext.defaultParallelism)
-    val idStr = col("doc_id").cast(StringType)
-    val robots = when(pmod(col("doc_id"), lit(11)) === 0,
-      lit("<meta name=\"robots\" content=\"noindex\">"))
-      .otherwise(lit(""))
-    val html = concat(
-      lit("<html><head><title>Site T"), idStr, lit("</title>"), robots,
-      lit("<style>nav {color: blue}</style></head><body>" +
-        "<nav><a href=\"/\">Home page</a> <a href=\"/about\">About " +
-        "us</a> <a href=\"/contact\">Contact info</a></nav><p>"),
-      col("text"),
-      lit("</p><div>Copyright 2026 Example Corp</div>" +
-        "<p>Read more: <a href=\"/next\">the next related article " +
-        "in this series</a></p></body></html>"))
-    val mk = udf((h: String, status: Int) =>
-      graft.sources.Warc.wrapHttp(
-        h.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        status = status, contentType = "text/html; charset=utf-8"))
-    val status = when(pmod(col("doc_id"), lit(7)) === 0, lit(404))
-      .otherwise(lit(200))
-    docs.select(
-      lit("f").as("file"),
-      idStr.as("record_id"),
-      lit("response").as("warc_type"),
-      concat(lit("https://ex.com/"), idStr).as("target_uri"),
-      lit("2026-01-01T00:00:00Z").as("warc_date"),
-      lit("application/http; msgtype=response").as("content_type"),
-      lit(0L).as("content_length"),
-      mk(html, status).as("payload"))
-  }
-
-  /** q132's synthetic video corpus: per doc a 12-frame MJPEG AVI, a
-    * frame-duplicated twin, a truncated-corrupt variant, and the same
-    * frames as an animated GIF. Shared by the gate form (in-plan) and
-    * the bench form (epoch-materialized). */
-  private def q132Vids(s: SparkSession, d: String): DataFrame = {
-    val mkPayload = udf((seed: Long, variant: Int) => variant match {
-      case 0 => graft.multimodal.Decode.encodePatternAvi(seed)
-      case 1 => graft.multimodal.Decode.encodePatternAvi(seed,
-        dupFrames = 2)
-      case 2 => graft.multimodal.Decode.encodePatternAvi(seed).take(60)
-      case _ => graft.multimodal.Decode.encodePatternGif(seed)
-    })
-    // fixed-2000-doc gate machinery (the q104 precedent): the verdict
-    // columns are scale-invariant correctness checks, and 4 videos ×
-    // 12 JPEG frames per doc is ~29 ms/doc of decode — unbounded, the
-    // GATE (not the operator) would dominate the bench at sf0.1+. The
-    // unbounded operator cost is the documented decades in BASELINE.md
-    T(s, d, "documents").df.select(col("doc_id"))
-      .where(col("doc_id") < 2000)
-      // thin-row fan-out (q123 note): frame synthesis/decode must not
-      // serialize on the single-row-group test scan
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"),
-        explode(array(lit(0), lit(1), lit(2), lit(3))).as("variant"))
-      .select(col("doc_id"), col("variant"),
-        (col("doc_id") * 4 + col("variant")).as("vid_id"),
-        mkPayload(col("doc_id"), col("variant")).as("payload"))
-  }
-
-  /** q132's operator half: temporal fingerprints → one multiProbe
-    * banding pass → the twin/corrupt/gif verdict columns. */
-  private def q132Gate(vids: DataFrame): DataFrame = {
-    val sigs = GraftSession.trackPersist(
-      graft.multimodal.Decode.videoSignatures(vids, "vid_id", "payload")
-        .toDF()
-        .select(col("vid_id"), floor(col("vid_id") / 4).as("doc_id"),
-          pmod(col("vid_id"), lit(4)).as("variant"),
-          col("container"), col("width"), col("height"),
-          col("n_frames"), col("vhash")))
-    val pairs = graft.text.Dedup.simhashNearDups(
-      sigs.where(col("vhash").isNotNull)
-        .select(col("vid_id"), col("vhash").as("simhash")),
-      "vid_id", maxDistance = 8, maxBucket = 17000, multiProbe = true)
-    val twinPairs = pairs // dup twin ids are 4d and 4d+1 (id_a < id_b)
-      .filter(col("id_b") === col("id_a") + 1 &&
-        pmod(col("id_a"), lit(4)) === 0 && col("hamming") === 0)
-      .select(floor(col("id_a") / 4).as("doc_id"),
-        lit(true).as("twin_found"))
-    val gifPairs = pairs // gif twin ids are 4d and 4d+3
-      .filter(col("id_b") === col("id_a") + 3 &&
-        pmod(col("id_a"), lit(4)) === 0)
-      .select(floor(col("id_a") / 4).as("doc_id"),
-        lit(true).as("gif_found"))
-    // one conditional aggregation replaces the former 4-way variant
-    // self-join (the q123Gate note: (doc_id, variant) unique, so this
-    // is a pivot, not a join; oracle-proven row/hash-identical)
-    def v(n: Int, c: String) = max(when(col("variant") === n, col(c)))
-    sigs.groupBy(col("doc_id")).agg(
-        v(0, "container").as("c_a"), v(0, "width").as("w_a"),
-        v(0, "height").as("h_a"), v(0, "n_frames").as("nf_a"),
-        v(0, "vhash").as("vhash_a"),
-        v(1, "n_frames").as("nf_b"), v(1, "vhash").as("vhash_b"),
-        v(2, "container").as("c_c"), v(2, "n_frames").as("nf_c"),
-        v(2, "vhash").as("vhash_c"),
-        v(3, "container").as("c_d"), v(3, "n_frames").as("nf_d"),
-        v(3, "vhash").as("vhash_d"))
-      .join(twinPairs, Seq("doc_id"), "left")
-      .join(gifPairs, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        col("c_a"), col("w_a"), col("h_a"), col("nf_a"),
-        // the dup stream samples back down to the base's 12 frames
-        // (integer stride) — n_frames reports frames HASHED
-        col("nf_b"), col("c_d"), col("nf_d"),
-        bit_count(col("vhash_a").bitwiseXOR(col("vhash_b")))
-          .cast(LongType).as("twin_hamming"),
-        coalesce(col("twin_found"), lit(false)).as("twin_found"),
-        (col("c_c") === "unknown" && col("vhash_c").isNull &&
-          col("nf_c") === -1).as("corrupt_null"),
-        (bit_count(col("vhash_a").bitwiseXOR(col("vhash_d"))) <= 11)
-          .as("gif_near"),
-        coalesce(col("gif_found"), lit(false)).as("gif_found"))
-  }
-
-  /** q123's synthetic image corpus: per doc a pattern PNG, its 2×
-    * upscale twin, a truncated-corrupt variant, and a q=0.75 JPEG
-    * re-encode. Shared by the gate form (synthesizes in-plan) and the
-    * bench form (epoch-materialized via [[epochParquet]]). */
-  private def q123Imgs(s: SparkSession, d: String): DataFrame = {
-    val docs = T(s, d, "documents").df.select(col("doc_id"))
-    val mkPayload = udf((seed: Long, variant: Int) => variant match {
-      case 0 => graft.multimodal.Decode.encodePatternPng(seed, 2)
-      case 1 => graft.multimodal.Decode.encodePatternPng(seed, 4)
-      case 2 => graft.multimodal.Decode.encodePatternPng(seed, 2).take(16)
-      case _ => graft.multimodal.Decode.reencodeJpeg(
-        graft.multimodal.Decode.encodePatternPng(seed, 2), 0.75f).get
-    })
-    docs
-      // single-row-group testdata = ONE scan task; the decode/synth
-      // cost would serialize on it (at 100 TB the scan parallelizes
-      // naturally). Repartition the THIN id rows — the exchange
-      // carries 8 bytes/row, the heavy payloads are built after it
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"),
-        explode(array(lit(0), lit(1), lit(2), lit(3))).as("variant"))
-      .select(col("doc_id"), col("variant"),
-        (col("doc_id") * 4 + col("variant")).as("img_id"),
-        mkPayload(col("doc_id"), col("variant")).as("payload"))
-  }
-
-  /** q123's operator half: decode → dHash → one multiProbe banding
-    * pass → the twin/corrupt/jpeg verdict columns. */
-  private def q123Gate(imgs: DataFrame): DataFrame = {
-    val sigs = graft.GraftSession.trackPersist(
-      graft.multimodal.Decode.imageSignatures(imgs, "img_id", "payload")
-        .toDF()
-        .select(col("img_id"), floor(col("img_id") / 4).as("doc_id"),
-          pmod(col("img_id"), lit(4)).as("variant"),
-          col("format"), col("width"), col("height"), col("dhash")))
-    // maxBucket raised from the 1000 default (the q104 multi-probe
-    // precedent): probes multiply per-band bucket load ~17× (exact
-    // chunk + 16 one-bit flips), and cappedCandidatePairs DROPS
-    // over-cap buckets wholesale — at the default the gate's
-    // guaranteed-recall claim would silently expire near ~1.3M
-    // docs (avg occupancy 17·3·docs/2^16 > 1000). At 17000 the
-    // ceiling is back at ~22M docs — the pre-probe gate's ceiling;
-    // production corpora beyond that tune maxBucket with the
-    // documented recall/cost lever.
-    val pairs = graft.text.Dedup.simhashNearDups(
-      sigs.where(col("dhash").isNotNull)
-        .select(col("img_id"), col("dhash").as("simhash")),
-      "img_id", maxDistance = 8, maxBucket = 17000, multiProbe = true)
-    val twinPairs = pairs // twin ids are 4d and 4d+1 (id_a < id_b)
-      .filter(col("id_b") === col("id_a") + 1 &&
-        pmod(col("id_a"), lit(4)) === 0 && col("hamming") === 0)
-      .select(floor(col("id_a") / 4).as("doc_id"),
-        lit(true).as("twin_found"))
-    val jpegPairs = pairs // jpeg twin ids are 4d and 4d+3
-      .filter(col("id_b") === col("id_a") + 3 &&
-        pmod(col("id_a"), lit(4)) === 0)
-      .select(floor(col("id_a") / 4).as("doc_id"),
-        lit(true).as("jpeg_found"))
-    // one conditional aggregation replaces the former 4-way variant
-    // self-join (r17 §2.4: each (doc_id, variant) is unique — the
-    // decoder emits exactly one row per payload, corrupt included —
-    // so max(when(variant = v, col)) IS that variant's value and the
-    // n-ary inner join on doc_id was 4 exchanges doing a pivot's job;
-    // oracle-proven row/hash-identical)
-    def v(n: Int, c: String) = max(when(col("variant") === n, col(c)))
-    sigs.groupBy(col("doc_id")).agg(
-        v(0, "format").as("fmt_a"), v(0, "width").as("w_a"),
-        v(0, "height").as("h_a"), v(0, "dhash").as("dhash_a"),
-        v(1, "width").as("w_b"), v(1, "height").as("h_b"),
-        v(1, "dhash").as("dhash_b"),
-        v(2, "format").as("fmt_c"), v(2, "width").as("w_c"),
-        v(2, "dhash").as("dhash_c"),
-        v(3, "width").as("w_d"), v(3, "height").as("h_d"),
-        v(3, "dhash").as("dhash_d"))
-      .join(twinPairs, Seq("doc_id"), "left")
-      .join(jpegPairs, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        col("w_a"), col("h_a"), col("w_b"), col("h_b"),
-        bit_count(col("dhash_a").bitwiseXOR(col("dhash_b")))
-          .cast(LongType).as("twin_hamming"),
-        coalesce(col("twin_found"), lit(false)).as("twin_found"),
-        (col("fmt_c") === "unknown" && col("dhash_c").isNull &&
-          col("w_c") === -1).as("corrupt_null"),
-        (col("w_d") === col("w_a") && col("h_d") === col("h_a") &&
-          bit_count(col("dhash_a").bitwiseXOR(col("dhash_d"))) <= 11)
-          .as("jpeg_near"),
-        coalesce(col("jpeg_found"), lit(false)).as("jpeg_found"))
-  }
-
-  /** q127's synthetic audio corpus: per doc the seeded envelope as
-    * 8 kHz full-gain WAV, a 16 kHz half-gain re-encode twin, a
-    * truncated-corrupt variant, and a leading-silence offset twin.
-    * Shared by gate (in-plan) and bench (epoch) forms. */
-  private def q127Auds(s: SparkSession, d: String): DataFrame = {
-    val docs = T(s, d, "documents").df.select(col("doc_id"))
-    val mkPayload = udf((seed: Long, variant: Int) => variant match {
-      case 0 => graft.multimodal.Decode.encodeEnvelopeWav(
-        seed, 8000, segSamples = 32, gain = 1.0)
-      case 1 => graft.multimodal.Decode.encodeEnvelopeWav(
-        seed, 16000, segSamples = 64, gain = 0.5)
-      case 2 => graft.multimodal.Decode.encodeEnvelopeWav(
-        seed, 8000, segSamples = 32, gain = 1.0).take(16)
-      case _ => graft.multimodal.Decode.encodeEnvelopeWav(
-        seed, 8000, segSamples = 32, gain = 1.0, padSamples = 2000)
-    })
-    docs
-      // same thin-row fan-out as q123: synthesis/decode must not
-      // serialize on the single-row-group test scan
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"),
-        explode(array(lit(0), lit(1), lit(2), lit(3))).as("variant"))
-      .select(col("doc_id"), col("variant"),
-        (col("doc_id") * 4 + col("variant")).as("aud_id"),
-        mkPayload(col("doc_id"), col("variant")).as("payload"))
-  }
-
-  /** q127's operator half: decode → envelope + chroma fingerprints →
-    * two distance-0 banding passes → the twin/corrupt/offset verdict
-    * columns. */
-  private def q127Gate(auds: DataFrame): DataFrame = {
-    val sigs = graft.GraftSession.trackPersist(
-      graft.multimodal.Decode.audioSignatures(auds, "aud_id", "payload")
-        .toDF()
-        .select(col("aud_id"), floor(col("aud_id") / 4).as("doc_id"),
-          pmod(col("aud_id"), lit(4)).as("variant"),
-          col("sample_rate"), col("n_samples"), col("afp"),
-          col("cfp")))
-    val pairs = graft.text.Dedup.simhashNearDups(
-      sigs.where(col("afp").isNotNull)
-        .select(col("aud_id"), col("afp").as("simhash")),
-      "aud_id", maxDistance = 0)
-    val cpairs = graft.text.Dedup.simhashNearDups(
-      sigs.where(col("cfp").isNotNull)
-        .select(col("aud_id"), col("cfp").as("simhash")),
-      "aud_id", maxDistance = 0)
-    val twinPairs = pairs // twin ids are 4d and 4d+1 (id_a < id_b)
-      .filter(col("id_b") === col("id_a") + 1 &&
-        pmod(col("id_a"), lit(4)) === 0)
-      .select(floor(col("id_a") / 4).as("doc_id"),
-        lit(true).as("twin_found"))
-    val offPairs = cpairs // offset twin ids are 4d and 4d+3
-      .filter(col("id_b") === col("id_a") + 3 &&
-        pmod(col("id_a"), lit(4)) === 0)
-      .select(floor(col("id_a") / 4).as("doc_id"),
-        lit(true).as("off_found"))
-    // one conditional aggregation replaces the former 4-way variant
-    // self-join (the q123Gate note: (doc_id, variant) unique, so this
-    // is a pivot, not a join; oracle-proven row/hash-identical)
-    def v(n: Int, c: String) = max(when(col("variant") === n, col(c)))
-    sigs.groupBy(col("doc_id")).agg(
-        v(0, "sample_rate").as("sr_a"), v(0, "n_samples").as("n_a"),
-        v(0, "afp").as("afp_a"), v(0, "cfp").as("cfp_a"),
-        v(1, "sample_rate").as("sr_b"), v(1, "n_samples").as("n_b"),
-        v(1, "afp").as("afp_b"), v(1, "cfp").as("cfp_b"),
-        v(2, "sample_rate").as("sr_c"), v(2, "afp").as("afp_c"),
-        v(3, "n_samples").as("n_d"), v(3, "afp").as("afp_d"),
-        v(3, "cfp").as("cfp_d"))
-      .join(twinPairs, Seq("doc_id"), "left")
-      .join(offPairs, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        col("sr_a"), col("n_a"), col("sr_b"), col("n_b"), col("n_d"),
-        bit_count(col("afp_a").bitwiseXOR(col("afp_b")))
-          .cast(LongType).as("twin_hamming"),
-        coalesce(col("twin_found"), lit(false)).as("twin_found"),
-        (col("afp_c").isNull && col("sr_c") === -1).as("corrupt_null"),
-        (bit_count(col("afp_a").bitwiseXOR(col("afp_d"))) > 0)
-          .as("off_env_differs"),
-        bit_count(col("cfp_a").bitwiseXOR(col("cfp_d")))
-          .cast(LongType).as("off_chroma_hamming"),
-        coalesce(col("off_found"), lit(false)).as("off_found"),
-        (bit_count(col("cfp_a").bitwiseXOR(col("cfp_b"))) <= 24)
-          .as("rate_chroma_near"))
-  }
-
-  /** q133's shared fixed-2000-doc id spine (thin-row fan-out before
-    * payload synthesis — the q123 note). */
-  private def q133Sub(s: SparkSession, d: String): DataFrame =
-    T(s, d, "documents").df.select(col("doc_id"))
-      .where(col("doc_id") < 2000)
-      .repartition(s.sparkContext.defaultParallelism)
-
-  /** q133's index half: synthesize the indexed corpus (doc_id%4 < 3),
-    * decode to dHash signatures, and (re)write the SigIndex tables
-    * under `name`. */
-  private def q133BuildIndex(s: SparkSession, d: String,
-                             name: String): Unit = {
-    val mkOld = udf((id: Long) =>
-      graft.multimodal.Decode.encodePatternPng(id, 2))
-    val old = q133Sub(s, d).filter(pmod(col("doc_id"), lit(4)) < 3)
-      .select(col("doc_id"), mkOld(col("doc_id")).as("payload"))
-    val oldSigs = GraftSession.trackPersist(graft.multimodal.Decode
-      .imageSignatures(old, "doc_id", "payload").toDF()
-      .select(col("img_id").as("doc_id"), col("dhash")))
-    graft.text.SigIndex.write(oldSigs, "doc_id", "dhash", name)
-  }
-
-  /** q133's ingest-batch payloads (doc_id%4 == 3): half q=0.75 JPEG
-    * re-encodes of indexed docs (must be caught), half novel
-    * patterns (must survive). */
-  private def q133BatchPayloads(s: SparkSession, d: String): DataFrame = {
-    val mkBatch = udf((id: Long) =>
-      if (id % 8 == 3) graft.multimodal.Decode.reencodeJpeg(
-        graft.multimodal.Decode.encodePatternPng(id - 1, 2), 0.75f).get
-      else graft.multimodal.Decode.encodePatternPng(id + 10000000L, 2))
-    q133Sub(s, d).filter(pmod(col("doc_id"), lit(4)) === 3)
-      .select(col("doc_id"), mkBatch(col("doc_id")).as("payload"))
-  }
-
-  /** q133's operator half: decode the batch, filter it against the
-    * SigIndex under `ix`, emit the expected/observed verdicts. */
-  private def q133Verdict(batch: DataFrame, ix: String): DataFrame = {
-    // persist: the batch decode feeds three consumers (the verdict
-    // join, dropDupsAgainst's anti-join side, nearDups' probe input)
-    val batchSigs = GraftSession.trackPersist(graft.multimodal.Decode
-      .imageSignatures(batch, "doc_id", "payload").toDF()
-      .select(col("img_id").as("doc_id"), col("dhash")))
-    val kept = graft.text.SigIndex.dropDupsAgainst(
-      batchSigs, "doc_id", "dhash", ix)
-    batchSigs.select(col("doc_id"))
-      .join(kept.select(col("doc_id"), lit(true).as("survived")),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(pmod(col("doc_id"), lit(8)) === 3, lit("dup"))
-          .otherwise(lit("novel")).as("expected"),
-        coalesce(col("survived"), lit(false)).as("survived"),
-        ((pmod(col("doc_id"), lit(8)) =!= 3) ===
-          coalesce(col("survived"), lit(false))).as("ok"))
-  }
-
-  /** Bench hygiene (§1.4): materialize a SYNTHESIZED bench input once
-    * per (plan fingerprint, source mtime) epoch and return the parquet
-    * scan over it, so the timed run measures the operator over a
-    * storage scan — the production shape, where payloads arrive from
-    * WARC/parquet, not from an in-plan generator. Keyed on `tag` +
-    * the plan fingerprint + the source table's mtime (another sf dir
-    * or an in-place corpus regeneration never reuses a stale
-    * artifact) — the same stale-checkpoint discipline Pipeline.run
-    * uses. Honesty note: the fingerprint canonicalizes Scala lambda
-    * identities away (it must, to be stable across JVMs), so an
-    * edited UDF BODY alone does not invalidate — q123Imgs and
-    * q127Auds fingerprint identically; `tag` is what separates them.
-    * Bench prebuilds these untimed; the rounds time the recurring
-    * path. */
-  /** Synthesis-code epoch (r18, advisory fix): the plan fingerprint
-    * below canonicalizes lambda identities away, so editing a payload-
-    * synthesis UDF BODY alone would silently reuse a stale corpus from
-    * a previous JVM (java.io.tmpdir persists across runs). Bump this
-    * whenever any bench payload-synthesis function changes so the
-    * epoch key provably rotates. */
-  private val SynthEpoch = "r18a"
-
-  private def epochParquet(s: SparkSession, df: DataFrame, tag: String,
-                           d: String): DataFrame = {
-    val srcMtime = new java.io.File(s"$d/documents.parquet")
-      .lastModified()
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_${tag}_${SynthEpoch}_" +
-      graft.text.Pipeline.stageFingerprint(df).take(16) + s"_$srcMtime"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists())
-      df.write.mode("overwrite").parquet(dir)
-    graft.sources.Parquet.read(s, dir)
-  }
-
-  def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
-    queries ++ Map[String, (SparkSession, String) => DataFrame](
-      // epoch splits ([[epochParquet]] — the r17 VERDICT ask for
-      // q130, extended to every media gate that synthesizes payloads
-      // in-plan): the timed run measures decode/fingerprint/banding —
-      // or cleanDocs — over a parquet scan, never the payload
-      // generator the gate form embeds for hash-gate composition.
-      "q132_video_dedup" -> ((s, d) =>
-        q132Gate(epochParquet(s, q132Vids(s, d), "q132_vids", d))),
-      "q130_crawl_clean" -> ((s, d) =>
-        graft.sources.Crawl.cleanDocs(
-            epochParquet(s, q130Records(s, d), "q130_records", d),
-            minQuality = 0.3)
-          .select(col("record_id").cast(LongType).as("doc_id"),
-            col("url"), col("lang"), col("charset"), col("clean_text"))),
-      "q123_image_dedup" -> ((s, d) =>
-        q123Gate(epochParquet(s, q123Imgs(s, d), "q123_imgs", d))),
-      "q127_audio_dedup" -> ((s, d) =>
-        q127Gate(epochParquet(s, q127Auds(s, d), "q127_auds", d))),
-      // q133: the index is additionally an EPOCH artifact (the q105
-      // precedent — built once per (session, sf dir); the timed run
-      // measures the recurring batch-ingest filter, the production
-      // steady state an index exists for). The batch payloads epoch
-      // like the other media gates; their DECODE stays timed — that
-      // is the operator's scan stage.
-      "q133_media_index" -> ((s, d) => {
-        // source-mtime in the name (r18, advisory fix): an in-place
-        // corpus regeneration within one session must rebuild, not
-        // silently reuse, the epoch index
-        val mt = new java.io.File(s"$d/documents.parquet").lastModified()
-        val ix = s"q133_ix_${(d.hashCode & 0x7fffffff).toHexString}_$mt"
-        if (!s.catalog.tableExists(s"${ix}_meta"))
-          q133BuildIndex(s, d, ix)
-        q133Verdict(
-          epochParquet(s, q133BatchPayloads(s, d), "q133_batch", d), ix)
-      }),
-      "q43_minhash_neardups" -> ((s, d) =>
-        graft.text.Dedup.minhashNearDupsByWords(
-          T(s, d, "documents").df, "doc_id", "text",
-          n = 3, numHashes = 64, numBands = 16, threshold = 0.5)),
-      "q44_simhash_neardups" -> ((s, d) =>
-        graft.text.Dedup.simhashNearDups(
-          graft.text.Dedup.simhash(T(s, d, "documents").df, "doc_id", "text"),
-          "doc_id", maxDistance = 8)),
-      // same twin-exclusion policy: time the multi-probe operator at
-      // the gate's scope (the unbounded full-corpus cost is a
-      // documented opt-in lever, measured in BASELINE.md)
-      "q104_simhash_multiprobe" -> ((s, d) =>
-        graft.text.Dedup.simhashNearDups(
-          graft.text.Dedup.simhash(
-            T(s, d, "documents").df.where(col("doc_id") < 2000),
-            "doc_id", "text"),
-          "doc_id", maxDistance = 7, maxBucket = 17000,
-          multiProbe = true)),
-      // untwinned production path at FULL corpus scope. The index is
-      // an EPOCH artifact (written once, queried per ingest batch), so
-      // it builds on first use per (session, sf dir) — Bench's first
-      // interleaved round absorbs the build and the medians time the
-      // recurring batch-ingest filter, the production steady state
-      // (same reasoning as the untimed q47/q63 index builds).
-      "q105_dedup_index" -> ((s, d) => {
-        val docs = T(s, d, "documents").df
-        val old = docs.filter(pmod(col("doc_id"), lit(4)) < 3)
-        val batch = docs.filter(pmod(col("doc_id"), lit(4)) === 3)
-        // same source-mtime keying as q133's epoch index
-        val mt = new java.io.File(s"$d/documents.parquet").lastModified()
-        val ix = s"q105_ix_${(d.hashCode & 0x7fffffff).toHexString}_$mt"
-        if (!s.catalog.tableExists(s"${ix}_meta"))
-          graft.text.DedupIndex.write(old, "doc_id", "text", ix)
-        graft.text.DedupIndex.dropDupsAgainst(
-          batch, "doc_id", "text", ix, threshold = 0.5)
-      }),
-      "q78_simhash128" -> ((s, d) =>
-        graft.text.Dedup.simhashNearDups128(
-          graft.text.Dedup.simhash128(T(s, d, "documents").df,
-            "doc_id", "text"),
-          "doc_id", maxDistance = 3)),
-      "q62_embedding_neardup" -> ((s, d) =>
-        graft.ml.Similarity.nearNeighborPairs(
-          T(s, d, "embeddings").df, "vec_id", "embedding",
-          threshold = 0.35, numPlanes = 32, numBands = 8)),
-      "q93_semdedup" -> ((s, d) =>
-        // k = 0 → auto-scale the cell count with the corpus (the
-        // production configuration; a fixed k goes quadratic — r12
-        // measured 10× corpus → 38× wall at k=8). At sf0.1 auto
-        // resolves to the same k=8 the gate pins.
-        graft.ml.SemDedup.semanticDedup(
-          T(s, d, "embeddings").df, "vec_id", "embedding",
-          threshold = 0.35, k = 0, probes = 3)),
-      // the gate form bounds pairs to doc_id<500 so the recursive-CTE
-      // oracle stays tractable; the bench times the real end-to-end
-      // dedup path over the whole corpus: minhash near-dup pairs →
-      // connected components → keep each cluster's canonical doc
-      "q80_dedup_clusters" -> ((s, d) => {
-        val docs = T(s, d, "documents").df
-        val pairs = graft.text.Dedup.minhashNearDupsByWords(
-          docs, "doc_id", "text",
-          n = 3, numHashes = 64, numBands = 16, threshold = 0.5)
-        graft.text.Dedup.dropNearDups(docs, pairs, "doc_id")
-      })
-    )
-
-  /** PRECONDITION (r15 advisory): legacy token-based oracles (q49,
-    * q64, q83, q90, q100, q102, q103, …) mirror the plain whitespace
-    * split, while engine-side [[graft.text.TextAnalysis.tokens]] is
-    * script-aware (CJK/Thai boundary insertion). They agree exactly
-    * when the corpus carries no CJK/Thai codepoints — true of the
-    * driver-generated testdata, and ASSERTED (not assumed) by
-    * CoverageSpec "ASCII-corpus precondition": any such byte entering
-    * a future corpus fails that spec loudly instead of silently
-    * diverging engine vs oracle. Gates whose POINT is the script rule
-    * (q114, q115) mirror the full scriptSpaced regex pair instead. */
+  /** Each gate's DuckDB SQL; the token-oracle PRECONDITION is on
+    * [[graft.gates.Gate]]. */
   def oracleSql: Map[String, String] =
-    relationalOracles ++ functionOracles ++ pipelineOracles
+    gates.map(g => g.name -> g.oracleSql).toMap
+
+  /** What [[graft.Bench]] times: each gate's bench form, else its
+    * engine form (see [[graft.gates.Gate]]). */
+  def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.bench.getOrElse(g.run)).toMap
 }

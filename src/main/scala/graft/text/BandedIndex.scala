@@ -130,7 +130,7 @@ private[graft] object BandedIndex {
     * catalog forgets tables across sessions while the directories
     * survive, and a later saveAsTable refuses with
     * LOCATION_ALREADY_EXISTS. */
-  private def dropStale(spark: SparkSession, table: String): Unit = {
+  private[graft] def dropStale(spark: SparkSession, table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)

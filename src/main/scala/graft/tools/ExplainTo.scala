@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Write `explain("formatted")` of named benchQueries to files —
   * the r17+ optimization-evidence artifact (`plans/r17/<q>_<tag>.txt`).
@@ -12,14 +11,8 @@ object ExplainTo {
     require(args.length >= 3, "usage: ExplainTo <outDir> <tag> <query>…")
     val (outDir, tag, names) = (args(0), args(1), args.drop(2).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(cpus, cpus)
     Files.createDirectories(Paths.get(outDir))
     for (name <- names) {
       val df = graft.SparkEntry.benchQueries(name)(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-safety audit: execute named SparkEntry queries against
   * SPARK_GRAFT_SF_DIR and print the FINAL adaptive plan's join /
   * exchange skeleton — the tool that catches a statically planned
@@ -13,14 +11,8 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(cpus, cpus)
     val names = if (args.nonEmpty) args.toSeq
                 else graft.SparkEntry.benchQueries.keys.toSeq.sorted
     for (name <- names) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -37,16 +37,10 @@ object TimePipeline {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(cpus, cpus)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
+    spark.conf.set("spark.sql.files.openCostInBytes", "65536")
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -154,7 +148,7 @@ object TimePipeline {
     // sf1 and 20x super-linear). The repartition shuffle is a few MB
     // per stage; a real cluster reading a many-file TB-scale stage
     // output gets the same balance for free from the scan.
-    val fanOut = cpus.toInt * 2
+    val fanOut = cpus * 2
     var cur = docs.repartition(fanOut)
     var total = 0.0
     for (((name, f), k) <- stages.zipWithIndex) {

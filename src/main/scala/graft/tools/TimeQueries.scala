@@ -1,22 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Micro-bench: time named SparkEntry queries (args) against
   * SPARK_GRAFT_SF_DIR, printing per-run wall times. For perf triage only —
   * the official artifact comes from [[graft.Bench]]. */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus, cpus)
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
     val names = if (args.nonEmpty) args.toSeq

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Decades for the UNBOUNDED q132 operator (the gate itself is
@@ -14,14 +13,8 @@ import org.apache.spark.sql.functions._
 object TimeVideoDedup {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(cpus, cpus)
     val mkPayload = udf((seed: Long, variant: Int) => variant match {
       case 0 => graft.multimodal.Decode.encodePatternAvi(seed)
       case 1 => graft.multimodal.Decode.encodePatternAvi(seed, dupFrames = 2)
@@ -32,22 +25,16 @@ object TimeVideoDedup {
       .select(col("doc_id"))
       // thin-row fan-out: synthesis must not serialize on the single-
       // row-group test scan, and the artifact must land as many files
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .select(col("doc_id"),
         explode(array(lit(0), lit(1), lit(2), lit(3))).as("variant"))
       .select((col("doc_id") * 4 + col("variant")).as("vid_id"),
         mkPayload(col("doc_id"), col("variant")).as("payload"))
-    // epoch key = plan fingerprint + source mtime (the q130/q132
-    // discipline): a synthesis edit or in-place corpus regen must
-    // never reuse a stale artifact
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_tvd_" +
-      graft.text.Pipeline.stageFingerprint(vids).take(16) + "_" +
-      new java.io.File(s"$sfDir/documents.parquet").lastModified()
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      val t0 = System.nanoTime()
-      vids.write.mode("overwrite").parquet(dir)
-      println(f"[tvd] synth ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
+    // an epoch artifact (the q130/q132 discipline): a synthesis edit or
+    // in-place corpus regen never reuses a stale one
+    val t0 = System.nanoTime()
+    val stored = graft.gates.Fixtures.epochParquet(spark, vids, "tvd", sfDir)
+    println(f"[tvd] synth ${(System.nanoTime() - t0) / 1e9}%.1f s")
     for (r <- 1 to 3) {
       // release the previous run's tracked persists (simhashNearDups
       // trackPersists its input, which here CONTAINS the decode plan —
@@ -56,7 +43,7 @@ object TimeVideoDedup {
       graft.GraftSession.unpersistAll()
       val t0 = System.nanoTime()
       val sigs = graft.multimodal.Decode
-        .videoSignatures(spark.read.parquet(dir), "vid_id", "payload")
+        .videoSignatures(stored, "vid_id", "payload")
         .toDF()
       val pairs = graft.text.Dedup.simhashNearDups(
         sigs.where(col("vhash").isNotNull)
@@ -72,7 +59,7 @@ object TimeVideoDedup {
       graft.GraftSession.unpersistAll()
       val t0 = System.nanoTime()
       val sigs = graft.multimodal.Decode
-        .videoSignatures128(spark.read.parquet(dir), "vid_id", "payload")
+        .videoSignatures128(stored, "vid_id", "payload")
       val pairs = graft.text.Dedup.simhashNearDups128(
         sigs.where(col("simhash_lo").isNotNull),
         "vid_id", maxDistance = 7, maxBucket = 17000, multiProbe = true)

@@ -187,4 +187,77 @@ class CoverageSpec extends SparkSpec {
       GraftSession.unpersistAll()
     }
   }
+
+  test("gate registry: 133 distinct names, each with oracle SQL; the 13 " +
+       "bench overrides; a duplicate name fails at construction") {
+    val gates = SparkEntry.gates
+    assert(gates.size == 133 && gates.map(_.name).distinct.size == 133)
+    assert(gates.forall(_.oracleSql.trim.nonEmpty))
+    assert(gates.filter(_.bench.isDefined).map(_.name.takeWhile(_ != '_'))
+      .toSet == Set("q43", "q44", "q62", "q78", "q80", "q93", "q104",
+        "q105", "q123", "q127", "q130", "q132", "q133"))
+    val e = intercept[IllegalArgumentException](
+      graft.gates.Gate.distinct(gates :+ gates.head))
+    assert(e.getMessage.contains(gates.head.name))
+  }
+
+  test("epoch artifacts: an in-place dataset rewrite leaves exactly one " +
+       "live epoch per tag for that dataset, other datasets untouched") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import graft.gates.Fixtures.epochKey
+    val ds = Files.createTempDirectory("epochds").toString
+    sf("documents").write.parquet(s"$ds/documents.parquet")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def siblings(tag: String): String = {
+      val k = epochKey(tag, ds, "documents")
+      k.take(k.lastIndexOf('_') + 1)
+    }
+    // a q130 artifact of ANOTHER dataset path must survive collection
+    val other = new java.io.File(tmp,
+      "graft_" + epochKey("q130_records", ds + "_other", "documents"))
+    other.mkdirs()
+    def liveDirs(tag: String): Seq[String] =
+      tmp.list().toSeq.filter(_.startsWith("graft_" + siblings(tag)))
+    def liveTables(tag: String): Seq[String] = {
+      val wh = new java.io.File(new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+      (Option(wh.list()).map(_.toSeq).getOrElse(Nil) ++
+        spark.catalog.listTables().collect().map(_.name))
+        .filter(_.startsWith(siblings(tag)))
+        .map(_.drop(siblings(tag).length).takeWhile(_ != '_')).distinct
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    def runBoth(): Unit = {
+      val q130 = rows(SparkEntry.benchQueries("q130_crawl_clean")(spark, ds))
+      assert(q130 == rows(SparkEntry.queries("q130_crawl_clean")(spark, ds)))
+      val q105 = rows(SparkEntry.benchQueries("q105_dedup_index")(spark, ds))
+      // the same ingest filter against a freshly written index
+      val docs = spark.read.parquet(s"$ds/documents.parquet")
+      graft.text.DedupIndex.write(docs.filter(col("doc_id") % 4 < 3),
+        "doc_id", "text", "epochspec_ix")
+      assert(q105 == rows(graft.text.DedupIndex.dropDupsAgainst(
+        docs.filter(col("doc_id") % 4 === 3), "doc_id", "text",
+        "epochspec_ix", threshold = 0.5)))
+      GraftSession.unpersistAll()
+      assert(liveDirs("q130_records").size == 1)
+      assert(liveTables("q105_ix") == Seq(epochKey("q105_ix", ds, "documents")
+        .drop(siblings("q105_ix").length)))
+    }
+    runBoth()
+    val before = liveDirs("q130_records")
+    // rewrite documents.parquet in place: a third of the docs dropped
+    spark.read.parquet(s"$ds/documents.parquet")
+      .filter(col("doc_id") % 3 =!= 1).coalesce(1)
+      .write.parquet(s"$ds/rewrite.parquet")
+    org.apache.hadoop.fs.FileUtil.fullyDelete(
+      new java.io.File(s"$ds/documents.parquet"))
+    Files.move(Paths.get(s"$ds/rewrite.parquet"),
+      Paths.get(s"$ds/documents.parquet"), StandardCopyOption.ATOMIC_MOVE)
+    runBoth()
+    assert(liveDirs("q130_records") != before)
+    assert(other.exists())
+    (liveDirs("q130_records").map(new java.io.File(tmp, _)) :+ other :+
+      new java.io.File(ds)).foreach(org.apache.hadoop.fs.FileUtil.fullyDelete)
+  }
 }

@@ -29,14 +29,19 @@ def rowset(rows, cols):
     return sorted("|".join(canon(r[i]) for i in order) for r in rows)
 
 fails, passes = [], []
-for name in sorted(os.listdir(outdir)):
+# Strict about the gate set: a dump with no oracle, and an oracle with
+# no dump (Verify logs a gate that throws and writes nothing), both fail.
+dumps = {n for n in os.listdir(outdir)
+         if os.path.isdir(os.path.join(outdir, n))}
+for name in sorted(set(oracle) - dumps):
+    fails.append(f"{name}: MISSING (oracle but no dump)")
+for name in sorted(dumps):
     d = os.path.join(outdir, name)
-    if not os.path.isdir(d): continue
+    if name not in oracle:
+        fails.append(f"{name}: NO ORACLE (dump but no oracle)")
+        continue
     gotrel = con.sql(f"SELECT * FROM '{d}/*.parquet'")
     got, gotcols = gotrel.fetchall(), list(gotrel.columns)
-    if name not in oracle:
-        passes.append(f"{name}: rows-only ({len(got)} rows)")
-        continue
     gottypes = dict(zip(gotrel.columns, (str(t) for t in gotrel.types)))
     try:
         exprel = con.sql(oracle[name])
