@@ -7,7 +7,33 @@ package graft.frontend
   */
 object PigAst {
 
-  sealed trait Expr
+  sealed trait Expr {
+    /** This node with `f` applied to every direct child expression. The
+      * match lists every constructor, so the compiler warns here about a
+      * new one until its children are added (FrontendSpec checks too). */
+    def mapChildren(f: Expr => Expr): Expr = this match {
+      case _: Lit | _: ColRef | _: PosRef | Star => this
+      case Deref(e, fl)      => Deref(f(e), fl)
+      case MapLookup(e, k)   => MapLookup(f(e), k)
+      case FuncCall(n, as)   => FuncCall(n, as.map(f))
+      case BinOp(op, l, r)   => BinOp(op, f(l), f(r))
+      case Neg(e)            => Neg(f(e))
+      case Not(e)            => Not(f(e))
+      case BinCond(c, t, e)  => BinCond(f(c), f(t), f(e))
+      case IsNull(e, neg)    => IsNull(f(e), neg)
+      case InExpr(e, vs)     => InExpr(f(e), vs.map(f))
+      case CastExpr(t, e)    => CastExpr(t, f(e))
+      case Matches(e, p)     => Matches(f(e), p)
+      case FlattenExpr(e)    => FlattenExpr(f(e))
+      case DerefMulti(e, fs) => DerefMulti(f(e), fs)
+      case RangeProj(a, b)   => RangeProj(a.map(f), b.map(f))
+    }
+
+    /** Top-down rewrite: where `pf` matches, its result replaces the node
+      * and is not descended into; elsewhere the children are rewritten. */
+    def rewrite(pf: PartialFunction[Expr, Expr]): Expr =
+      pf.applyOrElse(this, (x: Expr) => x.mapChildren(_.rewrite(pf)))
+  }
   case class Lit(v: Any) extends Expr
   case class ColRef(name: String) extends Expr            // name or a::b
   case class PosRef(i: Int) extends Expr                  // $n

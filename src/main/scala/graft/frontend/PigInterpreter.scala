@@ -1,6 +1,6 @@
 package graft.frontend
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -197,32 +197,6 @@ final class PigRunner(val spark: SparkSession) {
     case _ => Seq.empty
   }
 
-  /** Structural traversal rewriting projection LEAVES (ColRef/PosRef)
-    * via `leaf`; every composite node recurses, including InExpr
-    * values and multi-derefs. Shared by the join fold's collision
-    * renamer and PARTITION BY's alias qualifier so the two can never
-    * drift on node coverage. */
-  private def rewriteRefs(e: Expr)(leaf: Expr => Expr): Expr = e match {
-    case _: ColRef | _: PosRef => leaf(e)
-    case Deref(b, f)       => Deref(rewriteRefs(b)(leaf), f)
-    case DerefMulti(b, fs) => DerefMulti(rewriteRefs(b)(leaf), fs)
-    case MapLookup(m, k)   => MapLookup(rewriteRefs(m)(leaf), k)
-    case FuncCall(nm, as)  => FuncCall(nm, as.map(rewriteRefs(_)(leaf)))
-    case BinOp(op, l, r)   => BinOp(op, rewriteRefs(l)(leaf),
-                                    rewriteRefs(r)(leaf))
-    case Neg(v)            => Neg(rewriteRefs(v)(leaf))
-    case Not(v)            => Not(rewriteRefs(v)(leaf))
-    case BinCond(c, t, f)  => BinCond(rewriteRefs(c)(leaf),
-                               rewriteRefs(t)(leaf), rewriteRefs(f)(leaf))
-    case IsNull(v, neg)    => IsNull(rewriteRefs(v)(leaf), neg)
-    case InExpr(v, vals)   => InExpr(rewriteRefs(v)(leaf),
-                               vals.map(rewriteRefs(_)(leaf)))
-    case CastExpr(t, v)    => CastExpr(t, rewriteRefs(v)(leaf))
-    case Matches(v, p)     => Matches(rewriteRefs(v)(leaf), p)
-    case FlattenExpr(v)    => FlattenExpr(rewriteRefs(v)(leaf))
-    case other             => other
-  }
-
   /** `PARTITION BY cls` — route the inner op's result through the user's
     * Hadoop Partitioner (see [[graft.functions.CustomPartitioner]]). The
     * routing key mirrors the reference's map-output key per operator:
@@ -258,14 +232,13 @@ final class PigRunner(val spark: SparkSession) {
         try {
           // qualify refs as alias::name so each side's key resolves to
           // ITS post-rename column in the join output
-          def qualify(alias: String, e: Expr): Expr = rewriteRefs(e) {
+          def qualify(alias: String, e: Expr): Expr = e.rewrite {
             case ColRef(n) if !n.contains("::") => ColRef(s"$alias::$n")
             case _: PosRef =>
               // a positional ref would compile against the JOIN output's
               // positions, silently binding the wrong column — decline
               throw new IllegalArgumentException(
                 "positional join key under PARTITION BY outer join")
-            case other => other
           }
           val perPos: Seq[Column] =
             if (joinType == "inner")
@@ -485,18 +458,11 @@ final class PigRunner(val spark: SparkSession) {
             case (ColRef(n), _) => ColRef(n.split("::").last)
             case (_, i)         => ColRef(s"d$i")
           }
-          def rwc(x: Expr): Expr = x match {
-            case ColRef("cube")           => ColRef(m.bagName)
-            case ColRef("group")          => FuncCall("TOTUPLE", dimRefs)
+          e.rewrite {
+            case ColRef("cube")  => ColRef(m.bagName)
+            case ColRef("group") => FuncCall("TOTUPLE", dimRefs)
             case d @ Deref(ColRef("group"), _) => d // group.dim: rw handles
-            case Deref(b, f)              => Deref(rwc(b), f)
-            case FuncCall(n, as)          => FuncCall(n, as.map(rwc))
-            case BinOp(o, l, rr)          => BinOp(o, rwc(l), rwc(rr))
-            case FlattenExpr(v)           => FlattenExpr(rwc(v))
-            case CastExpr(t, v)           => CastExpr(t, rwc(v))
-            case other                    => other
           }
-          rwc(e)
         case _ => e
       }
       val gens2 = gens.map(g =>
@@ -1078,32 +1044,16 @@ final class PigRunner(val spark: SparkSession) {
   /** Scalar projection (reference: ScalarExpression.java + ReadScalars —
     * `other_alias.field` used as a scalar; errors if the relation has more
     * than one row). Rewrites the AST reference to the materialized value. */
-  private def resolveScalars(e: Expr, df: DataFrame): Expr = {
-    def rw(x: Expr): Expr = x match {
-      case Deref(ColRef(n), f) if env.contains(n) && !df.columns.contains(n) =>
-        // positional scalar read: other_alias.$1
-        val c = if (f.startsWith("$")) col(env(n).df.columns(f.drop(1).toInt))
-                else col(f)
-        val rows = env(n).df.select(c).limit(2).collect()
-        require(rows.length <= 1,
-          s"scalar $n.$f: relation has more than one row " +
-          "(reference: ReadScalars errors only for >1; empty → null)")
-        Lit(rows.headOption.map(_.get(0)).orNull)
-      case Deref(b, f)      => Deref(rw(b), f)
-      case MapLookup(m, k)  => MapLookup(rw(m), k)
-      case FuncCall(nm, as) => FuncCall(nm, as.map(rw))
-      case BinOp(op, l, r)  => BinOp(op, rw(l), rw(r))
-      case Neg(v)           => Neg(rw(v))
-      case Not(v)           => Not(rw(v))
-      case BinCond(c, t, f) => BinCond(rw(c), rw(t), rw(f))
-      case IsNull(v, neg)   => IsNull(rw(v), neg)
-      case InExpr(v, vals)  => InExpr(rw(v), vals.map(rw))
-      case CastExpr(t, v)   => CastExpr(t, rw(v))
-      case Matches(v, p)    => Matches(rw(v), p)
-      case FlattenExpr(v)   => FlattenExpr(rw(v))
-      case other            => other
-    }
-    rw(e)
+  private def resolveScalars(e: Expr, df: DataFrame): Expr = e.rewrite {
+    case Deref(ColRef(n), f) if env.contains(n) && !df.columns.contains(n) =>
+      // positional scalar read: other_alias.$1
+      val c = if (f.startsWith("$")) col(env(n).df.columns(f.drop(1).toInt))
+              else col(f)
+      val rows = env(n).df.select(c).limit(2).collect()
+      require(rows.length <= 1,
+        s"scalar $n.$f: relation has more than one row " +
+        "(reference: ReadScalars errors only for >1; empty → null)")
+      Lit(rows.headOption.map(_.get(0)).orNull)
   }
 
   private def groupKey(keys: Seq[Expr], df: DataFrame): Column = keys match {
@@ -1313,12 +1263,11 @@ final class PigRunner(val spark: SparkSession) {
       // rewrite ALL column refs inside right-side key expressions to their
       // post-rename spellings (a bare-ColRef-only special case would break
       // expression keys like UPPER(k) when k collided)
-      def renameRefs(e: Expr): Expr = rewriteRefs(e) {
+      def renameRefs(e: Expr): Expr = e.rewrite {
         case ColRef(n) =>
           val resolved = resolve(n, r0)
           ColRef(if (collisions.contains(resolved)) s"${in}__$resolved"
                  else resolved)
-        case other => other
       }
       val rKeys = keys.map(e => compile(renameRefs(e), rdf))
       val cond = accKeys.zip(rKeys).map { case (a, b) => a === b }
@@ -1406,15 +1355,10 @@ final class PigRunner(val spark: SparkSession) {
       def litNum(e: Expr): Int = e match {
         case Lit(n: Int)       => n
         case Lit(n: Long)      => n.toInt
-        case Neg(Lit(n: Int))  => -n
-        case Neg(Lit(n: Long)) => -n.toInt
         case o => bad(s"expected an integer literal, got $o")
       }
       def litAny(e: Expr): Any = e match {
         case Lit(v) => v
-        case Neg(Lit(n: Int)) => -n
-        case Neg(Lit(n: Long)) => -n
-        case Neg(Lit(n: Double)) => -n
         case o => bad(s"expected a literal, got $o")
       }
       // one output column per Over call (Stitch zips any number of bags —
@@ -1612,7 +1556,7 @@ final class PigRunner(val spark: SparkSession) {
       val c = op match {
         case InnerFilter(src, cond) =>
           val (bag, st, wrapped) = bagAsTuples(src)
-          val kept = filter(bag, t => compileLambda(cond, t, st))
+          val kept = filter(bag, lambda(cond, st))
           wrapped match {
             case Some(f) =>
               nestedElem += alias -> f
@@ -1630,8 +1574,7 @@ final class PigRunner(val spark: SparkSession) {
           val keyFns: Seq[Column => Column] = keys.flatMap {
             case (Star, _) =>
               st.fieldNames.toSeq.map(f => (t: Column) => t.getField(f))
-            case (e, _) =>
-              Seq((t: Column) => compileLambda(e, t, st))
+            case (e, _) => Seq(lambda(e, st))
           }
           val keyed = transform(bag, t => struct(
             (t.as("__e") +: keyFns.zipWithIndex.map { case (f, i) =>
@@ -1650,10 +1593,10 @@ final class PigRunner(val spark: SparkSession) {
           typeOf(bagOf(src), df) match {
             case ArrayType(_: StructType, _) =>
               val st = elemSchema(src)
+              val keyFns = keys.map { case (e, asc) => (lambda(e, st), asc) }
               array_sort(bagOf(src), (l, p) =>
-                keys.foldRight(lit(0)) { case ((e, asc), acc) =>
-                  val lf = compileLambda(e, l, st)
-                  val rf = compileLambda(e, p, st)
+                keyFns.foldRight(lit(0)) { case ((key, asc), acc) =>
+                  val (lf, rf) = (key(l), key(p))
                   val (a, b) = if (asc) (-1, 1) else (1, -1)
                   // nulls order FIRST ascending (Pig's null rule) — a
                   // null treated as tying with everything is
@@ -1670,64 +1613,27 @@ final class PigRunner(val spark: SparkSession) {
             case other => throw new IllegalArgumentException(
               s"nested ORDER over non-bag $src: $other")
           }
-        case InnerExpr(e) =>
-          // per-row let binding; nested aliases resolve through the
-          // block's bindings (a bag-projection let yields an array col)
-          def cn(x: Expr): Column = x match {
-            case ColRef(n) if nested.contains(n) => nested(n)
-            case Deref(ColRef(n), f) if nested.contains(n) =>
-              nested(n).getField(f)
-            case FuncCall(fn, as) => callFunction(fn, as, df, nested)
-            case BinOp(op2, l, p) =>
-              val (ca, cb) = (cn(l), cn(p))
-              op2 match {
-                case "+" => ca + cb; case "-" => ca - cb
-                case "*" => ca * cb; case "/" => ca / cb
-                case "%" => ca % cb
-                case "==" => ca === cb; case "!=" => ca =!= cb
-                case "<" => ca < cb; case "<=" => ca <= cb
-                case ">" => ca > cb; case ">=" => ca >= cb
-                case "and" => ca && cb; case "or" => ca || cb
-              }
-            case Neg(v) => -cn(v)
-            case Not(v) => !cn(v)
-            case BinCond(c2, t2, f2) =>
-              when(cn(c2), cn(t2)).otherwise(cn(f2))
-            case CastExpr(t2, v) => cn(v).cast(pigType(t2))
-            case other => compile(other, df)
-          }
-          cn(e)
+        // per-row let binding; nested aliases resolve through the
+        // block's bindings (a bag-projection let yields an array col)
+        case InnerExpr(e) => compile(e, df, nested)
         case InnerLimit(src, n)   => slice(bagOf(src), 1, n.toInt)
         case InnerLimitExpr(src, e) =>
           // per-GROUP scalar (e.g. COUNT(o) * 0.1 → top-10% of each
           // group); nested aliases resolve through the block's bindings
-          def cn(x: Expr): Column = x match {
-            case Lit(v) => lit(v)
-            case FuncCall(fn, as) => callFunction(fn, as, df, nested)
-            case BinOp(op, l, p) =>
-              val (a, b) = (cn(l), cn(p))
-              op match {
-                case "+" => a + b; case "-" => a - b; case "*" => a * b
-                case "/" => a / b; case "%" => a % b
-                case other => throw new IllegalArgumentException(
-                  s"unsupported operator $other in nested LIMIT")
-              }
-            case Neg(v) => -cn(v)
-            case CastExpr(t, v) => cn(v).cast(pigType(t))
-            case other => compile(other, df)
-          }
-          slice(bagOf(src), lit(1), greatest(lit(0), cn(e).cast(IntegerType)))
+          slice(bagOf(src), lit(1), greatest(lit(0),
+            compile(e, df, nested).cast(IntegerType)))
         case InnerDistinct(src)   => array_distinct(bagOf(src))
         case InnerForeach(src, fgens) => // per-element projection
           val (bag, st, _) = bagAsTuples(src)
+          val fields = fgens.zipWithIndex.map { case (g, i) =>
+            (lambda(g.expr, st), g.alias.getOrElse(g.expr match {
+              case ColRef(n)   => n.split("::").last
+              case Deref(_, f) => f
+              case _           => s"c$i"
+            }))
+          }
           transform(bag, t =>
-            struct(fgens.zipWithIndex.map { case (g, i) =>
-              compileLambda(g.expr, t, st).as(g.alias.getOrElse(g.expr match {
-                case ColRef(n)   => n.split("::").last
-                case Deref(_, f) => f
-                case _           => s"c$i"
-              }))
-            }: _*))
+            struct(fields.map { case (f, n) => f(t).as(n) }: _*))
         case InnerCross(srcs) => // cartesian of the bags, per group
           require(srcs.size >= 2, "nested CROSS needs two or more bags")
           def fieldsOf(c: Column): StructType = typeOf(c, df) match {
@@ -1769,120 +1675,20 @@ final class PigRunner(val spark: SparkSession) {
     foreach(r, gens, nested)
   }
 
-  /** Expression compile inside a bag lambda: column refs resolve to
-    * fields of the lambda element. */
-  private def compileLambda(e: Expr, t: Column, st: StructType): Column = e match {
-    case Lit(null) => lit(null)
-    case Lit(v)    => lit(v)
-    case ColRef(n) => t.getField(n.split("::").last)
-    case PosRef(i) => t.getField(st.fieldNames(i))
-    case Star      => t // ORDER bag BY * compares whole tuples
-    // positional deref of a tuple FIELD: t.$n resolves against the
-    // field's own struct schema
-    case Deref(ColRef(n), f) if f.startsWith("$") =>
-      val fld = n.split("::").last
-      st(fld).dataType match {
-        case inner: StructType =>
-          t.getField(fld).getField(inner.fieldNames(f.drop(1).toInt))
-        case other => throw new IllegalArgumentException(
-          s"positional deref $f needs a tuple, got $other")
-      }
-    case Deref(b, f)     => compileLambda(b, t, st).getField(f)
-    case MapLookup(m, k) => compileLambda(m, t, st).getItem(k)
-    case Neg(x) => -compileLambda(x, t, st)
-    case Not(x) => !compileLambda(x, t, st)
-    case BinOp(op, l, r) =>
-      val (a, b) = (compileLambda(l, t, st), compileLambda(r, t, st))
-      op match {
-        case "+" => a + b;   case "-" => a - b
-        case "*" => a * b;   case "/" => a / b
-        case "%" => a % b
-        case "==" => a === b; case "!=" => a =!= b
-        case "<" => a < b;   case "<=" => a <= b
-        case ">" => a > b;   case ">=" => a >= b
-        case "and" => a && b; case "or" => a || b
-      }
-    case BinCond(c, x, y) =>
-      when(compileLambda(c, t, st), compileLambda(x, t, st))
-        .otherwise(compileLambda(y, t, st))
-    case IsNull(x, neg) =>
-      val c = compileLambda(x, t, st); if (neg) c.isNotNull else c.isNull
-    case InExpr(x, vals) =>
-      compileLambda(x, t, st).isin(vals.map {
-        case Lit(v) => v
-        case o => throw new IllegalArgumentException(s"IN needs literals: $o")
-      }: _*)
-    case CastExpr(ty, x) => compileLambda(x, t, st).cast(pigType(ty))
-    case Matches(x, p)   => Builtins.MATCHES(compileLambda(x, t, st), p)
-    case FuncCall(name, args) => // scalar subset usable per bag element
-      def ca(i: Int) = compileLambda(args(i), t, st)
-      name match {
-        case "UPPER"   => upper(ca(0))
-        case "LOWER"   => lower(ca(0))
-        case "TRIM"    => trim(ca(0))
-        case "CONCAT"  => concat(args.indices.map(ca): _*)
-        case "SUBSTRING" =>
-          Builtins.SUBSTRING(ca(0), asInt(args(1)), asInt(args(2)))
-        case "ABS"     => abs(ca(0))
-        case "ROUND"   => Builtins.ROUND(ca(0))
-        case "ROUND_TO" => Builtins.ROUND_TO(ca(0), asInt(args(1)))
-        case "FLOOR"   => floor(ca(0))
-        case "CEIL"    => ceil(ca(0))
-        case "SQRT"    => sqrt(ca(0))
-        case other => throw new IllegalArgumentException(
-          s"unsupported function in nested lambda: $other")
-      }
-    case other => throw new IllegalArgumentException(
-      s"unsupported expression in nested block: $other")
+  /** A bag-element expression as a higher-order-function body: compiled
+    * once over an empty frame with the element schema `st` (so the
+    * element's fields are its columns), then bound to each lambda
+    * variable it is applied to (an ORDER comparator binds both sides). */
+  private def lambda(e: Expr, st: StructType): Column => Column = {
+    val c = compile(e,
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), st))
+    t => org.apache.spark.sql.graft.bridge.bindFields(c, t)
   }
 
   // -------------------------------------------------------------- FOREACH
   private def foreach(r: Relation, gens: Seq[GenItem],
                       nested: Map[String, Column] = Map.empty): Relation = {
     val df = r.df
-    /** Does an expression reference a nested-block alias anywhere? */
-    def refsNested(e: Expr): Boolean = nested.nonEmpty && (e match {
-      case ColRef(n)        => nested.contains(n)
-      case Deref(x, _)      => refsNested(x)
-      case DerefMulti(x, _) => refsNested(x)
-      case CastExpr(_, x)   => refsNested(x)
-      case FuncCall(_, as)  => as.exists(refsNested)
-      case BinOp(_, l, rr)  => refsNested(l) || refsNested(rr)
-      case Neg(x)           => refsNested(x)
-      case Not(x)           => refsNested(x)
-      case BinCond(c, t, f) => Seq(c, t, f).exists(refsNested)
-      case _                => false
-    })
-    def comp(e: Expr): Column = e match {
-      case ColRef(n) if nested.contains(n) => nested(n)
-      case Deref(ColRef(n), f) if nested.contains(n) => nested(n).getField(f)
-      case DerefMulti(ColRef(n), fs) if nested.contains(n) =>
-        transform(nested(n), t => struct(fs.map(f => t.getField(f).as(f)): _*))
-      case FuncCall(fn, args) =>
-        // route nested-alias args through the nested map
-        callFunction(fn, args, df, nested)
-      // wrappers over nested-alias expressions recurse HERE, not into
-      // the nested-blind compile ((int)AVG(ts) — PigMix L15)
-      case CastExpr(t, x) if refsNested(x) =>
-        castWithLoadCaster(comp(x), x, pigType(t), df)
-      case Neg(x) if refsNested(x) => -comp(x)
-      case Not(x) if refsNested(x) => !comp(x)
-      case BinCond(c, t, f) if refsNested(e) =>
-        when(comp(c), comp(t)).otherwise(comp(f))
-      case BinOp(op, l, rr) if refsNested(e) =>
-        val (a, b) = (comp(l), comp(rr))
-        op match {
-          case "+" => a + b; case "-" => a - b; case "*" => a * b
-          case "/" => a / b; case "%" => a % b
-          case "==" => a === b; case "!=" => a =!= b
-          case "<" => a < b; case "<=" => a <= b
-          case ">" => a > b; case ">=" => a >= b
-          case "and" => a && b; case "or" => a || b
-          case other => throw new IllegalArgumentException(
-            s"unsupported operator $other over a nested alias")
-        }
-      case other => compile(other, df)
-    }
     var flattens = Seq.empty[(String, Option[String], Seq[String], Option[String])] // tmp -> alias(es), qualifier
     // AUTO-derived names can collide (`generate mt.$0, mb.$0` both
     // derive "$0"); the reference leaves such fields alias-less, Spark
@@ -1929,7 +1735,7 @@ final class PigRunner(val spark: SparkSession) {
           q(e)
         }
         flattens :+= ((tmp, alias, aliases, qual))
-        Seq(comp(e).as(tmp))
+        Seq(compile(e, df, nested).as(tmp))
       case (GenItem(e, alias, _), i) =>
         val n0 = alias.getOrElse(autoName(e, i, df))
         val n =
@@ -1938,7 +1744,7 @@ final class PigRunner(val spark: SparkSession) {
             while (!usedNames.add(cand)) cand += "_"
             cand
           } else { usedNames.add(n0); n0 }
-        Seq(comp(e).as(n))
+        Seq(compile(e, df, nested).as(n))
     }
     var out = Relation(df.select(cols: _*), r.name)
     // AS (a, b, …): rename the expanded fields positionally
@@ -2484,10 +2290,15 @@ final class PigRunner(val spark: SparkSession) {
   private def typeOf(c: Column, df: DataFrame): DataType =
     df.select(c).schema.head.dataType
 
-  private[frontend] def compile(e: Expr, df: DataFrame): Column = e match {
+  /** The one Pig expression compiler. `nested` holds a nested FOREACH
+    * block's bindings: a nested alias resolves through it before `df`.
+    * A bag-element expression compiles through [[lambda]]. */
+  private[frontend] def compile(e: Expr, df: DataFrame,
+                                nested: Map[String, Column] = Map.empty)
+      : Column = e match {
     case Lit(null) => lit(null)
     case Lit(v)    => lit(v)
-    case ColRef(n) => col(resolve(n, df))
+    case ColRef(n) => nested.getOrElse(n, col(resolve(n, df)))
     case PosRef(i) =>
       // a positional ref past a KNOWN schema is a front-end error
       // (reference: ProjectExpression out-of-bound check, negative.conf
@@ -2505,7 +2316,7 @@ final class PigRunner(val spark: SparkSession) {
         s"Out of bound access. Trying to access non-existent column: $i")
     case Deref(b, f) if f.startsWith("$") =>
       // positional deref t.$n: resolve the field name from the schema
-      val base = compile(b, df)
+      val base = compile(b, df, nested)
       val i = f.drop(1).toInt
       typeOf(base, df) match {
         case st: StructType => base.getField(st.fieldNames(i))
@@ -2520,18 +2331,18 @@ final class PigRunner(val spark: SparkSession) {
       // a qualified field (`d::contributions`) resolves against the
       // tuple schema with the same spellings resolve() accepts: the
       // exact name, the rename-disambiguated `d__x`, then the bare `x`
-      val base = compile(b, df)
+      val base = compile(b, df, nested)
       val f2 = typeOf(base, df) match {
         case st: StructType => fieldNameIn(st, f)
         case ArrayType(st: StructType, _) => fieldNameIn(st, f)
         case _ => f
       }
       base.getField(f2)
-    case MapLookup(m, k) => compile(m, df).getItem(k)
-    case Neg(x) => -compile(x, df)
-    case Not(x) => !compile(x, df)
+    case MapLookup(m, k) => compile(m, df, nested).getItem(k)
+    case Neg(x) => -compile(x, df, nested)
+    case Not(x) => !compile(x, df, nested)
     case BinOp(op, l, r) =>
-      val (a0, b0) = (compile(l, df), compile(r, df))
+      val (a0, b0) = (compile(l, df, nested), compile(r, df, nested))
       def integral(t: DataType) = t match {
         case IntegerType | LongType | ShortType | ByteType => true
         case _ => false
@@ -2542,7 +2353,8 @@ final class PigRunner(val spark: SparkSession) {
       // inserted cast is a compile-time warning, counted once per
       // script occurrence (cmdline.conf Warning/3).
       def declaredByteArray(e: Expr): Boolean = e match {
-        case ColRef(n) => scala.util.Try(df.schema(resolve(n, df))).toOption
+        case ColRef(n) if !nested.contains(n) =>
+          scala.util.Try(df.schema(resolve(n, df))).toOption
           .exists(f => f.metadata.contains("pig_type") &&
             f.metadata.getString("pig_type") == "bytearray")
         case PosRef(i) if i >= 0 && i < df.columns.length =>
@@ -2622,12 +2434,14 @@ final class PigRunner(val spark: SparkSession) {
           || ty.startsWith("[") => Some(op0)
         case _ => None
       }
-      val (ct, cf) = (compile(t, df), compile(f, df))
+      val (ct, cf) = (compile(t, df, nested), compile(f, df, nested))
       val (ct2, cf2) = (complexCastOperand(t), complexCastOperand(f)) match {
         case (None, Some(op0)) => scala.util.Try(
-          (ct, compile(op0, df).cast(typeOf(ct, df)))).getOrElse((ct, cf))
+          (ct, compile(op0, df, nested).cast(typeOf(ct, df))))
+          .getOrElse((ct, cf))
         case (Some(op0), None) => scala.util.Try(
-          (compile(op0, df).cast(typeOf(cf, df)), cf)).getOrElse((ct, cf))
+          (compile(op0, df, nested).cast(typeOf(cf, df)), cf))
+          .getOrElse((ct, cf))
         case _ => (ct, cf)
       }
       // NO otherwise: Pig's bincond is three-valued — a NULL condition
@@ -2642,18 +2456,18 @@ final class PigRunner(val spark: SparkSession) {
       // AND stay three-valued (when/otherwise sends a null condition
       // down the false branch): EvalOnceBincond is the custom
       // expression carrying both properties.
-      val cc = compile(c, df)
+      val cc = compile(c, df, nested)
       if (graft.functions.ControlExpressions.isNondeterministic(cc))
         graft.functions.ControlExpressions.bincondOnce(cc, ct2, cf2)
       else
         when(cc, ct2).when(!cc, cf2)
     case IsNull(x, neg) =>
-      val c = compile(x, df); if (neg) c.isNotNull else c.isNull
+      val c = compile(x, df, nested); if (neg) c.isNotNull else c.isNull
     case InExpr(x, vals) =>
-      compile(x, df).isin(vals.map { case Lit(v) => v
+      compile(x, df, nested).isin(vals.map { case Lit(v) => v
         case other => throw new IllegalArgumentException(s"IN needs literals, got $other") }: _*)
     case CastExpr(t, x) =>
-      val src = compile(x, df)
+      val src = compile(x, df, nested)
       val out = castWithLoadCaster(src, x, pigType(t), df)
       // a text→scalar conversion that nulls a non-null input counts a
       // FIELD_DISCARDED_TYPE_CONVERSION_FAILED warning per row
@@ -2669,13 +2483,13 @@ final class PigRunner(val spark: SparkSession) {
         graft.functions.Warnings.warnIf(out, src.isNotNull && out.isNull,
           warnings.acc("FIELD_DISCARDED_TYPE_CONVERSION_FAILED"))
       else out
-    case Matches(x, p)  => Builtins.MATCHES(compile(x, df), p)
+    case Matches(x, p)  => Builtins.MATCHES(compile(x, df, nested), p)
     case Star => struct(df.columns.map(col).toIndexedSeq: _*)
-    case FlattenExpr(x) => compile(x, df) // alone handled in foreach
-    case FuncCall(name, args) => callFunction(name, args, df)
+    case FlattenExpr(x) => compile(x, df, nested) // alone handled in foreach
+    case FuncCall(name, args) => callFunction(name, args, df, nested)
     // b.(f, g): project several fields of a bag (array<struct>) or tuple
     case DerefMulti(b, fs) =>
-      val base = compile(b, df)
+      val base = compile(b, df, nested)
       typeOf(base, df) match {
         case ArrayType(_: StructType, _) =>
           transform(base, t => struct(fs.map(f => t.getField(f).as(f)): _*))
@@ -2703,19 +2517,10 @@ final class PigRunner(val spark: SparkSession) {
     * null rules (§1.5: aggregates skip nulls, COUNT skips null first
     * field) are applied via a filter before the fold. */
   private def callFunction(name: String, args: Seq[Expr], df: DataFrame,
-                           nested: Map[String, Column] = Map.empty): Column = {
-    def comp(e: Expr): Column = e match {
-      case ColRef(n) if nested.contains(n) => nested(n)
-      case Deref(ColRef(n), f) if nested.contains(n) => nested(n).getField(f)
-      case DerefMulti(ColRef(n), fs) if nested.contains(n) =>
-        transform(nested(n), t => struct(fs.map(f => t.getField(f).as(f)): _*))
-      // nested calls keep the block's bindings visible:
-      // SIZE(DIFF(n.f, innerAlias.f)) must resolve innerAlias
-      case FuncCall(n2, as2) if nested.nonEmpty =>
-        callFunction(n2, as2, df, nested)
-      case other => compile(other, df)
-    }
-    def c0 = comp(args.head)
+                           nested: Map[String, Column]): Column = {
+    // arguments compile in the caller's scope, nested bindings included
+    def arg(e: Expr): Column = compile(e, df, nested)
+    def c0 = arg(args.head)
     def nonNull(c: Column) = filter(c, x => x.isNotNull)
     // a DELIBERATELY user-registered UDF overrides the engine's builtin
     // of the same name (the reference's function registry wins over its
@@ -2723,14 +2528,14 @@ final class PigRunner(val spark: SparkSession) {
     // registry first); builtins below only see names the user left alone
     if (graft.functions.UdfSurface.isUserRegistered(name) &&
         df.sparkSession.catalog.functionExists(name.toLowerCase))
-      return call_udf(name.toLowerCase, args.map(comp): _*)
+      return call_udf(name.toLowerCase, args.map(arg): _*)
     // a REGISTER'd scripting function likewise wins over a same-named
     // builtin (the reference's StreamingPythonUDFs/2 calls a python
     // `concat` that shadows CONCAT) — bare names only get here when a
     // global-namespace registration exists in THIS script session
     if (pyRegistry.isRegistered(name))
       return graft.functions.PyUdfs
-        .columnFor(df.sparkSession, pyRegistry, name, args.map(comp)).get
+        .columnFor(df.sparkSession, pyRegistry, name, args.map(arg)).get
     name match {
       case "COUNT" =>
         typeOf(c0, df) match {
@@ -2761,9 +2566,9 @@ final class PigRunner(val spark: SparkSession) {
       // 1-arg = Pig aggregate over a bag; 2-arg = piggybank math.MIN/MAX
       // (Math.min/max twins)
       case "MIN" =>
-        if (args.size == 2) least(c0, comp(args(1))) else array_min(c0)
+        if (args.size == 2) least(c0, arg(args(1))) else array_min(c0)
       case "MAX" =>
-        if (args.size == 2) greatest(c0, comp(args(1))) else array_max(c0)
+        if (args.size == 2) greatest(c0, arg(args(1))) else array_max(c0)
       // bonus builtin: on a MATERIALIZED bag the exact count is free
       // (the elements are already in memory), so the un-fused path
       // returns it — HLL's approximation only buys anything when it
@@ -2792,7 +2597,7 @@ final class PigRunner(val spark: SparkSession) {
           case st: StructType => when(c0.isNotNull, lit(st.size))
           case _ => when(c0.isNotNull, lit(1))
         }
-      case "CONCAT" => concat(args.map(comp): _*)
+      case "CONCAT" => concat(args.map(arg): _*)
       case "UPPER" => upper(c0)
       case "LOWER" => lower(c0)
       case "TRIM" => trim(c0)
@@ -2804,7 +2609,7 @@ final class PigRunner(val spark: SparkSession) {
       case "LAST_INDEX_OF" => Builtins.LAST_INDEX_OF(c0, asStr(args(1)))
       case "STARTSWITH" => Builtins.STARTSWITH(c0, asStr(args(1)))
       case "ENDSWITH" => Builtins.ENDSWITH(c0, asStr(args(1)))
-      case "EQUALSIGNORECASE" => Builtins.EqualsIgnoreCase(c0, comp(args(1)))
+      case "EQUALSIGNORECASE" => Builtins.EqualsIgnoreCase(c0, arg(args(1)))
       case "REGEX_EXTRACT" => Builtins.REGEX_EXTRACT(c0, asStr(args(1)), asInt(args(2)))
       // STRSPLIT(src[, regex[, limit]]) — regex defaults to '\s'
       // (STRSPLIT.java:65); limit follows Java String.split: positive
@@ -2817,10 +2622,6 @@ final class PigRunner(val spark: SparkSession) {
           case Lit(0) => Builtins.STRSPLIT(c0, asStr(args(1)))
           case Lit(i: Int) => split(c0, asStr(args(1)), i)
           case Lit(l: Long) if l != 0 => split(c0, asStr(args(1)), l.toInt)
-          // the parser produces Neg(Lit(n)) for a -n literal; negative
-          // limit = Java keep-all semantics
-          case Neg(Lit(i: Int)) => split(c0, asStr(args(1)), -i)
-          case Neg(Lit(l: Long)) => split(c0, asStr(args(1)), -l.toInt)
           case other => throw new IllegalArgumentException(
             s"STRSPLIT limit must be an int literal, got $other")
         }
@@ -2841,7 +2642,7 @@ final class PigRunner(val spark: SparkSession) {
       case "MEANTOKENLENGTH"   => graft.text.TextAnalysis.meanTokenLength(c0)
       case "DUPLINERATIO"      => graft.text.TextAnalysis.dupLineRatio(c0)
       case "DUPLINECHARRATIO"  => graft.text.TextAnalysis.dupLineCharRatio(c0)
-      case "SPRINTF" => format_string(asStr(args.head), args.tail.map(comp): _*)
+      case "SPRINTF" => format_string(asStr(args.head), args.tail.map(arg): _*)
       case "LCFIRST" => Builtins.LCFIRST(c0)
       case "UCFIRST" => Builtins.UCFIRST(c0)
       case "ABS" => abs(c0)
@@ -2864,7 +2665,7 @@ final class PigRunner(val spark: SparkSession) {
       case "COSH" => cosh(c0)
       case "TANH" => tanh(c0)
       case "RANDOM" => rand()
-      case "TOTUPLE" => struct(args.map(comp): _*)
+      case "TOTUPLE" => struct(args.map(arg): _*)
       case "TOBAG" =>
         // reference TOBAG.java: tuple inputs join the bag AS-IS; scalars
         // are wrapped in a 1-field tuple. Pig bags hold HETEROGENEOUS
@@ -2872,7 +2673,7 @@ final class PigRunner(val spark: SparkSession) {
         // cannot, so tuples conform to the max arity — shorter tuples
         // null-pad, each position unifies to its common type (string
         // when mixed), names from the first tuple
-        val cs = args.map(comp)
+        val cs = args.map(arg)
         val types = cs.map(typeOf(_, df))
         val structs = types.collect { case st: StructType => st }
         if (structs.isEmpty) array(cs.map(c => struct(c.as("t0"))): _*)
@@ -2909,7 +2710,7 @@ final class PigRunner(val spark: SparkSession) {
             s"TOMAP over one argument needs a bag of 2-field tuples, " +
             s"got $other")
         }
-      case "TOMAP" => Builtins.TOMAP(args.map(comp): _*)
+      case "TOMAP" => Builtins.TOMAP(args.map(arg): _*)
       case "BAGTOSTRING" =>
         // default delimiter is '_' (BagToString.java:39)
         Builtins.BagToString(c0,
@@ -2922,16 +2723,16 @@ final class PigRunner(val spark: SparkSession) {
       // native Hive xpath functions (codegen'd, no JDK DOM per row).
       // XPath returns the first matching node's text; XPathAll a bag.
       case "XPATH" =>
-        call_function("xpath_string", c0, comp(args(1)))
+        call_function("xpath_string", c0, arg(args(1)))
       case "XPATHALL" =>
-        transform(call_function("xpath", c0, comp(args(1))),
+        transform(call_function("xpath", c0, arg(args(1))),
           s => struct(s.as("value")))
-      case "DIFF" => Builtins.DIFF(c0, comp(args(1)))
-      case "SUBTRACT" => Builtins.SUBTRACT(c0, comp(args(1)))
+      case "DIFF" => Builtins.DIFF(c0, arg(args(1)))
+      case "SUBTRACT" => Builtins.SUBTRACT(c0, arg(args(1)))
       case "DISTINCT" => array_distinct(c0)
       case "TOP" =>
         // TOP(n, fieldIdxOrName, bag)
-        val bag = comp(args(2))
+        val bag = arg(args(2))
         val fieldName = args(1) match {
           case Lit(i: Int) =>
             typeOf(bag, df) match {
@@ -2974,14 +2775,14 @@ final class PigRunner(val spark: SparkSession) {
                   .matcher("").groupCount()
         Builtins.REGEX_EXTRACT_ALL(c0, pat, n)
       case "REGEX_SEARCH" => Builtins.REGEX_SEARCH(c0, asStr(args(1)))
-      case "SECONDSBETWEEN" => Builtins.SecondsBetween(c0, comp(args(1)))
-      case "MINUTESBETWEEN" => Builtins.MinutesBetween(c0, comp(args(1)))
-      case "HOURSBETWEEN" => Builtins.HoursBetween(c0, comp(args(1)))
-      case "WEEKSBETWEEN" => Builtins.WeeksBetween(c0, comp(args(1)))
-      case "MONTHSBETWEEN" => Builtins.MonthsBetween(c0, comp(args(1)))
-      case "YEARSBETWEEN" => Builtins.YearsBetween(c0, comp(args(1)))
+      case "SECONDSBETWEEN" => Builtins.SecondsBetween(c0, arg(args(1)))
+      case "MINUTESBETWEEN" => Builtins.MinutesBetween(c0, arg(args(1)))
+      case "HOURSBETWEEN" => Builtins.HoursBetween(c0, arg(args(1)))
+      case "WEEKSBETWEEN" => Builtins.WeeksBetween(c0, arg(args(1)))
+      case "MONTHSBETWEEN" => Builtins.MonthsBetween(c0, arg(args(1)))
+      case "YEARSBETWEEN" => Builtins.YearsBetween(c0, arg(args(1)))
       case "MILLISECONDSBETWEEN" =>
-        Builtins.MilliSecondsBetween(c0, comp(args(1)))
+        Builtins.MilliSecondsBetween(c0, arg(args(1)))
       case "GETYEAR" => Builtins.GetYear(c0)
       case "GETMONTH" => Builtins.GetMonth(c0)
       case "GETDAY" => Builtins.GetDay(c0)
@@ -2992,7 +2793,7 @@ final class PigRunner(val spark: SparkSession) {
       case "GETMILLISECOND" => Builtins.GetMilliSecond(c0)
       case "GETWEEKYEAR" => Builtins.GetWeekYear(c0)
       case "TOMILLISECONDS" => Builtins.ToMilliSeconds(c0)
-      case "DAYSBETWEEN" => Builtins.DaysBetween(c0, comp(args(1)))
+      case "DAYSBETWEEN" => Builtins.DaysBetween(c0, arg(args(1)))
       case "ADDDURATION" => Builtins.AddDuration(c0, asStr(args(1)))
       case "SUBTRACTDURATION" => Builtins.SubtractDuration(c0, asStr(args(1)))
       case "CURRENTTIME" => current_timestamp()
@@ -3002,18 +2803,18 @@ final class PigRunner(val spark: SparkSession) {
       case "REVERSE" => reverse(c0)
       case "LENGTH" => length(c0)
       case "HASHFNV" =>
-        if (args.size >= 2) Builtins.HASHFNV(c0, comp(args(1)))
+        if (args.size >= 2) Builtins.HASHFNV(c0, arg(args(1)))
         else Builtins.HASHFNV(c0)
       case "STUFF" =>
-        Builtins.STUFF(c0, comp(args(1)), comp(args(2)), comp(args(3)))
-      case "REPLACE_MULTI" => Builtins.REPLACE_MULTI(c0, comp(args(1)))
+        Builtins.STUFF(c0, arg(args(1)), arg(args(2)), arg(args(3)))
+      case "REPLACE_MULTI" => Builtins.REPLACE_MULTI(c0, arg(args(1)))
       case "ISINT" => Builtins.ISINT(c0)
       case "ISLONG" => Builtins.ISLONG(c0)
       case "ISFLOAT" => Builtins.ISFLOAT(c0)
       case "ISDOUBLE" => Builtins.ISDOUBLE(c0)
       case "ISNUMERIC" => Builtins.ISNUMERIC(c0)
-      case "DECODE" => Builtins.DECODE(c0, args.tail.map(comp))
-      case "BIN" => Builtins.BIN(c0, args.tail.map(comp))
+      case "DECODE" => Builtins.DECODE(c0, args.tail.map(arg))
+      case "BIN" => Builtins.BIN(c0, args.tail.map(arg))
       case "ISOTOUNIX" => Builtins.ISOTOUNIX(c0)
       case "UNIXTOISO" => Builtins.UNIXTOISO(c0)
       case "CUSTOMFORMATTOISO" =>
@@ -3026,18 +2827,18 @@ final class PigRunner(val spark: SparkSession) {
       case "ISOTOMINUTE" => Builtins.isoTruncate("minute")(c0)
       case "ISOTOSECOND" => Builtins.isoTruncate("second")(c0)
       case "ISOSECONDSBETWEEN" =>
-        Builtins.SecondsBetween(to_timestamp(c0), to_timestamp(comp(args(1))))
+        Builtins.SecondsBetween(to_timestamp(c0), to_timestamp(arg(args(1))))
       case "ISOMINUTESBETWEEN" =>
-        Builtins.MinutesBetween(to_timestamp(c0), to_timestamp(comp(args(1))))
+        Builtins.MinutesBetween(to_timestamp(c0), to_timestamp(arg(args(1))))
       case "ISOHOURSBETWEEN" =>
-        Builtins.HoursBetween(to_timestamp(c0), to_timestamp(comp(args(1))))
+        Builtins.HoursBetween(to_timestamp(c0), to_timestamp(arg(args(1))))
       case "ISODAYSBETWEEN" =>
-        Builtins.DaysBetween(to_timestamp(c0), to_timestamp(comp(args(1))))
+        Builtins.DaysBetween(to_timestamp(c0), to_timestamp(arg(args(1))))
       case "ISOMONTHSBETWEEN" =>
-        Builtins.MonthsBetween(to_timestamp(c0), to_timestamp(comp(args(1))))
+        Builtins.MonthsBetween(to_timestamp(c0), to_timestamp(arg(args(1))))
       case "ISOYEARSBETWEEN" =>
-        Builtins.YearsBetween(to_timestamp(c0), to_timestamp(comp(args(1))))
-      case "DIFFDATE" => Builtins.DIFFDATE(c0, comp(args(1)))
+        Builtins.YearsBetween(to_timestamp(c0), to_timestamp(arg(args(1))))
+      case "DIFFDATE" => Builtins.DIFFDATE(c0, arg(args(1)))
       // piggybank string regex family: RegexMatch is a FULL match → 1/0
       // (RegexMatch.java matcher().matches()); the extract forms share
       // the builtin REGEX_EXTRACT[_ALL] find semantics
@@ -3053,8 +2854,8 @@ final class PigRunner(val spark: SparkSession) {
       // builtin catalog, plus the type-suffixed Abs/Max/Min/Round/Signum
       // wrappers (the reference generates one class per input type; the
       // Column forms are type-generic)
-      case "ATAN2" => atan2(c0, comp(args(1)))
-      case "POW" => pow(c0, comp(args(1)))
+      case "ATAN2" => atan2(c0, arg(args(1)))
+      case "POW" => pow(c0, arg(args(1)))
       case "EXPM1" => expm1(c0)
       case "LOG1P" => log1p(c0)
       case "RINT" => rint(c0)
@@ -3063,9 +2864,9 @@ final class PigRunner(val spark: SparkSession) {
       case "TORADIANS" => radians(c0)
       case n if n.matches("(DOUBLE|FLOAT|INT|LONG)ABS") => abs(c0)
       case n if n.matches("(DOUBLE|FLOAT|INT|LONG)MAX") =>
-        greatest(c0, comp(args(1)))
+        greatest(c0, arg(args(1)))
       case n if n.matches("(DOUBLE|FLOAT|INT|LONG)MIN") =>
-        least(c0, comp(args(1)))
+        least(c0, arg(args(1)))
       case "DOUBLEROUND" | "FLOATROUND" => Builtins.ROUND(c0)
       case "MAXTUPLEBY1STFIELD" => typeOf(c0, df) match {
         case ArrayType(st: StructType, _) =>
@@ -3085,7 +2886,7 @@ final class PigRunner(val spark: SparkSession) {
             args.drop(mark + 1).collect { case Lit(s: String) => s })
           else (args.take(1),
             args.drop(1).collect { case Lit(s: String) => s })
-        val bag = comp(callArgs.head)
+        val bag = arg(callArgs.head)
         val idx = ctor.headOption.map(_.trim.toInt).getOrElse(1) - 1
         if (idx < 0) throw new IllegalArgumentException(
           s"field index cannot be less than 1:${idx + 1}")
@@ -3136,7 +2937,7 @@ final class PigRunner(val spark: SparkSession) {
           (ctor.head, ctor.lift(1).getOrElse(""),
            ctor.lift(2).forall(graft.functions.Invoke.parseIsStatic))
         graft.functions.Invoke.column(kind, fullName, paramSpec, isStatic,
-          callArgs.map(comp))
+          callArgs.map(arg))
       // ---- HiveUDF bridge (reference: builtin/HiveUDF.java; the
       // nightly HiveUDF group): DEFINE f HiveUDF('name') — ctor
       // literal(s) arrive after CtorMark
@@ -3151,7 +2952,7 @@ final class PigRunner(val spark: SparkSession) {
         require(ctor.length == 1 || ctor.length == 2,
           "HiveUDF takes a function name and an optional constant-args " +
           "literal: HiveUDF('f') or HiveUDF('f', '(null, \"x\")')")
-        val callArgs = args.take(mark).map(comp)
+        val callArgs = args.take(mark).map(arg)
         graft.functions.HiveUdfs.column(spark, ctor.head, callArgs,
           callArgs.map(typeOf(_, df)), ctor.lift(1))
       case "HIVEUDTF" =>
@@ -3163,7 +2964,7 @@ final class PigRunner(val spark: SparkSession) {
           "HiveUDTF must be DEFINE'd: DEFINE f HiveUDTF('function')")
         val ctor = args.drop(mark + 1).collect { case Lit(s: String) => s }
         require(ctor.length == 1, "HiveUDTF takes one function-name arg")
-        val callArgs = args.take(mark).map(comp)
+        val callArgs = args.take(mark).map(arg)
         graft.functions.HiveUdfs.udtfColumn(spark, ctor.head, callArgs,
           callArgs.map(typeOf(_, df)))
       case "HIVEUDAF" =>
@@ -3178,7 +2979,7 @@ final class PigRunner(val spark: SparkSession) {
         require(args.take(mark).length == 1,
           "HiveUDAF takes the grouped bag as its one argument " +
           "(use B.(f1, f2) for multi-parameter aggregates)")
-        val bag = comp(args.head)
+        val bag = arg(args.head)
         graft.functions.HiveUdfs.udafColumn(spark, ctor.head, bag,
           typeOf(bag, df))
 
@@ -3201,7 +3002,7 @@ final class PigRunner(val spark: SparkSession) {
           val vals = load(path, None, None).df.collect().flatMap(_.toSeq)
             .collect { case s: String => s }.toSeq
           graft.functions.BloomUdf.probeOrEmpty(vals,
-            args.take(mark).map(comp))
+            args.take(mark).map(arg))
         } else args match {
           // value form (PIG-4926, Bloom e2e test 5): Bloom(filter, key…)
           // — the filter arrives as a scalar-projected base64 literal
@@ -3210,7 +3011,7 @@ final class PigRunner(val spark: SparkSession) {
           case Lit(b64) +: keys
               if keys.nonEmpty && (b64 == null || b64.isInstanceOf[String]) =>
             graft.functions.BloomUdf.probeOrEmpty(
-              Seq(b64.asInstanceOf[String]), keys.map(comp))
+              Seq(b64.asInstanceOf[String]), keys.map(arg))
           case bad => throw new IllegalArgumentException(
             "Bloom needs a DEFINE'd stored-filter path or a scalar " +
               s"BuildBloom result as its first argument; got $bad")
@@ -3234,7 +3035,7 @@ final class PigRunner(val spark: SparkSession) {
           }
         require(callArgs.length == 1,
           "BuildBloom expects one bag-of-keys argument")
-        val bagCol = comp(callArgs.head)
+        val bagCol = arg(callArgs.head)
         val elems = typeOf(bagCol, df) match {
           case ArrayType(st: StructType, _) =>
             transform(bagCol, t => t.getField(st.fieldNames.head))
@@ -3265,7 +3066,7 @@ final class PigRunner(val spark: SparkSession) {
           catch { case _: Exception => false } // dotted/invalid identifiers
         }
         registered match {
-          case Some(n) => call_udf(n, args.map(comp): _*)
+          case Some(n) => call_udf(n, args.map(arg): _*)
           case None =>
             // REGISTER'd surfaces: scripting UDFs by `ns.fn`, then jar
             // EvalFuncs by FQN or bare class name. A DEFINE'd alias call
@@ -3279,7 +3080,7 @@ final class PigRunner(val spark: SparkSession) {
               if (mark >= 0) (args.take(mark),
                 args.drop(mark + 1).collect { case Lit(s: String) => s })
               else (args, Seq.empty[String])
-            val cols = callArgs.map(comp)
+            val cols = callArgs.map(arg)
             graft.functions.PyUdfs
               .columnFor(df.sparkSession, pyRegistry, other, cols)
               .orElse(graft.functions.JarUdfs

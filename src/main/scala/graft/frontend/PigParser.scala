@@ -713,7 +713,15 @@ object PigParser {
     }
 
     def unary(): Expr = cur match {
-      case Sym("-") => advance(); Neg(unary())
+      // `-n` on a numeric literal is the literal -n, so IN lists and
+      // literal-only arguments see a Lit
+      case Sym("-") => advance(); unary() match {
+        case Lit(n: Int)    => Lit(-n)
+        case Lit(n: Long)   => Lit(-n)
+        case Lit(n: Float)  => Lit(-n)
+        case Lit(n: Double) => Lit(-n)
+        case e              => Neg(e)
+      }
       case _ => postfix()
     }
 

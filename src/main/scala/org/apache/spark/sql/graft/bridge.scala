@@ -3,8 +3,11 @@ package org.apache.spark.sql.graft
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+  UnresolvedExtractValue, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter,
+  ExpressionUtils}
 import org.apache.spark.sql.execution.datasources.DataSource
 
 /** Bridge into Spark's `private[sql]` Column↔Expression conversions —
@@ -37,13 +40,22 @@ object bridge {
   private val nondetNames = Set("rand", "randn", "random", "uuid",
     "shuffle", "monotonically_increasing_id")
 
-  def isNondeterministic(c: Column): Boolean = {
-    val e = org.apache.spark.sql.classic.ColumnNodeToExpressionConverter
-      .apply(c.node)
-    e.exists {
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction =>
-        nondetNames(f.nameParts.last.toLowerCase)
+  def isNondeterministic(c: Column): Boolean =
+    ColumnNodeToExpressionConverter(c.node).exists {
+      case f: UnresolvedFunction => nondetNames(f.nameParts.last.toLowerCase)
       case x => !x.deterministic
     }
+
+  /** `c` with each column reference `a` read as the field `t.a` instead:
+    * an expression compiled over a bag's element schema, bound to the
+    * lambda variable `t` of a higher-order function over that bag. The
+    * column converts eagerly, as in [[isNondeterministic]], so the
+    * references inside custom expressions are bound too. */
+  def bindFields(c: Column, t: Column): Column = {
+    val elem = ColumnNodeToExpressionConverter(t.node)
+    column(ColumnNodeToExpressionConverter(c.node).transform {
+      case UnresolvedAttribute(parts) =>
+        parts.foldLeft(elem)((b, f) => UnresolvedExtractValue(b, Literal(f)))
+    })
   }
 }

@@ -1553,6 +1553,130 @@ class FrontendSpec extends SparkSpec {
       assert(want(x.getLong(0)) == ((lang2, q, tc, fp)))
     }
   }
+
+  // ---- one expression compiler for every scope: a nested block, a bag
+  // element and a top-level FOREACH all give an expression Pig's meaning
+
+  /** Five rows (k, v): a:1,2,3  b:4  c:-1, as a parquet dir. */
+  private lazy val kv: String = {
+    val tmp = java.nio.file.Files.createTempDirectory("kv").toString + "/kv"
+    Seq(("a", 1), ("a", 2), ("a", 3), ("b", 4), ("c", -1)).toDF("k", "v")
+      .coalesce(1).write.parquet(tmp)
+    tmp
+  }
+  private def byKey(r: PigRunner, alias: String): Map[String, Any] =
+    r(alias).df.collect().map(x => x.getString(0) -> x.get(1)).toMap
+
+  test("nested block: COUNT(D) / 2 is Pig integer division, in GENERATE " +
+       "and in a nested let") {
+    val r = PigRunner(spark).run(s"""
+      A = LOAD '$kv';
+      G = GROUP A BY k;
+      R = FOREACH G { D = FILTER A BY v > 0; GENERATE group, COUNT(D) / 2; };
+      S = FOREACH G { D = FILTER A BY v > 0; x = COUNT(D) / 2;
+                      GENERATE group, x; };
+    """)
+    for (alias <- Seq("R", "S")) {
+      assert(r(alias).df.schema.fields(1).dataType ==
+        org.apache.spark.sql.types.LongType, alias)
+      assert(byKey(r, alias) == Map("a" -> 1L, "b" -> 0L, "c" -> 0L), alias)
+    }
+  }
+
+  test("bag lambda: v / 2 is integer division in a nested FILTER and " +
+       "a nested FOREACH") {
+    val r = PigRunner(spark).run(s"""
+      A = LOAD '$kv';
+      G = GROUP A BY k;
+      R = FOREACH G { D = FILTER A BY v / 2 > 0; GENERATE group, COUNT(D); };
+      S = FOREACH G { E = FOREACH A GENERATE v / 2 AS h; GENERATE group, E; };
+    """)
+    assert(byKey(r, "R") == Map("a" -> 2L, "b" -> 1L, "c" -> 0L))
+    val h = r("S").df.filter($"group" === "a").select(explode($"E.h"))
+    assert(h.schema.head.dataType == org.apache.spark.sql.types.IntegerType)
+    assert(h.as[Int].collect().sorted.toSeq == Seq(0, 1, 1))
+  }
+
+  test("nested alias under an operator inside a call argument") {
+    val r = PigRunner(spark).run(s"""
+      A = LOAD '$kv';
+      G = GROUP A BY k;
+      R = FOREACH G { D = FILTER A BY v > 0;
+                      GENERATE group, ABS(SUM(D.v) * -1); };
+    """)
+    assert(byKey(r, "R") == Map("a" -> 6L, "b" -> 4L, "c" -> null))
+  }
+
+  test("nested bincond with a null condition is null") {
+    val r = PigRunner(spark).run(s"""
+      A = LOAD '$kv';
+      G = GROUP A BY k;
+      R = FOREACH G { D = FILTER A BY v > 0;
+                      GENERATE group, (MAX(D.v) > 2 ? 1 : 0); };
+    """)
+    assert(byKey(r, "R") == Map("a" -> 1, "b" -> 1, "c" -> null))
+  }
+
+  test("CUBE: the cube bag resolves under a bincond and a negation") {
+    val r = PigRunner(spark).run(s"""
+      A = LOAD '$kv';
+      C = CUBE A BY CUBE(k);
+      R = FOREACH C GENERATE group.k AS k, (COUNT(cube) > 1 ? 1 : 0) AS many,
+                             -COUNT(cube) AS neg;
+    """)
+    val got = r("R").df.collect()
+      .map(x => Option(x.getString(0)) -> ((x.get(1), x.get(2)))).toMap
+    assert(got == Map(Some("a") -> ((1, -3L)), Some("b") -> ((0, -1L)),
+      Some("c") -> ((0, -1L)), None -> ((1, -5L))))
+  }
+
+  test("bag lambda: scalar builtins beyond the old lambda subset (SIZE)") {
+    val r = PigRunner(spark).run(s"""
+      A = LOAD '$kv';
+      G = GROUP A BY k;
+      R = FOREACH G { D = FILTER A BY SIZE(k) > 0 AND v > 1;
+                      GENERATE group, COUNT(D); };
+    """)
+    assert(byKey(r, "R") == Map("a" -> 2L, "b" -> 1L, "c" -> 0L))
+  }
+
+  test("IN with negative literals, top level and in a nested FILTER") {
+    val r = PigRunner(spark).run(s"""
+      A = LOAD '$kv';
+      F = FILTER A BY v IN (-1, 2);
+      G = GROUP A BY k;
+      R = FOREACH G { D = FILTER A BY v IN (-1, 2); GENERATE group, COUNT(D); };
+    """)
+    assert(byKey(r, "F") == Map("a" -> 2, "c" -> -1))
+    assert(byKey(r, "R") == Map("a" -> 1L, "b" -> 0L, "c" -> 1L))
+  }
+
+  test("Expr.rewrite reaches every child slot of every constructor") {
+    import graft.frontend.PigAst._
+    val x = ColRef("x")
+    val all = FuncCall("F", Seq(Lit(1), PosRef(0), Star, x,
+      Deref(x, "f"), MapLookup(x, "k"), BinOp("+", x, x), Neg(x), Not(x),
+      BinCond(x, x, x), IsNull(x, negated = false), InExpr(x, Seq(x)),
+      CastExpr("int", x), Matches(x, "p"), FlattenExpr(x),
+      DerefMulti(x, Seq("f")), RangeProj(Some(x), Some(x))))
+    // the tree holds one node of every Expr constructor, so a constructor
+    // added later must join it (and with it, the traversal)
+    def nodes(e: Expr): Seq[Expr] = {
+      val b = Seq.newBuilder[Expr]
+      def walk(n: Expr): Expr = { b += n; n.mapChildren(walk) }
+      walk(e); b.result()
+    }
+    import scala.reflect.runtime.universe
+    val ctors = universe.typeOf[Expr].typeSymbol.asClass.knownDirectSubclasses
+      .map(_.name.toString)
+    assert(ctors.size >= 18)
+    assert(nodes(all).map(_.getClass.getSimpleName.stripSuffix("$")).toSet ==
+      ctors)
+    val out = all.rewrite { case ColRef("x") => ColRef("y") }
+    assert(!nodes(out).contains(x), out)
+    assert(nodes(out).count(_ == ColRef("y")) ==
+      nodes(all).count(_ == x))
+  }
 }
 
 /** Reflection target for the 5-arg Invoke test — Scala emits a static
