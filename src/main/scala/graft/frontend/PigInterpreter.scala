@@ -461,7 +461,9 @@ final class PigRunner(val spark: SparkSession) {
           e.rewrite {
             case ColRef("cube")  => ColRef(m.bagName)
             case ColRef("group") => FuncCall("TOTUPLE", dimRefs)
-            case d @ Deref(ColRef("group"), _) => d // group.dim: rw handles
+            // group.dim: a dim column, fused or not
+            case Deref(ColRef("group"), f) =>
+              if (f.startsWith("$")) dimRefs(f.drop(1).toInt) else ColRef(f)
           }
         case _ => e
       }

@@ -350,7 +350,7 @@ object TextGates {
     // and precision is exact too (the hamming verify filter). Bounded
     // to 2000 docs (q80's gate-bounding precedent) so the quadratic
     // twin stays a gate-scale check; the unbounded cost/recall trade
-    // is measured in BASELINE.md (TimeSimhashProbe).
+    // is recorded in BASELINE.md (the r14 multi-probe A/B).
     Gate("q104_simhash_multiprobe", (s, d) => {
       val docs = T(s, d, "documents").df.where(col("doc_id") < 2000)
       val sigs = graft.GraftSession.trackPersist(

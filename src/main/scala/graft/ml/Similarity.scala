@@ -75,12 +75,17 @@ object Similarity {
     // scheduling overhead dwarfs the dot products at gate scale;
     // BroadcastNestedLoopJoin runs one task per left partition
     a.join(broadcast(b), col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(when(col("na") === 0.0 || col("nb") === 0.0, lit(0.0))
-          .otherwise(dot(col("vec_a"), col("vec_b")) /
-            (col("na") * col("nb"))), 6).as("cos_sim"))
+      .select(col("id_a"), col("id_b"), cosineOfNormed)
       .filter(col("cos_sim") >= threshold)
   }
+
+  /** `cos_sim` of a pair from its sides' vectors and precomputed norms
+    * (`vec_a`/`na`, `vec_b`/`nb`), rounded to 6 digits; 0 when either
+    * vector is zero. */
+  private def cosineOfNormed: Column =
+    round(when(col("na") === 0.0 || col("nb") === 0.0, lit(0.0))
+      .otherwise(dot(col("vec_a"), col("vec_b")) /
+        (col("na") * col("nb"))), 6).as("cos_sim")
 
   /** Random-hyperplane LSH signature — `numPlanes` sign bits packed into a
     * long. A native codegen'd expression (tight primitive loop), NOT array
@@ -210,7 +215,7 @@ object Similarity {
     // bounded at any corpus size. Total projection work is unchanged:
     // numBands × ppb = numPlanes plane projections per vector.
     //
-    // The (id, vec, bands) projection feeds three consumers (banding +
+    // The (id, vec, norm) projection feeds three consumers (banding +
     // both verify sides) — persist it once (tracked), mirroring the
     // Dedup pipelines, instead of re-evaluating the scan per consumer.
     // Norms precomputed once per vector, not once per candidate pair —
@@ -219,41 +224,19 @@ object Similarity {
     // then does 1 dot per pair instead of a dot plus two norm loops
     val base = graft.GraftSession.trackPersist(
       emb.select(col(idCol), col(vecCol).as("__vec"),
-        sqrt(dot(col(vecCol), col(vecCol))).as("__norm"),
-        array((0 until numBands).map(b =>
-          graft.functions.VectorExpressions.hyperplane_signature(
-            col(vecCol), ppb, planeOffset = b * ppb)): _*).as("__bands")))
+        sqrt(dot(col(vecCol), col(vecCol))).as("__norm")))
     // multiProbe: the standard recall lever for sign-LSH — a vector
     // near a hyperplane flips that ONE sign bit under noise, so each
     // band also posts its ppb one-bit-flip neighbors (ppb+1 buckets
     // per band; two-sided probing collides any band within 2 sign
     // flips). Bucket populations grow (ppb+1)× — raise maxBucket
     // proportionally to keep the cap semantics.
-    val buckets =
-      if (!multiProbe)
-        base.select(col(idCol),
-          posexplode(col("__bands")).as(Seq("band", "bucket")))
-      else {
-        val masks = 0L +: (0 until ppb).map(i => 1L << i)
-        base.select(col(idCol),
-          explode(flatten(array((0 until numBands).map { bnd =>
-            array(masks.map(m => struct(lit(bnd).as("band"),
-              element_at(col("__bands"), bnd + 1).bitwiseXOR(lit(m))
-                .as("bucket"))): _*)
-          }: _*))).as("e"))
-          .select(col(idCol), col("e.band").as("band"),
-            col("e.bucket").as("bucket"))
-      }
-    val pairs = graft.text.Dedup.cappedCandidatePairs(buckets, idCol, maxBucket)
-    val a = base.select(col(idCol).as("id_a"), col("__vec").as("vec_a"),
-      col("__norm").as("na"))
-    val b = base.select(col(idCol).as("id_b"), col("__vec").as("vec_b"),
-      col("__norm").as("nb"))
-    pairs.join(a, "id_a").join(b, "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(when(col("na") === 0.0 || col("nb") === 0.0, lit(0.0))
-          .otherwise(dot(col("vec_a"), col("vec_b")) /
-            (col("na") * col("nb"))), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
+    graft.text.Dedup.bandedPairs(base, idCol,
+      (0 until numBands).map(b =>
+        graft.functions.VectorExpressions.hyperplane_signature(
+          col("__vec"), ppb, planeOffset = b * ppb)),
+      probeBits = if (multiProbe) ppb else 0, maxBucket,
+      s => Seq(col("__vec").as(s"vec_$s"), col("__norm").as(s"n$s")),
+      cosineOfNormed, col("cos_sim") >= threshold)
   }
 }

@@ -91,11 +91,10 @@ object Dedup {
     * Returns (idCol, band, bucket) — explode is numBands rows per doc. */
   def lshBuckets(df: DataFrame, idCol: String, sigCol: String,
                  numBands: Int, rowsPerBand: Int): DataFrame =
-    df.select(col(idCol),
-        posexplode(transform(sequence(lit(0), lit(numBands - 1)),
-          b => xxhash64(slice(col(sigCol), b * rowsPerBand + 1,
-                 lit(rowsPerBand)), b)))
-          .as(Seq("band", "bucket")))
+    // one literal key per band: the same hashes every stored DedupIndex
+    // bucket holds, with the band Generate inside whole-stage codegen
+    bandRows(df, idCol, (0 until numBands).map(b =>
+      xxhash64(slice(col(sigCol), b * rowsPerBand + 1, rowsPerBand), lit(b))))
 
   /** Candidate near-dup pairs (a < b) from shared LSH buckets. Buckets
     * larger than `maxBucket` are dropped (degenerate content — at 100 TB a
@@ -163,6 +162,62 @@ object Dedup {
       .distinct()
   }
 
+  /** The banded near-dup core under every LSH family: MinHash row-slice
+    * hashes ([[lshBuckets]]), SimHash 16/32-bit chunks, hyperplane sign
+    * bands ([[graft.ml.Similarity.nearNeighborPairs]]) and the
+    * [[SigIndex]] probe each supply only their per-band bucket keys —
+    * `keys(b)` is band b's bucket — and this turns them into
+    * `(idCol, band, bucket)` rows, one per band.
+    *
+    * `probeBits` = w > 0 is bit-flip multi-probe: each bucket also posts
+    * its w one-bit flips (w + 1 distinct buckets per band, so a doc is
+    * still at most once per (band, bucket) and pair generation is
+    * unchanged). When both sides probe, two bands within 2 bits share a
+    * bucket (the masks XOR-cancel); probing against stored exact keys
+    * reaches 1 bit. Only the sign-bit families have this lever: a
+    * MinHash bucket hashes a row slice, so neighbouring signatures do
+    * not land in neighbouring buckets. */
+  private[graft] def bandRows(df: DataFrame, idCol: String,
+                              keys: Seq[Column],
+                              probeBits: Int = 0): DataFrame = {
+    val exact = df.select(col(idCol),
+      posexplode(array(keys: _*)).as(Seq("band", "bucket")))
+    if (probeBits == 0) exact
+    else {
+      val masks = 0L +: (0 until probeBits).map(1L << _)
+      exact.select(col(idCol), col("band"), explode(array(masks.map(m =>
+        col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
+    }
+  }
+
+  /** The verify step of every banded family: join each `(id_a, id_b)`
+    * pair to both sides' `side` columns of `base` (`side("a")`,
+    * `side("b")`), compute `score` and keep the pairs where `keep`
+    * holds. */
+  private[graft] def verifiedPairs(pairs: DataFrame, base: DataFrame,
+                                   idCol: String,
+                                   side: String => Seq[Column],
+                                   score: Column,
+                                   keep: Column): DataFrame =
+    pairs
+      .join(base.select(col(idCol).as("id_a") +: side("a"): _*), "id_a")
+      .join(base.select(col(idCol).as("id_b") +: side("b"): _*), "id_b")
+      .select(col("id_a"), col("id_b"), score)
+      .filter(keep)
+
+  /** [[bandRows]] → [[cappedCandidatePairs]] → [[verifiedPairs]] over one
+    * base frame that carries both the band keys and the verify columns
+    * (persist it: banding and both verify sides read it). */
+  private[graft] def bandedPairs(base: DataFrame, idCol: String,
+                                 keys: Seq[Column], probeBits: Int,
+                                 maxBucket: Int,
+                                 side: String => Seq[Column],
+                                 score: Column, keep: Column): DataFrame =
+    verifiedPairs(
+      cappedCandidatePairs(bandRows(base, idCol, keys, probeBits),
+        idCol, maxBucket),
+      base, idCol, side, score, keep)
+
   /** EXACT all-pairs word-n-gram Jaccard above a threshold, in the
     * scalable relational form (inverted-index join): explode each doc's
     * DISTINCT grams, self-join on the gram to count |A∩B| per pair, then
@@ -183,13 +238,10 @@ object Dedup {
     val gb = grams.select(col(idCol).as("id_b"), col("gram"))
     val inter = ga.join(gb, "gram").filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(col("inter").cast(DoubleType) /
-          (col("sz_a") + col("sz_b") - col("inter")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    verifiedPairs(inter, sizes, idCol, s => Seq(col("sz").as(s"sz_$s")),
+      round(col("inter").cast(DoubleType) /
+        (col("sz_a") + col("sz_b") - col("inter")), 6).as("jaccard"),
+      col("jaccard") >= threshold)
   }
 
   /** EXACT all-pairs hamming-distance filter over 64-bit signatures —
@@ -233,8 +285,6 @@ object Dedup {
         size(array_union(a, b)))
       .otherwise(lit(0.0))
 
-  /** End-to-end MinHash near-dup pipeline: shingle → sign → band →
-    * candidate pairs → exact-Jaccard verify ≥ threshold. */
   /** MinHash signatures via explode + numHashes `min` aggregates. Unlike
     * the array-HOF form (interpreted lambdas over per-row arrays), every
     * stage here is whole-stage-codegen'd: explode → xxhash64 → partial
@@ -248,11 +298,17 @@ object Dedup {
       shingled.select(col(idCol), explode(col("shingles")).as("__g")),
       idCol, "__g", numHashes)
 
+  /** End-to-end MinHash near-dup pipeline over character k-shingles:
+    * the shingles explode into the same `(id, gram)` stream the word
+    * path uses, then sign → band → candidate pairs → exact-Jaccard
+    * verify ≥ threshold. A null text yields one null gram, which signs
+    * but never verifies (collect_set drops nulls). */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       shingleK: Int = 5, numHashes: Int = 64,
                       numBands: Int = 16, threshold: Double = 0.8): DataFrame =
-    minhashNearDupsWith(df, idCol, textCol,
-      t => charShingles(t, shingleK), numHashes, numBands, threshold)
+    minhashGramPairs(df.select(col(idCol),
+        explode(charShingles(col(textCol), shingleK)).as("gram")),
+      idCol, numHashes, numBands, threshold, maxBucket = 1000)
 
   /** MinHash near-dups over word n-grams. Grams build IN-ROW as 64-bit
     * hash-of-token-hashes (the explodeHashedWordNgrams kernel) — the
@@ -268,11 +324,7 @@ object Dedup {
                              n: Int = 3, numHashes: Int = 64,
                              numBands: Int = 16,
                              threshold: Double = 0.8,
-                             maxBucket: Int = 1000): DataFrame = {
-    require(numBands >= 1 && numBands <= numHashes &&
-      numHashes % numBands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of numBands " +
-        s"($numBands) — a remainder would silently ignore signature tail")
+                             maxBucket: Int = 1000): DataFrame =
     // grams are built IN-ROW as 64-bit hash-of-token-hashes (the
     // explodeHashedWordNgrams kernel q100/q45 already use) — the old
     // form posexplode'd every TOKEN through a per-doc window
@@ -293,8 +345,23 @@ object Dedup {
     // kept because it deletes a whole per-token exchange+sort from the
     // plan (the term that matters on IO-bound storage) and the verify
     // sets carry longs instead of gram strings.
-    val grams = graft.GraftSession.trackPersist(
-      explodeHashedWordNgrams(df, Seq(idCol), textCol, n, "gram"))
+    minhashGramPairs(
+      explodeHashedWordNgrams(df, Seq(idCol), textCol, n, "gram"),
+      idCol, numHashes, numBands, threshold, maxBucket)
+
+  /** The MinHash family over an `(idCol, gram)` stream: signatures →
+    * [[lshCandidatePairs]] → exact Jaccard over the candidates' gram
+    * sets. */
+  private def minhashGramPairs(gramStream: DataFrame, idCol: String,
+                               numHashes: Int, numBands: Int,
+                               threshold: Double,
+                               maxBucket: Int): DataFrame = {
+    require(numBands >= 1 && numBands <= numHashes &&
+      numHashes % numBands == 0,
+      s"numHashes ($numHashes) must be a positive multiple of numBands " +
+        s"($numBands) — a remainder would silently ignore signature tail")
+    // the gram stream feeds the signatures and the verify sets
+    val grams = graft.GraftSession.trackPersist(gramStream)
     val sigs = minhashSignaturesFromGrams(grams, idCol, "gram", numHashes)
     // pairs feed TWO consumers (the candidate-id explode and the final
     // verify double-join); unpersisted, each consumer re-ran the
@@ -310,12 +377,9 @@ object Dedup {
       .select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct()
     val candSets = grams.join(candIds, idCol)
       .groupBy(col(idCol)).agg(collect_set(col("gram")).as("sh"))
-    val sa = candSets.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
-    val sb = candSets.select(col(idCol).as("id_b"), col("sh").as("sh_b"))
-    pairs.join(sa, "id_a").join(sb, "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(jaccard(col("sh_a"), col("sh_b")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    verifiedPairs(pairs, candSets, idCol, s => Seq(col("sh").as(s"sh_$s")),
+      round(jaccard(col("sh_a"), col("sh_b")), 6).as("jaccard"),
+      col("jaccard") >= threshold)
   }
 
   /** Signatures from an exploded (id, gram) stream — every stage
@@ -330,30 +394,6 @@ object Dedup {
     hashed.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
       .select(col(idCol),
         array((0 until numHashes).map(j => col(s"m$j")): _*).as("sig"))
-  }
-
-  def minhashNearDupsWith(df: DataFrame, idCol: String, textCol: String,
-                          shingler: Column => Column, numHashes: Int,
-                          numBands: Int, threshold: Double): DataFrame = {
-    require(numBands >= 1 && numBands <= numHashes &&
-      numHashes % numBands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of numBands " +
-        s"($numBands) — a remainder would silently ignore signature tail")
-    // The shingle scan feeds three consumers (signing, and both sides of
-    // the verify join) — persist it once (tracked). At 100 TB this
-    // intermediate would be a checkpointed table; the plan shape is the
-    // same.
-    val shingled = graft.GraftSession.trackPersist(
-      df.select(col(idCol), shingler(col(textCol)).as("shingles")))
-    val sigs = minhashSignatures(shingled, idCol, numHashes)
-    val pairs = lshCandidatePairs(sigs, idCol, "sig",
-      numBands, numHashes / numBands)
-    val sa = shingled.select(col(idCol).as("id_a"), col("shingles").as("sh_a"))
-    val sb = shingled.select(col(idCol).as("id_b"), col("shingles").as("sh_b"))
-    pairs.join(sa, "id_a").join(sb, "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(jaccard(col("sh_a"), col("sh_b")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
   }
 
   // ------------------------------------------------------------------
@@ -414,13 +454,8 @@ object Dedup {
     * plain banding only catches at ~0.4 recall. Costs: 17× bucket
     * traffic, and bucket POPULATIONS grow ~17× too, so raise
     * `maxBucket` proportionally if the cap starts dropping buckets.
-    * (No such lever exists for the MINHASH pipeline, by construction:
-    * its band buckets are hashes of row-slices, so neighboring
-    * signatures don't land in neighboring buckets — minhash recall is
-    * tuned with numBands/rowsPerBand instead, which ARE its
-    * parameters. Bit-flip probing applies exactly to the sign-bit
-    * families: simhash 64/128 here, hyperplane LSH in
-    * [[graft.ml.Similarity.nearNeighborPairs]].) */
+    * The probe expansion is [[bandRows]]', shared with the 128-bit
+    * variant, hyperplane LSH and [[SigIndex]]. */
   def simhashNearDups(sigs0: DataFrame, idCol: String,
                       maxDistance: Int = 3,
                       maxBucket: Int = 1000,
@@ -429,35 +464,17 @@ object Dedup {
     // verify sides) — persist it once (tracked) instead of re-running the
     // token scan
     val sigs = graft.GraftSession.trackPersist(sigs0)
-    val chunked =
-      if (!multiProbe)
-        sigs.select(col(idCol),
-          posexplode(array((0 until 4).map(b =>
-            shiftright(col("simhash"), b * 16).bitwiseAND(0xFFFFL)): _*))
-            .as(Seq("band", "bucket")))
-      else {
-        // mask 0 = the exact chunk; masks 2^i = its one-bit flips.
-        // All 17 buckets of one band are distinct, so a doc appears at
-        // most once per (band, bucket) and pair generation is unchanged.
-        val masks = 0L +: (0 until 16).map(i => 1L << i)
-        sigs.select(col(idCol),
-          explode(flatten(array((0 until 4).map { b =>
-            val chunk = shiftright(col("simhash"), b * 16)
-              .bitwiseAND(0xFFFFL)
-            array(masks.map(m => struct(lit(b).as("band"),
-              chunk.bitwiseXOR(lit(m)).as("bucket"))): _*)
-          }: _*))).as("e"))
-          .select(col(idCol), col("e.band").as("band"),
-            col("e.bucket").as("bucket"))
-      }
-    val pairs = cappedCandidatePairs(chunked, idCol, maxBucket)
-    val a = sigs.select(col(idCol).as("id_a"), col("simhash").as("sig_a"))
-    val b = sigs.select(col(idCol).as("id_b"), col("simhash").as("sig_b"))
-    pairs.join(a, "id_a").join(b, "id_b")
-      .select(col("id_a"), col("id_b"),
-        hamming(col("sig_a"), col("sig_b")).as("hamming"))
-      .filter(col("hamming") <= maxDistance)
+    bandedPairs(sigs, idCol, simhashChunks(col("simhash")),
+      probeBits = if (multiProbe) 16 else 0, maxBucket,
+      s => Seq(col("simhash").as(s"sig_$s")),
+      hamming(col("sig_a"), col("sig_b")).as("hamming"),
+      col("hamming") <= maxDistance)
   }
+
+  /** The 4×16-bit band chunks of a 64-bit signature — the keys of
+    * [[simhashNearDups]] and of every [[SigIndex]]. */
+  private[graft] def simhashChunks(sig: Column): Seq[Column] =
+    (0 until 4).map(b => shiftright(sig, b * 16).bitwiseAND(0xFFFFL))
 
   /** 128-bit SimHash: two independent 64-bit halves (the high half
     * salts the token hash), 128 conditional sums in ONE aggregation
@@ -494,38 +511,16 @@ object Dedup {
                          maxBucket: Int = 1000,
                          multiProbe: Boolean = false): DataFrame = {
     val sigs = graft.GraftSession.trackPersist(sigs0)
-    def bandChunk(b: Int): Column = {
-      val half = if (b < 2) col("simhash_lo") else col("simhash_hi")
-      shiftright(half, (b % 2) * 32).bitwiseAND(0xFFFFFFFFL)
-    }
-    val chunked =
-      if (!multiProbe)
-        sigs.select(col(idCol),
-          posexplode(array((0 until 4).map(bandChunk): _*))
-            .as(Seq("band", "bucket")))
-      else {
-        // same two-sided one-bit-flip scheme as [[simhashNearDups]]:
-        // 33 buckets per 32-bit band, any band within 2 bits collides,
-        // pigeonhole guarantee moves to hamming ≤ 11
-        val masks = 0L +: (0 until 32).map(i => 1L << i)
-        sigs.select(col(idCol),
-          explode(flatten(array((0 until 4).map { b =>
-            array(masks.map(m => struct(lit(b).as("band"),
-              bandChunk(b).bitwiseXOR(lit(m)).as("bucket"))): _*)
-          }: _*))).as("e"))
-          .select(col(idCol), col("e.band").as("band"),
-            col("e.bucket").as("bucket"))
-      }
-    val pairs = cappedCandidatePairs(chunked, idCol, maxBucket)
-    val a = sigs.select(col(idCol).as("id_a"),
-      col("simhash_lo").as("lo_a"), col("simhash_hi").as("hi_a"))
-    val b = sigs.select(col(idCol).as("id_b"),
-      col("simhash_lo").as("lo_b"), col("simhash_hi").as("hi_b"))
-    pairs.join(a, "id_a").join(b, "id_b")
-      .select(col("id_a"), col("id_b"),
-        hamming128(col("lo_a"), col("hi_a"),
-                   col("lo_b"), col("hi_b")).as("hamming"))
-      .filter(col("hamming") <= maxDistance)
+    // two 32-bit bands per half; multiProbe: 33 buckets per band, any
+    // band within 2 bits collides, the guarantee moves to hamming ≤ 11
+    val chunks = Seq("simhash_lo", "simhash_hi").flatMap(h =>
+      Seq(0, 32).map(sh => shiftright(col(h), sh).bitwiseAND(0xFFFFFFFFL)))
+    bandedPairs(sigs, idCol, chunks,
+      probeBits = if (multiProbe) 32 else 0, maxBucket,
+      s => Seq(col("simhash_lo").as(s"lo_$s"), col("simhash_hi").as(s"hi_$s")),
+      hamming128(col("lo_a"), col("hi_a"), col("lo_b"), col("hi_b"))
+        .as("hamming"),
+      col("hamming") <= maxDistance)
   }
 
   // ------------------------------------------------------------------
@@ -1048,7 +1043,7 @@ object Dedup {
         // unique sentinel key per null-URL doc: grouping nulls together
         // would collapse every URL-less doc into one survivor
         val key = coalesce(Urls.normalize(col(u)),
-          concat(lit(" nourl:"), col(idCol).cast("string")))
+          concat(lit("\u0000nourl:"), col(idCol).cast("string")))
         val withKey = docs.withColumn("__ukey", key)
         val keepIds = withKey.groupBy(col("__ukey"))
           .agg(min(col(idCol)).as(idCol)).select(idCol)

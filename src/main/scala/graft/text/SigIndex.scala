@@ -68,12 +68,10 @@ object SigIndex {
   }
 
   /** The exact 4×16-bit chunk rows of [[Dedup.simhashNearDups]]'
-    * banding — the index stores these, never probe flips. */
-  private def bandChunks(s: DataFrame): DataFrame =
-    s.select(col("id"),
-      posexplode(array((0 until Bands).map(b =>
-        shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL)): _*))
-        .as(Seq("band", "bucket")))
+    * banding (the index stores these, never probe flips); `probeBits`
+    * = 16 adds each chunk's one-bit flips for a batch-side probe. */
+  private def bandChunks(s: DataFrame, probeBits: Int = 0): DataFrame =
+    Dedup.bandRows(s, "id", Dedup.simhashChunks(col("sig")), probeBits)
 
   /** Near-dup pairs (id_new, id_old, hamming ≤ maxDistance) between a
     * batch of (id, sig) rows and the index, probed batch-side. Buckets
@@ -90,10 +88,8 @@ object SigIndex {
     checkFamily(spark, name)
     val s = graft.GraftSession.trackPersist(rowsOf(batch, idCol, sigCol))
     // probes: each exact chunk, and the chunk with each one bit flipped
-    val masks = 0L +: (0 until 16).map(i => 1L << i)
-    val probed = graft.GraftSession.trackPersist(bandChunks(s).select(
-      col("id").as("__new"), col("band"), explode(array(masks.map(m =>
-        col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket")))
+    val probed = graft.GraftSession.trackPersist(
+      bandChunks(s, probeBits = 16).withColumnRenamed("id", "__new"))
     index(name).candidates(probed, "id", maxBucket, excludeSelfId)
       .join(s.select(col("id").as("__new"), col("sig").as("sig_new")),
         "__new")
@@ -101,8 +97,7 @@ object SigIndex {
           .select(col("id").as("__old"), col("sig").as("sig_old")),
         "__old")
       .select(col("__new").as("id_new"), col("__old").as("id_old"),
-        bit_count(col("sig_new").bitwiseXOR(col("sig_old")))
-          .cast("long").as("hamming"))
+        Dedup.hamming(col("sig_new"), col("sig_old")).as("hamming"))
       .filter(col("hamming") <= maxDistance)
   }
 

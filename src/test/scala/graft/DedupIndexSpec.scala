@@ -179,4 +179,40 @@ class DedupIndexSpec extends SparkSpec {
     assert(pairs.toSet == (1L to 20L).map(i => (100L, i, 1.0)).toSet,
       s"got ${pairs.toSeq}")
   }
+
+  test("band rows: the literal per-band keys reproduce the stored " +
+       "MinHash and SimHash bucket forms, probes included") {
+    // indexes written with the transform(sequence(...)) MinHash banding
+    // and the shift-and-mask chunking must still join after the move
+    // to one banded core: same schema, same (id, band, bucket) rows
+    val rnd = new scala.util.Random(11)
+    val sigs = (1L to 200L).map(i =>
+        (i, Seq.fill(64)(rnd.nextLong()), rnd.nextLong()))
+      .toDF("id", "sig", "simhash")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
+    def same(got: org.apache.spark.sql.DataFrame,
+             ref: org.apache.spark.sql.DataFrame): Unit = {
+      assert(got.schema == ref.schema)
+      assert(rows(got) == rows(ref))
+    }
+    val (bands, r) = (16, 4)
+    same(Dedup.lshBuckets(sigs, "id", "sig", bands, r),
+      sigs.select(col("id"),
+        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+          b => xxhash64(slice(col("sig"), b * r + 1, lit(r)), b)))
+          .as(Seq("band", "bucket"))))
+    def chunk(b: Int) = shiftright(col("simhash"), b * 16).bitwiseAND(0xFFFFL)
+    val keys = Dedup.simhashChunks(col("simhash"))
+    same(Dedup.bandRows(sigs, "id", keys),
+      sigs.select(col("id"),
+        posexplode(array((0 until 4).map(chunk): _*)).as(Seq("band", "bucket"))))
+    val masks = 0L +: (0 until 16).map(i => 1L << i)
+    same(Dedup.bandRows(sigs, "id", keys, probeBits = 16),
+      sigs.select(col("id"), explode(flatten(array((0 until 4).map(b =>
+          array(masks.map(m => struct(lit(b).as("band"),
+            chunk(b).bitwiseXOR(lit(m)).as("bucket"))): _*)): _*))).as("e"))
+        .select(col("id"), col("e.band").as("band"),
+          col("e.bucket").as("bucket")))
+  }
 }

@@ -1630,6 +1630,21 @@ class FrontendSpec extends SparkSpec {
       Some("c") -> ((0, -1L)), None -> ((1, -5L))))
   }
 
+  test("CUBE: group.dim resolves when fusion declines (bag projection, SIZE)") {
+    val r = PigRunner(spark).run(s"""
+      A = LOAD '$kv';
+      C = CUBE A BY CUBE(k);
+      P = FOREACH C GENERATE group.k AS k, cube.v AS vs;
+      R = FOREACH C GENERATE group.k AS k, SIZE(cube) AS n;
+    """)
+    assert(r("P").df.count() == 4)
+    val got = r("R").df.collect()
+      .map(x => Option(x.getString(0)) -> x.getAs[Number](1).longValue)
+      .toMap
+    assert(got == Map(Some("a") -> 3L, Some("b") -> 1L, Some("c") -> 1L,
+      None -> 5L))
+  }
+
   test("bag lambda: scalar builtins beyond the old lambda subset (SIZE)") {
     val r = PigRunner(spark).run(s"""
       A = LOAD '$kv';
